@@ -327,7 +327,7 @@ def _run_once() -> None:
     from pyspark.sql import functions as F
 
     (
-        spark.range(0, 2_000_000, 1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        spark.range(0, 2_000_000, 1, spark.sparkContext.defaultParallelism)
         .select(F.concat(F.lit("w:"), F.col("id").cast("string")).alias("s"))
         .select(F.md5("s").alias("h"), F.xxhash64("s").alias("x"))
         .select(

@@ -25,8 +25,8 @@ and round-trip tests with the Annex K tables — both quantize
 identically, so progressive-vs-baseline decode equality is an exact,
 bit-for-bit end-to-end check. Entropy decode is bit-at-a-time
 Python — fine for the Arrow-batched stage at thumbnail scale, and the
-honest note for megapixel corpora is "plug in a codec lib at the
-decode_real seam"; everything else (marker parse, DCT, color
+honest note for megapixel corpora is "plug in a codec lib behind
+``decode_jpeg``"; everything else (marker parse, DCT, color
 transform) is vectorized numpy.
 
 Reference: ITU-T T.81 (the JPEG spec); tables from its Annex K.

@@ -1,40 +1,26 @@
-"""Multimodal column plumbing (BASELINE.json north-star: image/audio/
-video as first-class pipeline data).
+"""Multimodal column plumbing: media as opaque ``binary`` columns with
+typed metadata structs.
 
-Media travel as opaque ``binary`` columns with typed metadata structs;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages. Decode is REAL for the formats this container
-can parse without codec libraries — PCM WAV audio (stdlib ``wave``)
-and, since late round 8, FLAC (operators/flac.py — full lossless
-decode incl. LPC subframes and all stereo decorrelations),
-binary PPM/PGM images (plain header + raw pixels), 8-bit PNG (stdlib
-``zlib`` inflate + all five scanline filters; Adam7 interlace and
-PLTE/tRNS palette since round 6), GIF 87a/89a (variable-width LZW,
-interlace, transparency — round 6), and the MP4 CONTAINER level (box
-tree + stsz/stco/stsc/stts sample tables → per-frame byte ranges,
-round 5) — including real resize (``resize_nearest``) and real
-feature stages (``audio_features``, ``image_stats``) exercised
-end-to-end on generated-in-process media (``synthetic_real_media``,
-``synthetic_mp4``). JPEG also decodes natively — baseline since
-round 5, restart markers and full progressive (T.81 Annex G) since
-round 6 (operators/jpeg.py, pure numpy), arithmetic coding (SOF9/10)
-since round 8. VIDEO: Motion-JPEG tracks ('jpeg'/'mjpa'/'mjpb' stsd
-entries — one complete JPEG per sample, no inter-frame state) decode
-natively since late round 8 (``decode_video_frames`` +
-``video_frame_stats``); h264 INTRA samples ('avc1' IDR) decode
-natively since round 10 through operators/h264.py (baseline CAVLC
-I-frame decoder — the "decide h264" item, decided by implementing
-it). The remaining seam is MOTION COMPENSATION (P/B slices, h265),
-which raises NotImplementedError naming the feature — declared
-permanent for this engine: a training pipeline frame-samples
-keyframes, it does not transcode; ``decode_fake`` keeps the plumbing
-— schema, batch shape, UDF signature, partitioning — tested
-deterministically for those.
+Feature extraction runs as an Arrow-batched ``mapInPandas`` stage over
+the payload column; ``decode_fake`` is a deterministic stand-in decode
+that keeps the plumbing — schema, batch shape, UDF signature,
+partitioning — exactly testable. The regulatory ingest path this
+engine serves (scrape → .docx/.pdf text extraction → extract →
+validate → route) has no image, audio or video surface, so no Spark
+stage here decodes media.
 
-At 100 TB the operative constraints are encoded here: media bytes stay
+The pure-Python decoders below are library code exercised by their
+own tests: PCM WAV, binary PPM/PGM, PNG (all five filters, Adam7,
+palette, 16-bit), GIF (LZW, interlace, transparency), the MP4 container
+(box tree + sample tables → per-frame byte ranges, fragmented files,
+sync samples) and ``decode_video_frames`` for Motion-JPEG and h264
+intra tracks (operators/jpeg.py, operators/h264.py).
+
+At scale the operative constraints are encoded here: media bytes stay
 in executor-side Arrow batches (never collected), metadata-only plans
-prune the binary column entirely (Parquet column pruning), and
-per-batch decode amortizes Python crossing costs.
+prune the binary column entirely (Parquet column pruning, see
+``frame_sample_plan``), and per-batch decode amortizes Python crossing
+costs.
 """
 
 from __future__ import annotations
@@ -576,53 +562,6 @@ def _encode_gif(
     return out + b"\x3b"
 
 
-def decode_real(payload: bytes, meta: dict) -> np.ndarray:
-    """Codec-backed decode, dispatched on ``meta['format']``.
-
-    REAL for — PCM WAV audio, binary PPM/PGM images, 8-bit PNG
-    (incl. Adam7 + palette), GIF (LZW, interlace, transparency), and
-    baseline + progressive + arithmetic-coded JPEG (operators/
-    jpeg.py + jpeg_arith.py: pure-numpy T.81 with restart markers and
-    the Annex D QM-coder). Video: the MP4 container parses natively
-    (parse_mp4_samples), MJPEG and h264-intra samples decode natively
-    (decode_video_frames); only motion-compensated payloads raise
-    NotImplementedError — the dispatch, schemas, and batch plumbing
-    are the same either way."""
-    fmt = (meta or {}).get("format")
-    if fmt == "wav":
-        return _decode_wav(payload)
-    if fmt == "flac":
-        from .flac import decode_flac
-
-        return decode_flac(payload)
-    if fmt in ("ppm", "pgm"):
-        return _decode_pnm(payload)
-    if fmt == "png":
-        return _decode_png(payload)
-    if fmt == "gif":
-        return _decode_gif(payload)
-    if fmt in ("jpg", "jpeg"):
-        from .jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    if fmt == "bmp":
-        from .rasters import decode_bmp
-
-        return decode_bmp(payload)
-    if fmt in ("tif", "tiff"):
-        from .rasters import decode_tiff
-
-        return decode_tiff(payload)
-    raise NotImplementedError(
-        f"no codec for format {fmt!r} in this environment; "
-        "wav/flac/ppm/pgm/png/gif/jpeg/bmp/tiff decode natively, "
-        "mp4 containers parse natively (parse_mp4_samples), MJPEG "
-        "and h264-intra video tracks decode natively "
-        "(decode_video_frames); only motion-compensated video needs "
-        "ffmpeg-class code"
-    )
-
-
 def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """REAL nearest-neighbor image resize in pure numpy (the standard
     thumbnail/normalize step before feature extraction)."""
@@ -635,15 +574,13 @@ def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 def decode_fake(payload: bytes, dim: int = 16) -> np.ndarray:
     """Deterministic stand-in decode: a dim-length float vector derived
     from the payload's sha256 — stable across runs/engines, exercises
-    the exact array shapes the real decoder would produce."""
+    the exact array shapes a real decoder would produce."""
     digest = hashlib.sha256(payload or b"").digest()
     raw = np.frombuffer((digest * ((dim * 4) // len(digest) + 1))[: dim * 4], dtype=np.uint32)
     return (raw.astype(np.float64) / np.iinfo(np.uint32).max).astype(np.float32)
 
 
-def extract_features(
-    media: DataFrame, dim: int = 16, batch_note: str = "fake-decode"
-) -> DataFrame:
+def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """Decode + feature-extract as a mapInPandas stage over Arrow
     batches (the multimodal analog of the X1 extractor plumbing)."""
 
@@ -661,222 +598,6 @@ def extract_features(
             )
 
     return media.select("media_id", "payload").mapInPandas(gen, schema=FEATURE_SCHEMA)
-
-
-AUDIO_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("n_channels", T.IntegerType(), True),
-        T.StructField("rms", T.FloatType(), True),
-        T.StructField("peak", T.FloatType(), True),
-        T.StructField("zero_crossing_rate", T.FloatType(), True),
-    ]
-)
-
-
-def audio_features(media: DataFrame, on_error: str = "raise") -> DataFrame:
-    """REAL audio feature extraction over Arrow batches: decode PCM WAV
-    payloads (stdlib, no codec lib) and emit per-clip waveform stats —
-    the canonical pre-filter features for audio corpus curation (silence
-    / clipping / energy gates). Same 100 TB shape as extract_features:
-    bytes stay executor-side, one Python crossing per Arrow batch.
-
-    ``on_error='skip'`` drops undecodable payloads instead of failing
-    the task — at 100 TB one corrupt clip in a crawl must not kill the
-    job (the DocTextExtractor text=None principle); the default
-    ``'raise'`` keeps corruption loud for curated inputs."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for mid, fmt, payload in zip(
-                pdf["media_id"], pdf["fmt"], pdf["payload"]
-            ):
-                try:
-                    if fmt == "flac":
-                        from .flac import decode_flac
-
-                        wav = decode_flac(bytes(payload))
-                    else:
-                        wav = _decode_wav(bytes(payload))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                mono = wav.mean(axis=1)
-                zc = float(np.mean(np.abs(np.diff(np.signbit(mono))))) if len(mono) > 1 else 0.0
-                out.append(
-                    (
-                        mid,
-                        wav.shape[0],
-                        wav.shape[1],
-                        float(np.sqrt(np.mean(mono**2))) if len(mono) else 0.0,
-                        float(np.max(np.abs(wav))) if len(mono) else 0.0,
-                        zc,
-                    )
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_FEATURE_SCHEMA])
-
-    return (
-        media.filter(F.col("meta.format").isin("wav", "flac"))
-        .select(
-            "media_id", F.col("meta.format").alias("fmt"), "payload"
-        )
-        .mapInPandas(gen, schema=AUDIO_FEATURE_SCHEMA)
-    )
-
-
-IMAGE_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("mean_brightness", T.FloatType(), True),
-        T.StructField("thumbnail", T.ArrayType(T.FloatType()), True),
-    ]
-)
-
-
-def image_stats(
-    media: DataFrame, thumb: int = 8, on_error: str = "raise"
-) -> DataFrame:
-    """REAL image decode + resize over Arrow batches for
-    PPM/PGM/PNG/GIF/JPEG payloads: per-image dimensions, mean
-    brightness, and a
-    ``thumb×thumb`` grayscale thumbnail vector (the embedding-ish
-    format near-dup / aesthetic filters consume). Alpha channels
-    (PNG gray+alpha / RGBA) are dropped before the brightness math.
-    ``on_error='skip'`` drops undecodable payloads instead of failing
-    the task (one corrupt image in a 100 TB crawl must not kill the
-    job); the default ``'raise'`` keeps corruption loud."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for mid, fmt, payload in zip(pdf["media_id"], pdf["fmt"], pdf["payload"]):
-                try:
-                    if fmt == "png":
-                        img = _decode_png(bytes(payload))
-                    elif fmt == "gif":
-                        img = _decode_gif(bytes(payload))
-                    elif fmt in ("jpg", "jpeg"):
-                        from .jpeg import decode_jpeg
-
-                        img = decode_jpeg(bytes(payload))
-                    elif fmt == "bmp":
-                        from .rasters import decode_bmp
-
-                        img = decode_bmp(bytes(payload))
-                    elif fmt in ("tif", "tiff"):
-                        from .rasters import decode_tiff
-
-                        img = decode_tiff(bytes(payload))
-                    else:
-                        img = _decode_pnm(bytes(payload))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                if img.ndim == 3 and img.shape[2] in (2, 4):  # strip alpha
-                    img = img[:, :, :-1]
-                if img.ndim == 3 and img.shape[2] == 1:
-                    img = img[:, :, 0]
-                gray = img.mean(axis=2) if img.ndim == 3 else img.astype(np.float64)
-                tn = resize_nearest(gray, thumb, thumb)
-                # normalize by the sample dtype's full scale — 16-bit
-                # decodes (PNG depth 16, PNM maxval > 255) land in the
-                # same [0, 1] feature space as 8-bit
-                scale = float(np.iinfo(img.dtype).max) if img.dtype.kind == "u" else 255.0
-                out.append(
-                    (
-                        mid,
-                        img.shape[1],
-                        img.shape[0],
-                        float(gray.mean()),
-                        (tn.astype(np.float32) / scale).ravel().tolist(),
-                    )
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in IMAGE_STATS_SCHEMA])
-
-    return (
-        media.filter(
-            F.col("meta.format").isin(
-                "ppm", "pgm", "png", "gif", "jpg", "jpeg", "bmp", "tif", "tiff"
-            )
-        )
-        .select("media_id", F.col("meta.format").alias("fmt"), "payload")
-        .mapInPandas(gen, schema=IMAGE_STATS_SCHEMA)
-    )
-
-
-def synthetic_real_media(spark, n: int = 12) -> DataFrame:
-    """Fixture with REAL decodable payloads: PCM WAV sine clips (stdlib
-    wave writer) and binary PPM gradient images — everything
-    audio_features / image_stats consume, generated without any codec
-    library, so the real-decode path is exercised end-to-end."""
-    import io
-    import wave
-
-    rows = []
-    for i in range(n):
-        if i % 2 == 0:
-            sr, freq, secs = 8000, 220 * (i + 1), 0.25
-            t = np.arange(int(sr * secs)) / sr
-            pcm = (np.sin(2 * np.pi * freq * t) * 0.5 * 32767).astype("<i2")
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(sr)
-                w.writeframes(pcm.tobytes())
-            rows.append(
-                (
-                    f"real-{i:04d}",
-                    bytearray(buf.getvalue()),
-                    ("audio", "wav", None, None, int(secs * 1000), None),
-                )
-            )
-        else:
-            w_, h_ = 32 + i, 24 + i
-            x = np.arange(w_, dtype=np.uint16)
-            y = np.arange(h_, dtype=np.uint16)
-            r = np.broadcast_to((x * 255 // max(1, w_ - 1)).astype(np.uint8), (h_, w_))
-            g = np.broadcast_to(
-                ((y * 255 // max(1, h_ - 1)).astype(np.uint8))[:, None], (h_, w_)
-            )
-            b = np.full((h_, w_), i * 17 % 256, dtype=np.uint8)
-            img = np.stack([r, g, b], axis=2)
-            if i % 8 == 1:  # real zlib PNG
-                payload, fmt = _encode_png(img), "png"
-            elif i % 8 == 3:  # real baseline JPEG
-                from .jpeg import encode_jpeg
-
-                payload, fmt = encode_jpeg(img, quality=95), "jpeg"
-            elif i % 8 == 5:  # real LZW GIF (256-level palette quantize)
-                idx = ((img[:, :, 0] // 32) * 8 + (img[:, :, 1] // 32)).astype(np.uint8)
-                palette = np.zeros((64, 3), dtype=np.uint8)
-                for pi in range(64):
-                    palette[pi] = ((pi // 8) * 32 + 16, (pi % 8) * 32 + 16, i * 17 % 256)
-                payload, fmt = _encode_gif(idx, palette), "gif"
-            else:
-                payload, fmt = b"P6\n# synthetic\n%d %d\n255\n" % (w_, h_) + img.tobytes(), "ppm"
-            rows.append(
-                (
-                    f"real-{i:04d}",
-                    bytearray(payload),
-                    ("image", fmt, w_, h_, None, None),
-                )
-            )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -1204,40 +925,6 @@ def mp4_sync_samples(payload: bytes) -> list[int] | None:
     return None
 
 
-FRAME_INDEX_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("sample_idx", T.IntegerType(), False),
-        T.StructField("byte_offset", T.LongType(), False),
-        T.StructField("byte_size", T.LongType(), False),
-        T.StructField("duration_units", T.LongType(), True),
-    ]
-)
-
-
-def mp4_frame_index(media: DataFrame) -> DataFrame:
-    """Per-video frame byte index over Arrow batches: the REAL container
-    step between ``frame_sample_plan`` (metadata-only timestamps) and a
-    codec decode — downstream can range-read exactly the chosen frames'
-    bytes from object storage instead of shipping whole files."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for s, off, size, dur in parse_mp4_samples(bytes(payload)):
-                    out.append((mid, s, off, size, dur))
-            yield pd.DataFrame(out, columns=[f.name for f in FRAME_INDEX_SCHEMA])
-
-    return (
-        media.filter(F.col("meta.format") == "mp4")
-        .select("media_id", "payload")
-        .mapInPandas(gen, schema=FRAME_INDEX_SCHEMA)
-    )
-
-
 def synthetic_mp4(
     n_samples: int = 6,
     chunked: tuple[int, ...] = (2, 1),
@@ -1451,8 +1138,8 @@ def decode_video_frames(
     the documented seam, which is the right trade for a pipeline that
     frame-samples keyframes rather than transcoding). 'hvc1' (h265)
     raises NotImplementedError naming the codec. ``indices`` selects
-    samples (default: all) — pair with frame_sample_plan /
-    mp4_frame_index to range-read only the chosen frames at scale."""
+    samples (default: all) — pair with frame_sample_plan to range-read
+    only the chosen frames at scale."""
     from .jpeg import decode_jpeg
 
     codec = mp4_sample_codec(payload)
@@ -1480,580 +1167,3 @@ def decode_video_frames(
             continue
         out.append(_dec(payload[off : off + size]))
     return out
-
-
-def _log_skipped_payload(op: str, media_id, exc: BaseException, counter) -> None:
-    """Make on_error='skip' observable (r10 ADVICE item 2): a silent
-    bare-except skip makes a systematic decoder regression (TypeError/
-    AttributeError from a bad refactor) indistinguishable from corrupt
-    payloads — the output just shrinks. Every skip logs one stderr
-    line from the worker (executor logs at cluster scale) naming the
-    payload and the exception class, and bumps the caller's optional
-    Spark accumulator so a job can ASSERT on its skip rate
-    (``sc.accumulator(0)`` passed as ``skip_counter``)."""
-    import sys
-
-    print(
-        f"{op}: skipping undecodable payload media_id={media_id!r}: "
-        f"{type(exc).__name__}: {exc}",
-        file=sys.stderr,
-        flush=True,
-    )
-    if counter is not None:
-        counter.add(1)
-
-
-def _video_sample_indices(
-    raw: bytes, samples, stride: int, keyframes_only: bool
-) -> list[int]:
-    if keyframes_only:
-        sync = mp4_sync_samples(raw)
-        base = sync if sync is not None else list(range(len(samples)))
-        return base[::stride]
-    return list(range(0, len(samples), stride))
-
-
-def _decode_frames_salvage(
-    op: str, mid, raw: bytes, idx: list[int], samples, on_error: str,
-    skip_counter,
-) -> list[tuple[int, np.ndarray]]:
-    """Decode the sampled frames; with on_error='skip' a failing BATCH
-    decode falls back to per-frame decode so one corrupt/out-of-scope
-    sample drops THAT FRAME, not the whole payload (r11 — previously a
-    single bad sample silently discarded every frame of the file)."""
-    try:
-        return list(zip(idx, decode_video_frames(raw, idx, _samples=samples)))
-    except Exception as exc:
-        if on_error == "raise":
-            raise
-        out = []
-        for i in idx:
-            try:
-                out.append((i, decode_video_frames(raw, [i], _samples=samples)[0]))
-            except Exception as fexc:
-                _log_skipped_payload(op, f"{mid}[sample {i}]", fexc, skip_counter)
-        _ = exc
-        return out
-
-
-def video_frame_stats(
-    media: DataFrame,
-    stride: int = 1,
-    on_error: str = "raise",
-    skip_counter=None,
-    keyframes_only: bool = False,
-) -> DataFrame:
-    """Per-frame stats for natively-decodable video tracks (MJPEG and
-    h264-intra 'avc1'): one row per (media_id, sample_idx) with frame
-    dimensions and mean brightness — the video twin of
-    ``image_stats``, over the same Arrow-batched mapInPandas plumbing.
-    ``stride`` samples every n-th frame (the frame-sampling shape: at
-    100 TB you stat a strided subset, not every frame).
-    ``on_error='skip'`` drops undecodable payloads (h265 tracks, P/B
-    h264 samples, corrupt files) instead of failing the task — the
-    RECOMMENDED setting for mixed/real crawled corpora, where the
-    default ``'raise'`` fails the whole job on the first
-    out-of-scope codec; every skip logs the media_id + exception to
-    executor stderr and bumps the optional ``skip_counter``
-    accumulator so a systematic decoder regression is visible as a
-    skip-rate spike, not silently shrinking output. Skips are
-    FRAME-granular: a corrupt sample drops that frame, not the file.
-    ``keyframes_only`` samples the stss sync table instead of every
-    n-th sample — on wild mixed-GOP tracks the sync samples are the
-    IDR frames the intra decoder serves, so keyframe thumbnails work
-    without touching P/B samples at all (stss absent = every sample
-    is sync, per ISO-BMFF)."""
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-
-    schema = (
-        "media_id string, sample_idx int, height int, width int, "
-        "mean_brightness double"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                try:
-                    samples = parse_mp4_samples(raw)
-                    idx = _video_sample_indices(raw, samples, stride, keyframes_only)
-                except Exception as exc:
-                    # container-level failure: 'skip' drops the payload
-                    # (corrupt/truncated boxes — nothing to salvage)
-                    if on_error == "skip":
-                        _log_skipped_payload(
-                            "video_frame_stats", mid, exc, skip_counter
-                        )
-                        continue
-                    raise
-                for i, img in _decode_frames_salvage(
-                    "video_frame_stats", mid, raw, idx, samples, on_error,
-                    skip_counter,
-                ):
-                    gray = img if img.ndim == 2 else img.mean(axis=2)
-                    out.append(
-                        (mid, i, img.shape[0], img.shape[1], float(gray.mean()))
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "sample_idx", "height", "width", "mean_brightness",
-                ],
-            )
-
-    return (
-        media.filter(F.col("meta.format") == "mp4")
-        .select("media_id", "payload")
-        .mapInPandas(gen, schema=schema)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Perceptual image hashing — near-dup detection for IMAGE corpora, where
-# byte-level hashes miss re-encodes/resizes/brightness tweaks entirely.
-# ---------------------------------------------------------------------------
-
-
-def _area_mean_resize(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Box-filter downsample to (out_h, out_w): each output cell is the
-    mean of its source rectangle — robust to noise where nearest-
-    neighbor sampling is not (the property dHash needs)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h + 1) * h / out_h).round().astype(int)
-    xs = (np.arange(out_w + 1) * w / out_w).round().astype(int)
-    out = np.empty((out_h, out_w), dtype=np.float64)
-    for i in range(out_h):
-        y0, y1 = ys[i], max(ys[i + 1], ys[i] + 1)
-        for j in range(out_w):
-            x0, x1 = xs[j], max(xs[j + 1], xs[j] + 1)
-            out[i, j] = float(img[y0:y1, x0:x1].mean())
-    return out
-
-
-def dhash64(img: np.ndarray) -> int:
-    """64-bit difference hash (dHash): grayscale → 8×9 box-filter
-    thumbnail → one bit per horizontal gradient sign. Survives
-    re-encoding, mild noise, brightness/contrast shifts and resizes —
-    the things that defeat exact byte hashes on crawled images.
-    Returned as a SIGNED 64-bit int (bit 63 may be set) so it stores
-    in a Spark long and feeds hamming64 directly."""
-    g = img.astype(np.float64)
-    if g.ndim == 3:
-        g = g.mean(axis=2)
-    t = _area_mean_resize(g, 8, 9)
-    bits = (t[:, 1:] > t[:, :-1]).ravel()
-    v = 0
-    for bit in bits:
-        v = (v << 1) | int(bit)
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def image_dhash(media: DataFrame, on_error: str = "raise") -> DataFrame:
-    """(media_id, dhash) for every decodable image payload — the
-    fingerprint stage of image near-dup detection, over the same
-    Arrow-batched plumbing as image_stats (decode dispatch included,
-    so JPEG/PNG/GIF/BMP/TIFF/PNM all hash through one stage)."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for mid, fmt, payload in zip(pdf["media_id"], pdf["fmt"], pdf["payload"]):
-                try:
-                    img = decode_real(bytes(payload), {"format": fmt})
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                out.append((mid, dhash64(img)))
-            yield pd.DataFrame(out, columns=["media_id", "dhash"])
-
-    return (
-        media.filter(
-            F.col("meta.format").isin(
-                "ppm", "pgm", "png", "gif", "jpg", "jpeg", "bmp", "tif", "tiff"
-            )
-        )
-        .select("media_id", F.col("meta.format").alias("fmt"), "payload")
-        .mapInPandas(gen, schema="media_id string, dhash long")
-    )
-
-
-def image_near_dup_pairs(
-    media: DataFrame,
-    n_bands: int = 8,
-    max_hamming: int = 6,
-    on_error: str = "raise",
-) -> DataFrame:
-    """Perceptual near-dup pairs across an image corpus: dHash
-    fingerprints through the banded Hamming-LSH equi-join
-    (operators/dedup.hash64_near_dup_pairs — pigeonhole full recall,
-    no cross product, exact bit-count rescore). The image-side twin of
-    the text dedup family; at 100 TB the join carries 8 band rows per
-    image, never pixels."""
-    from .dedup import hash64_near_dup_pairs
-
-    fps = image_dhash(media, on_error=on_error)
-    return hash64_near_dup_pairs(
-        fps, "media_id", "dhash", n_bands=n_bands, max_hamming=max_hamming
-    )
-
-
-# magic-byte format sniffing — pure JVM column expression, for ingest
-# paths where the recorded format is missing or wrong (crawls lie).
-_MAGIC: list[tuple[bytes, int, str]] = [
-    (b"\x89PNG", 1, "png"),
-    (b"GIF8", 1, "gif"),
-    (b"\xff\xd8\xff", 1, "jpeg"),
-    (b"BM", 1, "bmp"),
-    (b"II*\x00", 1, "tiff"),
-    (b"MM\x00*", 1, "tiff"),
-    (b"fLaC", 1, "flac"),
-    (b"%PDF", 1, "pdf"),
-    (b"P5", 1, "pgm"),
-    (b"P6", 1, "ppm"),
-    (b"ftyp", 5, "mp4"),
-]
-
-
-def sniffed_format(payload_col: Column) -> Column:
-    """Container format from magic bytes as ONE codegen-friendly
-    when-chain over binary substrings (no Python). RIFF needs the
-    second tag (WAVE vs WEBP); unknown → NULL. Use to fill or audit
-    ``meta.format`` at ingest: crawled metadata lies, magic bytes
-    don't."""
-    expr = F.lit(None).cast("string")
-    riff = payload_col.substr(1, 4) == F.lit(b"RIFF")
-    expr = F.when(riff & (payload_col.substr(9, 4) == F.lit(b"WAVE")), "wav").otherwise(expr)
-    expr = F.when(riff & (payload_col.substr(9, 4) == F.lit(b"WEBP")), "webp").otherwise(expr)
-    for magic, off, name in _MAGIC:
-        expr = F.when(
-            payload_col.substr(off, len(magic)) == F.lit(magic), name
-        ).otherwise(expr)
-    return expr
-
-
-def audio_fingerprint64(wav: np.ndarray) -> int:
-    """64-bit perceptual audio hash — dHash's recipe applied to a
-    time×frequency energy grid: mono-mix, split into 9 equal time
-    segments, 8 log-spaced FFT band energies per segment, one bit per
-    TEMPORAL energy gradient (8 bands × 8 transitions). Amplitude-
-    invariant by construction (gradient signs ignore scale) and robust
-    to mild noise/re-encoding; unrelated clips differ in ~32 bits.
-    Returns a signed 64-bit int for Spark long storage +
-    dedup.hamming64."""
-    mono = wav.mean(axis=1) if wav.ndim == 2 else wav.astype(np.float64)
-    n = len(mono)
-    if n < 18:
-        raise ValueError(f"audio too short to fingerprint ({n} samples)")
-    seg = n // 9
-    bands = np.empty((8, 9), dtype=np.float64)
-    edges = np.geomspace(2, seg // 2 + 1, 9).astype(int)
-    for s in range(9):
-        spec = np.abs(np.fft.rfft(mono[s * seg : (s + 1) * seg]))
-        for b in range(8):
-            lo, hi = edges[b], max(edges[b + 1], edges[b] + 1)
-            bands[b, s] = float(np.square(spec[lo:hi]).sum())
-    bits = (bands[:, 1:] > bands[:, :-1]).ravel()
-    v = 0
-    for bit in bits:
-        v = (v << 1) | int(bit)
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def audio_fingerprints(media: DataFrame, on_error: str = "raise") -> DataFrame:
-    """(media_id, afp) for every decodable audio payload (wav + flac
-    through the shared dispatch) — the fingerprint stage of audio
-    near-dup detection."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for mid, fmt, payload in zip(pdf["media_id"], pdf["fmt"], pdf["payload"]):
-                try:
-                    wav = decode_real(bytes(payload), {"format": fmt})
-                    out.append((mid, audio_fingerprint64(wav)))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-            yield pd.DataFrame(out, columns=["media_id", "afp"])
-
-    return (
-        media.filter(F.col("meta.format").isin("wav", "flac"))
-        .select("media_id", F.col("meta.format").alias("fmt"), "payload")
-        .mapInPandas(gen, schema="media_id string, afp long")
-    )
-
-
-def audio_near_dup_pairs(
-    media: DataFrame,
-    n_bands: int = 8,
-    max_hamming: int = 6,
-    on_error: str = "raise",
-) -> DataFrame:
-    """Perceptual near-dup pairs across an audio corpus — the third
-    leg of the near-dup triad (text shingles / image dHash / audio
-    spectral hash), all served by the same banded Hamming-LSH
-    equi-join."""
-    from .dedup import hash64_near_dup_pairs
-
-    fps = audio_fingerprints(media, on_error=on_error)
-    return hash64_near_dup_pairs(
-        fps, "media_id", "afp", n_bands=n_bands, max_hamming=max_hamming
-    )
-
-
-def image_exif(media: DataFrame, on_error: str = "raise") -> DataFrame:
-    """EXIF metadata rows for JPEG/TIFF payloads (operators/rasters.
-    exif_tags): (media_id, make, model, orientation,
-    datetime_original) — the curation signals (camera dedup, capture-
-    time windows, orientation correction before feature extraction)
-    crawled image metadata rarely records honestly. Payloads without
-    EXIF produce a row of NULLs (presence itself is a signal)."""
-    from .rasters import exif_tags
-
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    t = exif_tags(bytes(payload))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                out.append(
-                    (
-                        mid,
-                        t.get("make"),
-                        t.get("model"),
-                        t.get("orientation"),
-                        t.get("datetime_original"),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "make", "model", "orientation",
-                    "datetime_original",
-                ],
-            )
-
-    return (
-        media.filter(F.col("meta.format").isin("jpg", "jpeg", "tif", "tiff"))
-        .select("media_id", "payload")
-        .mapInPandas(
-            gen,
-            schema="media_id string, make string, model string, "
-            "orientation int, datetime_original string",
-        )
-    )
-
-
-def ocr_pages(
-    media: DataFrame,
-    ocr_fn=None,
-    max_pages: int = 50,
-    on_error: str = "raise",
-) -> DataFrame:
-    """Scanned-document → text bridge: explode each payload into page
-    IMAGES (multi-page TIFF via the next-IFD chain, PDF via its
-    embedded raster XObjects, single images as one page) and run
-    ``ocr_fn(img) -> str`` per page — the model seam (no OCR engine
-    ships in this container; the default stub emits a deterministic
-    per-page descriptor so schema, page ordering, and batch plumbing
-    are real and tested — swap tesseract/a VLM behind the same
-    signature). Output (media_id, page, text, height, width) feeds
-    straight into the documents-table shape for prepare_corpus.
-
-    ``max_pages`` bounds adversarial page chains per payload; pages a
-    PDF carries in unsupported codecs (image=None) are skipped."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-    if max_pages < 1:
-        raise ValueError(f"max_pages must be >= 1, got {max_pages}")
-    if ocr_fn is None:
-        ocr_fn = stub_ocr
-
-    def pages_of(fmt: str, raw: bytes):
-        if fmt in ("tif", "tiff"):
-            from .rasters import decode_tiff_pages
-
-            return decode_tiff_pages(raw, limit=max_pages)
-        if fmt == "pdf":
-            from ..sources.html import pdf_images
-
-            return [img for _, img in pdf_images(raw)[:max_pages] if img is not None]
-        return [decode_real(raw, {"format": fmt})]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            if not len(pdf_batch):
-                continue
-            out = []
-            for mid, fmt, payload in zip(
-                pdf_batch["media_id"], pdf_batch["fmt"], pdf_batch["payload"]
-            ):
-                try:
-                    pages = pages_of(fmt, bytes(payload))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                for p, img in enumerate(pages):
-                    out.append(
-                        (mid, p, ocr_fn(img), img.shape[0], img.shape[1])
-                    )
-            yield pd.DataFrame(
-                out, columns=["media_id", "page", "text", "height", "width"]
-            )
-
-    return (
-        media.select(
-            "media_id", F.col("meta.format").alias("fmt"), "payload"
-        )
-        .where(
-            F.col("fmt").isin(
-                "pdf", "tif", "tiff", "png", "gif", "jpg", "jpeg", "bmp",
-                "ppm", "pgm",
-            )
-        )
-        .mapInPandas(
-            gen,
-            schema="media_id string, page int, text string, "
-            "height int, width int",
-        )
-    )
-
-
-def stub_ocr(img: np.ndarray) -> str:
-    """Deterministic OCR stand-in: a stable descriptor of the page's
-    pixels (dims + dHash hex + mean brightness) — pure function of the
-    image, so pipeline tests can assert exact output without an OCR
-    engine."""
-    gray = img if img.ndim == 2 else img.mean(axis=2)
-    return (
-        f"[page {img.shape[0]}x{img.shape[1]} "
-        f"hash={dhash64(img) & ((1 << 64) - 1):016x} "
-        f"lum={float(gray.mean()):.1f}]"
-    )
-
-
-def video_frame_hashes(
-    media: DataFrame,
-    stride: int = 1,
-    on_error: str = "raise",
-    skip_counter=None,
-    keyframes_only: bool = False,
-) -> DataFrame:
-    """(media_id, sample_idx, dhash) for decodable (MJPEG and
-    h264-intra 'avc1') video tracks — per-frame perceptual
-    fingerprints, the unit of video near-dup detection. Because the
-    fingerprint is computed on DECODED pixels, near-dup detection is
-    CROSS-CODEC: the same footage stored as MJPEG and as h264 pairs
-    up (pinned in tests/test_h264.py)."""
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                try:
-                    samples = parse_mp4_samples(raw)
-                    idx = _video_sample_indices(raw, samples, stride, keyframes_only)
-                except Exception as exc:
-                    if on_error == "skip":
-                        _log_skipped_payload(
-                            "video_frame_hashes", mid, exc, skip_counter
-                        )
-                        continue
-                    raise
-                for i, img in _decode_frames_salvage(
-                    "video_frame_hashes", mid, raw, idx, samples, on_error,
-                    skip_counter,
-                ):
-                    out.append((mid, i, dhash64(img)))
-            yield pd.DataFrame(out, columns=["media_id", "sample_idx", "dhash"])
-
-    return (
-        media.filter(F.col("meta.format") == "mp4")
-        .select("media_id", "payload")
-        .mapInPandas(gen, schema="media_id string, sample_idx int, dhash long")
-    )
-
-
-def video_near_dup_pairs(
-    media: DataFrame,
-    stride: int = 1,
-    min_shared_ratio: float = 0.5,
-    on_error: str = "raise",
-    skip_counter=None,
-    keyframes_only: bool = False,
-) -> DataFrame:
-    """Video near-dup pairs by FRAME-HASH overlap: two videos are
-    near-duplicates when the fraction of their (stride-sampled) frame
-    fingerprints they share exceeds ``min_shared_ratio`` — catches
-    re-encodes, re-containerizations and videos differing by a few
-    inserted/dropped frames, which whole-file hashes and single-frame
-    thumbnails both miss. One equi-join on the exact frame hash
-    (near-identical frames land on equal dHashes at these
-    resolutions), pair counts vs per-video frame counts — the n-gram
-    Jaccard recipe with frames as the shingles, so the same
-    stop-shingle caveat applies (a title card shared by thousands of
-    videos would need a frame-df cap before the join at corpus
-    scale). Returns (a, b, shared, ratio)."""
-    if not 0.0 < min_shared_ratio <= 1.0:
-        raise ValueError(
-            f"min_shared_ratio must be in (0, 1], got {min_shared_ratio}"
-        )
-    fps = video_frame_hashes(
-        media, stride=stride, on_error=on_error, skip_counter=skip_counter,
-        keyframes_only=keyframes_only,
-    )
-    per = fps.groupBy("media_id").agg(
-        F.count_distinct("dhash").alias("_n")
-    )
-    uniq = fps.select("media_id", "dhash").distinct()
-    a = uniq.select(F.col("media_id").alias("a"), "dhash")
-    b = uniq.select(F.col("media_id").alias("b"), "dhash")
-    shared = (
-        a.join(b, "dhash")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    return (
-        shared.join(per.select(F.col("media_id").alias("a"), F.col("_n").alias("_na")), "a")
-        .join(per.select(F.col("media_id").alias("b"), F.col("_n").alias("_nb")), "b")
-        .withColumn(
-            "ratio",
-            F.round(F.col("shared") / F.least("_na", "_nb").cast("double"), 4),
-        )
-        .filter(F.col("ratio") >= min_shared_ratio)
-        .select("a", "b", "shared", "ratio")
-    )

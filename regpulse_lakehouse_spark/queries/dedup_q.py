@@ -628,9 +628,9 @@ def dd_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # components over the PAIR-GRAPH nodes only (r16): passing every
     # rep as an isolated node made the label table corpus-sized and
     # every propagation round join all of it, yet the expansion below
-    # already folds reps absent from rep_comp back to their own id via
-    # the coalesce — identical output, loop state shrunk to the nodes
-    # that can actually change label (pair-graph nodes ≪ corpus).
+    # folds reps absent from rep_comp back to their REP id via the
+    # coalesce — loop state shrinks to the nodes that can actually
+    # change label (pair-graph nodes ≪ corpus).
     rep_comp = connected_components(
         rep_pairs,
         src_col="a",
@@ -655,7 +655,9 @@ def dd_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return labeled.select(
         "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id"))
+        # a clique with no near-dup partner is absent from rep_comp;
+        # its members share the rep's label, not their own ids
+        F.coalesce(F.col("component"), F.col("_r"))
         .cast("long")
         .alias("component"),
     )

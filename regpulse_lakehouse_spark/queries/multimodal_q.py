@@ -1,12 +1,11 @@
-"""Multimodal-column queries (BASELINE.json north-star: image/audio/
-video as opaque binary columns with typed metadata).
+"""Binary-column queries: opaque payloads with typed metadata.
 
-Real plumbing, stubbed codecs (operators/multimodal.py): payloads are
-synthesized deterministically from the documents corpus so the driver's
-differential gate exercises the actual Arrow-batched ``mapInPandas``
-decode path and the metadata-only pruned plan — the two shapes that
-matter at 100 TB (media bytes never leave executors; metadata plans
-never read the binary column).
+The plumbing is real and the decode is a deterministic stand-in
+(operators/multimodal.py ``decode_fake``): payloads are synthesized
+from the documents corpus so the driver's differential gate exercises
+the Arrow-batched ``mapInPandas`` decode path and the metadata-only
+pruned plan — the two shapes that matter at scale (payload bytes never
+leave executors; metadata plans never read the binary column).
 """
 
 from __future__ import annotations
@@ -31,10 +30,10 @@ from . import register
 def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode + feature-extract over binary media payloads via the
     Arrow-batched ``mapInPandas`` stage (operators/multimodal.py,
-    deterministic fake decode — container ships no codecs). Payloads are
-    the UTF-8 document bytes; the oracle checks the byte accounting and
-    batch shape (id, n_bytes, feature dimensionality) — the float
-    features themselves are pytest-verified (tests/test_lineage_streaming_mm.py)."""
+    deterministic stand-in decode). Payloads are the UTF-8 document
+    bytes; the oracle checks the byte accounting and batch shape (id,
+    n_bytes, feature dimensionality) — the float features themselves
+    are pytest-verified (tests/test_lineage_streaming_mm.py)."""
     docs = load_table(spark, sf_dir, "documents")
     media = docs.select(
         F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("media_id"),

@@ -143,6 +143,7 @@ def st_interval_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch of StreamingSymmetricHashJoinExec + 4 state-store
     commits)."""
 
+    import os
     import tempfile
 
     from ..streaming.windows import interval_stream_join
@@ -172,7 +173,13 @@ def st_interval_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.partitionBy("side")
         .parquet(f"{root}/in")
     )
-    slice_schema = f"user_id {dict(ev.dtypes)['user_id']}, ts timestamp"
+    # partitionBy writes no dir for a side with no rows (a corpus with
+    # no clicks or no purchases); the file streams need both to exist
+    for side in ("l", "r"):
+        os.makedirs(f"{root}/in/side={side}", exist_ok=True)
+    user_t = ev.schema["user_id"].dataType.simpleString()
+    ts_t = ev.schema["ts"].dataType.simpleString()
+    slice_schema = f"user_id {user_t}, ts {ts_t}"
     # the streaming stages run on a newSession() clone (shared
     # SparkContext + table cache, isolated SQLConf) so the 4-partition
     # state-store sizing never touches the caller's shuffle conf — the
@@ -219,11 +226,7 @@ def st_interval_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Explicit schema on the read-back: a zero-match corpus leaves a
     # data-file-less sink and schema inference would fail where the
     # FileStreamSink metadata log carries the schema.
-    sink_schema = (
-        "user_id "
-        + dict(ev.dtypes)["user_id"]
-        + ", left_ts timestamp, right_ts timestamp"
-    )
+    sink_schema = f"user_id {user_t}, left_ts {ts_t}, right_ts {ts_t}"
     out = spark.read.schema(sink_schema).parquet(f"{root}/out")
     return out.select(
         "user_id",

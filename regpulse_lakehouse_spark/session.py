@@ -1,7 +1,10 @@
 """SparkSession factory tuned for both local testing and cluster scale.
 
-Local runs use ``local[$SPARK_GRAFT_CPUS]``; the conf below is chosen so
-the same code is correct on a 1000-executor cluster:
+Local runs use ``local[N]`` with N = ``$SPARK_GRAFT_CPUS`` or, unset, the
+CPUs this process may run on; the driver heap is
+``$SPARK_GRAFT_DRIVER_MEM`` or, unset, half of physical RAM. Both are
+resolved when :func:`get_spark` is called, not at import. The conf below
+is chosen so the same code is correct on a 1000-executor cluster:
 
 - AQE on (runtime coalescing, skew-join splitting) so shuffle
   partition counts self-tune at any scale factor;
@@ -62,7 +65,6 @@ _DEFAULTS = {
     # events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
     # rejects; read as long and convert in sources/tpch.py (ts div 1000).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     # saveAsTable (bucketed layouts, sources/layout.py) must not drop a
     # spark-warehouse/ directory into the repo working tree. Per-process
     # path: a SHARED dir permanently bricks managed tables after any
@@ -76,32 +78,58 @@ _DEFAULTS = {
 }
 
 
+def _machine_mem_mb() -> int:
+    """Physical RAM in MiB, from /proc/meminfo ``MemTotal``."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
 def _initial_heap(mem: str) -> str | None:
-    """-Xms sized to half of -Xmx, capped at 16g: Spark only sets -Xmx,
-    so the JVM otherwise starts at a ~1g heap and grows it through
-    dozens of stop-the-world GCs mid-workload — measured as multi-second
-    jitter spikes on the string-churning dedup queries. Only whole-GiB
-    driver-memory strings are handled; anything else keeps JVM defaults."""
+    """-Xms sized to half of -Xmx, capped at 16g and at a quarter of
+    physical RAM: Spark only sets -Xmx, so the JVM otherwise starts at a
+    ~1g heap and grows it through dozens of stop-the-world GCs
+    mid-workload — measured as multi-second jitter spikes on the
+    string-churning dedup queries. The RAM cap matters because of
+    AlwaysPreTouch: the JVM commits the whole -Xms at start, so an
+    -Xms near physical RAM kills the process before any query runs.
+    Only whole-GiB driver-memory strings are handled; anything else
+    keeps JVM defaults."""
     m = re.fullmatch(r"(\d+)[gG]", mem.strip())
     if not m:
         return None
-    xms = max(1, min(16, int(m.group(1)) // 2))
+    xms_mb = min(16 * 1024, int(m.group(1)) * 1024 // 2, _machine_mem_mb() // 4)
     # PreTouch faults the pages in at JVM start (once, before any query
     # is timed) instead of spreading page faults over the first heavy
     # workloads.
-    return f"-Xms{xms}g -XX:+AlwaysPreTouch"
+    return f"-Xms{xms_mb}m -XX:+AlwaysPreTouch"
+
+
+def _sizing() -> tuple[str, str, str]:
+    """(cores, shuffle partitions, driver memory) for this machine, read
+    now: the SPARK_GRAFT_* env vars win, else the CPUs this process may
+    run on (its affinity set, not the host's total) and half of physical
+    RAM (whole GiB, at least 1g)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or cpus
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or (
+        f"{max(1, _machine_mem_mb() // 2048)}g"
+    )
+    return cpus, shuffle, mem
 
 
 def get_spark(app_name: str = "regpulse_lakehouse_spark") -> SparkSession:
     """Build (or reuse) the tuned SparkSession."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+    cpus, shuffle, mem = _sizing()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.driver.memory", mem)
     )
-    xms = _initial_heap(_DEFAULTS["spark.driver.memory"])
+    xms = _initial_heap(mem)
     if xms:
         builder = builder.config("spark.driver.extraJavaOptions", xms)
     for k, v in _DEFAULTS.items():

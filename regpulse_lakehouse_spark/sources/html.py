@@ -655,8 +655,7 @@ class DocTextExtractor:
 
     - ``.docx`` is a zip container (stdlib ``zipfile``); text runs live
       in ``word/document.xml`` as ``<w:t>`` elements grouped into
-      ``<w:p>`` paragraphs — no library needed, same move that made
-      PNG/WAV real.
+      ``<w:p>`` paragraphs — no library needed.
     - ``.pdf``: stream objects are scanned linearly (xref tables are
       unnecessary for text harvest), FlateDecode payloads inflate with
       stdlib ``zlib``, and literal strings inside BT..ET text blocks
@@ -843,120 +842,3 @@ class DocTextExtractor:
 
         return docs.select(url_col, payload_col).mapInPandas(gen, schema=DOC_TEXT_SCHEMA)
 
-
-def pdf_images(
-    payload: bytes, password: bytes | str = b""
-) -> list[tuple[dict, "object"]]:
-    """Embedded raster images from a PDF — the OCR-pipeline input:
-    scanned PDFs carry their pages as image XObjects (/Subtype /Image),
-    usually /DCTDecode (a complete JPEG — decoded by operators/jpeg)
-    or /FlateDecode (raw samples reshaped by /Width /Height
-    /ColorSpace /BitsPerComponent). Returns [(info, ndarray)] where
-    info carries width/height/filter/colorspace. /CCITTFaxDecode
-    decodes through the shared T.4/T.6 cores (operators/rasters): /K < 0
-    (pure G4 — the scanned-page default), /K = 0 (G3 1-D), /K > 0 (G3
-    mixed 2-D), each honoring /EncodedByteAlign and /BlackIs1. The one
-    remaining unsupported image filter, JPXDecode, is returned with
-    ``image=None`` and its info intact so callers can count what they
-    are missing.
-    Encrypted PDFs decrypt through the same standard-handler chain as
-    text extraction."""
-    import re
-    import zlib
-
-    import numpy as np
-
-    from ..operators.jpeg import decode_jpeg
-
-    if not payload.startswith(b"%PDF"):
-        return []
-    try:
-        enc = _pdf_encryption_key(payload, password)
-    except ValueError:
-        return []
-    file_key, method = enc if enc is not None else (None, None)
-    out: list[tuple[dict, object]] = []
-    for m in re.finditer(
-        rb"(?<![0-9])(\d+)\s+(\d+)\s+obj(.*?)endobj", payload, flags=re.S
-    ):
-        body = m.group(3)
-        sm = re.search(rb"stream\r?\n(.*?)\r?\nendstream", body, flags=re.S)
-        if sm is None:
-            continue
-        head = body[: sm.start()]
-        if b"/Subtype" not in head or b"/Image" not in head:
-            continue
-        data = sm.group(1)
-        if file_key is not None:
-            obj_key = _pdf_object_key(
-                file_key, int(m.group(1)), int(m.group(2)), method=method
-            )
-            if method in ("aes", "aes256"):
-                from .pdfcrypto import aes_cbc_decrypt
-
-                try:
-                    data = aes_cbc_decrypt(obj_key, data)
-                except ValueError:
-                    data = None  # malformed encrypted stream: info survives
-            else:
-                data = _rc4(obj_key, data)
-
-        def tag(name, default=None):
-            mm = re.search(rb"/" + name + rb"\s+(\d+)", head)
-            return int(mm.group(1)) if mm else default
-
-        info = {
-            "width": tag(b"Width"),
-            "height": tag(b"Height"),
-            "bits": tag(b"BitsPerComponent", 8),
-            "colorspace": (
-                "rgb" if b"/DeviceRGB" in head
-                else "gray" if b"/DeviceGray" in head else None
-            ),
-            "filter": (
-                "dct" if b"/DCTDecode" in head
-                else "flate" if b"/FlateDecode" in head
-                else "ccitt" if b"/CCITTFaxDecode" in head
-                else "none" if b"/Filter" not in head else "other"
-            ),
-        }
-        img = None
-        try:
-            if data is None:
-                pass  # decrypt failed above: keep info, no pixels
-            elif info["filter"] == "dct":
-                img = decode_jpeg(data)
-            elif info["filter"] == "ccitt":
-                # r11: scanned-PDF pages are usually /CCITTFaxDecode
-                # image XObjects — /K < 0 = pure G4 (T.6), /K = 0 =
-                # 1-D G3, /K > 0 = mixed 2-D G3 (EOL-tagged rows), all
-                # via the shared raw cores from operators/rasters,
-                # honoring /EncodedByteAlign and /BlackIs1.
-                from ..operators.rasters import (
-                    decode_ccitt_g3, decode_ccitt_g4,
-                )
-
-                km = re.search(rb"/K\s+(-?\d+)", head)
-                k = int(km.group(1)) if km else 0
-                ba = bool(re.search(rb"/EncodedByteAlign\s+true", head))
-                cols = tag(b"Columns", 1728)
-                rows = tag(b"Rows", info["height"])
-                if k < 0:
-                    black = decode_ccitt_g4(data, cols, rows, byte_align=ba)
-                else:
-                    black = decode_ccitt_g3(
-                        data, cols, rows, two_d=k > 0, byte_align=ba
-                    )
-                img = np.where(black, 0, 255).astype(np.uint8)
-                if re.search(rb"/BlackIs1\s+true", head):
-                    img = np.uint8(255) - img
-            elif info["filter"] in ("flate", "none") and info["bits"] == 8:
-                raw = zlib.decompress(data) if info["filter"] == "flate" else data
-                ch = 3 if info["colorspace"] == "rgb" else 1
-                h, w = info["height"], info["width"]
-                arr = np.frombuffer(raw[: h * w * ch], dtype=np.uint8)
-                img = arr.reshape((h, w, ch) if ch == 3 else (h, w))
-        except Exception:
-            img = None  # corrupt embed: info survives, pixels don't
-        out.append((info, img))
-    return out

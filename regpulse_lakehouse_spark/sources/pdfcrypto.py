@@ -1,6 +1,6 @@
 """Minimal AES (FIPS-197) for PDF AESV2 stream decryption — stdlib +
-table generation from first principles, no crypto library (the same
-move that made the image codecs real: the cipher is public math).
+table generation from first principles, no crypto library (the cipher
+is public math).
 
 Scope: AES-128/192/256 block encrypt/decrypt + CBC with the PKCS#7
 padding PDF's AESV2 crypt filter uses (spec §7.6.2: per-object stream
@@ -11,9 +11,8 @@ known-answer vector in tests — an INDEPENDENT check, not a
 self-roundtrip.
 
 This is a fixture/connector-scale implementation (pure Python, ~1 MB/s);
-the honest note for bulk encrypted corpora is the same as the codec
-seams — swap in a real crypto provider behind the same function
-signatures.
+for bulk encrypted corpora, swap in a real crypto provider behind the
+same function signatures.
 """
 
 from __future__ import annotations

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -311,7 +312,10 @@ def bulk_ingest_near_dup(
     Crash safety: commit markers land AFTER the write, in batch order
     — a crash mid-write leaves zero committed batches (the sequential
     path would have committed a prefix; bulk is all-or-nothing, which
-    is the stronger of the two). Only valid on an empty store: with
+    is the stronger of the two). The crash can leave uncommitted
+    ``batch=*`` files behind; with no commit marker nothing can read
+    them, so a retry deletes them before its own append-mode write
+    instead of doubling every row. Only valid on an empty store: with
     committed history the per-batch probe-set pruning would need the
     real sequential path — callers with history should loop
     ``incremental_near_dup`` instead (asserted loudly)."""
@@ -320,6 +324,9 @@ def bulk_ingest_near_dup(
             "bulk_ingest_near_dup requires an empty store — ingest "
             "against existing history with incremental_near_dup per batch"
         )
+    for name in os.listdir(store.root):
+        if name.startswith("batch="):
+            shutil.rmtree(os.path.join(store.root, name))
     banded = banded_signatures(df, text_col, id_col, num_hashes, num_bands)
     tagged = banded.withColumn("batch", batch_expr.cast("int")).withColumn(
         "bp", F.pmod("bucket", F.lit(store.n_prefix))

@@ -429,26 +429,51 @@ def test_collapse_bounds_candidates_on_1k_clique(spark):
     assert total == n * (n - 1) // 2  # 499,500 intra-clique pairs
 
 
-def test_rep_level_components_equal_expanded_components(spark):
-    """The dd_cluster_components r13 wiring: clustering the
-    DISTINCT-content (representative) graph and expanding labels
-    through the clique membership must produce the exact label set of
-    components over the full expanded pair list — while the components
-    iteration never sees the B²/2 intra-clique pairs."""
-    from pyspark.sql import functions as F
+_FOX = "the quick brown fox jumps over the lazy dog near the river bank today"
+_CLIQUE_WITH_NEAR_DUPS = (
+    [(i, _FOX) for i in range(300)]                          # one big clique
+    + [(1000, _FOX + " tailx"), (1001, _FOX + " taily")]     # near-dups of it
+    + [(2000 + i, f"unrelated text number {i} about {i * 7} engines") for i in range(5)]
+    + [(3000, ""), (3001, None)]                             # ineligible singletons
+)
+_EXACT_PAIR_ONLY = [
+    (1, "member states shall report battery recycling quotas annually"),
+    (2, "member states shall report battery recycling quotas annually"),
+    (3, "type approval of heavy duty vehicles under the new emission rules"),
+]
+
+
+@pytest.mark.parametrize(
+    "rows, expect",
+    [
+        # the clique + its near-dups form ONE component labeled 0
+        (_CLIQUE_WITH_NEAR_DUPS,
+         {299: 0, 1000: 0, 1001: 0, 3000: 3000, 3001: 3001}),
+        (_EXACT_PAIR_ONLY, {1: 1, 2: 1, 3: 3}),
+    ],
+    ids=["clique_with_near_dups", "exact_clique_without_partner"],
+)
+def test_rep_level_components_equal_expanded_components(spark, tmp_path, rows, expect):
+    """The graded dd_cluster_components row clusters the DISTINCT-content
+    (representative) graph and expands labels through the clique
+    membership; its labels must equal components over the full
+    expanded pair list, with every doc as a node. An exact clique with
+    no near-dup partner never enters the pair graph, and its members
+    must still share the rep's label."""
+    import pandas as pd
 
     from regpulse_lakehouse_spark.operators.components import connected_components
+    from regpulse_lakehouse_spark.queries.dedup_q import dd_cluster_components
 
-    base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    n = 300
-    rows = [(i, base) for i in range(n)]                       # one big clique
-    rows += [(1000, base + " tailx"), (1001, base + " taily")]  # near-dups of it
-    rows += [(2000 + i, f"unrelated text number {i} about {i * 7} engines") for i in range(5)]
-    rows += [(3000, ""), (3001, None)]                          # ineligible singletons
+    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
+        tmp_path / "documents.parquet"
+    )
+    got = {tuple(r) for r in dd_cluster_components(spark, str(tmp_path)).collect()}
+
     df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    # reference: components over the full expanded pair set
-    full_pairs = DD.minhash_near_dup_pairs(df, threshold=0.4).select("a", "b")
+    full_pairs = DD.minhash_near_dup_pairs(
+        df, num_hashes=16, num_bands=4, threshold=0.4, collapse_exact=False
+    ).select("a", "b")
     want = {
         (r["id"], r["component"])
         for r in connected_components(
@@ -456,29 +481,6 @@ def test_rep_level_components_equal_expanded_components(spark):
             src_col="a", dst_col="b", id_col="id",
         ).collect()
     }
-
-    # rep-level path (the graded row's wiring)
-    members, rep_docs = DD.exact_clique_membership(df, "text", "doc_id")
-    rep_pairs = DD.minhash_near_dup_pairs(
-        rep_docs, threshold=0.4, collapse_exact=False
-    ).select("a", "b")
-    assert rep_pairs.count() < 20          # vs ~45k expanded pairs
-    rep_comp = connected_components(
-        rep_pairs, nodes=rep_docs.select(F.col("doc_id").alias("id")),
-        src_col="a", dst_col="b", id_col="id",
-    )
-    basedf = df.select(F.col("doc_id").cast("long").alias("doc_id"))
-    rep_of = members.select(F.col("doc_id").alias("_mid"), F.col("_rep").alias("_mrep"))
-    got = {
-        (r["doc_id"], r["component"])
-        for r in basedf.join(rep_of, basedf["doc_id"] == rep_of["_mid"], "left")
-        .withColumn("_r", F.coalesce(F.col("_mrep"), F.col("doc_id")))
-        .join(rep_comp.select(F.col("id").alias("_r"), "component"), "_r", "left")
-        .select("doc_id", F.coalesce("component", "doc_id").cast("long").alias("component"))
-        .collect()
-    }
     assert got == want
-    # the clique + its near-dups form ONE component labeled 0
     comp_of = dict(got)
-    assert comp_of[299] == 0 and comp_of[1000] == 0 and comp_of[1001] == 0
-    assert comp_of[3000] == 3000 and comp_of[3001] == 3001
+    assert {d: comp_of[d] for d in expect} == expect

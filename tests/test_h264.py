@@ -385,35 +385,6 @@ except ImportError:  # pragma: no cover - hypothesis is in the container
     pass
 
 
-def test_avc1_video_frame_stats_through_spark(spark):
-    """Spark-level integration: an 'avc1' intra track runs through the
-    same Arrow-batched video_frame_stats mapInPandas stage MJPEG uses —
-    per-sample rows with real decoded dimensions and brightness."""
-    from regpulse_lakehouse_spark.operators import multimodal as MM
-
-    frames = [
-        np.full((16, 32, 3), 40, dtype=np.uint8),
-        np.full((16, 32, 3), 200, dtype=np.uint8),
-        np.full((16, 32, 3), 120, dtype=np.uint8),
-    ]
-    samples = [H.encode_h264_iframe(f, qp=20, mb_pattern="i16") for f in frames]
-    mp4 = MM.synthetic_mp4(frames=samples, codec="avc1")
-    df = spark.createDataFrame(
-        [("v264", bytearray(mp4), ("video", "mp4", 16, 32, 3000, 3))],
-        MM.MEDIA_SCHEMA,
-    )
-    rows = {r["sample_idx"]: r for r in MM.video_frame_stats(df).collect()}
-    assert sorted(rows) == [0, 1, 2]
-    for i, f in enumerate(frames):
-        r = rows[i]
-        assert (r["height"], r["width"]) == (16, 32)
-        # flat frames survive intra coding almost exactly
-        assert abs(r["mean_brightness"] - float(f.mean())) < 3
-    # strided subset
-    assert {r["sample_idx"] for r in
-            MM.video_frame_stats(df, stride=2).collect()} == {0, 2}
-
-
 def test_multi_slice_idr_bitexact_and_isolated():
     """Conformant multi-slice IDR pictures decode bit-exactly — and the
     slice boundary really isolates: neighbor availability (nC contexts,
@@ -498,29 +469,6 @@ def test_qp_delta_wraps_mod_52():
     assert np.all(st.Y == 128)  # DC prediction with no neighbors
 
 
-def test_video_frame_stats_skips_truncated_avc1(spark):
-    """on_error='skip' must drop a TRUNCATED avc1 sample (which raises
-    IndexError from deep in the bit parser, not ValueError) instead of
-    failing the task (r10 self-review finding 2)."""
-    from regpulse_lakehouse_spark.operators import multimodal as MM
-
-    img = _gradient(16, 16)
-    good_s = H.encode_h264_iframe(img, qp=24, mb_pattern="i16")
-    good = MM.synthetic_mp4(frames=[good_s], codec="avc1")
-    trunc = MM.synthetic_mp4(frames=[good_s[: len(good_s) // 2]], codec="avc1")
-    with pytest.raises(Exception):
-        H.decode_h264(good_s[: len(good_s) // 2])  # really is corrupt
-    df = spark.createDataFrame(
-        [
-            ("ok", bytearray(good), ("video", "mp4", 16, 16, 1000, 1)),
-            ("trunc", bytearray(trunc), ("video", "mp4", 16, 16, 1000, 1)),
-        ],
-        MM.MEDIA_SCHEMA,
-    )
-    rows = MM.video_frame_stats(df, on_error="skip").collect()
-    assert {r["media_id"] for r in rows} == {"ok"}
-
-
 def test_emulation_prevention_stress_black_pcm():
     """An all-black I_PCM frame is a wall of 0x00 bytes — the densest
     possible emulation-prevention workload (every 00 00 0x needs a 03
@@ -534,50 +482,6 @@ def test_emulation_prevention_stress_black_pcm():
     out = H.decode_h264(data)
     # PCM luma lossless: Y of black RGB is 0 -> decoded RGB stays black
     assert np.array_equal(out, np.zeros_like(img))
-
-
-def test_cross_codec_video_near_dup(spark):
-    """The SAME footage stored as an MJPEG track and as an h264 intra
-    track must pair up in video_near_dup_pairs: the frame fingerprint
-    is computed on DECODED pixels, so near-dup detection crosses the
-    codec boundary — what a byte-level or container-level hash can
-    never do. A third, different video pairs with neither."""
-    from regpulse_lakehouse_spark.operators import multimodal as MM
-    from regpulse_lakehouse_spark.operators.jpeg import encode_jpeg
-
-    rng = np.random.default_rng(8)
-    # smooth frames (random noise would not survive lossy re-encode
-    # with equal dHashes; real footage is smooth at 8x8-thumb scale)
-    frames = []
-    for k in range(4):
-        yy, xx = np.mgrid[0:32, 0:32]
-        f = ((xx * (k + 2) + yy * (k + 1)) % 256).astype(np.uint8)
-        frames.append(np.stack([f, f, f], axis=-1))
-    other = [255 - f for f in frames]
-
-    mjpeg = MM.synthetic_mp4(
-        frames=[encode_jpeg(f, quality=95) for f in frames], codec="jpeg"
-    )
-    h264v = MM.synthetic_mp4(
-        frames=[H.encode_h264_iframe(f, qp=18, mb_pattern="i16") for f in frames],
-        codec="avc1",
-    )
-    h264o = MM.synthetic_mp4(
-        frames=[H.encode_h264_iframe(f, qp=18, mb_pattern="i16") for f in other],
-        codec="avc1",
-    )
-    df = spark.createDataFrame(
-        [
-            ("mj", bytearray(mjpeg), ("video", "mp4", 32, 32, 4000, 4)),
-            ("h264", bytearray(h264v), ("video", "mp4", 32, 32, 4000, 4)),
-            ("otherv", bytearray(h264o), ("video", "mp4", 32, 32, 4000, 4)),
-        ],
-        MM.MEDIA_SCHEMA,
-    )
-    pairs = {(r["a"], r["b"]): r["ratio"] for r in
-             MM.video_near_dup_pairs(df, min_shared_ratio=0.5).collect()}
-    assert ("h264", "mj") in pairs and pairs[("h264", "mj")] >= 0.5
-    assert all("otherv" not in p for p in pairs)
 
 
 def test_avcc_sample_with_00_00_01_length_prefix_decodes():
@@ -809,33 +713,6 @@ def test_deblocking_filter_off_behavior_unchanged():
     data = H.encode_h264_iframe(img, qp=28, mb_pattern="mixed")
     out = H.decode_h264(data)
     assert np.array_equal(out, _expected_rgb())
-
-
-def test_deblocked_avc1_mp4_through_video_frame_stats(spark):
-    """End-to-end: a filter-ON avc1 mp4 — the real-world default shape
-    the r10 decoder refused — decodes through the Spark
-    video_frame_stats stage."""
-    import regpulse_lakehouse_spark.operators.multimodal as MM
-
-    frames = [_gradient(32, 48), _gradient(32, 48)[::-1].copy()]
-    samples = []
-    for f in frames:
-        annexb = H.encode_h264_iframe(f, qp=32, mb_pattern="i16",
-                                      deblocking=True)
-        nals = H.split_nals(annexb)
-        samples.append(b"".join(len(n).to_bytes(4, "big") + n for n in nals))
-    mp4 = MM.synthetic_mp4(frames=samples, codec="avc1")
-    media = spark.createDataFrame(
-        [("vdb", bytearray(mp4), ("video", "mp4", 32, 48, 3000, 2))],
-        "media_id string, payload binary, "
-        "meta struct<kind:string,format:string,height:int,width:int,"
-        "duration_ms:int,n_frames:int>",
-    )
-    rows = MM.video_frame_stats(media).collect()
-    assert len(rows) == 2
-    for r in rows:
-        assert (r["height"], r["width"]) == (32, 48)
-        assert 0.0 < r["mean_brightness"] < 255.0
 
 
 def test_real_shaped_avc1_with_deblocking_on_decodes():

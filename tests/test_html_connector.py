@@ -469,89 +469,6 @@ def test_pdf_v5_perms_integrity_check_rejects_wrong_key():
         _pdf_encryption_key(pdf.replace(ue_hex, flipped))
 
 
-def test_pdf_images_extracts_embedded_rasters():
-    """Scanned-PDF shape: DCTDecode XObjects decode through the JPEG
-    codec, FlateDecode raw samples reshape by their dict, unsupported
-    filters surface info with image=None, and non-image streams are
-    ignored."""
-    import zlib
-
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    from regpulse_lakehouse_spark.sources.html import pdf_images
-
-    rng = np.random.default_rng(4)
-    jpg_img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-    gray = rng.integers(0, 256, (6, 9), dtype=np.uint8)
-    jpg = encode_jpeg(jpg_img, quality=90)
-
-    def obj(n, head, data):
-        return (
-            str(n).encode() + b" 0 obj\n<< " + head + b" /Length "
-            + str(len(data)).encode() + b" >>\nstream\n" + data
-            + b"\nendstream\nendobj\n"
-        )
-
-    pdf = (
-        b"%PDF-1.4\n"
-        + obj(1, b"/Subtype /Image /Width 16 /Height 16 /ColorSpace /DeviceRGB"
-                 b" /BitsPerComponent 8 /Filter /DCTDecode", jpg)
-        + obj(2, b"/Subtype /Image /Width 9 /Height 6 /ColorSpace /DeviceGray"
-                 b" /BitsPerComponent 8 /Filter /FlateDecode",
-              zlib.compress(gray.tobytes()))
-        + obj(3, b"/Subtype /Image /Width 4 /Height 4 /BitsPerComponent 8"
-                 b" /Filter /JPXDecode", b"\x00" * 16)
-        + obj(4, b"/Filter /FlateDecode", zlib.compress(b"BT (text) Tj ET"))
-        + b"trailer\n<<>>\n%%EOF"
-    )
-    imgs = pdf_images(pdf)
-    assert len(imgs) == 3
-    assert np.array_equal(imgs[0][1], decode_jpeg(jpg))
-    assert np.array_equal(imgs[1][1], gray)
-    assert imgs[2][1] is None and imgs[2][0]["filter"] == "other"
-    assert pdf_images(b"not a pdf") == []
-
-
-def test_pdf_images_decrypt_through_the_standard_handler():
-    """An AES-256 (/V 5 R 6) PDF carrying a Flate image XObject: the
-    image decrypts with the SAME chain the text path uses."""
-    import zlib
-
-    import numpy as np
-
-    from regpulse_lakehouse_spark.sources.html import pdf_images
-    from regpulse_lakehouse_spark.sources.pdfcrypto import (
-        aes_cbc_encrypt,
-        aes_cbc_encrypt_raw,
-        pdf2_hardened_hash,
-    )
-
-    rng = np.random.default_rng(5)
-    gray = rng.integers(0, 256, (5, 7), dtype=np.uint8)
-    file_key = bytes(range(60, 92))
-    vsalt, ksalt = b"ValSaltA", b"KeySaltB"
-    u = pdf2_hardened_hash(b"", vsalt) + vsalt + ksalt
-    ue = aes_cbc_encrypt_raw(pdf2_hardened_hash(b"", ksalt), b"\x00" * 16, file_key)
-    enc = aes_cbc_encrypt(
-        file_key, bytes(range(16)), zlib.compress(gray.tobytes())
-    )
-    pdf = (
-        b"%PDF-2.0\n"
-        b"3 0 obj\n<< /Filter /Standard /V 5 /R 6"
-        b" /U <" + u.hex().encode() + b"> /UE <" + ue.hex().encode() + b">"
-        b" /O <" + (b"\x00" * 48).hex().encode() + b"> /P -3904 >>\nendobj\n"
-        b"4 0 obj\n<< /Subtype /Image /Width 7 /Height 5 /ColorSpace"
-        b" /DeviceGray /BitsPerComponent 8 /Filter /FlateDecode /Length "
-        + str(len(enc)).encode() + b" >>\nstream\n" + enc
-        + b"\nendstream\nendobj\n"
-        b"trailer\n<< /Encrypt 3 0 R >>\n%%EOF"
-    )
-    imgs = pdf_images(pdf)
-    assert len(imgs) == 1
-    assert np.array_equal(imgs[0][1], gray)
-
-
 def test_pdf_encrypt_metadata_false_appends_ffffffff_to_key_derivation(spark):
     """Round 10 (r8 ADVICE): /R >= 4 with /EncryptMetadata false adds
     0xFFFFFFFF to the Algorithm 2 MD5 input (PDF spec §7.6.3.3 step f).
@@ -600,55 +517,6 @@ def test_pdf_encrypt_metadata_false_appends_ffffffff_to_key_derivation(spark):
     ).withColumn("payload", F.col("payload").cast("binary"))
     out = {r["url"]: r["text"] for r in DocTextExtractor().extract(docs).collect()}
     assert out["https://x/nometa.pdf"] == "Metadata stays plaintext"
-
-
-def test_pdf_images_survives_one_corrupt_encrypted_stream():
-    """Round 10 (r8 ADVICE): a malformed encrypted image stream must not
-    abort pdf_images — the corrupt object keeps its info with image=None
-    (matching the text path's skip) and the OTHER images still extract."""
-    import zlib
-
-    import numpy as np
-
-    from regpulse_lakehouse_spark.sources.html import pdf_images
-    from regpulse_lakehouse_spark.sources.pdfcrypto import (
-        aes_cbc_encrypt,
-        aes_cbc_encrypt_raw,
-        pdf2_hardened_hash,
-    )
-
-    rng = np.random.default_rng(11)
-    gray = rng.integers(0, 256, (4, 6), dtype=np.uint8)
-    file_key = bytes(range(30, 62))
-    vsalt, ksalt = b"ValSaltC", b"KeySaltD"
-    u = pdf2_hardened_hash(b"", vsalt) + vsalt + ksalt
-    ue = aes_cbc_encrypt_raw(pdf2_hardened_hash(b"", ksalt), b"\x00" * 16, file_key)
-    good = aes_cbc_encrypt(file_key, bytes(range(16)), zlib.compress(gray.tobytes()))
-    bad = b"\x01\x02\x03"  # not IV + whole blocks -> aes_cbc_decrypt ValueError
-
-    def obj(n, head, data):
-        return (
-            str(n).encode() + b" 0 obj\n<< " + head + b" /Length "
-            + str(len(data)).encode() + b" >>\nstream\n" + data
-            + b"\nendstream\nendobj\n"
-        )
-
-    pdf = (
-        b"%PDF-2.0\n"
-        b"3 0 obj\n<< /Filter /Standard /V 5 /R 6"
-        b" /U <" + u.hex().encode() + b"> /UE <" + ue.hex().encode() + b">"
-        b" /O <" + (b"\x00" * 48).hex().encode() + b"> /P -3904 >>\nendobj\n"
-        + obj(4, b"/Subtype /Image /Width 5 /Height 5 /ColorSpace /DeviceGray"
-                 b" /BitsPerComponent 8 /Filter /FlateDecode", bad)
-        + obj(5, b"/Subtype /Image /Width 6 /Height 4 /ColorSpace /DeviceGray"
-                 b" /BitsPerComponent 8 /Filter /FlateDecode", good)
-        + b"trailer\n<< /Encrypt 3 0 R >>\n%%EOF"
-    )
-    imgs = pdf_images(pdf)
-    assert len(imgs) == 2
-    assert imgs[0][1] is None
-    assert imgs[0][0]["width"] == 5 and imgs[0][0]["filter"] == "flate"
-    assert np.array_equal(imgs[1][1], gray)
 
 
 def test_pdf_user_password_unlocks_v5(spark):
@@ -724,114 +592,6 @@ def test_pdf_user_password_unlocks_rc4_r3(spark):
         for r in DocTextExtractor(pdf_password=b"wrong").extract(docs).collect()
     }
     assert out_bad["https://x/locked3.pdf"] is None
-
-
-def test_pdf_ccitt_g4_image_decodes():
-    """r11: scanned-PDF pages are /CCITTFaxDecode image XObjects; /K<0
-    pure-G4 streams decode through the shared T.6 core and honor
-    /BlackIs1."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import rasters as R
-    from regpulse_lakehouse_spark.sources.html import pdf_images
-
-    black = np.zeros((20, 64), dtype=bool)
-    black[3:6, 8:40] = True
-    black[12, 5:60] = True
-    bits, ref = [], [64, 64]
-    for row in black:
-        ref = R._ccitt_encode_2d_row(bits, row, ref) + [64, 64]
-    s = "".join(bits)
-    s += "0" * (-len(s) % 8)
-    data = bytes(int(s[i : i + 8], 2) for i in range(0, len(s), 8))
-    pdf = (
-        b"%PDF-1.5\n"
-        b"5 0 obj\n<< /Subtype /Image /Width 64 /Height 20"
-        b" /BitsPerComponent 1 /ColorSpace /DeviceGray"
-        b" /Filter /CCITTFaxDecode"
-        b" /DecodeParms << /K -1 /Columns 64 /Rows 20 >>"
-        b" /Length " + str(len(data)).encode() + b" >>\n"
-        b"stream\n" + data + b"\nendstream\nendobj\n%%EOF"
-    )
-    out = pdf_images(pdf)
-    assert len(out) == 1
-    info, img = out[0]
-    assert info["filter"] == "ccitt" and img is not None
-    assert np.array_equal(img == 0, black)
-    # byte-aligned G4 also decodes (r11 late: /EncodedByteAlign)
-    bits2, ref = [], [64, 64]
-    for row in black:
-        while sum(len(b) for b in bits2) % 8:
-            bits2.append("0")
-        ref = R._ccitt_encode_2d_row(bits2, row, ref) + [64, 64]
-    s2 = "".join(bits2)
-    s2 += "0" * (-len(s2) % 8)
-    data2 = bytes(int(s2[i : i + 8], 2) for i in range(0, len(s2), 8))
-    pdf_ba = (
-        b"%PDF-1.5\n"
-        b"5 0 obj\n<< /Subtype /Image /Width 64 /Height 20"
-        b" /BitsPerComponent 1 /ColorSpace /DeviceGray"
-        b" /Filter /CCITTFaxDecode"
-        b" /DecodeParms << /K -1 /Columns 64 /Rows 20"
-        b" /EncodedByteAlign true >>"
-        b" /Length " + str(len(data2)).encode() + b" >>\n"
-        b"stream\n" + data2 + b"\nendstream\nendobj\n%%EOF"
-    )
-    info_ba, img_ba = pdf_images(pdf_ba)[0]
-    assert img_ba is not None and np.array_equal(img_ba == 0, black)
-
-
-def test_pdf_ccitt_g3_images_decode():
-    """r11 late: /K 0 (pure 1-D G3, no EOLs) and /K 1 (mixed 2-D with
-    EOL-tagged rows) /CCITTFaxDecode images decode through the raw T.4
-    core."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import rasters as R
-    from regpulse_lakehouse_spark.sources.html import pdf_images
-
-    black = np.zeros((12, 48), dtype=bool)
-    black[2:5, 6:30] = True
-    black[8, 3:44] = True
-
-    def wrap(data, k, extra=b""):
-        return (
-            b"%PDF-1.5\n"
-            b"5 0 obj\n<< /Subtype /Image /Width 48 /Height 12"
-            b" /BitsPerComponent 1 /ColorSpace /DeviceGray"
-            b" /Filter /CCITTFaxDecode"
-            b" /DecodeParms << /K " + str(k).encode()
-            + b" /Columns 48 /Rows 12" + extra + b" >>"
-            b" /Length " + str(len(data)).encode() + b" >>\n"
-            b"stream\n" + data + b"\nendstream\nendobj\n%%EOF"
-        )
-
-    # K=0: continuous 1-D runs, no EOLs
-    bits = []
-    for row in black:
-        R._ccitt_encode_1d_row(bits, row)
-    s = "".join(bits)
-    s += "0" * (-len(s) % 8)
-    data = bytes(int(s[i : i + 8], 2) for i in range(0, len(s), 8))
-    info, img = pdf_images(wrap(data, 0))[0]
-    assert img is not None and np.array_equal(img == 0, black)
-
-    # K=1: EOL + tag bit per row, alternating 1-D / 2-D
-    bits, ref = [], [48, 48]
-    for ri, row in enumerate(black):
-        bits.append(R._CCITT_EOL)
-        if ri % 2 == 0:
-            bits.append("1")
-            R._ccitt_encode_1d_row(bits, row)
-            ref = R._row_to_transitions(row) + [48, 48]
-        else:
-            bits.append("0")
-            ref = R._ccitt_encode_2d_row(bits, row, ref) + [48, 48]
-    s = "".join(bits)
-    s += "0" * (-len(s) % 8)
-    data = bytes(int(s[i : i + 8], 2) for i in range(0, len(s), 8))
-    info, img = pdf_images(wrap(data, 1))[0]
-    assert img is not None and np.array_equal(img == 0, black)
 
 
 def test_pdf_owner_password_unlocks_rc4_r3(spark):

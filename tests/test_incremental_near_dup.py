@@ -237,6 +237,47 @@ def test_bulk_ingest_matches_sequential_ingest(spark, tmp_path):
     assert a == b
 
 
+def test_bulk_ingest_retry_after_crashed_write_does_not_double(spark, corpus, tmp_path):
+    """A bulk write that crashed before its commit markers leaves
+    uncommitted batch=* files under the store root; the retry must
+    produce the same pairs and the same store rows as one clean run,
+    not append a second copy next to the leftovers."""
+    import os
+
+    from regpulse_lakehouse_spark.streaming.near_dup import (
+        PartitionedSignatureStore,
+        bulk_ingest_near_dup,
+    )
+
+    b1, b2 = corpus
+    docs = b1.unionByName(b2)
+    batch_expr = F.when(F.col("doc_id") < 10, 1).otherwise(2)
+
+    def pairs(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def stored(store):
+        return sorted(
+            tuple(r) for r in store.read().select("doc_id", "batch", "band", "bucket").collect()
+        )
+
+    clean = PartitionedSignatureStore(spark, str(tmp_path / "clean"), n_prefix=2)
+    want = pairs(bulk_ingest_near_dup(docs, clean, batch_expr, 2, threshold=0.4))
+    assert want
+
+    root = str(tmp_path / "crashed")
+    store = PartitionedSignatureStore(spark, root, n_prefix=2)
+    bulk_ingest_near_dup(docs, store, batch_expr, 2, threshold=0.4)
+    # the crash: data files written, commit markers never landed
+    for marker in os.listdir(os.path.join(root, "_commits")):
+        os.remove(os.path.join(root, "_commits", marker))
+
+    retry = PartitionedSignatureStore(spark, root, n_prefix=2)
+    got = pairs(bulk_ingest_near_dup(docs, retry, batch_expr, 2, threshold=0.4))
+    assert got == want
+    assert stored(retry) == stored(clean)
+
+
 def test_bulk_ingest_refuses_nonempty_store(spark, corpus, tmp_path):
     from regpulse_lakehouse_spark.streaming.near_dup import (
         PartitionedSignatureStore,

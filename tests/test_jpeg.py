@@ -266,23 +266,6 @@ def test_noninterleaved_rejections():
         J.decode_jpeg(lone)
 
 
-def test_image_stats_consumes_real_jpeg(spark):
-    from regpulse_lakehouse_spark.operators import multimodal as MM
-
-    media = MM.synthetic_real_media(spark, 12)
-    fmts = {
-        r["media_id"]: r["meta"]["format"]
-        for r in media.select("media_id", "meta").collect()
-    }
-    assert "jpeg" in fmts.values()  # the fixture now emits one
-    rows = {r["media_id"]: r for r in MM.image_stats(media, thumb=4).collect()}
-    jpeg_ids = [m for m, f in fmts.items() if f == "jpeg"]
-    for mid in jpeg_ids:
-        r = rows[mid]
-        assert r["width"] > 0 and len(r["thumbnail"]) == 16
-        assert 0.0 < r["mean_brightness"] < 255.0
-
-
 def _gradient12(h, w):
     """Deterministic 12-bit RGB test image spanning most of 0..4095."""
     x = np.arange(w, dtype=np.float64)[None, :]

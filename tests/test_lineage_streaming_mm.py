@@ -94,10 +94,3 @@ def test_multimodal_metadata_plan_prunes_binary(spark, tmp_path):
     assert "payload" not in plan  # binary column pruned from metadata-only plan
     rows = MM.frame_sample_plan(media).collect()
     assert len(rows) > 0
-
-
-def test_multimodal_real_decode_is_gated(spark):
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        MM.decode_real(b"xx", {})

@@ -1,7 +1,7 @@
-"""REAL multimodal decode paths (operators/multimodal.py): PCM WAV and
-binary PPM/PGM decode with stdlib+numpy, nearest-neighbor resize, and
-the Arrow-batched audio/image feature stages — verified against known
-signal/image ground truth, no codec library involved."""
+"""Pure-Python decoders in operators/multimodal.py: PCM WAV, binary
+PPM/PGM, PNG, GIF, nearest-neighbor resize and the MP4 container —
+verified against known signal/image ground truth, no codec library
+involved."""
 
 from __future__ import annotations
 
@@ -47,18 +47,6 @@ def test_pnm_decode_and_resize():
     assert small[0, :, 0].tolist() == [0, 68, 136, 204]
     gray = MM._decode_pnm(b"P5\n2 2\n255\n" + bytes([0, 64, 128, 255]))
     assert gray.tolist() == [[0, 64], [128, 255]]
-
-
-def test_decode_real_dispatch():
-    # jpeg now decodes for real: garbage is a codec error, not a stub
-    with pytest.raises(ValueError, match="SOI"):
-        MM.decode_real(b"\x00\x00", {"format": "jpeg"})
-    with pytest.raises(NotImplementedError, match="mp4"):
-        MM.decode_real(b"\x00\x00", {"format": "mp4"})
-    with pytest.raises(ValueError, match="magic"):
-        MM._decode_pnm(b"P3\n1 1\n255\n0 0 0")  # ASCII PPM unsupported
-    with pytest.raises(ValueError, match="signature"):
-        MM._decode_png(b"nope")
 
 
 def _ref_image(h, w, ch=3):
@@ -295,37 +283,6 @@ def test_pnm_16bit_decode_and_reject():
         MM._decode_pnm(b"P5\n2 2\n70000\n" + b"\x00" * 16)
 
 
-def test_audio_features_stage(spark):
-    media = MM.synthetic_real_media(spark, 12)
-    rows = {r["media_id"]: r for r in MM.audio_features(media).collect()}
-    assert len(rows) == 6  # the wav half of the fixture
-    for r in rows.values():
-        assert r["n_channels"] == 1 and r["n_samples"] == 2000
-        assert abs(r["rms"] - 0.5 / math.sqrt(2)) < 2e-3
-        assert 0.0 < r["zero_crossing_rate"] < 1.0
-    # zcr tracks frequency: clip 0 is 220 Hz, clip 2 is 660 Hz
-    assert rows["real-0002"]["zero_crossing_rate"] > rows["real-0000"]["zero_crossing_rate"]
-
-
-def test_image_stats_stage(spark):
-    media = MM.synthetic_real_media(spark, 12)
-    rows = {r["media_id"]: r for r in MM.image_stats(media, thumb=4).collect()}
-    assert len(rows) == 6  # the image half: real png + jpeg + gif + ppm
-    fmts = {
-        r["media_id"]: r["meta"]["format"]
-        for r in media.select("media_id", "meta").collect()
-    }
-    assert sorted(fmts[m] for m in rows) == ["gif", "jpeg", "jpeg", "png", "png", "ppm"]
-    r = rows["real-0001"]
-    assert (r["width"], r["height"]) == (33, 25)
-    assert len(r["thumbnail"]) == 16
-    assert all(0.0 <= v <= 1.0 for v in r["thumbnail"])
-    # red rises with x, green with y → gray thumbnail increases along
-    # rows and columns
-    tn = np.array(r["thumbnail"]).reshape(4, 4)
-    assert tn[0, 3] > tn[0, 0] and tn[3, 0] > tn[0, 0]
-
-
 def test_binary_column_pruned_from_stats_plan(spark, tmp_path):
     # column pruning is a property of the parquet scan (a LocalTableScan
     # of an in-memory fixture always carries every column)
@@ -359,73 +316,6 @@ def test_mp4_container_rejections():
     ftyp = struct.pack(">I", 16) + b"ftyp" + b"isom\x00\x00\x02\x00"
     with pytest.raises(ValueError, match="sample tables"):
         MM.parse_mp4_samples(ftyp)
-
-
-def test_mp4_frame_index_stage(spark):
-    rows = [
-        ("vid-0", bytearray(MM.synthetic_mp4(4, (2,))), ("video", "mp4", None, None, 4000, 4)),
-        ("vid-1", bytearray(MM.synthetic_mp4(3, (1,))), ("video", "mp4", None, None, 3000, 3)),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    out = MM.mp4_frame_index(media).collect()
-    by_vid = {}
-    for r in out:
-        by_vid.setdefault(r["media_id"], []).append(r)
-    assert len(by_vid["vid-0"]) == 4 and len(by_vid["vid-1"]) == 3
-    # offsets strictly increase within a video; sizes match the fixture
-    for vid, rs in by_vid.items():
-        rs.sort(key=lambda r: r["sample_idx"])
-        offs = [r["byte_offset"] for r in rs]
-        assert offs == sorted(offs)
-        assert [r["byte_size"] for r in rs] == [20 + 3 * i for i in range(len(rs))]
-
-
-def test_image_near_dup_via_thumbnail_embeddings(spark):
-    """Cross-family compose: real decode (png/jpeg/ppm) → thumbnail
-    vectors → the embedding near-dup operator. Near-identical images
-    (same content, different FORMAT and mild jpeg loss) must pair up;
-    unrelated images must not."""
-    import numpy as np
-
-    from pyspark.sql import functions as F
-
-    from regpulse_lakehouse_spark.operators.vector import cosine_near_dup_pairs
-
-    def gradient(h, w, bias):
-        x, y = np.arange(w), np.arange(h)
-        r = np.broadcast_to((x * 255 // (w - 1)).astype(np.uint8), (h, w))
-        g = np.broadcast_to(((y * 255 // (h - 1)).astype(np.uint8))[:, None], (h, w))
-        b = np.full((h, w), bias, dtype=np.uint8)
-        return np.stack([r, g, b], axis=2)
-
-    from regpulse_lakehouse_spark.operators.jpeg import encode_jpeg
-
-    img = gradient(32, 48, 60)
-    noise = ((np.arange(32 * 48 * 3) * 37 + 11) % 251).astype(np.uint8).reshape(32, 48, 3)
-    rows = [
-        ("png-a", bytearray(MM._encode_png(img)), ("image", "png", 48, 32, None, None)),
-        ("jpeg-a", bytearray(encode_jpeg(img, 95)), ("image", "jpeg", 48, 32, None, None)),
-        ("ppm-a", bytearray(b"P6\n48 32\n255\n" + img.tobytes()), ("image", "ppm", 48, 32, None, None)),
-        ("png-noise", bytearray(MM._encode_png(noise)), ("image", "png", 48, 32, None, None)),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    vecs = MM.image_stats(media, thumb=8).select(
-        F.col("media_id").alias("vec_id"),
-        F.col("thumbnail").cast("array<double>").alias("embedding"),
-    )
-    pairs = {
-        frozenset((r["a"], r["b"]))
-        for r in cosine_near_dup_pairs(
-            vecs, threshold=0.99, dim=64, n_planes=12, n_bands=4
-        ).collect()
-    }
-    same = {frozenset(p) for p in
-            [("png-a", "jpeg-a"), ("png-a", "ppm-a"), ("jpeg-a", "ppm-a")]}
-    assert same <= pairs, f"cross-format duplicates missed: {same - pairs}"
-    assert not any("png-noise" in p for p in pairs), "unrelated image paired"
-
-
-# --- GIF (round 6) ---------------------------------------------------------
 
 
 def _gif_fixture(h=23, w=31, n_colors=17):
@@ -490,83 +380,6 @@ def test_gif_rejections():
         MM._decode_gif(bytes(good))
 
 
-def test_decode_real_dispatches_gif():
-    idx, palette = _gif_fixture(8, 9, 5)
-    out = MM.decode_real(bytes(MM._encode_gif(idx, palette)), {"format": "gif"})
-    assert (out == palette[idx]).all()
-
-
-# --- corruption policy (round 6) -------------------------------------------
-
-
-def _corrupt_media(spark):
-    """Fixture media plus rows whose payloads are corrupt in ways a
-    crawl actually produces: truncation, bit flips, wrong format tag."""
-    rows = []
-    img = _ref_image(16, 12, 3)
-    png = bytearray(MM._encode_png(img))
-    rows.append(("ok-png", png, ("image", "png", 12, 16, None, None)))
-    rows.append(("trunc-png", png[: len(png) // 2], ("image", "png", 12, 16, None, None)))
-    flipped = bytearray(png)
-    flipped[60] ^= 0xFF  # inside IDAT: inflate or filter error
-    rows.append(("flip-png", flipped, ("image", "png", 12, 16, None, None)))
-    rows.append(("not-an-image", bytearray(b"\x00\x01garbage"), ("image", "jpeg", 1, 1, None, None)))
-    return spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-
-
-def test_image_stats_on_error_skip_survives_corruption(spark):
-    media = _corrupt_media(spark)
-    # default: loud (the whole stage fails on the corrupt rows)
-    with pytest.raises(Exception):
-        MM.image_stats(media).collect()
-    # skip: the healthy row still comes through, corrupt ones drop
-    rows = {r["media_id"] for r in MM.image_stats(media, on_error="skip").collect()}
-    assert rows == {"ok-png"}
-    with pytest.raises(ValueError, match="on_error"):
-        MM.image_stats(media, on_error="ignore")
-
-
-def test_audio_features_on_error_skip(spark):
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(b"\x00\x00" * 100)
-    rows = [
-        ("ok-wav", bytearray(buf.getvalue()), ("audio", "wav", None, None, 12, None)),
-        ("bad-wav", bytearray(b"RIFFbroken"), ("audio", "wav", None, None, 12, None)),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    got = {r["media_id"] for r in MM.audio_features(media, on_error="skip").collect()}
-    assert got == {"ok-wav"}
-
-
-def test_image_stats_16bit_png_normalizes_to_unit_range(spark):
-    """A 16-bit PNG flows through the Spark image_stats stage with its
-    thumbnail in the SAME [0, 1] feature space as 8-bit media (scale =
-    dtype max, not a hardcoded 255)."""
-    img = _ref_image16(12, 10, 3)
-    img[6:, :, :] = 60000  # bright lower half, near the uint16 ceiling
-    rows = [
-        (
-            "deep-png",
-            bytearray(MM._encode_png(img)),
-            ("image", "png", 10, 12, None, None),
-        )
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    r = MM.image_stats(media, thumb=4).collect()[0]
-    assert (r["width"], r["height"]) == (10, 12)
-    tn = np.array(r["thumbnail"]).reshape(4, 4)
-    assert float(tn.max()) <= 1.0  # 60000/65535, not 60000/255
-    assert float(tn[3].min()) > 0.9  # the bright half stays bright
-    assert r["mean_brightness"] > 255.0  # raw mean is in 16-bit units
-
-
 def test_mjpeg_video_frames_decode_natively():
     """Motion-JPEG tracks (one complete JPEG per sample) decode
     through the container's byte ranges — frame-for-frame equal to
@@ -597,313 +410,12 @@ def test_mjpeg_video_frames_decode_natively():
         M.decode_video_frames(M.synthetic_mp4(codec="avc1", frames=jpegs))
 
 
-def test_video_frame_stats_strides_and_skips(spark):
-    """The Spark stage: strided per-frame stats rows for MJPEG videos;
-    a corrupt video (an 'avc1' track carrying non-h264 samples) in the
-    same batch is dropped under on_error='skip' and fails the job
-    under the default."""
-    import numpy as np
-    import pytest as _pytest
-
-    from regpulse_lakehouse_spark.operators import multimodal as M
-    from regpulse_lakehouse_spark.operators.jpeg import encode_jpeg
-
-    rng = np.random.default_rng(4)
-    jpegs = [
-        encode_jpeg(
-            np.full((8, 8), 40 * (i + 1), dtype=np.uint8), quality=95
-        )
-        for i in range(6)
-    ]
-    good = M.synthetic_mp4(codec="jpeg", frames=jpegs)
-    bad = M.synthetic_mp4(codec="avc1", frames=jpegs)
-    df = spark.createDataFrame(
-        [
-            ("v1", bytearray(good), ("video", "mp4", 8, 8, 6000, 6)),
-            ("v2", bytearray(bad), ("video", "mp4", 8, 8, 6000, 6)),
-        ],
-        M.MEDIA_SCHEMA,
-    )
-    rows = M.video_frame_stats(df, stride=2, on_error="skip").collect()
-    assert sorted((r["media_id"], r["sample_idx"]) for r in rows) == [
-        ("v1", 0), ("v1", 2), ("v1", 4)
-    ]
-    for r in rows:
-        want = 40 * (r["sample_idx"] + 1)
-        assert abs(r["mean_brightness"] - want) < 4  # JPEG q95 tolerance
-        assert (r["height"], r["width"]) == (8, 8)
-    with _pytest.raises(Exception, match="NAL|avc1"):
-        M.video_frame_stats(df).collect()
-    with _pytest.raises(ValueError, match="stride"):
-        M.video_frame_stats(df, stride=0)
-
-
-def test_dhash_survives_noise_and_resize_but_separates_content():
-    """The perceptual property: re-encode + mild noise + resize keep
-    the hash within a few bits; different content is far away."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import multimodal as M
-    from regpulse_lakehouse_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    y, x = np.mgrid[0:64, 0:80]
-    base = (128 + 70 * np.sin(x / 11.0) * np.cos(y / 7.0)).astype(np.uint8)
-    rng = np.random.default_rng(3)
-    noisy = np.clip(base.astype(int) + rng.integers(-8, 9, base.shape), 0, 255).astype(np.uint8)
-    reenc = decode_jpeg(encode_jpeg(base, quality=70))
-    small = base[::2, ::2]
-    other = rng.integers(0, 256, base.shape, dtype=np.uint8)
-
-    def ham(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-    h0 = M.dhash64(base)
-    assert ham(h0, M.dhash64(noisy)) <= 6
-    assert ham(h0, M.dhash64(reenc)) <= 6
-    # 2x decimation shifts cell boundaries on high-frequency content:
-    # a dozen bits of drift is normal; the signal is the GAP to
-    # unrelated content (~32 expected for independent hashes)
-    assert ham(h0, M.dhash64(small)) <= 12
-    assert ham(h0, M.dhash64(other)) > 20
-
-
-def test_image_near_dup_pairs_end_to_end(spark):
-    """Spark stage: a JPEG re-encode of a PNG-carried image pairs with
-    its original across FORMATS (byte hashes can't do that); unrelated
-    images stay unpaired."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import multimodal as M
-    from regpulse_lakehouse_spark.operators.jpeg import encode_jpeg
-
-    y, x = np.mgrid[0:48, 0:48]
-    a = (128 + 60 * np.sin(x / 9.0) * np.cos(y / 6.0)).astype(np.uint8)
-    rng = np.random.default_rng(4)
-    b = rng.integers(0, 256, (48, 48), dtype=np.uint8)
-    rows = [
-        ("orig", bytearray(M._encode_png(a)), ("image", "png", 48, 48, None, None)),
-        ("reenc", bytearray(encode_jpeg(a, quality=75)), ("image", "jpeg", 48, 48, None, None)),
-        ("other", bytearray(M._encode_png(b)), ("image", "png", 48, 48, None, None)),
-    ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    pairs = {(r["a"], r["b"]) for r in M.image_near_dup_pairs(df, max_hamming=6).collect()}
-    assert ("orig", "reenc") in pairs or ("reenc", "orig") in pairs
-    assert not any("other" in p for p in pairs)
-
-
-def test_sniffed_format_column(spark):
-    """Magic-byte sniffing as a pure JVM column: every native format
-    identified; RIFF disambiguated; garbage → NULL; and the plan has
-    no Python stage."""
-    import io
-    import wave
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from regpulse_lakehouse_spark.operators import multimodal as M
-    from regpulse_lakehouse_spark.operators import rasters as R
-    from regpulse_lakehouse_spark.operators.flac import encode_flac
-    from regpulse_lakehouse_spark.operators.jpeg import encode_jpeg
-
-    img = np.zeros((8, 8), dtype=np.uint8)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wv:
-        wv.setnchannels(1)
-        wv.setsampwidth(2)
-        wv.setframerate(8000)
-        wv.writeframes(b"\x00\x00" * 16)
-    rows = [
-        ("png", bytearray(M._encode_png(img))),
-        ("jpeg", bytearray(encode_jpeg(img))),
-        ("bmp", bytearray(R.encode_bmp(img))),
-        ("tiff", bytearray(R.encode_tiff(img))),
-        ("flac", bytearray(encode_flac(np.zeros(64, dtype=np.int64)))),
-        ("wav", bytearray(buf.getvalue())),
-        ("mp4", bytearray(M.synthetic_mp4(2))),
-        ("pdf", bytearray(b"%PDF-1.4 minimal")),
-        (None, bytearray(b"\x00\x01\x02garbage")),
-    ]
-    df = spark.createDataFrame(rows, "want string, payload binary")
-    got = df.select("want", M.sniffed_format(F.col("payload")).alias("got"))
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-    for r in got.collect():
-        assert r["got"] == r["want"], (r["want"], r["got"])
-
-
-def test_ocr_pages_explodes_scans_and_feeds_documents_shape(spark):
-    """The scanned-document bridge: a 3-page TIFF and a PDF with two
-    decodable embedded images explode into ordered page rows through
-    the OCR seam; a custom ocr_fn slots in; undecodable payloads skip
-    under on_error='skip'."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import multimodal as M
-    from regpulse_lakehouse_spark.operators import rasters as R
-    from regpulse_lakehouse_spark.operators.jpeg import encode_jpeg
-
-    rng = np.random.default_rng(7)
-    pages = [rng.integers(0, 256, (10, 12), dtype=np.uint8) for _ in range(3)]
-    tiff = R.encode_tiff_multipage(pages)
-    import zlib
-
-    gray = rng.integers(0, 256, (6, 9), dtype=np.uint8)
-
-    def obj(n, head, data):
-        return (str(n).encode() + b" 0 obj\n<< " + head + b" /Length "
-                + str(len(data)).encode() + b" >>\nstream\n" + data
-                + b"\nendstream\nendobj\n")
-
-    pdf = (
-        b"%PDF-1.4\n"
-        + obj(1, b"/Subtype /Image /Width 12 /Height 10 /ColorSpace /DeviceRGB"
-                 b" /BitsPerComponent 8 /Filter /DCTDecode",
-              encode_jpeg(rng.integers(0, 256, (10, 12, 3), dtype=np.uint8)))
-        + obj(2, b"/Subtype /Image /Width 9 /Height 6 /ColorSpace /DeviceGray"
-                 b" /BitsPerComponent 8 /Filter /FlateDecode",
-              zlib.compress(gray.tobytes()))
-        + b"trailer\n<<>>\n%%EOF"
-    )
-    rows = [
-        ("scan", bytearray(tiff), ("image", "tiff", 12, 10, None, None)),
-        ("doc", bytearray(pdf), ("image", "pdf", None, None, None, None)),
-        ("junk", bytearray(b"not an image"), ("image", "tiff", 1, 1, None, None)),
-    ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    out = M.ocr_pages(df, on_error="skip").collect()
-    got = sorted((r["media_id"], r["page"], r["height"], r["width"]) for r in out)
-    assert got == [
-        ("doc", 0, 10, 12), ("doc", 1, 6, 9),
-        ("scan", 0, 10, 12), ("scan", 1, 10, 12), ("scan", 2, 10, 12),
-    ]
-    # the stub's text is a pure function of the page pixels
-    texts = {(r["media_id"], r["page"]): r["text"] for r in out}
-    assert texts[("scan", 1)] == M.stub_ocr(pages[1])
-    # custom ocr_fn seam
-    out2 = M.ocr_pages(df, ocr_fn=lambda img: f"{img.shape}", on_error="skip").collect()
-    assert {r["text"] for r in out2 if r["media_id"] == "scan"} == {"(10, 12)"}
-    # raising default surfaces the junk payload
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        M.ocr_pages(df).collect()
-    with _pytest.raises(ValueError, match="max_pages"):
-        M.ocr_pages(df, max_pages=0)
-
-
-def test_video_near_dup_by_frame_hash_overlap(spark):
-    """Two MJPEG videos sharing most frames (one has extras inserted)
-    pair up; an unrelated video does not — whole-file hashes see three
-    distinct byte strings, frame-hash overlap sees the truth."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import multimodal as M
-    from regpulse_lakehouse_spark.operators.jpeg import encode_jpeg
-
-    rng = np.random.default_rng(11)
-    base_frames = [rng.integers(0, 256, (16, 16), dtype=np.uint8) for _ in range(6)]
-    extra = rng.integers(0, 256, (16, 16), dtype=np.uint8)
-    jp = [encode_jpeg(f, quality=92) for f in base_frames]
-    v1 = M.synthetic_mp4(codec="jpeg", frames=jp)
-    v2 = M.synthetic_mp4(codec="jpeg", frames=[jp[0], encode_jpeg(extra, quality=92)] + jp[1:])
-    v3 = M.synthetic_mp4(
-        codec="jpeg",
-        frames=[encode_jpeg(rng.integers(0, 256, (16, 16), dtype=np.uint8))
-                for _ in range(6)],
-    )
-    rows = [
-        (n, bytearray(v), ("video", "mp4", 16, 16, 6000, 6))
-        for n, v in (("v1", v1), ("v2", v2), ("v3", v3))
-    ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    pairs = {(r["a"], r["b"]): r["ratio"]
-             for r in M.video_near_dup_pairs(df, min_shared_ratio=0.5).collect()}
-    assert ("v1", "v2") in pairs and pairs[("v1", "v2")] >= 0.9
-    assert not any("v3" in p for p in pairs)
-    with pytest.raises(ValueError, match="min_shared_ratio"):
-        M.video_near_dup_pairs(df, min_shared_ratio=0.0)
-
-
-# ---------------------------------------------------------------------
-# r11: stss keyframe sampling + frame-granular skip salvage
-# ---------------------------------------------------------------------
-
-
-def _mixed_gop_avc1(good_frames, garbage_at, sync):
-    """avc1 mp4 whose samples at ``garbage_at`` are undecodable blobs
-    (standing in for P/B samples) and whose stss marks ``sync``."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import h264 as H
-    from regpulse_lakehouse_spark.operators import multimodal as MM
-
-    samples = []
-    gi = 0
-    n = len(good_frames) + len(garbage_at)
-    for i in range(n):
-        if i in garbage_at:
-            samples.append(b"\x00\x00\x00\x04\x65\xff\xff\xff")  # junk "IDR"
-        else:
-            annexb = H.encode_h264_iframe(
-                good_frames[gi], qp=30, mb_pattern="i16", deblocking=True
-            )
-            nals = H.split_nals(annexb)
-            samples.append(b"".join(len(x).to_bytes(4, "big") + x for x in nals))
-            gi += 1
-    return MM.synthetic_mp4(frames=samples, codec="avc1", sync_samples=sync)
-
-
 def test_mp4_sync_samples_roundtrip():
     from regpulse_lakehouse_spark.operators import multimodal as MM
 
     mp4 = MM.synthetic_mp4(n_samples=5, sync_samples=[0, 2, 4])
     assert MM.mp4_sync_samples(mp4) == [0, 2, 4]
     assert MM.mp4_sync_samples(MM.synthetic_mp4(n_samples=3)) is None
-
-
-def test_keyframes_only_decodes_wild_shaped_track(spark):
-    """A mixed-GOP-shaped track (non-sync samples undecodable) must
-    thumbnail cleanly with keyframes_only=True and on_error='raise' —
-    the stss table steers the decoder to exactly the IDR samples."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import multimodal as MM
-
-    rng = np.random.default_rng(2)
-    goods = [rng.integers(0, 256, (16, 32, 3), dtype=np.uint8) for _ in range(2)]
-    mp4 = _mixed_gop_avc1(goods, garbage_at={1}, sync=[0, 2])
-    media = spark.createDataFrame(
-        [("kf", bytearray(mp4), ("video", "mp4", 16, 32, 3000, 3))],
-        "media_id string, payload binary, "
-        "meta struct<kind:string,format:string,height:int,width:int,"
-        "duration_ms:int,n_frames:int>",
-    )
-    rows = MM.video_frame_stats(media, keyframes_only=True).collect()
-    assert sorted(r["sample_idx"] for r in rows) == [0, 2]
-
-
-def test_skip_is_frame_granular_with_counter(spark):
-    """on_error='skip' without stss: the corrupt sample drops ONLY its
-    frame (previously the whole payload vanished), and the skip
-    accumulator counts it."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import multimodal as MM
-
-    rng = np.random.default_rng(4)
-    goods = [rng.integers(0, 256, (16, 32, 3), dtype=np.uint8) for _ in range(2)]
-    mp4 = _mixed_gop_avc1(goods, garbage_at={1}, sync=None)
-    media = spark.createDataFrame(
-        [("sv", bytearray(mp4), ("video", "mp4", 16, 32, 3000, 3))],
-        "media_id string, payload binary, "
-        "meta struct<kind:string,format:string,height:int,width:int,"
-        "duration_ms:int,n_frames:int>",
-    )
-    ctr = spark.sparkContext.accumulator(0)
-    rows = MM.video_frame_stats(media, on_error="skip", skip_counter=ctr).collect()
-    assert sorted(r["sample_idx"] for r in rows) == [0, 2]
-    assert ctr.value == 1
 
 
 def test_fragmented_mp4_samples_and_sync():
@@ -924,33 +436,3 @@ def test_fragmented_mp4_samples_and_sync():
         n_samples=5, chunked=(2, 1), fragmented=True, sync_samples=[0, 3]
     )
     assert MM.mp4_sync_samples(mp4s) == [0, 3]
-
-
-def test_fragmented_avc1_track_decodes_through_spark(spark):
-    """A fragmented avc1 track flows through video_frame_stats with
-    keyframes_only steering off the trun sync flags."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import h264 as H
-    from regpulse_lakehouse_spark.operators import multimodal as MM
-
-    rng = np.random.default_rng(9)
-    goods = [rng.integers(0, 256, (16, 32, 3), dtype=np.uint8) for _ in range(2)]
-    samples = []
-    for f in goods:
-        annexb = H.encode_h264_iframe(f, qp=30, mb_pattern="i16",
-                                      deblocking=True)
-        nals = H.split_nals(annexb)
-        samples.append(b"".join(len(n).to_bytes(4, "big") + n for n in nals))
-    # middle sample is garbage (stands in for a P frame), not sync
-    samples.insert(1, b"\x00\x00\x00\x04\x65\xff\xff\xff")
-    fmp4 = MM.synthetic_mp4(frames=samples, codec="avc1", fragmented=True,
-                            sync_samples=[0, 2])
-    media = spark.createDataFrame(
-        [("frag", bytearray(fmp4), ("video", "mp4", 16, 32, 3000, 3))],
-        "media_id string, payload binary, "
-        "meta struct<kind:string,format:string,height:int,width:int,"
-        "duration_ms:int,n_frames:int>",
-    )
-    rows = MM.video_frame_stats(media, keyframes_only=True).collect()
-    assert sorted(r["sample_idx"] for r in rows) == [0, 2]

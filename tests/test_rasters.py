@@ -1,7 +1,7 @@
 """BMP + TIFF codecs (operators/rasters.py): exact roundtrips across
 every compression/predictor combination, the TIFF-vs-GIF LZW
 'early change' distinction, hand-built RLE/multi-strip/bilevel/palette
-fixtures the encoders don't emit, and the Spark image_stats dispatch."""
+fixtures the encoders don't emit."""
 
 from __future__ import annotations
 
@@ -137,30 +137,6 @@ def test_tiff_bilevel_palette_and_byteorders():
         R.decode_tiff(bytes(bad))
 
 
-def test_rasters_flow_through_spark_image_stats(spark):
-    from pyspark.sql import functions as F
-
-    from regpulse_lakehouse_spark.operators import multimodal as M
-
-    g, c = _imgs()
-    rows = [
-        ("b1", bytearray(R.encode_bmp(c)), "bmp"),
-        ("t1", bytearray(R.encode_tiff(g, compression=5)), "tiff"),
-        ("t2", bytearray(R.encode_tiff(c, compression=32773)), "tif"),
-    ]
-    df = (
-        spark.createDataFrame(rows, ["media_id", "payload", "fmt"])
-        .withColumn("payload", F.col("payload").cast("binary"))
-        .withColumn("meta", F.struct(F.col("fmt").alias("format")))
-        .drop("fmt")
-    )
-    out = {r["media_id"]: r for r in M.image_stats(df).collect()}
-    assert out["b1"]["width"] == 11 and out["b1"]["height"] == 9
-    assert out["t1"]["width"] == 17
-    assert abs(out["t1"]["mean_brightness"] - g.mean()) < 1e-4  # lossless
-    assert out["t2"]["width"] == 11
-
-
 @pytest.mark.parametrize("comp", [1, 5, 8, 32773])
 @pytest.mark.parametrize("predictor", [1, 2])
 def test_tiff_16bit_roundtrips(comp, predictor):
@@ -199,27 +175,6 @@ def test_exif_roundtrip_jpeg_and_tiff_and_orientation():
     assert np.array_equal(
         R.apply_exif_orientation(R.apply_exif_orientation(img, 3), 3), img
     )
-
-
-def test_image_exif_spark_stage(spark):
-    from pyspark.sql import functions as F
-
-    from regpulse_lakehouse_spark.operators import multimodal as M
-    from regpulse_lakehouse_spark.operators.jpeg import encode_jpeg
-
-    img = np.zeros((8, 8), dtype=np.uint8)
-    blob = R.encode_exif_blob(make="Cam", model="X1", orientation=3,
-                              datetime_original="2026:01:02 03:04:05")
-    rows = [
-        ("with", bytearray(R.wrap_jpeg_with_exif(encode_jpeg(img), blob)),
-         ("image", "jpeg", 8, 8, None, None)),
-        ("without", bytearray(encode_jpeg(img)), ("image", "jpeg", 8, 8, None, None)),
-    ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in M.image_exif(df).collect()}
-    assert out["with"]["make"] == "Cam" and out["with"]["orientation"] == 3
-    assert out["with"]["datetime_original"] == "2026:01:02 03:04:05"
-    assert out["without"]["make"] is None and out["without"]["orientation"] is None
 
 
 @pytest.mark.parametrize("comp", [1, 32773])
@@ -464,21 +419,3 @@ def test_planar_tiff_roundtrip_with_packbits():
     body, _ = _ifd_fixture(tags(offs), b"")
     out = R.decode_tiff(body + b"".join(planes))
     assert np.array_equal(out, img)
-
-
-def test_g4_tiff_through_spark_image_stats(spark):
-    """Integration: a G4-compressed scanned page flows through the
-    image_stats mapInPandas stage (format dispatch incl. 'tiff')."""
-    from regpulse_lakehouse_spark.operators import multimodal as MM
-
-    img = _scanned_doc()
-    data = R.encode_tiff_bilevel(img, compression=4)
-    media = spark.createDataFrame(
-        [("g4doc", bytearray(data), ("image", "tiff", 40, 120, 0, 1))],
-        "media_id string, payload binary, "
-        "meta struct<kind:string,format:string,height:int,width:int,"
-        "duration_ms:int,n_frames:int>",
-    )
-    rows = MM.image_stats(media).collect()
-    assert len(rows) == 1
-    assert (rows[0]["height"], rows[0]["width"]) == (40, 120)

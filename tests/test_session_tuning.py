@@ -5,7 +5,11 @@ with input bytes, caps, and never overrides an explicit env pin."""
 from __future__ import annotations
 
 import os
+import re
 
+import pytest
+
+from regpulse_lakehouse_spark import session as S
 from regpulse_lakehouse_spark.session import input_bytes, tune_shuffle_for_input
 
 
@@ -15,7 +19,18 @@ def _write(tmp_path, name, nbytes):
     return str(tmp_path)
 
 
-def test_small_input_floors_at_parallelism(spark, tmp_path, monkeypatch):
+@pytest.fixture
+def restore_shuffle(spark):
+    """Put the shared session's shuffle width back after a test that
+    tunes it in place. Later tests share the session, and a stateful
+    stream query planned at a leaked 500 partitions builds 500 state
+    stores per operator (minutes instead of seconds)."""
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+
+def test_small_input_floors_at_parallelism(spark, tmp_path, monkeypatch, restore_shuffle):
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
     root = _write(tmp_path, "tiny.bin", 1024)
     n = tune_shuffle_for_input(spark, root, bytes_per_partition=256 * 1024)
@@ -23,7 +38,7 @@ def test_small_input_floors_at_parallelism(spark, tmp_path, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
 
 
-def test_large_input_scales_and_caps(spark, tmp_path, monkeypatch):
+def test_large_input_scales_and_caps(spark, tmp_path, monkeypatch, restore_shuffle):
     monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
     root = _write(tmp_path, "big.bin", 10 * 1024 * 1024)
     assert input_bytes(spark, root) == 10 * 1024 * 1024
@@ -176,3 +191,28 @@ def test_explicit_floor_goes_below_core_count(spark, tmp_path, monkeypatch):
     assert s2.conf.get("spark.sql.shuffle.partitions") == "4"
     n2 = tune_shuffle_for_input(s2, root, bytes_per_partition=1 << 20)
     assert n2 == s2.sparkContext.defaultParallelism
+
+
+def test_default_sizing_fits_the_machine(monkeypatch):
+    """With the SPARK_GRAFT_* sizing vars unset, the session is sized
+    from this machine when get_spark() runs: cores from the affinity
+    set, a driver heap inside physical RAM, and a pre-touched -Xms of at
+    most a quarter of RAM even for an oversized explicit request. A
+    var set after the package is imported still wins."""
+    for var in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+                "SPARK_GRAFT_DRIVER_MEM"):
+        monkeypatch.delenv(var, raising=False)
+    with open("/proc/meminfo") as f:
+        ram_mb = next(int(ln.split()[1]) // 1024 for ln in f
+                      if ln.startswith("MemTotal:"))
+    cpus, shuffle, mem = S._sizing()
+    assert int(cpus) == int(shuffle) == len(os.sched_getaffinity(0))
+    mem_gb = int(re.fullmatch(r"(\d+)g", mem).group(1))
+    assert 1 <= mem_gb and mem_gb * 1024 <= ram_mb
+    for request in (mem, "48g", "1024g"):
+        xms = S._initial_heap(request)
+        xms_mb = int(re.match(r"-Xms(\d+)m ", xms).group(1))
+        assert 0 < xms_mb <= ram_mb // 4
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    assert S._sizing() == ("2", "2", "3g")

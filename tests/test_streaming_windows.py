@@ -5,6 +5,7 @@ batch answers — write-once-run-both-modes is the design claim
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from regpulse_lakehouse_spark.sources.tpch import load_table
@@ -220,6 +221,38 @@ def test_isj_runs_in_per_call_scratch():
     assert "mkdtemp" in src
     assert "isj_stage_" not in src and "isj_sink_" not in src
     assert "hashlib" not in src
+
+
+@pytest.mark.parametrize("only", ["click", "purchase"])
+def test_isj_with_one_side_empty_returns_no_rows(spark, tmp_path, only):
+    """An events table with no purchases (or no clicks) stages no rows
+    for that side; the stream join must still start and return an
+    empty, correctly typed result instead of failing on a missing
+    slice dir."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from regpulse_lakehouse_spark.queries.streaming_q import st_interval_stream_join
+
+    t0 = dt.datetime(2024, 1, 1)
+    n = 6
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array([t0 + dt.timedelta(hours=i) for i in range(n)],
+                           pa.timestamp("us")),
+            "user_id": pa.array([i % 2 for i in range(n)], pa.int64()),
+            "event_type": [only] * n,
+            "value": [1.0] * n,
+            "props": ["{}"] * n,
+        }),
+        tmp_path / "events.parquet",
+    )
+    out = st_interval_stream_join(spark, str(tmp_path))
+    assert out.collect() == []
+    assert [f.name for f in out.schema] == ["user_id", "left_ts_iso", "right_ts_iso"]
 
 
 def test_restart_from_checkpoint_recovers_state_and_sink(spark, sf_dir, tmp_path):
