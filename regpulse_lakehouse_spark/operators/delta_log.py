@@ -50,6 +50,7 @@ import time
 import uuid
 from urllib.parse import quote, unquote, urlparse
 
+from pyspark.serializers import CPickleSerializer
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,6 +71,8 @@ _CONSTRAINT_PREFIX = "delta.constraints."
 #: marker embedded in the in-job assert message so executor-side
 #: violations translate to ConstraintViolationError on the driver
 _CONSTRAINT_MARK = "DELTA_VIOLATE_CONSTRAINT"
+#: name of the observed metric carrying an upsert's merge-key bounds
+_BOUNDS_METRIC = "merge_key_bounds"
 
 
 class ConstraintViolationError(ValueError):
@@ -980,30 +983,36 @@ class DeltaLogTable:
                     read_v, removed=[], on_cols=keys, bounds=bounds
                 )
 
-    def _candidate_files(self, match: DataFrame, on_cols: list[str]) -> list[str]:
+    def _candidate_files(
+        self, match: DataFrame, on_cols: list[str], bounds=None
+    ) -> list[str]:
         """STATS PRUNING for merge-candidate detection: a file can only
         contain a matching key if, for every key column with published
         stats, its [min, max] intersects the update batch's [min, max]
         (or the file has nulls and the batch has null keys — the window
         semantics match NULL to NULL). Partition key columns prune on
-        their ``partitionValues`` point instead of footer stats. One
-        tiny agg over the update side buys skipping the scan of every
-        out-of-range file — real Delta MERGE's file pruning.
+        their ``partitionValues`` point instead of footer stats. The
+        batch's ``bounds`` skip the scan of every out-of-range file —
+        real Delta MERGE's file pruning. :meth:`upsert` passes the
+        bounds it observed while materializing its update side; without
+        them one tiny agg (:meth:`_key_bounds`) computes them.
         Conservative: missing stats keep the file."""
         active, meta, _ = self._replay()
         pcols = meta.get("partitionColumns") or []
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
         dtypes = {f.name: f.dataType for f in schema.fields}
-        b = self._key_bounds(match, on_cols)
+        if bounds is None:
+            bounds = self._key_bounds(match, on_cols)
         return [
             path
             for path in sorted(active)
-            if _add_may_match(active[path], on_cols, b, pcols, dtypes)
+            if _add_may_match(active[path], on_cols, bounds, pcols, dtypes)
         ]
 
-    def _key_bounds(self, match: DataFrame, on_cols: list[str]):
-        """The one tiny agg feeding :func:`_add_may_match`: per key
-        column min/max/has-null over the update batch."""
+    @staticmethod
+    def _key_bound_aggs(on_cols: list[str]) -> list[Column]:
+        """Per key column min/max/has-null, named as
+        :func:`_add_may_match` reads them."""
         aggs = []
         for k in on_cols:
             aggs += [
@@ -1011,18 +1020,29 @@ class DeltaLogTable:
                 F.max(k).alias(f"_mx_{k}"),
                 F.max(F.col(k).isNull()).alias(f"_null_{k}"),
             ]
-        return match.agg(*aggs).first()
+        return aggs
 
-    def _touched_files(self, match: DataFrame, on_cols: list[str]) -> list[str]:
+    def _key_bounds(self, match: DataFrame, on_cols: list[str]):
+        """The batch's key bounds as one agg job, for callers that do
+        not otherwise pass over ``match`` (:meth:`insert_if_absent`'s
+        retry, direct :meth:`_candidate_files` calls). :meth:`upsert`
+        observes the same aggregates on its materializing pass
+        instead."""
+        return match.agg(*self._key_bound_aggs(on_cols)).first()
+
+    def _touched_files(
+        self, match: DataFrame, on_cols: list[str], bounds
+    ) -> list[str]:
         """Active files that contain at least one row matching
-        ``match`` on ``on_cols``: stats-pruned candidates first, then a
-        null-safe semi-join over just those files (null-SAFE because the
-        upsert's window semantics group NULL keys together — a plain
-        equi-join would never mark a null-keyed row's file as touched
-        and the stale row would survive next to its replacement). The
-        match side broadcasts when small; only file NAMES come back to
-        the driver."""
-        candidates = self._candidate_files(match, on_cols)
+        ``match`` on ``on_cols``: stats-pruned candidates (on the
+        batch's ``bounds``) first, then a null-safe semi-join over just
+        those files (null-SAFE because the upsert's window semantics
+        group NULL keys together — a plain equi-join would never mark a
+        null-keyed row's file as touched and the stale row would survive
+        next to its replacement). The match side is key-unique (the
+        upsert dedups it) and broadcasts when small; only file NAMES
+        come back to the driver."""
+        candidates = self._candidate_files(match, on_cols, bounds)
         if not candidates:
             return []
         _, meta, _ = self._replay()
@@ -1030,9 +1050,7 @@ class DeltaLogTable:
         tagged = self._read_files(candidates, schema).withColumn(
             "_file", F.input_file_name()
         )
-        probe = match.select(
-            *[F.col(k).alias(f"_m_{k}") for k in on_cols]
-        ).dropDuplicates()
+        probe = match.select(*[F.col(k).alias(f"_m_{k}") for k in on_cols])
         cond = None
         for k in on_cols:
             c = F.col(k).eqNullSafe(F.col(f"_m_{k}"))
@@ -1057,6 +1075,13 @@ class DeltaLogTable:
         Delta MERGE's physical shape: only files containing a matched
         key are rewritten; every other file carries over untouched.
 
+        The deduplicated update side is evaluated once: materialized
+        with its key bounds observed on the same pass, then read by the
+        candidate pruning, the touched-file probe, the rewrite and any
+        retry. With no touched file no active row holds an update key
+        (the probe is null-safe), so the update side is the whole
+        commit.
+
         ``max_retries`` > 0 opts into WriteSerializable conflict
         resolution (:meth:`_reconcile_winners`): a lost commit race
         rebases to the new head when every winning commit is disjoint
@@ -1072,28 +1097,25 @@ class DeltaLogTable:
         self._check_schema(updates, merge_schema=False)
         read_v = self.version
         v = read_v + 1
-        touched = self._touched_files(updates, keys)
-        current = self.read()
+        observed = updates.observe(_BOUNDS_METRIC, *self._key_bound_aggs(keys))
+        updates = observed.localCheckpoint(eager=True)
+        bounds = _observed_metrics(observed, _BOUNDS_METRIC)
+        touched = self._touched_files(updates, keys, bounds)
+        merged = updates
         if touched:
             _, meta, _ = self._replay()
             schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
             touched_df = self._read_files(touched, schema)
             merged = upsert_latest_wins(touched_df, updates, keys, version_col)
-        else:
-            # pure insert: nothing to rewrite, append only the new keys
-            merged = updates.join(current.select(keys), keys, "left_anti")
         actions = self._stage_files(merged, data_change=True)
         actions += self._remove_actions(touched)
         actions.append(_commit_info("MERGE"))
-        bounds = None
         for _attempt in range(max_retries + 1):
             try:
                 return self._commit(v, actions)
             except FileExistsError:
                 if _attempt == max_retries:
                     raise
-                if bounds is None:
-                    bounds = self._key_bounds(updates, keys)
                 v = self._reconcile_winners(
                     read_v, removed=touched, on_cols=keys, bounds=bounds
                 )
@@ -1614,7 +1636,8 @@ def _add_may_match(
     add: dict, on_cols: list[str], b, pcols: list[str], dtypes: dict
 ) -> bool:
     """Whether an ``add`` action's file MAY contain a row matching the
-    key-bounds row ``b`` (from :meth:`DeltaLogTable._key_bounds`): for
+    key bounds ``b`` (:meth:`DeltaLogTable._key_bound_aggs`, observed or
+    aggregated): for
     every key column, the file's [min, max] (footer stats, or the
     ``partitionValues`` point for partition columns) must intersect
     the batch's [min, max], or null-match (the window semantics group
@@ -1705,6 +1728,18 @@ def _footer_stats(pf, fields: list[str]) -> dict:
             except TypeError:  # pragma: no cover - mixed footer types
                 pass
     return out
+
+
+def _observed_metrics(df: DataFrame, name: str) -> dict:
+    """The metrics ``df.observe(name, ...)`` collected on ``df``'s first
+    action, read from its QueryExecution. (A ``pyspark.sql.Observation``
+    would hand them over too, but on Spark 4.1 registering one
+    initializes the session's non-serializable ObservationManager, after
+    which every task closure that captures the SparkSession — a Spark ML
+    model keeps one in its training summary — fails to serialize.)"""
+    jrow = df._jdf.queryExecution().observedMetrics().apply(name)
+    sql_utils = df.sparkSession._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+    return CPickleSerializer().loads(sql_utils.toPyRow(jrow)).asDict()
 
 
 def _commit_info(operation: str) -> dict:

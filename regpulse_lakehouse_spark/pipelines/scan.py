@@ -1,5 +1,5 @@
-"""Scan pipeline — SURVEY.md §3.1 re-architected as one lazily-planned
-DAG.
+"""Scan pipeline — SURVEY.md §3.1 re-architected as one DataFrame DAG,
+evaluated once per batch.
 
 Reference flow (jobs/scan.ts:18-105 + services/scan.ts:41-168):
 connector candidates ∪ web_search → dedupeByUrl (first-wins) →
@@ -11,6 +11,18 @@ boundaries; here they are a single DataFrame DAG per run:
   candidates → W1 window dedup (explicit arrival_seq) → F4 filter →
   T5 limit → F1/F9 policy columns → extractor → V3 normalize →
   V1/V2 validate+route → split → G5 link projections → A5 summary
+
+The windowed, capped ``docs`` and the ``routed`` items are materialized
+once (``localCheckpoint(eager=True)``) inside :func:`run_scan`, so every
+output table is a projection over in-memory rows. Left lazy, each
+consumer — the main upsert, the review append, the links insert, the
+summary, and every extra pass those writers make (merge-key bounds,
+touched-file probe, anti-join) — re-planned and re-ran the whole
+chain from the candidates scan; the links union alone scanned and
+window-deduped the candidates seven times (once per ``docs`` leaf of its
+four branches). Materializing also pins one answer per batch: the
+extractor runs once, and the date window reads ``current_date()``
+once.
 
 The only Python stage is the pluggable extractor (and only in its
 ``mapInPandas`` flavor); everything else is codegen'd columnar work.
@@ -31,7 +43,8 @@ from .extract import ColumnExtractor, Extractor
 
 @dataclass
 class ScanResult:
-    """The scan run's output tables (all lazy DataFrames)."""
+    """The scan run's output tables: projections over the batch's
+    materialized ``docs`` and routed items."""
 
     documents: DataFrame  # deduped, windowed, policy-annotated candidates
     main_items: DataFrame  # validated TIER_A items → upsert into main
@@ -70,9 +83,10 @@ def run_scan(
     extractor: Extractor | None = None,
     tier_for_profile: dict[str, str] | None = None,
 ) -> ScanResult:
-    """Assemble the full scan DAG. ``candidates`` carries the
+    """Run the scan DAG over one batch. ``candidates`` carries the
     source_documents shape (schemas.SOURCE_DOCUMENTS) with arrival_seq
-    already synthesized at union time."""
+    already synthesized at union time. The candidates are read here,
+    once: the returned tables no longer depend on them."""
     extractor = extractor or ColumnExtractor()
     tier_map = tier_for_profile or {
         "profile_0": "TIER_A_BINDING",
@@ -93,7 +107,7 @@ def run_scan(
         ],
         F.lit("TIER_D_QUARANTINE"),  # F9 default (policy.ts:163-170)
     )
-    docs = docs.withColumn("trust_tier", tier_expr)
+    docs = docs.withColumn("trust_tier", tier_expr).localCheckpoint(eager=True)
 
     extracted = extractor.extract(docs)
     items = (
@@ -125,7 +139,9 @@ def run_scan(
             ),
         )
     )
-    routed = with_route(with_validation(normalize_items(items)))
+    routed = with_route(with_validation(normalize_items(items))).localCheckpoint(
+        eager=True
+    )
     main_items, review_items = split_routes(routed)
 
     # G5 link derivation (jobs/scan.ts:107-167): per-relation projections.

@@ -5,12 +5,18 @@ The reference's queue-driven micro-batch (BullMQ workers, queue.ts:
 20,82-103; append-only run_logs polled every 2s, RunMonitor.tsx:25-54)
 maps to:
 
-- a ``runs`` VersionedParquetTable as the ledger (state transitions =
-  keyed upserts);
+- a ``runs`` VersionedParquetTable as the ledger: a new run appends
+  one row, and a state transition is a point UPDATE — one projection
+  that rewrites the matching row's status/completed_at/meta and copies
+  every other row, committed as the next snapshot;
 - an append-only ``run_logs`` table (ordered replay is the T3 query);
 - ``stream_scan``: a Structured Streaming wrapper that runs the *same*
   batch scan pipeline per micro-batch via ``foreachBatch`` — write
   once, run both modes (SURVEY §7 Phase 7).
+
+The ledger's one-row frames are built in the JVM (``spark.range(1)``
+plus typed literals), so writing the ledger never starts a Python
+worker.
 
 Watermark policy note (ST4): the reference has no event-time watermark
 — unknown dates pass the window filter and dedup is within-batch only.
@@ -25,6 +31,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import schemas
 from ..operators.upsert import VersionedParquetTable
@@ -42,81 +49,85 @@ class RunLedger:
     def _now(self) -> dt.datetime:
         return dt.datetime.now(dt.timezone.utc)
 
+    def _row(self, schema: T.StructType, **values) -> DataFrame:
+        """One row typed by ``schema``: ``values`` by column name,
+        missing columns null, ``meta`` the empty map."""
+        return self.spark.range(1).select(
+            *[
+                (
+                    F.create_map() if f.name == "meta" else F.lit(values.get(f.name))
+                ).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ]
+        )
+
+    @staticmethod
+    def _append(table: VersionedParquetTable, row: DataFrame) -> None:
+        if table.exists():
+            table.append(row)
+        else:
+            table.write(row)
+
     def create_run(
         self, run_type: str, jurisdiction: str, days_window: int = 90
     ) -> str:
         """queued row (index.ts:359-381)."""
         run_id = f"run-{uuid.uuid4()}"
-        row = self.spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    run_type,
-                    jurisdiction,
-                    days_window,
-                    "queued",
-                    self._now(),
-                    None,
-                    {},
-                    None,
-                )
-            ],
+        row = self._row(
             schemas.RUNS,
+            id=run_id,
+            run_type=run_type,
+            jurisdiction=jurisdiction,
+            days_window=days_window,
+            status="queued",
+            started_at=self._now(),
         )
-        if self.runs.exists():
-            self.runs.append(row)
-        else:
-            self.runs.write(row)
+        self._append(self.runs, row)
         return run_id
 
     def transition(
         self, run_id: str, status: str, meta: dict[str, str] | None = None
     ) -> None:
-        """State transition via keyed upsert (jobs/scan.ts:20,82-103:
-        queued→running→completed|failed; meta merged on finalize —
-        the COALESCE(meta,'{}')||$1 jsonb merge becomes map_concat)."""
-        current = self.runs.read()
-        terminal = status in ("completed", "failed")
-        updates = (
-            current.filter(F.col("id") == run_id)
-            .withColumn("status", F.lit(status))
-            .withColumn(
-                "completed_at",
-                F.lit(self._now()) if terminal else F.col("completed_at"),
+        """State transition as a point UPDATE (jobs/scan.ts:20,82-103:
+        queued→running→completed|failed): the row with id ``run_id``
+        takes the new status, a terminal status stamps completed_at,
+        and ``meta`` merges over the stored map — the
+        COALESCE(meta,'{}')||$1 jsonb merge, new keys winning. Every
+        other row is copied unchanged; an unknown id changes nothing."""
+        hit = F.col("id") == run_id
+        old_meta = F.coalesce(F.col("meta"), F.create_map().cast(schemas.META))
+        new_meta = old_meta
+        if meta:
+            new_meta = F.map_concat(
+                F.map_filter(old_meta, lambda k, _: ~k.isin(list(meta))),
+                F.create_map(*[F.lit(x) for kv in meta.items() for x in kv]),
             )
-            .withColumn(
-                "meta",
-                F.map_concat(
-                    F.coalesce(
-                        F.col("meta"), F.create_map().cast(schemas.META)
-                    ),
-                    F.create_map(
-                        *[F.lit(x) for kv in (meta or {}).items() for x in kv]
-                    ).cast(schemas.META),
-                ),
+        changed = {"status": F.lit(status), "meta": new_meta}
+        if status in ("completed", "failed"):
+            changed["completed_at"] = F.lit(self._now())
+        current = self.runs.read()
+        self.runs.write(
+            current.select(
+                *[
+                    F.when(hit, changed[c]).otherwise(F.col(c)).alias(c)
+                    if c in changed
+                    else F.col(c)
+                    for c in current.columns
+                ]
             )
         )
-        self.runs.upsert(updates, keys=["id"], version_col="started_at")
 
     def log(self, run_id: str, stage: str, message: str) -> None:
         """ST3 append-only progress stream (repository.ts:87-100)."""
-        row = self.spark.createDataFrame(
-            [
-                (
-                    f"log-{uuid.uuid4()}",
-                    run_id,
-                    stage,
-                    message,
-                    {},
-                    self._now(),
-                )
-            ],
+        row = self._row(
             schemas.RUN_LOGS,
+            id=f"log-{uuid.uuid4()}",
+            run_id=run_id,
+            stage=stage,
+            message=message,
+            created_at=self._now(),
         )
-        if self.logs.exists():
-            self.logs.append(row)
-        else:
-            self.logs.write(row)
+        self._append(self.logs, row)
 
     def replay(self, run_id: str, limit: int = 200) -> DataFrame:
         """T3 ordered replay with cap (repository.ts:94-100)."""

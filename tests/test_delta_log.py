@@ -341,6 +341,47 @@ def test_null_keyed_upsert_matches_fallback(spark, tmp_path):
     assert len(rows) == 4
 
 
+def test_pure_insert_upsert_with_null_key_matches_fallback(spark, tmp_path):
+    """All-new keys, one of them NULL, into a non-empty table holding no
+    null key: no file is touched, so the update side is the whole
+    commit — add-only, and row-equal to the copy-on-write fallback."""
+    dl = DeltaLogTable(spark, str(tmp_path / "dl"))
+    cow = VersionedParquetTable(spark, str(tmp_path / "cow"))
+    base = spark.createDataFrame(
+        [(1, 1, "a"), (2, 1, "b"), (3, 1, "c")], "id long, ver long, val string"
+    )
+    new = spark.createDataFrame(
+        [(None, 2, "n"), (7, 2, "x"), (8, 1, "y"), (8, 3, "y-late")],
+        "id long, ver long, val string",
+    )
+    for t in (dl, cow):
+        t.write(base)
+        t.upsert(new, ["id"], "ver")
+    log = (tmp_path / "dl" / "_delta_log" / f"{dl.version:020d}.json").read_text()
+    assert not any("remove" in json.loads(l) for l in log.splitlines())
+    assert _rows(dl.read()) == _rows(cow.read())
+    rows = {r["id"]: r["val"] for r in dl.read().collect()}
+    assert rows == {1: "a", 2: "b", 3: "c", None: "n", 7: "x", 8: "y-late"}
+
+
+def test_upsert_leaves_the_session_serializable(spark, tmp_path):
+    """upsert observes its merge-key bounds without registering a
+    session-level Observation: once registered, Spark 4.1's
+    ObservationManager rides along whenever a task closure captures the
+    SparkSession (Spark ML models do) and the task fails to serialize."""
+    t = DeltaLogTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(1, 1, "a")], "id long, ver long, val string"))
+    t.upsert(
+        spark.createDataFrame([(1, 2, "b"), (2, 1, "c")], "id long, ver long, val string"),
+        ["id"],
+        "ver",
+    )
+    assert {r["id"]: r["val"] for r in t.read().collect()} == {1: "b", 2: "c"}
+    jvm = spark._jvm
+    out = jvm.java.io.ObjectOutputStream(jvm.java.io.ByteArrayOutputStream())
+    out.writeObject(spark._jsparkSession)
+
+
 def test_upsert_candidate_pruning_uses_stats(spark, tmp_path):
     """An out-of-range update batch must not even SCAN in-range files:
     candidate detection prunes on the add-action stats before any Spark

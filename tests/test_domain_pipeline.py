@@ -144,3 +144,73 @@ def test_radar_relational_impl_matches_pandas(spark, items):
 
     with pytest.raises(ValueError, match="impl"):
         radar_coverage(items, impl="bogus")
+
+
+def _collected(result):
+    """Every scan output table as a sorted list of row reprs, each
+    through a fresh plan (collecting the same DataFrame again would
+    reuse its shuffle files instead of reading the input)."""
+    return {
+        name: sorted(str(r) for r in getattr(result, name).select("*").collect())
+        for name in ("main_items", "review_items", "links", "summary")
+    }
+
+
+def test_scan_outputs_survive_deleting_the_candidates(spark, docs, tmp_path):
+    """run_scan evaluates the batch once: its output tables are
+    projections over materialized rows, so they no longer read the
+    candidates' files."""
+    import shutil
+
+    src = str(tmp_path / "candidates")
+    docs.write.parquet(src)
+    result = run_scan(spark.read.parquet(src), run_id="run-m", days_window=365 * 50)
+    before = _collected(result)
+    shutil.rmtree(src)
+    assert _collected(result) == before
+    assert before["main_items"] and before["review_items"] and before["links"]
+
+
+LINK_KEYS = ["from_type", "from_id", "to_type", "to_id", "relation"]
+
+#: Spark jobs of the second governed batch in
+#: test_governed_batch_job_budget (the first creates the tables)
+BATCH_JOB_BUDGET = 20
+
+
+def test_governed_batch_job_budget(spark, docs, tmp_path):
+    """Two governed batches (scan → main upsert, review append, links
+    insert-if-absent) under one job group: the second, which takes the
+    MERGE paths, stays within the job budget. A lazily re-planned scan
+    DAG or a separate key-bounds job shows up here as extra jobs."""
+    from regpulse_lakehouse_spark.operators.delta_log import DeltaLogTable
+
+    sc = spark.sparkContext
+    tables = {
+        name: DeltaLogTable(spark, str(tmp_path / name), checkpoint_interval=None)
+        for name in ("main", "review", "links")
+    }
+
+    def batch(b: int) -> None:
+        res = run_scan(docs, run_id=f"run-{b}", days_window=365 * 50)
+        tables["main"].upsert(res.main_items.withColumn("_v", F.lit(b)), ["id"], "_v")
+        tables["review"].append(res.review_items)
+        tables["links"].insert_if_absent(res.links, LINK_KEYS)
+
+    def jobs(group: str) -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    group = "governed-batch-budget"
+    sc.setJobGroup(group, "two governed batches")
+    try:
+        batch(0)
+        first = jobs(group)
+        batch(1)
+        second = jobs(group) - first
+    finally:
+        sc._jsc.clearJobGroup()
+    assert second <= BATCH_JOB_BUDGET, f"{second} jobs (budget {BATCH_JOB_BUDGET})"
+    assert tables["main"].read().count() == run_scan(
+        docs, run_id="run-1", days_window=365 * 50
+    ).main_items.count()

@@ -225,3 +225,68 @@ def test_append_schema_evolution_is_opt_in(spark, tmp_path):
     assert t.read().where("id = 4").first()["name"] is None
     # time-travel still sees the pre-evolution schema
     assert "score" not in t.read(version=1).columns
+
+
+def _types(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_ledger_tables_keep_the_schema_types(spark, tmp_path):
+    from regpulse_lakehouse_spark import schemas
+
+    ledger = RunLedger(spark, str(tmp_path / "ledger"))
+    run_id = ledger.create_run("scan", "EU", 30)
+    assert _types(ledger.runs.read().schema) == _types(schemas.RUNS)
+    ledger.transition(run_id, "completed", meta={"errors": "0"})
+    assert _types(ledger.runs.read().schema) == _types(schemas.RUNS)
+    ledger.log(run_id, "search", "starting")
+    assert _types(ledger.logs.read().schema) == _types(schemas.RUN_LOGS)
+
+
+def test_fresh_run_is_queued_with_empty_meta(spark, tmp_path):
+    ledger = RunLedger(spark, str(tmp_path / "ledger"))
+    run_id = ledger.create_run("scan", "EU", 30)
+    run = ledger.runs.read().collect()[0]
+    assert (run.id, run.run_type, run.jurisdiction, run.days_window) == (
+        run_id, "scan", "EU", 30
+    )
+    assert run.status == "queued" and run.started_at is not None
+    assert run.meta == {} and run.completed_at is None and run.job_id is None
+
+
+def test_second_terminal_transition_merges_meta(spark, tmp_path):
+    """meta merges like jsonb ``||``: earlier keys stay, a key given
+    again takes the new value."""
+    ledger = RunLedger(spark, str(tmp_path / "ledger"))
+    run_id = ledger.create_run("scan", "EU")
+    ledger.transition(run_id, "completed", meta={"discovered": "5", "errors": "0"})
+    first = ledger.runs.read().collect()[0].completed_at
+    ledger.transition(run_id, "failed", meta={"errors": "1", "reason": "late"})
+    run = ledger.runs.read().collect()[0]
+    assert run.status == "failed"
+    assert run.meta == {"discovered": "5", "errors": "1", "reason": "late"}
+    assert run.completed_at >= first
+
+
+def test_transition_of_unknown_run_changes_nothing(spark, tmp_path):
+    ledger = RunLedger(spark, str(tmp_path / "ledger"))
+    a = ledger.create_run("scan", "EU")
+    ledger.create_run("merge", "US")
+    ledger.transition(a, "completed", meta={"k": "v"})
+    before = sorted(str(r) for r in ledger.runs.read().collect())
+    ledger.transition("run-unknown", "failed", meta={"x": "y"})
+    assert sorted(str(r) for r in ledger.runs.read().collect()) == before
+
+
+def test_log_rows_replay_in_order(spark, tmp_path):
+    ledger = RunLedger(spark, str(tmp_path / "ledger"))
+    run_id = ledger.create_run("scan", "EU")
+    stages = ["search", "fetch", "extract", "validate", "complete"]
+    for i, stage in enumerate(stages):
+        ledger.log(run_id, stage, f"step {i}")
+    ledger.log("run-other", "search", "elsewhere")
+    replay = ledger.replay(run_id).collect()
+    assert [(r.stage, r.message) for r in replay] == [
+        (s, f"step {i}") for i, s in enumerate(stages)
+    ]
+    assert all(r.meta == {} for r in replay)
