@@ -33,6 +33,15 @@ Physical shapes (the part that matters at 100 TB):
 - every ``add`` carries real ``stats`` (numRecords + min/max per leaf
   atomic column, read from the parquet footers via pyarrow) — the
   protocol's data-skipping hook.
+- ``write`` / ``append`` take a DataFrame or a ``pyarrow.Table``. The
+  driver writes an Arrow table itself (``pq.write_table``), so a small
+  table such as the run ledger commits with no Spark job; stats,
+  schema enforcement, CHECK constraints and the commit are shared.
+- ``upsert`` and ``insert_if_absent`` materialize their deduplicated
+  source once; the touched-file probe is a broadcast semi-join whose
+  file names are deduplicated in the driver.
+- ``compact`` (no ``sort_cols``) commits nothing when the table has no
+  more files than its target count.
 
 Single-writer semantics like the fallback (the reference serializes
 writes through one worker, worker.ts:18,26); the put-if-absent commit
@@ -48,6 +57,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import TYPE_CHECKING
 from urllib.parse import quote, unquote, urlparse
 
 from pyspark.serializers import CPickleSerializer
@@ -56,6 +66,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .upsert import dedup_on_keys, upsert_latest_wins
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 _LOG_DIR = "_delta_log"
 #: Hive's directory token for a NULL partition value (what Spark's
@@ -460,7 +473,7 @@ class DeltaLogTable:
             self.checkpoint()
         return version
 
-    def _meta_action(self, df: DataFrame) -> dict:
+    def _meta_action(self, schema: T.StructType) -> dict:
         # an overwrite keeps the table's identity and configuration
         # (spec: metaData.id is stable for the table's lifetime, and
         # dropping configuration would silently shed CHECK constraints)
@@ -474,7 +487,7 @@ class DeltaLogTable:
             "metaData": {
                 "id": mid,
                 "format": {"provider": "parquet", "options": {}},
-                "schemaString": df.schema.json(),
+                "schemaString": schema.json(),
                 "partitionColumns": self.partition_columns(),
                 "configuration": cfg,
                 "createdTime": created,
@@ -547,41 +560,34 @@ class DeltaLogTable:
         )
 
     # -- data files ----------------------------------------------------------
-    def _stage_files(self, df: DataFrame, data_change: bool) -> list[dict]:
+    def _stage_files(self, df: DataFrame | pa.Table, data_change: bool) -> list[dict]:
         """Write ``df`` as parquet part files under the table root
         (unique names; partitioned tables keep Spark's hive
         ``col=value/`` layout) and return their ``add`` actions with
-        footer-derived stats and spec ``partitionValues``."""
+        footer-derived stats and spec ``partitionValues``.
+
+        A ``pyarrow.Table`` is written by the driver as one file with
+        ``pq.write_table`` — no Spark job. On a partitioned table, or one
+        with CHECK constraints, it becomes a DataFrame first, so the hive
+        layout and the in-job constraint guard stay Spark's. Everything
+        after the bytes are on disk is the same for both inputs."""
         import pyarrow.parquet as pq
 
-        if data_change:
-            # CHECK constraints are enforced IN the write job (guard
-            # expression, no extra pass over df) — a violation aborts
-            # before any commit JSON exists
-            df = self._with_constraint_guards(df)
         pcols = self.partition_columns()
+        schema = _schema_of(df)
         stage = os.path.join(self.root, f"_stage_{uuid.uuid4().hex}")
-        try:
-            if pcols:
-                df.write.partitionBy(*pcols).parquet(stage)
-            else:
-                df.write.parquet(stage)
-        except Exception as exc:  # translate executor-side assert
-            detail = str(exc)
-            if _CONSTRAINT_MARK not in detail:
-                raise
-            shutil.rmtree(stage, ignore_errors=True)
-            line = next(
-                (l for l in detail.splitlines() if _CONSTRAINT_MARK in l),
-                detail,
-            )
-            raise ConstraintViolationError(
-                line.split(_CONSTRAINT_MARK, 1)[1].lstrip(": ").strip()
-                or line
-            ) from None
+        if not isinstance(df, DataFrame) and (
+            pcols or (data_change and self.constraints())
+        ):
+            df = self.spark.createDataFrame(df)
+        if not isinstance(df, DataFrame):
+            os.makedirs(stage)
+            pq.write_table(df, os.path.join(stage, "part-0.parquet"))
+        else:
+            self._spark_write(df, stage, pcols, data_change)
         stats_fields = [
             f.name
-            for f in df.schema.fields
+            for f in schema.fields
             if isinstance(f.dataType, _STATS_TYPES) and f.name not in pcols
         ]
         adds = []
@@ -625,6 +631,34 @@ class DeltaLogTable:
         shutil.rmtree(stage)
         return adds
 
+    def _spark_write(
+        self, df: DataFrame, stage: str, pcols: list[str], data_change: bool
+    ) -> None:
+        """Write ``df`` into ``stage`` with Spark's parquet writer."""
+        if data_change:
+            # CHECK constraints are enforced IN the write job (guard
+            # expression, no extra pass over df) — a violation aborts
+            # before any commit JSON exists
+            df = self._with_constraint_guards(df)
+        try:
+            if pcols:
+                df.write.partitionBy(*pcols).parquet(stage)
+            else:
+                df.write.parquet(stage)
+        except Exception as exc:  # translate executor-side assert
+            detail = str(exc)
+            if _CONSTRAINT_MARK not in detail:
+                raise
+            shutil.rmtree(stage, ignore_errors=True)
+            line = next(
+                (l for l in detail.splitlines() if _CONSTRAINT_MARK in l),
+                detail,
+            )
+            raise ConstraintViolationError(
+                line.split(_CONSTRAINT_MARK, 1)[1].lstrip(": ").strip()
+                or line
+            ) from None
+
     def _remove_actions(self, paths: list[str]) -> list[dict]:
         ts = _now_ms()
         return [
@@ -643,6 +677,23 @@ class DeltaLogTable:
         if not active:
             return self.spark.createDataFrame([], schema)
         return self._read_files(sorted(active), schema)
+
+    def _read_arrow(self) -> pa.Table:
+        """The latest snapshot of a small unpartitioned table (the run
+        ledger) as a ``pyarrow.Table``, read by the driver under the
+        log's schema — no Spark job."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        active, meta, _ = self._replay()
+        schema = to_arrow_schema(
+            T.StructType.fromJson(json.loads(meta["schemaString"]))
+        )
+        paths = [os.path.join(self.root, _log_decode_path(p)) for p in sorted(active)]
+        return pa.concat_tables(
+            [schema.empty_table()] + [pq.read_table(p, schema=schema) for p in paths]
+        )
 
     def version_as_of(self, timestamp_ms: int) -> int:
         """TIMESTAMP AS OF resolution: the newest committed version
@@ -745,15 +796,16 @@ class DeltaLogTable:
         return self._read_files(keep, schema).filter(cond)
 
     # -- commits ---------------------------------------------------------------
-    def write(self, df: DataFrame) -> int:
+    def write(self, df: DataFrame | pa.Table) -> int:
         """Full overwrite: remove every active file, add the new ones —
-        one atomic commit, old snapshots stay time-travelable."""
+        one atomic commit, old snapshots stay time-travelable. ``df``
+        may be a ``pyarrow.Table`` (see :meth:`_stage_files`)."""
         v = 0 if self.version is None else self.version + 1
         old = list(self._replay()[0]) if self.exists() else []
         # partition_columns() validates the constructor spec against an
         # existing table's metaData before any file is staged
         self.partition_columns()
-        actions = [self._meta_action(df)]
+        actions = [self._meta_action(_schema_of(df))]
         if v == 0:
             actions.insert(
                 0, {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
@@ -763,7 +815,9 @@ class DeltaLogTable:
         actions.append(_commit_info("WRITE"))
         return self._commit(v, actions)
 
-    def _check_schema(self, df: DataFrame, merge_schema: bool) -> dict | None:
+    def _check_schema(
+        self, df: DataFrame | pa.Table, merge_schema: bool
+    ) -> dict | None:
         """SCHEMA ENFORCEMENT (the Delta writer contract): an append
         whose schema differs from the log's is rejected — without this
         a wider append silently loses its extra column on read (the
@@ -777,8 +831,9 @@ class DeltaLogTable:
         mismatch (createDataFrame defaults differ from parquet's)."""
         _, meta, _ = self._replay()
         current = T.StructType.fromJson(json.loads(meta["schemaString"]))
+        schema = _schema_of(df)
         cur = {f.name: f.dataType for f in current.fields}
-        new = {f.name: f.dataType for f in df.schema.fields}
+        new = {f.name: f.dataType for f in schema.fields}
         if cur == new:
             return None
         changed = sorted(n for n in cur.keys() & new.keys() if cur[n] != new[n])
@@ -795,17 +850,21 @@ class DeltaLogTable:
             )
         merged = T.StructType(
             list(current.fields)
-            + [f for f in df.schema.fields if f.name not in cur]
+            + [f for f in schema.fields if f.name not in cur]
         )
         new_meta = dict(meta)
         new_meta["schemaString"] = merged.json()
         return {"metaData": new_meta}
 
     def append(
-        self, df: DataFrame, max_retries: int = 0, merge_schema: bool = False
+        self,
+        df: DataFrame | pa.Table,
+        max_retries: int = 0,
+        merge_schema: bool = False,
     ) -> int:
-        """Blind append: add-only commit, nothing rewritten. The
-        df's schema must match the log schema (see
+        """Blind append: add-only commit, nothing rewritten. ``df`` may
+        be a ``pyarrow.Table`` (see :meth:`_stage_files`). Its schema
+        must match the log schema (see
         :meth:`_check_schema`); ``merge_schema=True`` allows additive
         new columns, committing the evolved metaData with the adds.
 
@@ -954,6 +1013,11 @@ class DeltaLogTable:
         NOTHING): anti-join against the snapshot, append the survivors.
         Add-only — no data file is rewritten.
 
+        The deduplicated source is materialized once, as in
+        :meth:`upsert`, so the anti-join reads one leaf: left lazy, the
+        optimizer pushes the join into every branch of a unioned source
+        and broadcasts the snapshot once per branch.
+
         ``max_retries`` > 0 opts into WriteSerializable conflict
         resolution: a lost commit race rebases to the new head when
         every winning commit is key-disjoint (no adds OR removes whose
@@ -965,9 +1029,8 @@ class DeltaLogTable:
         self._check_schema(new, merge_schema=False)
         read_v = self.version
         v = read_v + 1
-        missing = new.dropDuplicates(keys).join(
-            self.read().select(keys), keys, "left_anti"
-        )
+        new = new.dropDuplicates(keys).localCheckpoint(eager=True)
+        missing = new.join(self.read().select(keys), keys, "left_anti")
         actions = self._stage_files(missing, data_change=True)
         actions.append(_commit_info("MERGE"))
         bounds = None
@@ -1040,8 +1103,10 @@ class DeltaLogTable:
         group NULL keys together — a plain equi-join would never mark a
         null-keyed row's file as touched and the stale row would survive
         next to its replacement). The match side is key-unique (the
-        upsert dedups it) and broadcasts when small; only file NAMES
-        come back to the driver."""
+        upsert dedups it) and is broadcast, so the probe needs no
+        shuffle. The table holds each key at most once, so the semi-join
+        returns at most one file name per match row; the driver
+        deduplicates them instead of a ``distinct`` stage."""
         candidates = self._candidate_files(match, on_cols, bounds)
         if not candidates:
             return []
@@ -1055,13 +1120,8 @@ class DeltaLogTable:
         for k in on_cols:
             c = F.col(k).eqNullSafe(F.col(f"_m_{k}"))
             cond = c if cond is None else (cond & c)
-        rows = (
-            tagged.join(probe, cond, "left_semi")
-            .select("_file")
-            .distinct()
-            .collect()
-        )
-        return [self._rel_from_uri(r["_file"]) for r in rows]
+        rows = tagged.join(F.broadcast(probe), cond, "left_semi").select("_file")
+        return sorted({self._rel_from_uri(r["_file"]) for r in rows.collect()})
 
     def upsert(
         self,
@@ -1375,13 +1435,22 @@ class DeltaLogTable:
     ) -> int:
         """OPTIMIZE: coalesce the active files toward
         ``target_file_bytes``, committed with ``dataChange: false`` on
-        both sides so CDC/streaming readers know no rows changed."""
+        both sides so CDC/streaming readers know no rows changed.
+
+        Without ``sort_cols``, a table that already has no more files
+        than the target count is left alone: nothing is committed and
+        the current version is returned (Delta's OPTIMIZE likewise
+        never rewrites a one-file bin)."""
+        _check_target_bytes(target_file_bytes)
         if not self.exists():
             raise FileNotFoundError(f"no Delta log under {self.root}")
-        v = self.version + 1
+        head = self.version
         active, meta, _ = self._replay()
         total = sum(a["size"] for a in active.values())
         n_out = max(1, round(total / target_file_bytes))
+        if not sort_cols and len(active) <= n_out:
+            return head
+        v = head + 1
         df = self.read()
         if sort_cols:
             df = df.repartitionByRange(n_out, *sort_cols)
@@ -1443,6 +1512,7 @@ class DeltaLogTable:
         in-place (commit + tombstones, CDC-silent) and rank-buckets
         any orderable type, so skewed or string facets cluster just as
         tightly. Returns the committed version."""
+        _check_target_bytes(target_file_bytes)
         if not self.exists():
             raise FileNotFoundError(f"no Delta log under {self.root}")
         if not cols:
@@ -1728,6 +1798,20 @@ def _footer_stats(pf, fields: list[str]) -> dict:
             except TypeError:  # pragma: no cover - mixed footer types
                 pass
     return out
+
+
+def _check_target_bytes(target_file_bytes: int) -> None:
+    if target_file_bytes <= 0:
+        raise ValueError(f"target_file_bytes must be > 0, got {target_file_bytes}")
+
+
+def _schema_of(df: DataFrame | pa.Table) -> T.StructType:
+    """The Spark schema of a DataFrame or a ``pyarrow.Table``."""
+    if isinstance(df, DataFrame):
+        return df.schema
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(df.schema)
 
 
 def _observed_metrics(df: DataFrame, name: str) -> dict:

@@ -5,18 +5,19 @@ The reference's queue-driven micro-batch (BullMQ workers, queue.ts:
 20,82-103; append-only run_logs polled every 2s, RunMonitor.tsx:25-54)
 maps to:
 
-- a ``runs`` VersionedParquetTable as the ledger: a new run appends
-  one row, and a state transition is a point UPDATE — one projection
-  that rewrites the matching row's status/completed_at/meta and copies
-  every other row, committed as the next snapshot;
-- an append-only ``run_logs`` table (ordered replay is the T3 query);
+- a ``runs`` DeltaLogTable as the ledger: a new run is an add-only
+  commit of one row, and a state transition is a point UPDATE — the
+  driver reads the snapshot's files, rewrites the matching row's
+  status/completed_at/meta, and commits the rows as an overwrite;
+- an append-only ``run_logs`` DeltaLogTable (ordered replay is the T3
+  query);
 - ``stream_scan``: a Structured Streaming wrapper that runs the *same*
   batch scan pipeline per micro-batch via ``foreachBatch`` — write
   once, run both modes (SURVEY §7 Phase 7).
 
-The ledger's one-row frames are built in the JVM (``spark.range(1)``
-plus typed literals), so writing the ledger never starts a Python
-worker.
+The ledger's rows are ``pyarrow`` tables that the driver reads and
+writes itself (``DeltaLogTable.append``/``write`` take Arrow input),
+so ``create_run``, ``transition`` and ``log`` start no Spark job.
 
 Watermark policy note (ST4): the reference has no event-time watermark
 — unknown dates pass the window filter and dedup is within-batch only.
@@ -29,12 +30,14 @@ from __future__ import annotations
 import datetime as dt
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
-from ..operators.upsert import VersionedParquetTable
+from ..operators.delta_log import DeltaLogTable
 from ..pipelines.scan import run_scan
 
 
@@ -43,30 +46,19 @@ class RunLedger:
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
-        self.runs = VersionedParquetTable(spark, f"{root}/runs")
-        self.logs = VersionedParquetTable(spark, f"{root}/run_logs")
+        self.runs = DeltaLogTable(spark, f"{root}/runs")
+        self.logs = DeltaLogTable(spark, f"{root}/run_logs")
 
     def _now(self) -> dt.datetime:
         return dt.datetime.now(dt.timezone.utc)
 
-    def _row(self, schema: T.StructType, **values) -> DataFrame:
+    @staticmethod
+    def _row(schema: T.StructType, **values) -> pa.Table:
         """One row typed by ``schema``: ``values`` by column name,
         missing columns null, ``meta`` the empty map."""
-        return self.spark.range(1).select(
-            *[
-                (
-                    F.create_map() if f.name == "meta" else F.lit(values.get(f.name))
-                ).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
+        return pa.Table.from_pylist(
+            [{"meta": [], **values}], schema=to_arrow_schema(schema)
         )
-
-    @staticmethod
-    def _append(table: VersionedParquetTable, row: DataFrame) -> None:
-        if table.exists():
-            table.append(row)
-        else:
-            table.write(row)
 
     def create_run(
         self, run_type: str, jurisdiction: str, days_window: int = 90
@@ -82,7 +74,7 @@ class RunLedger:
             status="queued",
             started_at=self._now(),
         )
-        self._append(self.runs, row)
+        self.runs.append(row)
         return run_id
 
     def transition(
@@ -93,29 +85,19 @@ class RunLedger:
         takes the new status, a terminal status stamps completed_at,
         and ``meta`` merges over the stored map — the
         COALESCE(meta,'{}')||$1 jsonb merge, new keys winning. Every
-        other row is copied unchanged; an unknown id changes nothing."""
-        hit = F.col("id") == run_id
-        old_meta = F.coalesce(F.col("meta"), F.create_map().cast(schemas.META))
-        new_meta = old_meta
-        if meta:
-            new_meta = F.map_concat(
-                F.map_filter(old_meta, lambda k, _: ~k.isin(list(meta))),
-                F.create_map(*[F.lit(x) for kv in meta.items() for x in kv]),
-            )
-        changed = {"status": F.lit(status), "meta": new_meta}
-        if status in ("completed", "failed"):
-            changed["completed_at"] = F.lit(self._now())
-        current = self.runs.read()
-        self.runs.write(
-            current.select(
-                *[
-                    F.when(hit, changed[c]).otherwise(F.col(c)).alias(c)
-                    if c in changed
-                    else F.col(c)
-                    for c in current.columns
-                ]
-            )
-        )
+        other row is copied unchanged; an unknown id commits nothing."""
+        current = self.runs._read_arrow()
+        rows = current.to_pylist()
+        hits = [r for r in rows if r["id"] == run_id]
+        if not hits:
+            return
+        now = self._now()
+        for r in hits:
+            r["status"] = status
+            r["meta"] = list({**dict(r["meta"] or []), **(meta or {})}.items())
+            if status in ("completed", "failed"):
+                r["completed_at"] = now
+        self.runs.write(pa.Table.from_pylist(rows, schema=current.schema))
 
     def log(self, run_id: str, stage: str, message: str) -> None:
         """ST3 append-only progress stream (repository.ts:87-100)."""
@@ -127,7 +109,7 @@ class RunLedger:
             message=message,
             created_at=self._now(),
         )
-        self._append(self.logs, row)
+        self.logs.append(row)
 
     def replay(self, run_id: str, limit: int = 200) -> DataFrame:
         """T3 ordered replay with cap (repository.ts:94-100)."""

@@ -1044,3 +1044,87 @@ def test_concurrent_deletes_disjoint_files_rebase(spark, tmp_path):
     _race(t3, lambda: t2.delete_where((F.col("grp") == "g2") & (F.col("id") == 2)))
     with pytest.raises(ValueError, match="concurrent"):
         t3.delete_where((F.col("grp") == "g2") & (F.col("id") == 5), max_retries=1)
+
+
+@pytest.mark.parametrize("target", [0, -1])
+def test_compact_rejects_a_nonpositive_target(spark, tmp_path, target):
+    t = DeltaLogTable(spark, str(tmp_path / "t"))
+    for i in range(2):
+        t.append(spark.createDataFrame([(i, "v")], "id long, val string").coalesce(1))
+    v = t.version
+    with pytest.raises(ValueError, match="target_file_bytes"):
+        t.compact(target_file_bytes=target)
+    assert t.version == v
+
+
+def test_compact_of_a_one_file_table_commits_nothing(spark, tmp_path):
+    t = DeltaLogTable(spark, str(tmp_path / "t"))
+    t.write(
+        spark.createDataFrame([(i, "v") for i in range(5)], "id long, val string")
+        .coalesce(1)
+    )
+    assert len(t.active_files()) == 1
+    v = t.version
+    log_dir = tmp_path / "t" / "_delta_log"
+    entries = sorted(os.listdir(log_dir))
+    assert t.compact() == v
+    assert t.version == v
+    assert sorted(os.listdir(log_dir)) == entries
+
+
+def _arrow_rows(ids, vals):
+    import pyarrow as pa
+
+    return pa.table({"id": pa.array(ids, pa.int64()), "val": pa.array(vals, pa.string())})
+
+
+def test_arrow_write_and_append_match_dataframe_writes(spark, tmp_path):
+    """A pyarrow table commits the same snapshot a DataFrame does, with
+    footer stats on its add action."""
+    arrow = DeltaLogTable(spark, str(tmp_path / "arrow"))
+    frame = DeltaLogTable(spark, str(tmp_path / "frame"))
+    schema = "id long, val string"
+    arrow.write(_arrow_rows([1, 2], ["a", "b"]))
+    frame.write(spark.createDataFrame([(1, "a"), (2, "b")], schema))
+    arrow.append(_arrow_rows([3], ["c"]))
+    frame.append(spark.createDataFrame([(3, "c")], schema))
+    assert _rows(arrow.read()) == _rows(frame.read())
+    assert arrow.read().schema == frame.read().schema
+    assert len(arrow.files_where("id", 3, 3)) == 1
+    stats = sorted(
+        (s["numRecords"], s["minValues"]["id"], s["maxValues"]["id"])
+        for s in (json.loads(a["stats"]) for a in arrow.active_files())
+    )
+    assert stats == [(1, 3, 3), (2, 1, 2)]
+
+
+def test_arrow_append_rejects_a_schema_mismatch(spark, tmp_path):
+    import pyarrow as pa
+
+    t = DeltaLogTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(1, "a")], "id long, val string"))
+    v = t.version
+    with pytest.raises(ValueError, match="schema mismatch"):
+        t.append(pa.table({"id": pa.array([2], pa.int32()), "val": ["b"]}))
+    with pytest.raises(ValueError, match="schema mismatch"):
+        t.append(pa.table({"id": pa.array([2], pa.int64())}))
+    assert t.version == v
+    assert _rows(t.read()) == [(1, "a")]
+
+
+def test_arrow_row_violating_a_check_constraint_commits_nothing(spark, tmp_path):
+    from regpulse_lakehouse_spark.operators.delta_log import (
+        ConstraintViolationError,
+    )
+
+    t = DeltaLogTable(spark, str(tmp_path / "t"))
+    t.write(_arrow_rows([1], ["a"]))
+    t.add_constraint("val_set", "val <> 'bad'")
+    v = t.version
+    for commit in (t.append, t.write):
+        with pytest.raises(ConstraintViolationError, match="val_set"):
+            commit(_arrow_rows([2, 3], ["ok", "bad"]))
+    assert t.version == v
+    assert _rows(t.read()) == [(1, "a")]
+    t.append(_arrow_rows([2], ["ok"]))
+    assert _rows(t.read()) == [(1, "a"), (2, "ok")]

@@ -183,3 +183,13 @@ def test_zorder_degenerate_constant_column(spark, tmp_path):
     n = len(t.active_files())
     if n >= 4:
         assert len(t.files_where("x", 0, 1)) <= max(2, n // 2)
+
+
+@pytest.mark.parametrize("target", [0, -1])
+def test_zorder_rejects_a_nonpositive_target(spark, tmp_path, target):
+    t = DeltaLogTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(1, 2), (3, 4)], "x int, y int"))
+    v = t.version
+    with pytest.raises(ValueError, match="target_file_bytes"):
+        t.zorder_by(["x", "y"], target_file_bytes=target)
+    assert t.version == v

@@ -175,7 +175,7 @@ LINK_KEYS = ["from_type", "from_id", "to_type", "to_id", "relation"]
 
 #: Spark jobs of the second governed batch in
 #: test_governed_batch_job_budget (the first creates the tables)
-BATCH_JOB_BUDGET = 20
+BATCH_JOB_BUDGET = 15
 
 
 def test_governed_batch_job_budget(spark, docs, tmp_path):

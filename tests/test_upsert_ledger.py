@@ -274,8 +274,10 @@ def test_transition_of_unknown_run_changes_nothing(spark, tmp_path):
     ledger.create_run("merge", "US")
     ledger.transition(a, "completed", meta={"k": "v"})
     before = sorted(str(r) for r in ledger.runs.read().collect())
+    v = ledger.runs.version
     ledger.transition("run-unknown", "failed", meta={"x": "y"})
     assert sorted(str(r) for r in ledger.runs.read().collect()) == before
+    assert ledger.runs.version == v  # nothing committed
 
 
 def test_log_rows_replay_in_order(spark, tmp_path):
@@ -290,3 +292,42 @@ def test_log_rows_replay_in_order(spark, tmp_path):
         (s, f"step {i}") for i, s in enumerate(stages)
     ]
     assert all(r.meta == {} for r in replay)
+
+
+def test_ledger_calls_start_no_spark_job(spark, tmp_path):
+    """create_run, transition and log read and commit in the driver:
+    none of them starts a Spark job."""
+    import uuid
+
+    sc = spark.sparkContext
+    ledger = RunLedger(spark, str(tmp_path / "ledger"))
+
+    def jobs(fn) -> int:
+        group = f"ledger-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "ledger call")
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    run_ids = []
+    assert jobs(lambda: run_ids.append(ledger.create_run("scan", "EU"))) == 0
+    assert jobs(lambda: run_ids.append(ledger.create_run("scan", "US"))) == 0
+    assert jobs(lambda: ledger.log(run_ids[0], "search", "starting")) == 0
+    assert jobs(lambda: ledger.log(run_ids[0], "process", "working")) == 0
+    assert jobs(lambda: ledger.transition(run_ids[0], "running")) == 0
+    assert jobs(lambda: ledger.transition(run_ids[0], "completed", {"n": "1"})) == 0
+    assert [r.status for r in ledger.runs.read().orderBy("started_at").collect()] == [
+        "completed", "queued"
+    ]
+
+
+def test_ledger_run_rows_carry_file_stats(spark, tmp_path):
+    ledger = RunLedger(spark, str(tmp_path / "ledger"))
+    first = ledger.create_run("scan", "EU")
+    second = ledger.create_run("scan", "US")
+    assert len(ledger.runs.active_files()) == 2
+    for run_id in (first, second):
+        assert len(ledger.runs.files_where("id", run_id, run_id)) == 1
