@@ -5,6 +5,11 @@ The reference normalizes messy candidate payloads in two near-duplicate
 client-side); here it is one columnar transform: enum fallbacks, array
 coercion + whitelist intersection, truncation, confidence clamping,
 priority keyword mapping. Idempotent by construction (property-tested).
+
+:func:`normalize_columns` builds the transform as named Columns with no
+DataFrame bound, so a caller that applies it on every batch
+(``pipelines.scan.run_scan``) builds it once; :func:`normalize_items`
+applies it as one ``withColumns``.
 """
 
 from __future__ import annotations
@@ -59,29 +64,29 @@ def truncate(col: Column, n: int) -> Column:
     return F.substring(col, 1, n)
 
 
+def normalize_columns() -> dict[str, Column]:
+    """V3/V4 as named columns over the regulation_items shape, with no
+    DataFrame bound: every column coerced into its closed domain. Each
+    expression reads only input columns, so the whole dict applies as
+    one projection (``title`` truncates the raw summary to 80 chars,
+    which equals truncating the 400-char one)."""
+    return {
+        "jurisdiction": enum_or_default(F.col("jurisdiction"), JURISDICTIONS, "EU"),
+        "source_type": enum_or_default(F.col("source_type"), SOURCE_TYPES, "guidance"),
+        "topics": whitelist_array(F.col("topics"), TOPICS),
+        "impacted_areas": whitelist_array(F.col("impacted_areas"), IMPACTED_AREAS),
+        "confidence": clamp_unit(F.col("confidence")),
+        "priority": normalize_priority(F.col("priority")),
+        "summary_1line": truncate(F.col("summary_1line"), 400),
+        "title": F.coalesce(
+            F.nullif(F.col("title"), F.lit("")),
+            truncate(F.col("summary_1line"), 80),
+            F.lit("Untitled"),
+        ),
+    }
+
+
 def normalize_items(items: DataFrame) -> DataFrame:
-    """V3/V4 applied to the regulation_items shape: one pass, all
-    columns coerced into their closed domains."""
-    return (
-        items.withColumn(
-            "jurisdiction", enum_or_default(F.col("jurisdiction"), JURISDICTIONS, "EU")
-        )
-        .withColumn(
-            "source_type", enum_or_default(F.col("source_type"), SOURCE_TYPES, "guidance")
-        )
-        .withColumn("topics", whitelist_array(F.col("topics"), TOPICS))
-        .withColumn(
-            "impacted_areas", whitelist_array(F.col("impacted_areas"), IMPACTED_AREAS)
-        )
-        .withColumn("confidence", clamp_unit(F.col("confidence")))
-        .withColumn("priority", normalize_priority(F.col("priority")))
-        .withColumn("summary_1line", truncate(F.col("summary_1line"), 400))
-        .withColumn(
-            "title",
-            F.coalesce(
-                F.nullif(F.col("title"), F.lit("")),
-                truncate(F.col("summary_1line"), 80),
-                F.lit("Untitled"),
-            ),
-        )
-    )
+    """V3/V4 applied to the regulation_items shape: one projection of
+    :func:`normalize_columns`."""
+    return items.withColumns(normalize_columns())

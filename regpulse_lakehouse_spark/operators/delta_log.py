@@ -42,6 +42,8 @@ Physical shapes (the part that matters at 100 TB):
   file names are deduplicated in the driver.
 - ``compact`` (no ``sort_cols``) commits nothing when the table has no
   more files than its target count.
+- a handle parses each parquet checkpoint once (keyed by the file's
+  stat), so a snapshot replay reads only the JSON commits after it.
 
 Single-writer semantics like the fallback (the reference serializes
 writes through one worker, worker.ts:18,26); the put-if-absent commit
@@ -174,6 +176,8 @@ class DeltaLogTable:
         #: partition spec for a table THIS handle creates; an existing
         #: table's metaData always wins (validated on first write)
         self._init_partition_cols = list(partition_columns or [])
+        #: (stat key, parse) of the last checkpoint file read
+        self._parsed_checkpoint: tuple | None = None
         os.makedirs(os.path.join(root, _LOG_DIR), exist_ok=True)
 
     # -- log plumbing --------------------------------------------------------
@@ -279,7 +283,16 @@ class DeltaLogTable:
         checkpoint at or below ``max_version``, or None.
         ``_last_checkpoint`` is the spec's fast pointer; fall back to a
         directory listing so a missing or torn pointer only costs the
-        listing, never correctness."""
+        listing, never correctness.
+
+        The handle parses a checkpoint file once: a log replay runs
+        dozens of times per governed batch, and re-reading the same
+        file with pyarrow made each one take 4-8 ms (0.2-0.3 ms
+        without). The parse is keyed by the file's
+        (version, mtime_ns, size, inode), so a later checkpoint, or one
+        rewritten at the same version (by this handle or any other), is
+        parsed again. Every call returns fresh dicts, so a caller that
+        mutates a replayed action cannot change the next replay."""
         candidates = []
         ptr = os.path.join(self.root, _LOG_DIR, "_last_checkpoint")
         try:
@@ -298,39 +311,19 @@ class DeltaLogTable:
         if not candidates:
             return None
         v = max(candidates)
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(self._checkpoint_path(v))
-        active: dict[str, dict] = {}
-        meta: dict = {}
-        tombstones: dict[str, dict] = {}
-        protocol: dict = {}
-        for row in tbl.to_pylist():
-            if row.get("protocol"):
-                protocol = {
-                    k: v2 for k, v2 in row["protocol"].items()
-                    if v2 is not None
-                }
-            elif row.get("add"):
-                a = {k: v2 for k, v2 in row["add"].items() if v2 is not None}
-                # pyarrow maps round-trip as [(k, v)] — restore the
-                # JSON-log dict shape so checkpoint-seeded state is
-                # indistinguishable from replayed state
-                a["partitionValues"] = dict(a.get("partitionValues") or [])
-                active[a["path"]] = a
-            elif row.get("remove"):
-                r = {k: v2 for k, v2 in row["remove"].items() if v2 is not None}
-                tombstones[r["path"]] = r
-            elif row.get("metaData"):
-                m = {k: v2 for k, v2 in row["metaData"].items() if v2 is not None}
-                m["configuration"] = dict(m.get("configuration") or [])
-                if "format" in m:
-                    m["format"] = {
-                        "provider": m["format"].get("provider", "parquet"),
-                        "options": dict(m["format"].get("options") or []),
-                    }
-                meta = m
-        return v, active, meta, tombstones, protocol
+        path = self._checkpoint_path(v)
+        st = os.stat(path)
+        key = (v, st.st_mtime_ns, st.st_size, st.st_ino)
+        if self._parsed_checkpoint is None or self._parsed_checkpoint[0] != key:
+            self._parsed_checkpoint = (key, _parse_checkpoint(path))
+        active, meta, tombstones, protocol = self._parsed_checkpoint[1]
+        return (
+            v,
+            {p: _fresh(a) for p, a in active.items()},
+            _fresh(meta),
+            {p: _fresh(r) for p, r in tombstones.items()},
+            dict(protocol),
+        )
 
     def checkpoint(self) -> int:
         """Write the current snapshot state as the spec's parquet
@@ -1765,6 +1758,49 @@ def _typed_partition_value(raw: str | None, dtype):
         # bound would mis-prune (' ' < 'T')
         return datetime.datetime.fromisoformat(raw)
     return raw
+
+
+def _parse_checkpoint(path: str) -> tuple[dict, dict, dict, dict]:
+    """(active adds by path, metaData, tombstones by path, protocol) of
+    a parquet checkpoint, in the JSON log's dict shape."""
+    import pyarrow.parquet as pq
+
+    active: dict[str, dict] = {}
+    meta: dict = {}
+    tombstones: dict[str, dict] = {}
+    protocol: dict = {}
+    for row in pq.read_table(path).to_pylist():
+        if row.get("protocol"):
+            protocol = {k: v for k, v in row["protocol"].items() if v is not None}
+        elif row.get("add"):
+            a = {k: v for k, v in row["add"].items() if v is not None}
+            # pyarrow maps round-trip as [(k, v)] — restore the JSON-log
+            # dict shape so checkpoint-seeded state is indistinguishable
+            # from replayed state
+            a["partitionValues"] = dict(a.get("partitionValues") or [])
+            active[a["path"]] = a
+        elif row.get("remove"):
+            r = {k: v for k, v in row["remove"].items() if v is not None}
+            tombstones[r["path"]] = r
+        elif row.get("metaData"):
+            m = {k: v for k, v in row["metaData"].items() if v is not None}
+            m["configuration"] = dict(m.get("configuration") or [])
+            if "format" in m:
+                m["format"] = {
+                    "provider": m["format"].get("provider", "parquet"),
+                    "options": dict(m["format"].get("options") or []),
+                }
+            meta = m
+    return active, meta, tombstones, protocol
+
+
+def _fresh(action: dict) -> dict:
+    """A copy of a parsed log action whose nested dicts and lists are
+    copies too."""
+    return {
+        k: _fresh(v) if isinstance(v, dict) else list(v) if isinstance(v, list) else v
+        for k, v in action.items()
+    }
 
 
 def _footer_stats(pf, fields: list[str]) -> dict:

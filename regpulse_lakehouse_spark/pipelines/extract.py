@@ -8,7 +8,8 @@ that as a *pluggable stage* with two implementations:
 
 - :class:`ColumnExtractor` — pure column expressions (keyword topic
   tagging, hash-derived confidence). The default and test path: fully
-  deterministic, stays in codegen, zero Python in the hot loop.
+  deterministic, stays in codegen, zero Python in the hot loop; its
+  projection is built once per session by ``pipelines.scan.run_scan``.
 - :class:`PandasExtractor` — the production *shape*: ``mapInPandas``
   over Arrow batches, where a real implementation would call a model
   endpoint per batch. Ships with a deterministic body so the plumbing
@@ -27,7 +28,7 @@ from typing import Protocol
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F, types as T
 
 from ..functions.normalize import normalize_priority
@@ -64,20 +65,26 @@ class Extractor(Protocol):
 
 class ColumnExtractor:
     """Deterministic pure-Spark extraction: everything derivable from
-    the document columns via expressions (codegen'd, no Python)."""
+    the document columns via expressions (no Python, no higher-order
+    function, so the projection stays in whole-stage codegen).
+    :meth:`columns` builds the projection with no DataFrame bound, so a
+    caller that extracts every batch (``pipelines.scan.run_scan``) builds
+    it once; :meth:`extract` applies it as one ``select``."""
 
-    def extract(self, documents: DataFrame) -> DataFrame:
+    def columns(self) -> list[Column]:
+        """The output contract (:data:`EXTRACT_SCHEMA`) as named
+        Columns over the source_documents shape."""
         content = F.coalesce(F.col("content"), F.lit(""))
+        lowered = F.lower(content)
         topic_hits = F.array(
             *[
-                F.when(F.instr(F.lower(content), kw) > 0, F.lit(topic))
+                F.when(F.instr(lowered, kw) > 0, F.lit(topic))
                 for kw, topic in _TOPIC_KEYWORDS.items()
             ]
         )
-        topics = F.array_intersect(
-            F.filter(topic_hits, lambda x: x.isNotNull()),
-            F.array(*[F.lit(t) for t in TOPICS]),
-        )
+        # the closed TOPICS array holds no null, so the intersection
+        # drops the misses (and keeps the keyword order)
+        topics = F.array_intersect(topic_hits, F.array(*[F.lit(t) for t in TOPICS]))
         # hash-derived confidence in [0.5, 1.0) — deterministic per doc
         conf = (
             F.conv(F.substring(F.md5(F.col("id")), 1, 4), 16, 10).cast("double")
@@ -85,7 +92,7 @@ class ColumnExtractor:
             / 2
             + 0.5
         )
-        return documents.select(
+        return [
             F.concat(F.lit("item-of-"), F.col("id")).alias("id"),
             F.col("id").alias("source_document_id"),
             F.lit("EU").alias("jurisdiction"),
@@ -95,11 +102,14 @@ class ColumnExtractor:
             topics.alias("topics"),
             F.round(conf, 4).alias("confidence"),
             normalize_priority(
-                F.when(F.instr(F.lower(content), "urgent") > 0, F.lit("urgent")).otherwise(
+                F.when(F.instr(lowered, "urgent") > 0, F.lit("urgent")).otherwise(
                     F.lit("medium")
                 )
             ).alias("priority"),
-        )
+        ]
+
+    def extract(self, documents: DataFrame) -> DataFrame:
+        return documents.select(self.columns())
 
 
 class PandasExtractor:

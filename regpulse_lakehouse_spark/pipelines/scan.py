@@ -24,21 +24,43 @@ four branches). Materializing also pins one answer per batch: the
 extractor runs once, and the date window reads ``current_date()``
 once.
 
+Building the plan costs Python time too: every literal and operator of a
+Column tree is one py4j round trip, and the scan's trees (URL
+canonicalization, window, tier map, extractor, normalize, validate,
+route, link and summary projections) took ~4,800 of them per batch.
+None of them depends on the batch, so :class:`_ScanProgram` builds them
+once per SparkContext and (days_window, tier map) and every later
+batch only applies them. A warm ``run_scan`` makes 200-400 round
+trips (py4j's garbage-collection messages vary); only the run id
+literal and ``max_results`` are new. The memo is cleared by
+``regpulse_lakehouse_spark.cleanup()``.
+
 The only Python stage is the pluggable extractor (and only in its
-``mapInPandas`` flavor); everything else is codegen'd columnar work.
+``mapInPandas`` flavor); everything else is columnar work in the JVM.
 """
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from .. import tmpstate
 from ..functions import urls
-from ..functions.normalize import normalize_items
-from ..operators.validate import split_routes, with_route, with_validation
+from ..functions.normalize import normalize_columns
+from ..operators.validate import route_columns, route_filters, validation_columns
 from .extract import ColumnExtractor, Extractor
+
+#: trust tier per connector profile when the caller passes none
+_DEFAULT_TIERS = {
+    "profile_0": "TIER_A_BINDING",
+    "profile_1": "TIER_B_OFFICIAL",
+    "profile_2": "TIER_C_MEDIA",
+}
+_LINK_COLS = ["from_type", "from_id", "to_type", "to_id", "relation"]
 
 
 @dataclass
@@ -53,26 +75,133 @@ class ScanResult:
     summary: DataFrame  # A5 one-row rollup
 
 
-def dedupe_first_wins_by_url(candidates: DataFrame) -> DataFrame:
-    """W1 (scan.ts:312-321): first candidate per canonical URL in
-    explicit arrival order — Spark unions don't preserve order, so
-    ``arrival_seq`` must come from the source union."""
-    canon = urls.canonicalize_url(F.col("url"))
+def _first_wins_columns() -> tuple[Column, Column, Column]:
+    """(canonical URL, arrival rank within it, keep-first predicate)."""
     w = W.partitionBy("canonical_url").orderBy(F.asc("arrival_seq"))
+    return urls.canonicalize_url(F.col("url")), F.row_number().over(w), F.col("_rn") == 1
+
+
+def _dedupe(candidates: DataFrame, canon: Column, rank: Column, first: Column) -> DataFrame:
     return (
         candidates.withColumn("canonical_url", canon)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        .withColumn("_rn", rank)
+        .filter(first)
         .drop("_rn")
     )
 
 
+def dedupe_first_wins_by_url(candidates: DataFrame) -> DataFrame:
+    """W1 (scan.ts:312-321): first candidate per canonical URL in
+    explicit arrival order — Spark unions don't preserve order, so
+    ``arrival_seq`` must come from the source union."""
+    return _dedupe(candidates, *_first_wins_columns())
+
+
+def _date_window(days: int) -> Column:
+    # current_date() is bound when a plan is optimized, not here, so a
+    # memoized predicate still reads the day of each batch
+    cutoff = F.date_sub(F.current_date(), days)
+    return F.col("published_date").isNull() | (F.col("published_date") >= cutoff)
+
+
 def filter_date_window(candidates: DataFrame, days: int) -> DataFrame:
     """F4 (scan.ts:420-429): null/unparsable published dates PASS."""
-    cutoff = F.date_sub(F.current_date(), days)
-    return candidates.filter(
-        F.col("published_date").isNull() | (F.col("published_date") >= cutoff)
-    )
+    return candidates.filter(_date_window(days))
+
+
+def _link(from_type: str, from_id: Column | None, to_type: str, to_id: str, relation: str):
+    """One G5 edge projection; ``from_id`` None is the run id's slot."""
+    return [
+        F.lit(from_type).alias("from_type"),
+        from_id,
+        F.lit(to_type).alias("to_type"),
+        F.col(to_id).alias("to_id"),
+        F.lit(relation).alias("relation"),
+    ]
+
+
+class _ScanProgram:
+    """Every constant Column ``run_scan`` applies, built once per
+    (SparkContext, days_window, tier map) and reused on every batch:
+    the trees are unresolved, so they bind to each batch's plan when it
+    is analyzed."""
+
+    def __init__(self, days_window: int, tier_map: dict[str, str]):
+        self.first_wins = _first_wins_columns()
+        self.in_window = _date_window(days_window)
+        self.arrival = F.col("arrival_seq")
+        self.trust_tier = F.coalesce(
+            *[
+                F.when(F.col("source_profile_id") == pid, F.lit(tier))
+                for pid, tier in tier_map.items()
+            ],
+            F.lit("TIER_D_QUARANTINE"),  # F9 default (policy.ts:163-170)
+        )
+        self.extract = ColumnExtractor().columns()
+        self.doc_side = [
+            F.col("id").alias("source_document_id"),
+            F.col("trust_tier"),
+            F.col("published_date"),
+            F.col("retrieved_at"),
+        ]
+        self.item = {
+            "source_org": F.lit("Unknown"),
+            "source_type": F.lit("guidance"),
+            "status": F.lit("proposed"),
+            "impacted_areas": F.array().cast("array<string>"),
+            "evidence": F.struct(
+                F.lit(None).cast("string").alias("raw_file_uri"),
+                F.lit(None).cast("string").alias("text_snapshot_uri"),
+                F.array(
+                    F.struct(
+                        F.col("title").alias("title"),
+                        F.col("url").alias("url"),
+                        F.substring(F.col("summary_1line"), 1, 300).alias("snippet"),
+                    )
+                ).alias("citations"),
+            ),
+        }
+        self.normalize = normalize_columns()
+        self.validate = validation_columns()
+        self.route = route_columns()
+        self.splits = is_main, is_review = route_filters()
+        self.has_source = F.col("source_document_id").isNotNull()
+        # G5 link derivation (jobs/scan.ts:107-167): per-relation projections
+        self.links = {
+            "produced_docs": _link("Run", None, "SourceDocument", "id", "produced"),
+            "produced_items": _link("Run", None, "RegulationItem", "id", "produced"),
+            "extracted_from": _link(
+                "SourceDocument",
+                F.col("source_document_id").alias("from_id"),
+                "RegulationItem",
+                "id",
+                "extracted_from",
+            ),
+            "queued": _link("Run", None, "RegulationItem", "id", "queued_for_review"),
+        }
+        # A5 run-summary rollup (jobs/scan.ts:82-94)
+        self.summary = [
+            F.count(F.lit(1)).alias("discovered"),
+            F.sum(F.when(is_main, 1).otherwise(0)).alias("accepted"),
+            F.sum(F.when(is_review, 1).otherwise(0)).alias("review"),
+        ]
+
+
+#: run_scan's programs per SparkContext (weak: a stopped context's
+#: Columns die with it), then per (days_window, tier map items); cleared
+#: with the other py4j-holding caches on ``tmpstate.cleanup()``
+_PROGRAMS: "weakref.WeakKeyDictionary[SparkContext, dict]" = weakref.WeakKeyDictionary()
+
+tmpstate.on_cleanup(_PROGRAMS.clear)
+
+
+def _program(sc: SparkContext, days_window: int, tier_map: dict[str, str]) -> _ScanProgram:
+    per = _PROGRAMS.setdefault(sc, {})
+    key = (days_window, tuple(tier_map.items()))
+    prog = per.get(key)
+    if prog is None:
+        prog = per[key] = _ScanProgram(days_window, tier_map)
+    return prog
 
 
 def run_scan(
@@ -86,109 +215,53 @@ def run_scan(
     """Run the scan DAG over one batch. ``candidates`` carries the
     source_documents shape (schemas.SOURCE_DOCUMENTS) with arrival_seq
     already synthesized at union time. The candidates are read here,
-    once: the returned tables no longer depend on them."""
-    extractor = extractor or ColumnExtractor()
-    tier_map = tier_for_profile or {
-        "profile_0": "TIER_A_BINDING",
-        "profile_1": "TIER_B_OFFICIAL",
-        "profile_2": "TIER_C_MEDIA",
-    }
-
+    once: the returned tables no longer depend on them. The column
+    programs come from the session's memo; only the run id literal and
+    ``max_results`` are new per batch, and an extractor other than a
+    plain :class:`ColumnExtractor` is called on every batch."""
+    prog = _program(
+        candidates.sparkSession.sparkContext,
+        days_window,
+        tier_for_profile or _DEFAULT_TIERS,
+    )
     docs = (
-        dedupe_first_wins_by_url(candidates)
-        .transform(lambda df: filter_date_window(df, days_window))
-        .orderBy("arrival_seq")
+        _dedupe(candidates, *prog.first_wins)
+        .filter(prog.in_window)
+        .orderBy(prog.arrival)
         .limit(max_results)  # T5 candidate cap in arrival order (scan.ts:111)
+        .withColumn("trust_tier", prog.trust_tier)
+        .localCheckpoint(eager=True)
     )
-    tier_expr = F.coalesce(
-        *[
-            F.when(F.col("source_profile_id") == pid, F.lit(tier))
-            for pid, tier in tier_map.items()
-        ],
-        F.lit("TIER_D_QUARANTINE"),  # F9 default (policy.ts:163-170)
+    if extractor is None or type(extractor) is ColumnExtractor:
+        extracted = docs.select(prog.extract)
+    else:
+        extracted = extractor.extract(docs)
+    items = extracted.join(docs.select(prog.doc_side), "source_document_id").withColumns(
+        prog.item
     )
-    docs = docs.withColumn("trust_tier", tier_expr).localCheckpoint(eager=True)
+    routed = (
+        items.withColumns(prog.normalize)
+        .withColumns(prog.validate)
+        .withColumns(prog.route)
+        .localCheckpoint(eager=True)
+    )
+    main_items, review_items = (routed.filter(p) for p in prog.splits)
 
-    extracted = extractor.extract(docs)
-    items = (
-        extracted.join(
-            docs.select(
-                F.col("id").alias("source_document_id"),
-                F.col("trust_tier"),
-                F.col("published_date"),
-                F.col("retrieved_at"),
-            ),
-            "source_document_id",
-        )
-        .withColumn("source_org", F.lit("Unknown"))
-        .withColumn("source_type", F.lit("guidance"))
-        .withColumn("status", F.lit("proposed"))
-        .withColumn("impacted_areas", F.array().cast("array<string>"))
-        .withColumn(
-            "evidence",
-            F.struct(
-                F.lit(None).cast("string").alias("raw_file_uri"),
-                F.lit(None).cast("string").alias("text_snapshot_uri"),
-                F.array(
-                    F.struct(
-                        F.col("title").alias("title"),
-                        F.col("url").alias("url"),
-                        F.substring(F.col("summary_1line"), 1, 300).alias("snippet"),
-                    )
-                ).alias("citations"),
-            ),
-        )
-    )
-    routed = with_route(with_validation(normalize_items(items))).localCheckpoint(
-        eager=True
-    )
-    main_items, review_items = split_routes(routed)
-
-    # G5 link derivation (jobs/scan.ts:107-167): per-relation projections.
     run_lit = F.lit(run_id)
-    link_cols = ["from_type", "from_id", "to_type", "to_id", "relation"]
-    produced_docs = docs.select(
-        F.lit("Run").alias("from_type"),
-        run_lit.alias("from_id"),
-        F.lit("SourceDocument").alias("to_type"),
-        F.col("id").alias("to_id"),
-        F.lit("produced").alias("relation"),
-    )
-    produced_items = main_items.select(
-        F.lit("Run").alias("from_type"),
-        run_lit.alias("from_id"),
-        F.lit("RegulationItem").alias("to_type"),
-        F.col("id").alias("to_id"),
-        F.lit("produced").alias("relation"),
-    )
-    extracted_from = main_items.filter(F.col("source_document_id").isNotNull()).select(
-        F.lit("SourceDocument").alias("from_type"),
-        F.col("source_document_id").alias("from_id"),
-        F.lit("RegulationItem").alias("to_type"),
-        F.col("id").alias("to_id"),
-        F.lit("extracted_from").alias("relation"),
-    )
-    queued = review_items.select(
-        F.lit("Run").alias("from_type"),
-        run_lit.alias("from_id"),
-        F.lit("RegulationItem").alias("to_type"),
-        F.col("id").alias("to_id"),
-        F.lit("queued_for_review").alias("relation"),
-    )
-    links = (
-        produced_docs.unionByName(produced_items)
-        .unionByName(extracted_from)
-        .unionByName(queued)
-        .dropDuplicates(link_cols)
-    )
+    run_from = run_lit.alias("from_id")
 
-    # A5 run-summary rollup (jobs/scan.ts:82-94) — one aggregated row
-    # from the routed plan, not collected branch counts.
-    summary = routed.agg(
-        F.count(F.lit(1)).alias("discovered"),
-        F.sum(F.when(F.col("route") == "main", 1).otherwise(0)).alias("accepted"),
-        F.sum(F.when(F.col("route") == "review_queue", 1).otherwise(0)).alias("review"),
-    ).withColumn("run_id", F.lit(run_id))
+    def edges(df: DataFrame, name: str) -> DataFrame:
+        return df.select([run_from if c is None else c for c in prog.links[name]])
+
+    links = (
+        edges(docs, "produced_docs")
+        .unionByName(edges(main_items, "produced_items"))
+        .unionByName(edges(main_items.filter(prog.has_source), "extracted_from"))
+        .unionByName(edges(review_items, "queued"))
+        .dropDuplicates(_LINK_COLS)
+    )
+    # one aggregated row from the routed plan, not collected branch counts
+    summary = routed.agg(*prog.summary).withColumn("run_id", run_lit)
 
     return ScanResult(
         documents=docs,

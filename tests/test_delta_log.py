@@ -1128,3 +1128,70 @@ def test_arrow_row_violating_a_check_constraint_commits_nothing(spark, tmp_path)
     assert _rows(t.read()) == [(1, "a")]
     t.append(_arrow_rows([2], ["ok"]))
     assert _rows(t.read()) == [(1, "a"), (2, "ok")]
+
+
+def test_cached_checkpoint_sees_another_handles_later_checkpoint(spark, tmp_path):
+    """A handle parses a checkpoint once; a later checkpoint written by
+    another handle on the same table is still what its replay starts
+    from."""
+    root = str(tmp_path / "t")
+    a = DeltaLogTable(spark, root, checkpoint_interval=None)
+    a.write(_arrow_rows([1], ["a"]))
+    a.checkpoint()
+    assert len(a.active_files()) == 1
+    b = DeltaLogTable(spark, root, checkpoint_interval=None)
+    b.append(_arrow_rows([2], ["b"]))
+    b.write(_arrow_rows([3], ["c"]))
+    assert b.checkpoint() == 2
+    assert a._replay() == b._replay()
+    assert _rows(a.read()) == [(3, "c")]
+
+
+def test_checkpoint_rewritten_at_the_same_version_is_parsed_again(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = DeltaLogTable(spark, str(tmp_path / "t"), checkpoint_interval=None)
+    t.write(_arrow_rows([1, 2], ["a", "b"]))
+    v = t.checkpoint()
+    (add,) = t.active_files()
+    assert json.loads(add["stats"])["numRecords"] == 2
+    path = t._checkpoint_path(v)
+    rows = pq.read_table(path).to_pylist()
+    for row in rows:
+        if row["add"]:
+            row["add"]["stats"] = json.dumps({"numRecords": 7})
+    pq.write_table(pa.Table.from_pylist(rows, schema=pq.read_schema(path)), path + ".new")
+    os.replace(path + ".new", path)
+    (add,) = t.active_files()
+    assert json.loads(add["stats"]) == {"numRecords": 7}
+
+
+def test_mutating_a_replayed_snapshot_leaves_the_next_replay_alone(spark, tmp_path):
+    t = DeltaLogTable(
+        spark, str(tmp_path / "t"), checkpoint_interval=None, partition_columns=["val"]
+    )
+    t.write(_arrow_rows([1, 2], ["a", "b"]))
+    t.append(_arrow_rows([3], ["c"]))
+    t.write(_arrow_rows([4], ["d"]))  # leaves tombstones
+    t.checkpoint()
+    before = t._replay()
+    files_before = t.active_files()
+    assert before[2] and files_before[0]["partitionValues"] == {"val": "d"}
+
+    for add in t.active_files():
+        add["stats"] = "{}"
+        add["partitionValues"]["val"] = "zz"
+    active, meta, tombstones = t._replay()
+    for add in active.values():
+        add["size"] = -1
+    active.clear()
+    meta["configuration"]["k"] = "v"
+    meta["partitionColumns"].append("id")
+    meta["format"]["options"]["x"] = "y"
+    for remove in tombstones.values():
+        remove["path"] = "gone"
+    tombstones.clear()
+
+    assert t._replay() == before
+    assert t.active_files() == files_before

@@ -214,3 +214,89 @@ def test_governed_batch_job_budget(spark, docs, tmp_path):
     assert tables["main"].read().count() == run_scan(
         docs, run_id="run-1", days_window=365 * 50
     ).main_items.count()
+
+
+#: py4j round trips of a warm run_scan (the second call in a session on
+#: the fixture documents). The constant column programs come from the
+#: session's memo, so what is left is the per-batch DataFrame calls
+#: (200-400); rebuilding the programs on every call costs ~4,800. py4j's
+#: garbage-collection detach messages make the count vary a little.
+SCAN_ROUND_TRIP_BUDGET = 600
+
+
+def test_warm_scan_round_trip_budget(spark, docs, monkeypatch):
+    from py4j.clientserver import ClientServerConnection
+
+    run_scan(docs, run_id="warm-0", days_window=365 * 50)
+    send = ClientServerConnection.send_command
+    sent = []
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    run_scan(docs, run_id="warm-1", days_window=365 * 50)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= SCAN_ROUND_TRIP_BUDGET, f"{len(sent)} py4j round trips"
+
+
+def _window_ids(docs, days: int) -> list[str]:
+    from regpulse_lakehouse_spark.pipelines.scan import (
+        dedupe_first_wins_by_url,
+        filter_date_window,
+    )
+
+    return sorted(
+        r.id for r in filter_date_window(dedupe_first_wins_by_url(docs), days).collect()
+    )
+
+
+def test_scan_memo_is_keyed_by_the_date_window(spark, docs):
+    short, long_ = _window_ids(docs, 30), _window_ids(docs, 365 * 50)
+    assert short != long_
+    for days, want in ((30, short), (365 * 50, long_), (30, short)):
+        got = run_scan(docs, run_id="r", days_window=days).documents.collect()
+        assert sorted(r.id for r in got) == want, days
+
+
+def test_scan_memo_is_keyed_by_the_tier_map(spark, docs):
+    def tiers(tier_map):
+        res = run_scan(docs, run_id="r", days_window=365 * 50, tier_for_profile=tier_map)
+        docs_tiers = {r.id: r.trust_tier for r in res.documents.collect()}
+        return docs_tiers, res.main_items.count()
+
+    default_tiers, default_main = tiers(None)
+    all_b = {f"profile_{i}": "TIER_B_OFFICIAL" for i in range(3)}
+    b_tiers, b_main = tiers(all_b)
+    assert default_main > 0 and b_main == 0
+    assert set(b_tiers.values()) == {"TIER_B_OFFICIAL"}
+    assert tiers(None) == (default_tiers, default_main)
+
+
+def test_scan_after_cleanup_rebuilds_its_programs(spark, docs):
+    import regpulse_lakehouse_spark
+    from regpulse_lakehouse_spark.pipelines import scan
+
+    before = _collected(run_scan(docs, run_id="run-c", days_window=365 * 50))
+    assert scan._PROGRAMS
+    regpulse_lakehouse_spark.cleanup()
+    assert not scan._PROGRAMS
+    assert _collected(run_scan(docs, run_id="run-c", days_window=365 * 50)) == before
+
+
+def test_scan_calls_a_custom_extractor_on_every_batch(spark, docs):
+    """Only a plain ColumnExtractor's projection is memoized; any other
+    extractor, a subclass included, is called on every batch."""
+    calls = []
+
+    class Counting(ColumnExtractor):
+        def extract(self, documents):
+            calls.append(documents)
+            return super().extract(documents)
+
+    plain = _collected(run_scan(docs, run_id="run-e", days_window=365 * 50))
+    for _ in range(2):
+        res = run_scan(docs, run_id="run-e", days_window=365 * 50, extractor=Counting())
+    assert len(calls) == 2
+    assert _collected(res) == plain
