@@ -16,15 +16,17 @@ Hive-partitioned layout with per-add ``partitionValues``, parquet
 checkpoints with tombstone retention, VACUUM with a guarded time-
 travel horizon), loadable by delta-spark / duckdb-delta / delta-rs the
 moment one is installed, while every operation is exercisable and
-differential-tested in-container TODAY against
-:class:`~.upsert.VersionedParquetTable` (reference write semantics:
-services/api/src/repository.ts:14-23 ON CONFLICT DO NOTHING, :25-78
-ON CONFLICT UPDATE).
+differential-tested in-container against a pandas model of a
+versioned keyed table (tests/table_model.py; reference write
+semantics: services/api/src/repository.ts:14-23 ON CONFLICT DO
+NOTHING, :25-78 ON CONFLICT UPDATE). It is the package's one table
+format: the governed ingest, the run ledger, the streaming rollups,
+``stream_scan``'s outputs and the vector-store registry all commit
+here.
 
 Physical shapes (the part that matters at 100 TB):
 
-- ``append`` / ``insert_if_absent`` add files — ZERO rewrite (the
-  copy-on-write fallback rewrites the full snapshot per commit).
+- ``append`` / ``insert_if_absent`` add files — ZERO rewrite.
 - ``upsert`` / ``delete_where`` rewrite ONLY the data files that
   actually contain matching keys/rows (``input_file_name()`` semi-join
   → touched-file set), exactly Delta MERGE's touched-file behavior;
@@ -45,10 +47,10 @@ Physical shapes (the part that matters at 100 TB):
 - a handle parses each parquet checkpoint once (keyed by the file's
   stat), so a snapshot replay reads only the JSON commits after it.
 
-Single-writer semantics like the fallback (the reference serializes
-writes through one worker, worker.ts:18,26); the put-if-absent commit
-(hard-link, fails if the version exists) turns a racing second writer
-into a clean ``FileExistsError`` instead of silent corruption.
+Single-writer semantics (the reference serializes writes through one
+worker, worker.ts:18,26); the put-if-absent commit (hard-link, fails
+if the version exists) turns a racing second writer into a clean
+``FileExistsError`` instead of silent corruption.
 """
 
 from __future__ import annotations
@@ -149,7 +151,9 @@ def _stat_cmp(v):
 
 
 class DeltaLogTable:
-    """VersionedParquetTable's method surface over a real Delta log.
+    """A versioned keyed table over a real Delta log: ``write``,
+    ``append``, ``insert_if_absent``, ``upsert``, ``delete_where``,
+    ``truncate``, ``compact``, ``read(version)`` and ``changes``.
 
     Supports Hive-partitioned tables (``partition_columns``): data
     files land under ``col=value/`` directories, every ``add`` carries
@@ -1023,7 +1027,10 @@ class DeltaLogTable:
         read_v = self.version
         v = read_v + 1
         new = new.dropDuplicates(keys).localCheckpoint(eager=True)
-        missing = new.join(self.read().select(keys), keys, "left_anti")
+        # null-safe, like dropDuplicates and upsert: a NULL key already
+        # in the table is present, so a re-delivered batch adds nothing
+        present = self.read().select(*[F.col(k).alias(f"_t_{k}") for k in keys])
+        missing = new.join(present, _null_safe_match(keys, "_t_"), "left_anti")
         actions = self._stage_files(missing, data_change=True)
         actions.append(_commit_info("MERGE"))
         bounds = None
@@ -1109,11 +1116,9 @@ class DeltaLogTable:
             "_file", F.input_file_name()
         )
         probe = match.select(*[F.col(k).alias(f"_m_{k}") for k in on_cols])
-        cond = None
-        for k in on_cols:
-            c = F.col(k).eqNullSafe(F.col(f"_m_{k}"))
-            cond = c if cond is None else (cond & c)
-        rows = tagged.join(F.broadcast(probe), cond, "left_semi").select("_file")
+        rows = tagged.join(
+            F.broadcast(probe), _null_safe_match(on_cols, "_m_"), "left_semi"
+        ).select("_file")
         return sorted({self._rel_from_uri(r["_file"]) for r in rows.collect()})
 
     def upsert(
@@ -1174,13 +1179,11 @@ class DeltaLogTable:
                 )
 
     def delete_where(self, predicate: Column, max_retries: int = 0) -> int:
-        """DELETE ... WHERE p with the fallback's exact contract: keep
-        the complement (``filter(~p)`` — predicate-NULL rows are
-        dropped too, so both implementations stay bit-identical on any
-        predicate; SQL DELETE proper would keep NULL rows). Files with
-        no affected row carry over; affected files are rewritten minus
-        the dropped rows — so 'affected' must include NULL-predicate
-        rows, not just TRUE ones.
+        """DELETE ... WHERE p, keeping the complement (``filter(~p)`` —
+        predicate-NULL rows are dropped too; SQL DELETE proper would
+        keep NULL rows). Files with no affected row carry over; affected
+        files are rewritten minus the dropped rows — so 'affected' must
+        include NULL-predicate rows, not just TRUE ones.
 
         ``max_retries`` > 0 opts into WriteSerializable conflict
         resolution: a lost commit race rebases when the winners only
@@ -1237,8 +1240,12 @@ class DeltaLogTable:
         from_version: int,
         to_version: int | None = None,
     ) -> DataFrame:
-        """Keyed change feed between two committed versions, same
-        contract as the fallback's ``changes``.
+        """Keyed change feed between two committed versions (the Delta
+        CDF shape): ``to_version``'s rows vs ``from_version``'s, keyed
+        on ``keys`` — one row per changed key with ``_change_type`` in
+        ('insert', 'update_postimage', 'delete'). Inserts and updates
+        carry the new row, deletes the old one; unchanged keys
+        (byte-equal on every non-key column) are absent.
 
         FAST PATH: when every commit in the window is ADD-ONLY (pure
         appends / insert_if_absent — no remove, no schema change), the
@@ -1834,6 +1841,15 @@ def _footer_stats(pf, fields: list[str]) -> dict:
             except TypeError:  # pragma: no cover - mixed footer types
                 pass
     return out
+
+
+def _null_safe_match(keys: list[str], prefix: str) -> Column:
+    """Join condition pairing each key with its ``prefix``-renamed copy
+    on the other side, NULL matching NULL."""
+    cond = F.col(keys[0]).eqNullSafe(F.col(f"{prefix}{keys[0]}"))
+    for k in keys[1:]:
+        cond = cond & F.col(k).eqNullSafe(F.col(f"{prefix}{k}"))
+    return cond
 
 
 def _check_target_bytes(target_file_bytes: int) -> None:

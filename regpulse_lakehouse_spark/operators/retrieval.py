@@ -460,8 +460,8 @@ def apply_changes_to_bm25_index(
     id_col: str = "doc_id",
     batch_ref: str | None = None,
 ) -> None:
-    """Route a keyed change feed (upsert.snapshot_changes /
-    VersionedParquetTable.changes: _change_type ∈ insert /
+    """Route a keyed change feed (``DeltaLogTable.changes`` /
+    upsert.snapshot_changes: _change_type ∈ insert /
     update_postimage / delete) into the index: deletes AND updates
     tombstone the old ids first, then inserts AND updates append the
     new text — the append batch outnumbers the tombstone batch, so the

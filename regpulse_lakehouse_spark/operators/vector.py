@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
+from .delta_log import DeltaLogTable
 
 
 def _to_double(v: Column) -> Column:
@@ -114,12 +115,15 @@ def with_lsh_bucket(
     return df.withColumn("lsh_bucket", bucket)
 
 
-def get_or_create_default_store(table, name: str = "default-local") -> str:
+def get_or_create_default_store(
+    table: DeltaLogTable, name: str = "default-local"
+) -> str:
     """E2 default-store resolution (vectorize.ts:35-49, seed.ts:26-36):
     return the id of the ``provider='local'`` store, creating it when
-    absent. ``table`` is a VersionedParquetTable over the vector_stores
-    schema; the conditional append is a driver-side decision on a
-    one-row lookup (stores are a tiny dimension table)."""
+    absent. ``table`` holds the vector_stores schema; the conditional
+    append is a driver-side decision on a one-row lookup (stores are a
+    tiny dimension table), and ``append`` on a missing table creates
+    it."""
     import datetime as dt
 
     from ..schemas import VECTOR_STORES
@@ -143,10 +147,7 @@ def get_or_create_default_store(table, name: str = "default-local") -> str:
         ],
         VECTOR_STORES,
     )
-    if table.exists():
-        table.append(row)
-    else:
-        table.write(row)
+    table.append(row)
     return store_id
 
 

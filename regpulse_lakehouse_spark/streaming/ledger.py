@@ -13,7 +13,8 @@ maps to:
   query);
 - ``stream_scan``: a Structured Streaming wrapper that runs the *same*
   batch scan pipeline per micro-batch via ``foreachBatch`` — write
-  once, run both modes (SURVEY §7 Phase 7).
+  once, run both modes (SURVEY §7 Phase 7) — and commits its outputs
+  to DeltaLogTables (main items latest-wins, links insert-if-absent).
 
 The ledger's rows are ``pyarrow`` tables that the driver reads and
 writes itself (``DeltaLogTable.append``/``write`` take Arrow input),
@@ -38,7 +39,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
 from ..operators.delta_log import DeltaLogTable
-from ..pipelines.scan import run_scan
+from ..pipelines.scan import _LINK_COLS, run_scan
 
 
 class RunLedger:
@@ -134,12 +135,20 @@ def stream_scan(
 
     Watches ``source_dir`` for parquet files in the source_documents
     shape and processes each micro-batch through ``run_scan`` via
-    foreachBatch, appending main/review/links outputs under
-    ``output_root``. Returns the StreamingQuery (caller awaits)."""
+    foreachBatch into three DeltaLogTables under ``output_root``:
+    ``main_items`` is upserted on ``id`` with the micro-batch id as
+    ``_refresh_version`` (a re-crawl in a later micro-batch wins),
+    ``review_items`` is appended, and ``links`` takes only five-tuples
+    it does not hold yet. Returns the StreamingQuery (caller awaits)."""
     stream = (
         spark.readStream.schema(schemas.SOURCE_DOCUMENTS)
         .option("maxFilesPerTrigger", 4)  # ST5-style throttle
         .parquet(source_dir)
+    )
+
+    main, review, links = (
+        DeltaLogTable(spark, f"{output_root}/{name}")
+        for name in ("main_items", "review_items", "links")
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -149,9 +158,13 @@ def stream_scan(
         if ledger is not None:
             ledger.log(run_id, "process", f"batch {batch_id}")
         result = run_scan(batch_df, run_id=run_id, days_window=days_window, **scan_kwargs)
-        result.main_items.write.mode("append").parquet(f"{output_root}/main_items")
-        result.review_items.write.mode("append").parquet(f"{output_root}/review_items")
-        result.links.write.mode("append").parquet(f"{output_root}/links")
+        main.upsert(
+            result.main_items.withColumn("_refresh_version", F.lit(int(batch_id))),
+            ["id"],
+            "_refresh_version",
+        )
+        review.append(result.review_items)
+        links.insert_if_absent(result.links, _LINK_COLS)
 
     return (
         stream.writeStream.foreachBatch(process_batch)

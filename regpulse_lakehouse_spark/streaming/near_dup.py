@@ -5,17 +5,13 @@ near-duplicate of anything ever ingested?" per batch, without
 recomputing signatures for the history.
 
 Store layout: one row per (id, sig, band, bucket) — the banded
-signature table the batch operator builds internally. Two persisted
-forms:
-
-- ``VersionedParquetTable`` (snapshot-per-commit, simplest); or
-- ``PartitionedSignatureStore`` (round 5, the 100 TB form):
-  hive-partitioned ``batch=N/band=B/bp=P`` where ``bp`` is a bounded
-  bucket prefix — appends are TRUE increments (one new ``batch=N``
-  directory + commit marker, never a snapshot rewrite), and the
-  per-batch candidate read prunes to the (band, bp) partitions the
-  batch actually probes (PartitionFilters in the plan, test-asserted)
-  instead of scanning the full store.
+signature table the batch operator builds internally — persisted as a
+``PartitionedSignatureStore``: hive-partitioned ``batch=N/band=B/bp=P``
+where ``bp`` is a bounded bucket prefix. Appends are true increments
+(one new ``batch=N`` directory + commit marker, never a snapshot
+rewrite), and the per-batch candidate read prunes to the (band, bp)
+partitions the batch actually probes (PartitionFilters in the plan,
+test-asserted) instead of scanning the full store.
 
 Per batch:
 
@@ -47,19 +43,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import banded_minhash_signatures as banded_signatures
-from ..operators.upsert import VersionedParquetTable
 
 
 class PartitionedSignatureStore:
     """Append-only banded-signature store, hive-partitioned
     ``batch=N/band=B/bp=P`` (``bp`` = bucket mod ``n_prefix``).
 
-    Fixes the two scale costs of the snapshot store in one layout:
+    Two scale properties in one layout:
 
     - **append is an increment**: each commit writes ONLY the new
-      batch's rows into a fresh ``batch=N`` directory (the versioned
-      table rewrites the whole snapshot per append — O(history) writes
-      per batch);
+      batch's rows into a fresh ``batch=N`` directory (a snapshot
+      rewrite per append would cost O(history) writes per batch);
     - **reads prune**: the candidate join only needs store rows whose
       (band, bucket-prefix) the incoming batch actually probes; those
       are partition directories here, so the scan carries
@@ -67,10 +61,10 @@ class PartitionedSignatureStore:
       most num_bands × n_prefix partitions, usually far fewer for
       small batches).
 
-    Crash safety matches VersionedParquetTable: data first, commit
-    marker last, readers filter to committed batch ids. ``_commits``
-    lives inside the root — underscore-prefixed paths are invisible to
-    Spark's partition discovery, so one directory carries both.
+    Crash safety: data first, commit marker last, readers filter to
+    committed batch ids. ``_commits`` lives inside the root —
+    underscore-prefixed paths are invisible to Spark's partition
+    discovery, so one directory carries both.
     Single-writer, like the reference's serialized worker
     (worker.ts:18,26)."""
 
@@ -361,7 +355,7 @@ def bulk_ingest_near_dup(
 
 def incremental_near_dup(
     batch: DataFrame,
-    store: VersionedParquetTable | PartitionedSignatureStore,
+    store: PartitionedSignatureStore,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 16,
@@ -377,76 +371,36 @@ def incremental_near_dup(
     batch against itself via the store (the old side is restricted to
     batches committed BEFORE this one by batch id, not by read timing).
 
-    ``compact_partitions`` (partitioned store only) coalesces the
-    batch's signature table to that many partitions before the store
-    write — size it to batch bytes so a micro-batch's downstream
-    stages don't inherit the session's full shuffle width.
+    ``compact_partitions`` coalesces the batch's signature table to
+    that many partitions before the store write — size it to batch
+    bytes so a micro-batch's downstream stages don't inherit the
+    session's full shuffle width.
 
     The returned pairs are collected eagerly into the driver result
     only by the caller; this function keeps everything distributed —
     the one action is the store append."""
     banded = banded_signatures(batch, text_col, id_col, num_hashes, num_bands)
 
-    if isinstance(store, PartitionedSignatureStore):
-        # Append-first fast path (r10 VERDICT task 4): the partitioned
-        # write IS the batch plan's one materialization — the probe
-        # collect and both join sides then READ THE WRITTEN PARQUET
-        # back instead of a separately checkpointed copy. One fixed-
-        # price job per batch replaces the checkpoint+append pair
-        # (localCheckpoint alone measured ~0.5 s/batch of pure pin
-        # overhead at sf0.1 — vs 0.27 s to compute the same plan).
-        # Excluding self-pairs no longer depends on read timing: the
-        # old side filters to batch < this one's id.
-        if compact_partitions:
-            banded = banded.coalesce(compact_partitions)
-        prior = store._committed()
-        bnum = store.append(banded)
-        pairs = _partitioned_batch_pairs(
-            store, bnum, bool(prior), id_col, num_hashes, threshold
-        )
-        # the written files are immutable and the batch filters are by
-        # id, so deferred (materialize=False) execution after further
-        # appends still reads exactly this batch vs its true history;
-        # materialize=True pins eagerly for callers that may delete
-        # the store before acting on the result
-        if materialize:
-            pairs = pairs.localCheckpoint(eager=True)
-        return pairs
-
-    # Snapshot-store path (VersionedParquetTable): the store rewrite is
-    # O(history) anyway, so the eager checkpoint stays the right pin.
-    # (An r11 experiment replaced it with persist() to save one job per
-    # batch; it measured 40% SLOWER at sf0.1 — cache registration +
-    # per-consumer cached-scan overhead beat the saved job.)
-    banded = banded.localCheckpoint(eager=True)
-    new_side = banded.select(
-        F.col(id_col).alias("new_id"), F.col("sig").alias("sig_new"), "band", "bucket"
+    # Append first (r10 VERDICT task 4): the partitioned write IS the
+    # batch plan's one materialization — the probe collect and both
+    # join sides then READ THE WRITTEN PARQUET back instead of a
+    # separately checkpointed copy. One fixed-price job per batch
+    # replaces a checkpoint+append pair (localCheckpoint alone
+    # measured ~0.5 s/batch of pure pin overhead at sf0.1 — vs 0.27 s
+    # to compute the same plan). Excluding self-pairs does not depend
+    # on read timing: the old side filters to batch < this one's id.
+    if compact_partitions:
+        banded = banded.coalesce(compact_partitions)
+    prior = store._committed()
+    bnum = store.append(banded)
+    pairs = _partitioned_batch_pairs(
+        store, bnum, bool(prior), id_col, num_hashes, threshold
     )
-    pair_parts = []
-    if store.exists():
-        old_side = store.read().select(
-            F.col(id_col).alias("old_id"), F.col("sig").alias("sig_old"), "band", "bucket"
-        )
-        pair_parts.append(
-            F.broadcast(new_side)
-            .join(old_side, ["band", "bucket"])
-            .filter(F.col("new_id") != F.col("old_id"))
-        )
-    intra = new_side.join(
-        banded.select(
-            F.col(id_col).alias("old_id"), F.col("sig").alias("sig_old"), "band", "bucket"
-        ),
-        ["band", "bucket"],
-    ).filter(F.col("new_id") > F.col("old_id"))
-    pair_parts.append(intra)
-    cand = pair_parts[0]
-    for p in pair_parts[1:]:
-        cand = cand.unionByName(p)
-    pairs = _rescored_pairs(cand, num_hashes, threshold)
+    # the written files are immutable and the batch filters are by id,
+    # so deferred (materialize=False) execution after further appends
+    # still reads exactly this batch vs its true history;
+    # materialize=True pins eagerly for callers that may delete the
+    # store before acting on the result
     if materialize:
         pairs = pairs.localCheckpoint(eager=True)
-    if store.exists():
-        store.append(banded)
-    else:
-        store.write(banded)
     return pairs

@@ -9,11 +9,14 @@ Mechanics: the SAME windowed transform the batch path uses
 micro-batch emits the CURRENT cumulative aggregate for every window the
 batch touched (Spark's aggregation state carries the running totals; the
 watermark bounds that state and finalizes old windows). ``foreachBatch``
-then upserts those rows into a VersionedParquetTable keyed on
+then upserts those rows into a DeltaLogTable keyed on
 (window_start, event_type), stamped with the micro-batch id as the
 version column so replays after a failure are idempotent (the
 at-least-once batch re-emits the same rows with the same or newer
-totals; latest-version-wins keeps the table correct).
+totals; latest-version-wins keeps the table correct). The sketch
+rollups commit the same way, keyed on window_start: each micro-batch
+MERGEs only the windows it touched, and the upsert rewrites only the
+files holding those windows.
 
 100 TB shape: per-batch output is proportional to the windows TOUCHED
 by the batch (bounded by arrival skew + watermark), never to the table
@@ -29,13 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.upsert import VersionedParquetTable
+from ..operators.delta_log import DeltaLogTable
 from .windows import tumbling_counts
 
 
 def maintain_rollup(
     events_stream: DataFrame,
-    table: VersionedParquetTable,
+    table: DeltaLogTable,
     checkpoint_dir: str,
     window: str = "1 hour",
     ts_col: str = "ts",
@@ -49,15 +52,11 @@ def maintain_rollup(
     agg = tumbling_counts(events_stream, window=window, ts_col=ts_col, watermark=watermark)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.withColumn("_refresh_version", F.lit(int(batch_id)))
-        if table.exists():
-            table.upsert(
-                batch_df,
-                keys=["window_start", "event_type"],
-                version_col="_refresh_version",
-            )
-        else:
-            table.write(batch_df)
+        table.upsert(
+            batch_df.withColumn("_refresh_version", F.lit(int(batch_id))),
+            keys=["window_start", "event_type"],
+            version_col="_refresh_version",
+        )
 
     return (
         agg.writeStream.outputMode("update")
@@ -70,7 +69,7 @@ def maintain_rollup(
 
 def maintain_distinct_rollup(
     events_stream: DataFrame,
-    table: VersionedParquetTable,
+    table: DeltaLogTable,
     checkpoint_dir: str,
     window: str = "1 hour",
     ts_col: str = "ts",
@@ -81,17 +80,17 @@ def maintain_distinct_rollup(
     plain counters can't give you: an exact streaming distinct would
     hold every seen id in state forever, so the maintained table
     stores a mergeable HLL sketch per window (operators/sketches.py)
-    instead. Each micro-batch sketches only ITS events per window and
-    register-wise-max-merges into the stored sketch (foreachBatch;
-    merging is associative + idempotent-on-replay at the register
-    level for at-least-once batches of identical rows), then stamps
-    the live estimate. Sketch-MERGE work is bounded by the TOUCHED
-    windows (untouched rows pass through on an anti-join, never
-    re-joined or re-estimated) — O(batch + touched windows × 2^p);
-    the copy-on-write table still rewrites its snapshot at commit,
-    which is that format's trade (operators/upsert.py), not the
-    sketch algebra's. Events with a NULL timestamp are dropped (a
-    null window key would fragment under the join every batch).
+    instead. Each micro-batch sketches only ITS events per window,
+    register-wise-max-merges them into the stored sketches of the
+    windows it touched (merging is associative + idempotent-on-replay
+    at the register level for at-least-once batches of identical
+    rows), stamps the live estimate, and upserts just those windows —
+    O(batch + touched windows × 2^p), and the MERGE rewrites only the
+    files holding touched windows. Each row carries
+    ``_refresh_version``, the highest micro-batch id merged into it,
+    so a merged row always wins its upsert. Events with a NULL
+    timestamp are dropped (a null window key would fragment under the
+    join every batch).
 
     Batch-equivalence is EXACT at the register level (deterministic
     hash): N micro-batches leave the same sketches a one-shot batch
@@ -108,33 +107,30 @@ def maintain_distinct_rollup(
         fresh = SK.hll_partials(
             batch_df.select(wcol, F.col(value_col)), ["window_start"], value_col, p=p
         )
+        bid = F.lit(int(batch_id))
         if table.exists():
-            stored = table.read()
-            touched = stored.join(fresh.select("window_start"), "window_start", "left_semi")
-            untouched = stored.join(
-                fresh.select("window_start"), "window_start", "left_anti"
+            stored = table.read().select(
+                "window_start",
+                F.col("hll").alias("_old"),
+                F.col("_refresh_version").alias("_v"),
             )
-            merged = (
-                fresh.join(
-                    touched.select("window_start", F.col("hll").alias("_old")),
-                    "window_start",
-                    "left",
-                )
-                .select(
-                    "window_start",
-                    SK.hll_merge(F.col("hll"), F.col("_old")).alias("hll"),
-                )
+            fresh = fresh.join(stored, "window_start", "left").select(
+                "window_start",
+                SK.hll_merge(F.col("hll"), F.col("_old")).alias("hll"),
+                F.greatest(bid, F.col("_v")).alias("_refresh_version"),
             )
         else:
-            untouched, merged = None, fresh
-        out = merged.select(
-            "window_start",
-            "hll",
-            SK.hll_estimate(F.col("hll"), p).alias("approx_distinct"),
+            fresh = fresh.withColumn("_refresh_version", bid)
+        table.upsert(
+            fresh.select(
+                "window_start",
+                "hll",
+                SK.hll_estimate(F.col("hll"), p).alias("approx_distinct"),
+                "_refresh_version",
+            ),
+            keys=["window_start"],
+            version_col="_refresh_version",
         )
-        if untouched is not None:
-            out = out.unionByName(untouched)
-        table.write(out)
 
     return (
         events_stream.writeStream.foreachBatch(merge_batch)
@@ -146,7 +142,7 @@ def maintain_distinct_rollup(
 
 def maintain_freq_rollup(
     events_stream: DataFrame,
-    table: VersionedParquetTable,
+    table: DeltaLogTable,
     checkpoint_dir: str,
     window: str = "1 hour",
     ts_col: str = "ts",
@@ -158,7 +154,8 @@ def maintain_freq_rollup(
     operators/sketches.py) — point-queryable "how often did X appear in
     window W" without per-key state: the maintained table stores one
     mergeable CM sketch per window; each micro-batch sketches only ITS
-    events and bucket-SUMS into the stored sketch.
+    events, bucket-SUMS them into the stored sketches of the windows
+    it touched and upserts just those windows.
 
     Unlike the HLL rollup, the sum-merge is NOT idempotent under
     at-least-once replay (a re-summed batch would double-count), so
@@ -166,8 +163,7 @@ def maintain_freq_rollup(
     that last merged into it, and a batch skips windows already
     stamped at or beyond its id — foreachBatch replays re-deliver the
     same batch id, making the replay a no-op (tested). Work per batch
-    is O(batch + touched windows × d·w); untouched window rows pass
-    through on an anti-join. NULL timestamps are dropped.
+    is O(batch + touched windows × d·w). NULL timestamps are dropped.
 
     Batch-equivalence is EXACT at the register level: N micro-batches
     leave the same sketches as a one-shot cm_partials over all events
@@ -186,42 +182,28 @@ def maintain_freq_rollup(
             w=w, d=d,
         )
         if table.exists():
-            stored = table.read()
+            stored = table.read().select(
+                "window_start",
+                F.col("cm").alias("_old"),
+                F.col("_refresh_version").alias("_v"),
+            )
             # replay guard: a window stamped at/beyond this batch id has
             # already absorbed this batch's events — re-summing would
             # double-count (CM merges are additive, not max-idempotent)
             fresh = (
-                fresh.join(
-                    stored.select(
-                        "window_start", F.col("_refresh_version").alias("_v")
-                    ),
-                    "window_start",
-                    "left",
-                )
+                fresh.join(stored, "window_start", "left")
                 .where(F.col("_v").isNull() | (F.col("_v") < F.lit(int(batch_id))))
-                .drop("_v")
-            )
-            if fresh.isEmpty():
-                return
-            untouched = stored.join(
-                fresh.select("window_start"), "window_start", "left_anti"
-            )
-            merged = (
-                fresh.join(
-                    stored.select("window_start", F.col("cm").alias("_old")),
-                    "window_start",
-                    "left",
-                )
                 .select(
                     "window_start", SK.cm_merge(F.col("cm"), F.col("_old")).alias("cm")
                 )
             )
-        else:
-            untouched, merged = None, fresh
-        out = merged.withColumn("_refresh_version", F.lit(int(batch_id)))
-        if untouched is not None:
-            out = out.unionByName(untouched)
-        table.write(out)
+            if fresh.isEmpty():
+                return
+        table.upsert(
+            fresh.withColumn("_refresh_version", F.lit(int(batch_id))),
+            keys=["window_start"],
+            version_col="_refresh_version",
+        )
 
     return (
         events_stream.writeStream.foreachBatch(merge_batch)

@@ -1,9 +1,9 @@
 """Pure-Python Delta transaction log (operators/delta_log.py): the
-same MERGE-semantics script the adapter family runs, protocol
-compliance of the emitted ``_delta_log``, touched-file-only rewrites,
-time travel, put-if-absent commit atomicity, footer stats, and
-bit-equality with the copy-on-write fallback across whole operation
-sequences."""
+MERGE-semantics script, protocol compliance of the emitted
+``_delta_log``, touched-file-only rewrites, time travel, put-if-absent
+commit atomicity, footer stats, and row-equality with an independent
+pandas model of a versioned keyed table (tests/table_model.py) at every
+version of whole operation sequences."""
 
 from __future__ import annotations
 
@@ -13,25 +13,78 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from regpulse_lakehouse_spark.operators import delta_adapter as DA
 from regpulse_lakehouse_spark.operators.delta_log import DeltaLogTable
-from regpulse_lakehouse_spark.operators.upsert import VersionedParquetTable
 
-from tests.test_delta_adapter import run_merge_semantics_script
+from tests.table_model import TableModel, sorted_rows
+
+_COLS = ["id", "ver", "val"]
+_SCHEMA = "id long, ver long, val string"
 
 
 def _rows(df):
-    # NULL-safe sort key: None sorts before any value of its column
-    return sorted(
-        (tuple(r) for r in df.collect()),
-        key=lambda t: tuple((v is not None, v) for v in t),
+    return sorted_rows(tuple(r) for r in df.collect())
+
+
+def run_merge_semantics_script(spark, t):
+    """The interface → MERGE mapping, one assertion per row:
+
+    - insert_if_absent = MERGE ... WHEN NOT MATCHED INSERT *
+      (ON CONFLICT DO NOTHING): existing keys untouched, new keys land.
+    - upsert = MERGE ... WHEN MATCHED AND s.ver >= t.ver UPDATE SET *
+      WHEN NOT MATCHED INSERT * (latest-wins full-row): newer replaces,
+      older is ignored, EQUAL version resolves to the update side,
+      unseen keys insert.
+    - delete_where = DELETE FROM t WHERE p; truncate = DELETE FROM t.
+    - read(version=N) = time travel to the pre-delete snapshot.
+    - version strictly increases per commit.
+    """
+    base = spark.createDataFrame([(0, 1, "a"), (1, 1, "a"), (2, 1, "a")], _SCHEMA)
+    t.write(base)
+    assert {r["id"] for r in t.read().collect()} == {0, 1, 2}
+
+    # -- insert_if_absent: id=2 exists (stays "a"); id=3 is new (lands)
+    t.insert_if_absent(
+        spark.createDataFrame([(2, 9, "new"), (3, 9, "new")], _SCHEMA), ["id"]
     )
+    rows = {r["id"]: r for r in t.read().collect()}
+    assert rows[2]["val"] == "a" and rows[2]["ver"] == 1
+    assert rows[3]["val"] == "new"
+    assert len(rows) == 4
+
+    # -- upsert: newer (id=0, ver=5) replaces the FULL row; older
+    #    (id=1, ver=0) is ignored; equal version (id=2, ver=1) takes the
+    #    update side; unseen key (id=4) inserts
+    t.upsert(
+        spark.createDataFrame(
+            [(0, 5, "up"), (1, 0, "stale"), (2, 1, "tie"), (4, 2, "ins")], _SCHEMA
+        ),
+        ["id"],
+        "ver",
+    )
+    rows = {r["id"]: r for r in t.read().collect()}
+    assert rows[0]["val"] == "up" and rows[0]["ver"] == 5
+    assert rows[1]["val"] == "a" and rows[1]["ver"] == 1
+    assert rows[2]["val"] == "tie"
+    assert rows[4]["val"] == "ins"
+    assert len(rows) == 5
+
+    # -- delete_where + time travel back across it
+    v_before = t.version
+    t.delete_where(F.col("id") == 3)
+    assert {r["id"] for r in t.read().collect()} == {0, 1, 2, 4}
+    assert t.read(version=v_before).count() == 5
+
+    # -- truncate: empty but schema intact; version still advances
+    v_del = t.version
+    t.truncate()
+    assert t.read().count() == 0
+    assert t.read().columns == ["id", "ver", "val"]
+    assert t.version > v_del >= v_before
 
 
 def test_delta_log_follows_merge_semantics(spark, tmp_path):
     """The documented interface → MERGE mapping holds on the REAL
-    Delta log format — the differential delta-spark's absence used to
-    block entirely."""
+    Delta log format."""
     run_merge_semantics_script(spark, DeltaLogTable(spark, str(tmp_path / "dl")))
 
 
@@ -82,43 +135,55 @@ def test_log_is_protocol_compliant(spark, tmp_path):
 
 
 def test_sequence_matches_fallback_at_every_version(spark, tmp_path):
-    """One operation sequence through BOTH implementations; snapshots
-    must be row-identical at every committed version (the two formats
-    commit in lockstep, so version numbers line up)."""
+    """One operation sequence through DeltaLogTable and the pandas
+    model: snapshots must be row-identical at every committed version,
+    and ``changes()`` must match the model's keyed diff between any two
+    versions. The sequence holds NULL-keyed inserts and upserts, a
+    re-delivered insert batch (which must add nothing: the NULL key it
+    carries is already present), a delete whose predicate is NULL on
+    one row, a compaction and a truncate."""
     dl = DeltaLogTable(spark, str(tmp_path / "dl"))
-    cow = VersionedParquetTable(spark, str(tmp_path / "cow"))
+    model = TableModel(_COLS)
 
     def df(rows):
-        return spark.createDataFrame(rows, "id long, ver long, val string")
+        return spark.createDataFrame(rows, _SCHEMA)
 
+    # each step runs on (dl, df) and on (model, list)
+    redelivered = [(None, 1, "n"), (400, 1, "x")]
     steps = [
-        lambda t: t.write(df([(i, 1, f"r{i}") for i in range(8)])),
-        lambda t: t.append(df([(100, 1, "x"), (101, 1, "y")])),
-        lambda t: t.insert_if_absent(df([(0, 9, "dup"), (200, 1, "new")]), ["id"]),
-        lambda t: t.upsert(
-            df([(1, 5, "up"), (2, 0, "stale"), (300, 1, "ins")]), ["id"], "ver"
+        lambda t, rows: t.write(rows([(i, 1, f"r{i}") for i in range(8)])),
+        lambda t, rows: t.append(rows([(100, 1, "x"), (101, 1, "y")])),
+        lambda t, rows: t.insert_if_absent(rows([(0, 9, "dup"), (200, 1, "new")]), ["id"]),
+        lambda t, rows: t.upsert(
+            rows([(1, 5, "up"), (2, 0, "stale"), (300, 1, "ins")]), ["id"], "ver"
         ),
-        lambda t: t.delete_where(F.col("id") >= 200),
-        lambda t: t.compact(target_file_bytes=1 << 20),
-        lambda t: t.truncate(),
+        lambda t, rows: t.insert_if_absent(rows(redelivered), ["id"]),
+        lambda t, rows: t.insert_if_absent(rows(redelivered), ["id"]),
+        lambda t, rows: t.upsert(rows([(None, 3, "n-up"), (3, 1, "tie")]), ["id"], "ver"),
+        lambda t, rows: t.delete_where(
+            F.col("id") >= 200
+            if t is dl
+            else lambda r: None if r["id"] is None else r["id"] >= 200
+        ),
+        lambda t, rows: t.compact(target_file_bytes=1 << 20),
+        lambda t, rows: t.truncate(),
     ]
-    for step in steps:
-        v1, v2 = step(dl), step(cow)
-        # Delta versions are 0-based per the protocol; the fallback's
-        # are 1-based — constant offset, same commit cadence
-        assert v1 == v2 - 1
-        assert _rows(dl.read()) == _rows(cow.read())
+    for n, step in enumerate(steps):
+        assert step(dl, df) == step(model, list) == n
+        assert _rows(dl.read()) == model.rows(), n
     for v in range(dl.version + 1):
-        assert _rows(dl.read(version=v)) == _rows(cow.read(version=v + 1)), v
-    # changes() contract too
-    assert _rows(dl.changes(["id"], 0, 4)) == _rows(cow.changes(["id"], 1, 5))
+        assert _rows(dl.read(version=v)) == model.rows(v), v
+    for a in range(dl.version + 1):
+        for b in range(a, dl.version + 1):
+            assert _rows(dl.changes(["id"], a, b)) == model.changes(["id"], a, b), (a, b)
+    assert _rows(dl.changes(["id"], 3)) == model.changes(["id"], 3)
 
 
 def test_upsert_rewrites_only_touched_files(spark, tmp_path):
     """Three appended files; a 1-key upsert must remove exactly the one
     file containing that key and carry the other two by reference —
-    Delta MERGE's physical contract, the reason this beats the
-    copy-on-write fallback at scale."""
+    Delta MERGE's physical contract: a small upsert into a large
+    table rewrites one file, not the snapshot."""
     t = DeltaLogTable(spark, str(tmp_path / "t"))
     for batch in range(3):
         t.append(
@@ -155,24 +220,22 @@ def test_upsert_rewrites_only_touched_files(spark, tmp_path):
 
 
 def test_delete_rewrites_only_affected_files_incl_null_predicate(spark, tmp_path):
-    """delete_where keeps the complement exactly like the fallback —
-    including dropping predicate-NULL rows — while rewriting only the
-    files that lose rows."""
+    """delete_where keeps the complement like the model — including
+    dropping predicate-NULL rows — while rewriting only the files that
+    lose rows."""
     dl = DeltaLogTable(spark, str(tmp_path / "dl"))
-    cow = VersionedParquetTable(spark, str(tmp_path / "cow"))
+    model = TableModel(["id", "val"])
     batches = [
         [(1, "a"), (2, "b")],        # no nulls, no matches
         [(3, None), (4, "d")],       # a predicate-NULL row
         [(5, "kill"), (6, "e")],     # a TRUE row
     ]
     for b in batches:
-        df = spark.createDataFrame(b, "id long, val string").coalesce(1)
-        dl.append(df)
-        cow.append(df)
-    pred = F.col("val") == "kill"  # NULL for id=3
-    dl.delete_where(pred)
-    cow.delete_where(pred)
-    assert _rows(dl.read()) == _rows(cow.read())
+        dl.append(spark.createDataFrame(b, "id long, val string").coalesce(1))
+        model.append(b)
+    dl.delete_where(F.col("val") == "kill")  # NULL for id=3
+    model.delete_where(lambda r: None if r["val"] is None else r["val"] == "kill")
+    assert _rows(dl.read()) == model.rows()
     assert {r["id"] for r in dl.read().collect()} == {1, 2, 4, 6}
     log = (tmp_path / "dl" / "_delta_log" / f"{dl.version:020d}.json").read_text()
     removed = [json.loads(l)["remove"]["path"]
@@ -242,22 +305,6 @@ def test_compact_coalesces_without_data_change(spark, tmp_path):
     assert _rows(t.read(version=v_pre)) == before
 
 
-def test_open_table_auto_detects_delta_log(spark, tmp_path):
-    root = str(tmp_path / "t")
-    t = DA.open_table(spark, root, format="delta-log")
-    assert isinstance(t, DeltaLogTable)
-    t.write(spark.createDataFrame([(1,)], "id long"))
-    if not DA.HAS_DELTA:
-        reopened = DA.open_table(spark, root)  # auto
-        assert isinstance(reopened, DeltaLogTable)
-        assert reopened.read().count() == 1
-    fresh = DA.open_table(spark, str(tmp_path / "new"))
-    expected = DA.DeltaTableAdapter if DA.HAS_DELTA else VersionedParquetTable
-    assert isinstance(fresh, expected)
-    with pytest.raises(ValueError, match="format"):
-        DA.open_table(spark, root, format="iceberg")
-
-
 def test_time_travel_rejects_uncommitted_version(spark, tmp_path):
     t = DeltaLogTable(spark, str(tmp_path / "t"))
     t.write(spark.createDataFrame([(1,)], "id long"))
@@ -324,18 +371,14 @@ def test_null_keyed_upsert_matches_fallback(spark, tmp_path):
     semi-join has to be null-safe or the stale row survives in an
     'untouched' file next to its replacement."""
     dl = DeltaLogTable(spark, str(tmp_path / "dl"))
-    cow = VersionedParquetTable(spark, str(tmp_path / "cow"))
+    model = TableModel(_COLS)
     base = [(1, 1, "a"), (None, 1, "n"), (3, 1, "c")]
-    for t in (dl, cow):
-        t.write(spark.createDataFrame(base, "id long, ver long, val string"))
-        t.upsert(
-            spark.createDataFrame(
-                [(None, 5, "n-up"), (9, 1, "ins")], "id long, ver long, val string"
-            ),
-            ["id"],
-            "ver",
-        )
-    assert _rows(dl.read()) == _rows(cow.read())
+    update = [(None, 5, "n-up"), (9, 1, "ins")]
+    dl.write(spark.createDataFrame(base, _SCHEMA))
+    dl.upsert(spark.createDataFrame(update, _SCHEMA), ["id"], "ver")
+    model.write(base)
+    model.upsert(update, ["id"], "ver")
+    assert _rows(dl.read()) == model.rows()
     rows = {r["id"]: r for r in dl.read().collect()}
     assert rows[None]["val"] == "n-up" and rows[None]["ver"] == 5
     assert len(rows) == 4
@@ -344,22 +387,18 @@ def test_null_keyed_upsert_matches_fallback(spark, tmp_path):
 def test_pure_insert_upsert_with_null_key_matches_fallback(spark, tmp_path):
     """All-new keys, one of them NULL, into a non-empty table holding no
     null key: no file is touched, so the update side is the whole
-    commit — add-only, and row-equal to the copy-on-write fallback."""
+    commit — add-only, and row-equal to the model."""
     dl = DeltaLogTable(spark, str(tmp_path / "dl"))
-    cow = VersionedParquetTable(spark, str(tmp_path / "cow"))
-    base = spark.createDataFrame(
-        [(1, 1, "a"), (2, 1, "b"), (3, 1, "c")], "id long, ver long, val string"
-    )
-    new = spark.createDataFrame(
-        [(None, 2, "n"), (7, 2, "x"), (8, 1, "y"), (8, 3, "y-late")],
-        "id long, ver long, val string",
-    )
-    for t in (dl, cow):
-        t.write(base)
-        t.upsert(new, ["id"], "ver")
+    model = TableModel(_COLS)
+    base = [(1, 1, "a"), (2, 1, "b"), (3, 1, "c")]
+    new = [(None, 2, "n"), (7, 2, "x"), (8, 1, "y"), (8, 3, "y-late")]
+    dl.write(spark.createDataFrame(base, _SCHEMA))
+    dl.upsert(spark.createDataFrame(new, _SCHEMA), ["id"], "ver")
+    model.write(base)
+    model.upsert(new, ["id"], "ver")
     log = (tmp_path / "dl" / "_delta_log" / f"{dl.version:020d}.json").read_text()
     assert not any("remove" in json.loads(l) for l in log.splitlines())
-    assert _rows(dl.read()) == _rows(cow.read())
+    assert _rows(dl.read()) == model.rows()
     rows = {r["id"]: r["val"] for r in dl.read().collect()}
     assert rows == {1: "a", 2: "b", 3: "c", None: "n", 7: "x", 8: "y-late"}
 

@@ -9,8 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from regpulse_lakehouse_spark.operators.dedup import minhash_near_dup_pairs
-from regpulse_lakehouse_spark.operators.upsert import VersionedParquetTable
-from regpulse_lakehouse_spark.streaming.near_dup import incremental_near_dup
+from regpulse_lakehouse_spark.streaming.near_dup import (
+    PartitionedSignatureStore,
+    banded_signatures,
+    bulk_ingest_near_dup,
+    incremental_near_dup,
+)
 
 
 @pytest.fixture()
@@ -31,7 +35,7 @@ def corpus(spark):
 
 def test_cross_and_intra_batch_detection(spark, corpus, tmp_path):
     b1, b2 = corpus
-    store = VersionedParquetTable(spark, str(tmp_path / "sigstore"))
+    store = PartitionedSignatureStore(spark, str(tmp_path / "sigstore"))
 
     first = incremental_near_dup(b1, store, threshold=0.4).collect()
     assert first == []  # nothing ingested before batch 1, no intra dups
@@ -50,7 +54,7 @@ def test_cross_and_intra_batch_detection(spark, corpus, tmp_path):
 
 def test_matches_batch_operator_on_union(spark, corpus, tmp_path):
     b1, b2 = corpus
-    store = VersionedParquetTable(spark, str(tmp_path / "sigstore2"))
+    store = PartitionedSignatureStore(spark, str(tmp_path / "sigstore2"))
     inc = set()
     for b in (b1, b2):
         for r in incremental_near_dup(b, store, threshold=0.4).collect():
@@ -70,10 +74,6 @@ def test_deferred_execution_pins_pre_append_state(spark, corpus, tmp_path):
     still read only their pre-append store state when executed at the
     very end (the frozen-file-index pin), and the union must equal the
     eager form AND the batch operator."""
-    from regpulse_lakehouse_spark.streaming.near_dup import (
-        PartitionedSignatureStore,
-    )
-
     b1, b2 = corpus
     store = PartitionedSignatureStore(spark, str(tmp_path / "lazy"), n_prefix=4)
     p1 = incremental_near_dup(b1, store, threshold=0.4, materialize=False)
@@ -97,10 +97,8 @@ def test_deferred_execution_pins_pre_append_state(spark, corpus, tmp_path):
 
 def test_store_scan_is_not_shuffled(spark, corpus, tmp_path):
     b1, b2 = corpus
-    store = VersionedParquetTable(spark, str(tmp_path / "sigstore3"))
+    store = PartitionedSignatureStore(spark, str(tmp_path / "sigstore3"))
     incremental_near_dup(b1, store, threshold=0.4)
-    from regpulse_lakehouse_spark.streaming.near_dup import banded_signatures
-
     new_side = banded_signatures(b2).select(
         F.col("doc_id").alias("new_id"), F.col("sig").alias("sig_new"), "band", "bucket"
     )
@@ -122,7 +120,7 @@ def test_store_scan_is_not_shuffled(spark, corpus, tmp_path):
 
 def test_retried_batch_reports_no_self_pairs(spark, corpus, tmp_path):
     b1, _ = corpus
-    store = VersionedParquetTable(spark, str(tmp_path / "sigstore4"))
+    store = PartitionedSignatureStore(spark, str(tmp_path / "sigstore4"))
     incremental_near_dup(b1, store, threshold=0.4)
     # replay the same batch (foreachBatch retry after the append landed)
     pairs = incremental_near_dup(b1, store, threshold=0.4).collect()
@@ -130,40 +128,38 @@ def test_retried_batch_reports_no_self_pairs(spark, corpus, tmp_path):
 
 
 def test_partitioned_store_matches_snapshot_store(spark, corpus, tmp_path):
-    """Round-5 store upgrade: the hive-partitioned (batch/band/bp)
-    store must produce EXACTLY the pairs the snapshot store does, batch
-    for batch, while its candidate read prunes partitions."""
-    from regpulse_lakehouse_spark.streaming.near_dup import (
-        PartitionedSignatureStore,
-    )
-
+    """Batch by batch, the hive-partitioned (batch/band/bp) store must
+    hold exactly the banded signatures of every batch ingested so far,
+    and the pairs it has reported must be exactly the batch operator's
+    pairs, scores included, over those batches."""
     b1, b2 = corpus
-    snap = VersionedParquetTable(spark, str(tmp_path / "snap"))
     part = PartitionedSignatureStore(spark, str(tmp_path / "part"), n_prefix=16)
+    seen, reported = None, set()
     for b in (b1, b2):
-        got_snap = {
-            (r["new_id"], r["old_id"], r["est_jaccard"])
-            for r in incremental_near_dup(b, snap, threshold=0.4).collect()
-        }
-        got_part = {
-            (r["new_id"], r["old_id"], r["est_jaccard"])
+        seen = b if seen is None else seen.unionByName(b)
+        reported |= {
+            (frozenset((r["new_id"], r["old_id"])), r["est_jaccard"])
             for r in incremental_near_dup(b, part, threshold=0.4).collect()
         }
-        assert got_snap == got_part
-    # both stores now hold the same signature rows
-    a = sorted(tuple(r) for r in snap.read().select("doc_id", "band", "bucket").collect())
-    c = sorted(tuple(r) for r in part.read().select("doc_id", "band", "bucket").collect())
-    assert a == c
+        want = {
+            (frozenset((r["a"], r["b"])), r["est_jaccard"])
+            for r in minhash_near_dup_pairs(
+                seen, "text", "doc_id", num_hashes=16, num_bands=4, threshold=0.4
+            ).collect()
+        }
+        assert reported == want
+        cols = ("doc_id", "band", "bucket")
+        stored = sorted(tuple(r) for r in part.read().select(*cols).collect())
+        assert stored == sorted(
+            tuple(r) for r in banded_signatures(seen).select(*cols).collect()
+        )
+    assert reported  # the corpus holds cross- and intra-batch pairs
 
 
 def test_partitioned_store_prunes_partitions(spark, tmp_path):
     """The probed-keys read must carry the (band, bp) predicate as
     PartitionFilters — directory pruning, not a post-scan filter — and
     return exactly the probed partitions' rows."""
-    from regpulse_lakehouse_spark.streaming.near_dup import (
-        PartitionedSignatureStore,
-    )
-
     store = PartitionedSignatureStore(spark, str(tmp_path / "ps"), n_prefix=8)
     df = spark.createDataFrame(
         [(i, f"doc number {i} with some words {i % 7}") for i in range(40)],
@@ -192,11 +188,6 @@ def test_bulk_ingest_matches_sequential_ingest(spark, tmp_path):
     pass) must reproduce the sequential per-batch path EXACTLY — same
     store layout, same per-batch pair sets with the same scores — on a
     real corpus slice with cross- and intra-batch duplicates."""
-    from regpulse_lakehouse_spark.streaming.near_dup import (
-        PartitionedSignatureStore,
-        bulk_ingest_near_dup,
-    )
-
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select("doc_id", "text")
@@ -205,8 +196,6 @@ def test_bulk_ingest_matches_sequential_ingest(spark, tmp_path):
 
     seq_store = PartitionedSignatureStore(spark, str(tmp_path / "seq"), n_prefix=2)
     seq = set()
-    from regpulse_lakehouse_spark.streaming.near_dup import incremental_near_dup
-
     for i in range(3):
         batch = docs.filter(F.pmod("doc_id", F.lit(3)) == i)
         for r in incremental_near_dup(
@@ -244,11 +233,6 @@ def test_bulk_ingest_retry_after_crashed_write_does_not_double(spark, corpus, tm
     not append a second copy next to the leftovers."""
     import os
 
-    from regpulse_lakehouse_spark.streaming.near_dup import (
-        PartitionedSignatureStore,
-        bulk_ingest_near_dup,
-    )
-
     b1, b2 = corpus
     docs = b1.unionByName(b2)
     batch_expr = F.when(F.col("doc_id") < 10, 1).otherwise(2)
@@ -279,11 +263,6 @@ def test_bulk_ingest_retry_after_crashed_write_does_not_double(spark, corpus, tm
 
 
 def test_bulk_ingest_refuses_nonempty_store(spark, corpus, tmp_path):
-    from regpulse_lakehouse_spark.streaming.near_dup import (
-        PartitionedSignatureStore,
-        bulk_ingest_near_dup,
-    )
-
     b1, _ = corpus
     store = PartitionedSignatureStore(spark, str(tmp_path / "ne"), n_prefix=2)
     incremental_near_dup(b1, store, threshold=0.4)
@@ -295,11 +274,6 @@ def test_bulk_ingest_tolerates_an_empty_batch(spark, corpus, tmp_path):
     """A batch expression that assigns no rows to some batch id must
     still commit that batch (as sequential ingestion of an empty batch
     would) and keep the other batches' pair plans readable."""
-    from regpulse_lakehouse_spark.streaming.near_dup import (
-        PartitionedSignatureStore,
-        bulk_ingest_near_dup,
-    )
-
     b1, _ = corpus  # doc_ids 1 and 2 — batch 3 (id >= 100) stays empty
     store = PartitionedSignatureStore(spark, str(tmp_path / "eb"), n_prefix=2)
     batch_expr = F.when(F.col("doc_id") >= 100, F.lit(3)).otherwise(

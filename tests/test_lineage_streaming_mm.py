@@ -61,18 +61,53 @@ def test_stream_scan_availablenow(spark, tmp_path):
     chk = tmp_path / "chk"
     fixtures.documents(spark).write.mode("overwrite").parquet(str(src))
 
+    from regpulse_lakehouse_spark.operators.delta_log import DeltaLogTable
     from regpulse_lakehouse_spark.streaming import stream_scan
 
     q = stream_scan(spark, str(src), str(out), str(chk))
     q.awaitTermination(120)
-    main = spark.read.parquet(str(out / "main_items"))
-    review = spark.read.parquet(str(out / "review_items"))
+    main = DeltaLogTable(spark, str(out / "main_items")).read()
+    review = DeltaLogTable(spark, str(out / "review_items")).read()
     assert main.count() > 0 and review.count() > 0
     # restart with no new files → no duplicate outputs (checkpointed)
     n_before = main.count()
     q2 = stream_scan(spark, str(src), str(out), str(chk))
     q2.awaitTermination(120)
-    assert spark.read.parquet(str(out / "main_items")).count() == n_before
+    assert DeltaLogTable(spark, str(out / "main_items")).read().count() == n_before
+
+
+def test_stream_scan_recrawl_wins_latest(spark, tmp_path):
+    """A document delivered again in a later micro-batch, with new
+    content, replaces its main item instead of adding a second row, and
+    the links table keeps each five-tuple once."""
+    from regpulse_lakehouse_spark.operators.delta_log import DeltaLogTable
+    from regpulse_lakehouse_spark.streaming import stream_scan
+
+    src, out, chk = tmp_path / "incoming", tmp_path / "out", tmp_path / "chk"
+    docs = fixtures.documents(spark)
+    docs.coalesce(1).write.parquet(str(src))
+    stream_scan(spark, str(src), str(out), str(chk)).awaitTermination(120)
+    main = DeltaLogTable(spark, str(out / "main_items"))
+    n_main = main.read().count()
+    item = main.read().orderBy("id").first()
+
+    recrawled = docs.filter(F.col("id") == item["source_document_id"]).withColumn(
+        "content", F.lit("urgent recrawled regulatory text")
+    )
+    recrawled.coalesce(1).write.mode("append").parquet(str(src))
+    stream_scan(spark, str(src), str(out), str(chk)).awaitTermination(120)
+
+    rows = main.read().filter(F.col("id") == item["id"]).collect()
+    assert len(rows) == 1
+    assert rows[0]["summary_1line"] == "urgent recrawled regulatory text"
+    assert rows[0]["_refresh_version"] > item["_refresh_version"]
+    assert main.read().count() == n_main
+    five = ["from_type", "from_id", "to_type", "to_id", "relation"]
+    links = DeltaLogTable(spark, str(out / "links")).read()
+    assert links.count() == links.dropDuplicates(five).count()
+    assert links.filter(F.col("to_id") == item["id"]).filter(
+        F.col("relation") == "extracted_from"
+    ).count() == 1
 
 
 def test_multimodal_features_deterministic(spark):

@@ -573,13 +573,13 @@ def test_delete_masks_then_compact_purges(spark, tmp_path):
 
 
 def test_cdc_feed_maintains_the_index(spark, tmp_path):
-    """End-to-end lakehouse loop: versioned-table change feed →
+    """End-to-end lakehouse loop: Delta-log change feed →
     apply_changes_to_bm25_index. After compaction the index equals a
     fresh build over the new snapshot exactly; replays are no-ops; an
     updated document's NEW text (not its old) is what matches."""
-    from regpulse_lakehouse_spark.operators.upsert import VersionedParquetTable
+    from regpulse_lakehouse_spark.operators.delta_log import DeltaLogTable
 
-    t = VersionedParquetTable(spark, str(tmp_path / "tbl"))
+    t = DeltaLogTable(spark, str(tmp_path / "tbl"))
     v1_rows = CORPUS[:6]
     v1 = t.write(spark.createDataFrame(v1_rows, "doc_id string, text string"))
     path = str(tmp_path / "idx")

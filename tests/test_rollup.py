@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from regpulse_lakehouse_spark.operators.upsert import VersionedParquetTable
+from regpulse_lakehouse_spark.operators.delta_log import DeltaLogTable
 from regpulse_lakehouse_spark.sources.tpch import load_table
 from regpulse_lakehouse_spark.streaming.rollup import maintain_rollup
 from regpulse_lakehouse_spark.streaming.windows import tumbling_counts
@@ -19,7 +19,7 @@ def test_rollup_matches_batch_across_incremental_runs(spark, sf_dir, tmp_path):
     early, late = ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)
 
     src = str(tmp_path / "src")
-    table = VersionedParquetTable(spark, str(tmp_path / "rollup"))
+    table = DeltaLogTable(spark, str(tmp_path / "rollup"))
     ck = str(tmp_path / "ck")
 
     def run_once():
@@ -70,7 +70,7 @@ def test_distinct_rollup_matches_batch_sketches_across_runs(spark, sf_dir, tmp_p
     early, late = ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)
 
     src = str(tmp_path / "dsrc")
-    table = VersionedParquetTable(spark, str(tmp_path / "drollup"))
+    table = DeltaLogTable(spark, str(tmp_path / "drollup"))
     ck = str(tmp_path / "dck")
 
     def run_once():
@@ -108,15 +108,15 @@ def test_distinct_rollup_matches_batch_sketches_across_runs(spark, sf_dir, tmp_p
 
 def test_distinct_rollup_drops_null_ts_and_bounds_merge_to_touched(spark, tmp_path):
     """Null-timestamp events are dropped (a null window key would
-    fragment under the join every batch), and untouched windows pass
-    through the merge unmodified."""
+    fragment under the join every batch), and a micro-batch that does
+    not touch a window leaves its sketch unmodified."""
     from regpulse_lakehouse_spark.streaming.rollup import maintain_distinct_rollup
 
     rows1 = [("2024-01-01 10:05:00", 1), ("2024-01-01 10:10:00", 2), (None, 99)]
     rows2 = [("2024-01-01 22:05:00", 3), (None, 98)]
     schema = "ts string, user_id long"
     src = str(tmp_path / "nsrc")
-    table = VersionedParquetTable(spark, str(tmp_path / "nrollup"))
+    table = DeltaLogTable(spark, str(tmp_path / "nrollup"))
     ck = str(tmp_path / "nck")
 
     def write(rows, mode):
@@ -157,7 +157,7 @@ def test_freq_rollup_matches_batch_sketches_and_guards_replay(spark, sf_dir, tmp
     early, late = ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)
 
     src = str(tmp_path / "fsrc")
-    table = VersionedParquetTable(spark, str(tmp_path / "frollup"))
+    table = DeltaLogTable(spark, str(tmp_path / "frollup"))
     ck = str(tmp_path / "fck")
 
     def run_once(checkpoint):

@@ -102,49 +102,6 @@ def test_minmax_prunes_clustered_files_exactly(spark, tmp_path):
         SKP.minmax_candidate_files(path, "doc_id")
 
 
-def test_optimize_table_compacts_sorts_and_rebuilds_blooms(spark, tmp_path):
-    """The nightly maintenance verb: fragmented appends compact into a
-    sorted snapshot, bloom indexes rebuild over the NEW version dir,
-    and lookups through them stay exact while min/max pruning works on
-    the sort column."""
-    from regpulse_lakehouse_spark.operators.upsert import (
-        VersionedParquetTable,
-        optimize_table,
-    )
-
-    table = VersionedParquetTable(spark, str(tmp_path / "t"))
-    for i in range(5):  # fragmented little appends
-        batch = spark.range(i * 400, (i + 1) * 400).select(
-            F.col("id").alias("doc_id"),
-            F.md5(F.col("id").cast("string")).alias("url_hash"),
-        )
-        if table.exists():
-            table.append(batch)
-        else:
-            table.write(batch)
-    before_files = len(table.read().inputFiles())
-    report = optimize_table(
-        table, sort_cols=["doc_id"], bloom_cols=["url_hash"],
-        target_file_bytes=16 * 1024, bloom_expected_per_file=500,
-    )
-    assert report["bloom"]["url_hash"] >= 1
-    assert report["files"] >= 1
-    assert table.read().count() == 2000
-    # bloom lookup through the rebuilt index is exact
-    probe = spark.createDataFrame([(321,)], ["id"]).select(
-        F.md5(F.col("id").cast("string")).alias("h")
-    ).first()["h"]
-    idx = str(tmp_path / "t" / "_bloom" / "url_hash")
-    got = SKP.scan_with_bloom(spark, idx, "url_hash", probe).collect()
-    assert len(got) == 1 and got[0]["doc_id"] == 321
-    # and the sorted layout min/max-prunes on doc_id
-    snap = str(tmp_path / "t" / f"v={report['version']}")
-    total = len(spark.read.parquet(snap).inputFiles())
-    if total > 1:
-        cands = SKP.minmax_candidate_files(snap, "doc_id", lo=0, hi=10)
-        assert len(cands) < total
-
-
 def test_probe_casts_to_indexed_dtype(spark, tmp_path):
     """xxhash64 is type-sensitive: an index built on an INT (32-bit)
     column probed with a Python int (inferred bigint) must still find
@@ -274,37 +231,3 @@ def test_minmax_keeps_zero_row_group_file(tmp_path):
     # the zero-row-group file is unprunable (kept); the stats file prunes
     assert any(c.endswith("empty.parquet") for c in cands)
     assert not any(c.endswith("data.parquet") for c in cands)
-
-
-def test_optimize_table_surfaces_vector_drift(spark, tmp_path):
-    """VERDICT r8 task 6 / r9 carry-over: the nightly verb must REPORT
-    IVF-PQ drift, not just compute it — a drifted append trips
-    rebuild_recommended=True in the report; a healthy index reports
-    False under a lenient threshold."""
-    import numpy as np
-
-    from regpulse_lakehouse_spark.operators import quantize as Q
-    from regpulse_lakehouse_spark.operators.upsert import (
-        VersionedParquetTable,
-        optimize_table,
-    )
-
-    rng = np.random.default_rng(3)
-    dim = 8
-    base = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(200)]
-    shifted = [(1000 + i, [float(x + 5.0) for x in rng.normal(size=dim)])
-               for i in range(200)]
-    schema = "vec_id long, embedding array<double>"
-    root = str(tmp_path / "ivf")
-    Q.ivf_pq_build(spark.createDataFrame(base, schema), root, n_centroids=8, m=4)
-    Q.ivf_pq_append(spark, root, spark.createDataFrame(shifted, schema))
-
-    table = VersionedParquetTable(spark, str(tmp_path / "t"))
-    table.write(spark.range(100).select(F.col("id").alias("doc_id")))
-    report = optimize_table(table, vector_indexes=[root], drift_threshold=0.02)
-    health = report["vector"][root]
-    assert health["rebuild_recommended"] is True
-    assert health["drift"] > 0.02 and health["code_batches"] == 2
-    # a lenient threshold on the same index recommends nothing
-    report2 = optimize_table(table, vector_indexes=[root], drift_threshold=10.0)
-    assert report2["vector"][root]["rebuild_recommended"] is False

@@ -7,8 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from regpulse_lakehouse_spark.operators.delta_log import DeltaLogTable
 from regpulse_lakehouse_spark.operators.upsert import (
-    VersionedParquetTable,
     dedup_on_keys,
     edge_upsert,
     insert_if_absent,
@@ -57,13 +57,13 @@ def test_edge_upsert_unique_five_tuple(spark, tmp_path):
 
 
 def test_versioned_table_snapshots(spark, tmp_path):
-    t = VersionedParquetTable(spark, str(tmp_path / "tbl"))
+    t = DeltaLogTable(spark, str(tmp_path / "tbl"))
     assert not t.exists()
     df1 = spark.createDataFrame([(1, "a", 1)], "id int, v string, ts int")
     t.write(df1)
-    assert t.version == 1
+    assert t.version == 0
     t.upsert(spark.createDataFrame([(1, "b", 2)], "id int, v string, ts int"), ["id"], "ts")
-    assert t.version == 2
+    assert t.version == 1
     assert t.read().collect()[0].v == "b"
     t.append(spark.createDataFrame([(2, "c", 3)], "id int, v string, ts int"))
     assert t.read().count() == 2
@@ -72,19 +72,17 @@ def test_versioned_table_snapshots(spark, tmp_path):
     t.truncate()
     assert t.read().count() == 0
     # time-travel: every committed snapshot remains readable by version
-    assert t.read(version=1).collect()[0].v == "a"
-    assert t.read(version=2).collect()[0].v == "b"
-    assert t.read(version=3).count() == 2
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
+    assert t.read(version=0).collect()[0].v == "a"
+    assert t.read(version=1).collect()[0].v == "b"
+    assert t.read(version=2).count() == 2
+    with pytest.raises(FileNotFoundError):
         t.read(version=99)
 
 
 def test_get_or_create_default_store(spark, tmp_path):
     from regpulse_lakehouse_spark.operators.vector import get_or_create_default_store
 
-    t = VersionedParquetTable(spark, str(tmp_path / "stores"))
+    t = DeltaLogTable(spark, str(tmp_path / "stores"))
     sid = get_or_create_default_store(t)
     assert sid == get_or_create_default_store(t)  # idempotent
     assert t.read().filter(F.col("provider") == "local").count() == 1
@@ -124,12 +122,13 @@ def test_compact_binpacks_fragmented_snapshot(spark, tmp_path):
     """Delta-OPTIMIZE shape: many appended fragments -> one compaction
     commit with file count sized from on-disk bytes; rows identical,
     old versions untouched, sorted variant restores min-max skipping."""
-    import glob
     import os
+    from urllib.parse import unquote
 
-    from regpulse_lakehouse_spark.operators.upsert import VersionedParquetTable
+    import pyarrow.parquet as pq
 
-    t = VersionedParquetTable(spark, str(tmp_path / "frag"))
+    root = str(tmp_path / "frag")
+    t = DeltaLogTable(spark, root)
     base = spark.range(0, 4000).select(
         F.col("id"), (F.col("id") % 97).alias("k")
     )
@@ -142,26 +141,23 @@ def test_compact_binpacks_fragmented_snapshot(spark, tmp_path):
             .repartition(8)
         )
     v_before = t.version
-    n_files_before = len(glob.glob(os.path.join(str(tmp_path / "frag"), f"v={v_before}", "*.parquet")))
+    n_files_before = len(t.active_files())
     rows_before = sorted(r["id"] for r in t.read().collect())
 
     # generous target -> everything packs into ONE file
     v_after = t.compact(target_file_bytes=1 << 30)
     assert v_after == v_before + 1
-    n_files_after = len(glob.glob(os.path.join(str(tmp_path / "frag"), f"v={v_after}", "*.parquet")))
-    assert n_files_after == 1 < n_files_before
+    assert len(t.active_files()) == 1 < n_files_before
     assert sorted(r["id"] for r in t.read().collect()) == rows_before
     # time travel still sees the fragmented snapshot
     assert t.read(version=v_before).count() == len(rows_before)
 
     # sorted compaction: per-file min/max on the sort column must be
     # disjoint (file skipping restored), checked via parquet footers
-    t.compact(target_file_bytes=64 * 1024, sort_cols=["id"])
-    import pyarrow.parquet as pq
-
+    t.compact(target_file_bytes=16 * 1024, sort_cols=["id"])
     ranges = []
-    for f in glob.glob(os.path.join(str(tmp_path / "frag"), f"v={t.version}", "*.parquet")):
-        md = pq.ParquetFile(f).metadata
+    for add in t.active_files():
+        md = pq.ParquetFile(os.path.join(root, unquote(add["path"]))).metadata
         lo = min(md.row_group(i).column(0).statistics.min for i in range(md.num_row_groups))
         hi = max(md.row_group(i).column(0).statistics.max for i in range(md.num_row_groups))
         ranges.append((lo, hi))
@@ -177,9 +173,7 @@ def test_changes_between_versions(spark, tmp_path):
     """Change feed (Delta CDF shape): insert/update/delete classified
     per key between two snapshots; unchanged keys absent; NULL-valued
     columns compared null-safely."""
-    from regpulse_lakehouse_spark.operators.upsert import VersionedParquetTable
-
-    t = VersionedParquetTable(spark, str(tmp_path / "cdc"))
+    t = DeltaLogTable(spark, str(tmp_path / "cdc"))
     v1 = t.write(
         spark.createDataFrame(
             [(1, "a", 10), (2, "b", 20), (3, None, 30), (4, "d", 40)],
@@ -203,28 +197,6 @@ def test_changes_between_versions(spark, tmp_path):
     # default to_version = latest; self-diff is empty
     assert t.changes(["k"], from_version=v1).count() == 3
     assert t.changes(["k"], from_version=v2).count() == 0
-
-
-def test_append_schema_evolution_is_opt_in(spark, tmp_path):
-    """Delta mergeSchema shape: a batch with a NEW column fails loudly
-    by default (typo guard), evolves additively under
-    merge_schema=True (old rows null-filled), and a batch missing an
-    existing column is likewise only accepted under the flag."""
-    from regpulse_lakehouse_spark.operators.upsert import VersionedParquetTable
-
-    t = VersionedParquetTable(spark, str(tmp_path / "t"))
-    t.write(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "name"]))
-    widened = spark.createDataFrame([(3, "c", 0.9)], ["id", "name", "score"])
-    with pytest.raises(Exception, match="score|column"):
-        t.append(widened)
-    t.append(widened, merge_schema=True)
-    rows = {r["id"]: (r["name"], r["score"]) for r in t.read().collect()}
-    assert rows == {1: ("a", None), 2: ("b", None), 3: ("c", 0.9)}
-    # new batch may omit a column under the flag — null-filled
-    t.append(spark.createDataFrame([(4,)], ["id"]), merge_schema=True)
-    assert t.read().where("id = 4").first()["name"] is None
-    # time-travel still sees the pre-evolution schema
-    assert "score" not in t.read(version=1).columns
 
 
 def _types(schema):
