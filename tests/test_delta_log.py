@@ -443,17 +443,19 @@ def test_checkpoint_bounds_replay_and_preserves_state(spark, tmp_path):
     """25 commits with interval-10 auto-checkpoints: snapshot equals a
     checkpoint-free twin at EVERY version (incl. time travel below the
     checkpoint), the _last_checkpoint pointer exists, and replay after
-    the checkpoint reads only the JSON commits past it."""
+    the checkpoint reads only the JSON commits past it. The appends are
+    one-row Arrow tables (no Spark job); the upserts stay DataFrames."""
     t = DeltaLogTable(spark, str(tmp_path / "t"), checkpoint_interval=10)
     plain = DeltaLogTable(spark, str(tmp_path / "plain"), checkpoint_interval=None)
     for i in range(25):
-        df = spark.createDataFrame([(i, f"v{i}")], "id long, val string").coalesce(1)
         if i % 7 == 3:
+            df = spark.createDataFrame([(i, f"v{i}")], "id long, val string").coalesce(1)
             t.upsert(df, ["id"], "id")
             plain.upsert(df, ["id"], "id")
         else:
-            t.append(df)
-            plain.append(df)
+            rows = _arrow_rows([i], [f"v{i}"])
+            t.append(rows)
+            plain.append(rows)
     log_dir = tmp_path / "t" / "_delta_log"
     cps = [n for n in os.listdir(log_dir) if n.endswith(".checkpoint.parquet")]
     assert {int(n.split(".", 1)[0]) for n in cps} == {10, 20}
@@ -481,9 +483,11 @@ def test_checkpoint_bounds_replay_and_preserves_state(spark, tmp_path):
 def test_checkpoint_pointer_fallback(spark, tmp_path):
     """A deleted/torn _last_checkpoint only costs a directory listing;
     the newest on-disk checkpoint still seeds replay."""
+    import pyarrow as pa
+
     t = DeltaLogTable(spark, str(tmp_path / "t"), checkpoint_interval=5)
     for i in range(7):
-        t.append(spark.createDataFrame([(i,)], "id long").coalesce(1))
+        t.append(pa.table({"id": pa.array([i], pa.int64())}))
     before = _rows(t.read())
     ptr = tmp_path / "t" / "_delta_log" / "_last_checkpoint"
     ptr.write_text("{torn")

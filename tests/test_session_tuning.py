@@ -196,9 +196,8 @@ def test_explicit_floor_goes_below_core_count(spark, tmp_path, monkeypatch):
 def test_default_sizing_fits_the_machine(monkeypatch):
     """With the SPARK_GRAFT_* sizing vars unset, the session is sized
     from this machine when get_spark() runs: cores from the affinity
-    set, a driver heap inside physical RAM, and a pre-touched -Xms of at
-    most a quarter of RAM even for an oversized explicit request. A
-    var set after the package is imported still wins."""
+    set and a driver heap inside physical RAM. A var set after the
+    package is imported still wins."""
     for var in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS",
                 "SPARK_GRAFT_DRIVER_MEM"):
         monkeypatch.delenv(var, raising=False)
@@ -209,10 +208,15 @@ def test_default_sizing_fits_the_machine(monkeypatch):
     assert int(cpus) == int(shuffle) == len(os.sched_getaffinity(0))
     mem_gb = int(re.fullmatch(r"(\d+)g", mem).group(1))
     assert 1 <= mem_gb and mem_gb * 1024 <= ram_mb
-    for request in (mem, "48g", "1024g"):
-        xms = S._initial_heap(request)
-        xms_mb = int(re.match(r"-Xms(\d+)m ", xms).group(1))
-        assert 0 < xms_mb <= ram_mb // 4
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
     assert S._sizing() == ("2", "2", "3g")
+
+
+def test_session_pins_no_initial_heap(spark):
+    """The driver JVM gets only -Xmx: no -Xms and no AlwaysPreTouch, so
+    it does not commit and fault in a fixed share of the heap at start
+    and its resident set follows the live heap."""
+    opts = spark.sparkContext.getConf().get("spark.driver.extraJavaOptions", "")
+    assert "-Xms" not in opts
+    assert "AlwaysPreTouch" not in opts
