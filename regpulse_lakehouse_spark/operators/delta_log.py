@@ -20,9 +20,8 @@ differential-tested in-container against a pandas model of a
 versioned keyed table (tests/table_model.py; reference write
 semantics: services/api/src/repository.ts:14-23 ON CONFLICT DO
 NOTHING, :25-78 ON CONFLICT UPDATE). It is the package's one table
-format: the governed ingest, the run ledger, the streaming rollups,
-``stream_scan``'s outputs and the vector-store registry all commit
-here.
+format: the governed ingest, the run ledger, ``stream_scan``'s outputs
+and the vector-store registry all commit here.
 
 Physical shapes (the part that matters at 100 TB):
 

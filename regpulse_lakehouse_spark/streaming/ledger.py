@@ -14,7 +14,8 @@ maps to:
 - ``stream_scan``: a Structured Streaming wrapper that runs the *same*
   batch scan pipeline per micro-batch via ``foreachBatch`` — write
   once, run both modes (SURVEY §7 Phase 7) — and commits its outputs
-  to DeltaLogTables (main items latest-wins, links insert-if-absent).
+  to DeltaLogTables (main items latest-wins, review items and links
+  insert-if-absent, so a replayed micro-batch adds nothing).
 
 The ledger's rows are ``pyarrow`` tables that the driver reads and
 writes itself (``DeltaLogTable.append``/``write`` take Arrow input),
@@ -135,11 +136,15 @@ def stream_scan(
 
     Watches ``source_dir`` for parquet files in the source_documents
     shape and processes each micro-batch through ``run_scan`` via
-    foreachBatch into three DeltaLogTables under ``output_root``:
-    ``main_items`` is upserted on ``id`` with the micro-batch id as
-    ``_refresh_version`` (a re-crawl in a later micro-batch wins),
-    ``review_items`` is appended, and ``links`` takes only five-tuples
-    it does not hold yet. Returns the StreamingQuery (caller awaits)."""
+    foreachBatch into three DeltaLogTables under ``output_root``. Each
+    item row carries the micro-batch id as ``_refresh_version``:
+    ``main_items`` is upserted on ``id`` (a re-crawl in a later
+    micro-batch wins), ``review_items`` takes only (``id``,
+    ``_refresh_version``) pairs it does not hold yet (a re-crawl queues
+    a new row), and ``links`` takes only five-tuples it does not hold
+    yet. So a micro-batch that Spark re-delivers after a crash between
+    the sink's commits and its own adds nothing. Returns the
+    StreamingQuery (caller awaits)."""
     stream = (
         spark.readStream.schema(schemas.SOURCE_DOCUMENTS)
         .option("maxFilesPerTrigger", 4)  # ST5-style throttle
@@ -158,12 +163,16 @@ def stream_scan(
         if ledger is not None:
             ledger.log(run_id, "process", f"batch {batch_id}")
         result = run_scan(batch_df, run_id=run_id, days_window=days_window, **scan_kwargs)
+        version = F.lit(int(batch_id))
         main.upsert(
-            result.main_items.withColumn("_refresh_version", F.lit(int(batch_id))),
+            result.main_items.withColumn("_refresh_version", version),
             ["id"],
             "_refresh_version",
         )
-        review.append(result.review_items)
+        review.insert_if_absent(
+            result.review_items.withColumn("_refresh_version", version),
+            ["id", "_refresh_version"],
+        )
         links.insert_if_absent(result.links, _LINK_COLS)
 
     return (

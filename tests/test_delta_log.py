@@ -204,6 +204,10 @@ def test_upsert_rewrites_only_touched_files(spark, tmp_path):
     actions = [json.loads(l) for l in log.splitlines()]
     removed = [a["remove"]["path"] for a in actions if "remove" in a]
     assert len(removed) == 1  # only the file holding id=11
+    # unlike OPTIMIZE, a MERGE changes data: its removes and adds say so
+    files = [(k, a[k]) for a in actions for k in ("add", "remove") if k in a]
+    assert {k for k, _ in files} == {"add", "remove"}
+    assert all(f["dataChange"] is True for _, f in files)
     after = {a["path"] for a in t.active_files()}
     assert len(before - after) == 1 and before - after == set(removed)
     rows = {r["id"]: r for r in t.read().collect()}

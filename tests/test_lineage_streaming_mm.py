@@ -110,6 +110,36 @@ def test_stream_scan_recrawl_wins_latest(spark, tmp_path):
     ).count() == 1
 
 
+def test_stream_scan_replayed_batch_adds_nothing(spark, tmp_path):
+    """A crash after the sink commits but before Spark records the
+    micro-batch as done makes the restart re-deliver that batch under
+    the same id. The replay must leave every output table as it was,
+    the review queue included."""
+    from regpulse_lakehouse_spark.operators.delta_log import DeltaLogTable
+    from regpulse_lakehouse_spark.streaming import stream_scan
+
+    src, out, chk = tmp_path / "incoming", tmp_path / "out", tmp_path / "chk"
+    fixtures.documents(spark).write.parquet(str(src))
+    stream_scan(spark, str(src), str(out), str(chk)).awaitTermination(120)
+
+    def counts():
+        return {
+            name: DeltaLogTable(spark, str(out / name)).read().count()
+            for name in ("main_items", "review_items", "links")
+        }
+
+    before = counts()
+    assert before["review_items"] > 0
+    commits = chk / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        (commits / name).unlink(missing_ok=True)
+
+    stream_scan(spark, str(src), str(out), str(chk)).awaitTermination(120)
+    assert (commits / str(last)).exists()  # the batch really ran again
+    assert counts() == before
+
+
 def test_multimodal_features_deterministic(spark):
     media = MM.synthetic_media(spark)
     f1 = sorted(tuple(r) for r in MM.extract_features(media).collect())

@@ -1,7 +1,7 @@
-"""Streaming extension tests: the windowed/session/stateful transforms
-run through a REAL file stream (availableNow) and must reproduce the
-batch answers — write-once-run-both-modes is the design claim
-(streaming/windows.py, streaming/stateful.py)."""
+"""Streaming extension tests: the windowed/session transforms run
+through a REAL file stream (availableNow) and must reproduce the batch
+answers — write-once-run-both-modes is the design claim
+(streaming/windows.py)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from regpulse_lakehouse_spark.sources.tpch import load_table
-from regpulse_lakehouse_spark.streaming.stateful import user_running_totals
 from regpulse_lakehouse_spark.streaming.windows import tumbling_counts
 
 _AWAIT_MS = 120_000
@@ -72,50 +71,6 @@ def test_tumbling_append_mode_emits_only_closed_windows(spark, sf_dir, tmp_path)
     # a subset of the batch answer, never an invention
     assert emitted <= full
     assert len(emitted) > 0
-
-
-def test_stateful_running_totals_across_microbatches(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
-    src = str(tmp_path / "src")
-    # two files → maxFilesPerTrigger=1 forces two micro-batches, so the
-    # state store must carry totals across batch boundaries
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    out = user_running_totals(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck3"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _run_stream(q)
-    # update mode re-emits refreshed rows; running totals are monotone
-    # in n_events, so the max-n row per user is the final state (sink
-    # row order across micro-batches is not guaranteed)
-    rows = spark.sql(
-        "select user_id, n_events, total_value from totals"
-    ).toPandas()
-    final = rows.sort_values("n_events").groupby("user_id").last()
-    want = {
-        r.user_id: (r.n, round(r.total, 2))
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("total"),
-        )
-        .collect()
-    }
-    got = {
-        uid: (int(row["n_events"]), round(float(row["total_value"]), 2))
-        for uid, row in final.iterrows()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_sliding_windows_stream_equals_batch(spark, sf_dir, tmp_path):
