@@ -43,13 +43,23 @@ Physical shapes (the part that matters at 100 TB):
   file names are deduplicated in the driver.
 - ``compact`` (no ``sort_cols``) commits nothing when the table has no
   more files than its target count.
-- a handle parses each parquet checkpoint once (keyed by the file's
-  stat), so a snapshot replay reads only the JSON commits after it.
+
+Snapshots: every operation lists ``_delta_log`` once and resolves one
+immutable :class:`_Snapshot` from that listing (version, active adds,
+metaData, parsed schema, partition columns, protocol, tombstones).
+Validation, reads, file staging and the commit all work from it, and
+the commit targets ``snapshot.version + 1``. The listing names both the
+commit JSONs and the parquet checkpoints: replay starts from the newest
+checkpoint at or below the target version and reads only the JSON
+commits after it. ``_last_checkpoint`` is still written for external
+readers but never read here, so a torn pointer changes nothing. A
+handle parses each checkpoint file once (keyed by the file's stat).
 
 Single-writer semantics (the reference serializes writes through one
 worker, worker.ts:18,26); the put-if-absent commit (hard-link, fails
 if the version exists) turns a racing second writer into a clean
-``FileExistsError`` instead of silent corruption.
+``FileExistsError`` instead of silent corruption: a racer that commits
+after an operation's snapshot takes the version the operation targets.
 """
 
 from __future__ import annotations
@@ -60,7 +70,8 @@ import os
 import shutil
 import time
 import uuid
-from typing import TYPE_CHECKING
+from dataclasses import dataclass
+from typing import TYPE_CHECKING, Iterable, Iterator, NamedTuple
 from urllib.parse import quote, unquote, urlparse
 
 from pyspark.serializers import CPickleSerializer
@@ -89,6 +100,34 @@ _CONSTRAINT_PREFIX = "delta.constraints."
 _CONSTRAINT_MARK = "DELTA_VIOLATE_CONSTRAINT"
 #: name of the observed metric carrying an upsert's merge-key bounds
 _BOUNDS_METRIC = "merge_key_bounds"
+#: the protocol a new table is created with (and the default when the
+#: log carries none)
+_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
+
+
+class _Listing(NamedTuple):
+    """One listing of ``_delta_log``: committed versions and checkpointed
+    versions, each ascending."""
+
+    versions: tuple[int, ...]
+    checkpoints: tuple[int, ...]
+
+
+@dataclass(frozen=True)
+class _Snapshot:
+    """The table state at one version, resolved from one listing. A
+    table with no commit yet has ``version`` None, no metaData and the
+    handle's constructor partition spec. Every resolution builds new
+    dicts, so a caller that mutates one cannot change the next."""
+
+    version: int | None
+    active: dict[str, dict]
+    meta: dict
+    schema: T.StructType | None
+    partition_columns: list[str]
+    protocol: dict
+    tombstones: dict[str, dict]
+    log: _Listing
 
 
 class ConstraintViolationError(ValueError):
@@ -187,48 +226,80 @@ class DeltaLogTable:
     def _log_path(self, version: int) -> str:
         return os.path.join(self.root, _LOG_DIR, f"{version:020d}.json")
 
-    def _committed_versions(self) -> list[int]:
-        out = []
+    def _list_log(self) -> _Listing:
+        """The one directory listing a snapshot is resolved from."""
+        versions, checkpoints = [], []
         for name in os.listdir(os.path.join(self.root, _LOG_DIR)):
-            stem, ext = os.path.splitext(name)
-            if ext == ".json" and stem.isdigit():
-                out.append(int(stem))
-        return sorted(out)
+            stem, _, ext = name.partition(".")
+            if stem.isdigit() and ext == "json":
+                versions.append(int(stem))
+            elif stem.isdigit() and ext == "checkpoint.parquet":
+                checkpoints.append(int(stem))
+        return _Listing(tuple(sorted(versions)), tuple(sorted(checkpoints)))
 
     @property
     def version(self) -> int | None:
-        versions = self._committed_versions()
+        versions = self._list_log().versions
         return versions[-1] if versions else None
 
     def exists(self) -> bool:
         return self.version is not None
 
-    def _replay(self, version: int | None = None) -> tuple[dict, dict, dict]:
-        """Replay the log up to ``version`` (inclusive): returns
-        (active add-actions by path, latest metaData, tombstoned
-        remove-actions by path). Remove wins over any earlier add of
-        the same path — the protocol's file-level last-action-wins
-        reconciliation; tombstones accumulate (paths are UUID-unique,
-        never re-added) and feed checkpoint retention and
-        :meth:`vacuum`.
+    def _commits(
+        self, versions: Iterable[int], missing_ok: bool = False
+    ) -> Iterator[tuple[int, dict]]:
+        """(version, action) for every action of these commit JSONs, in
+        log order. ``missing_ok`` skips a version whose file is absent."""
+        for v in versions:
+            try:
+                fh = open(self._log_path(v), encoding="utf-8")
+            except FileNotFoundError:
+                if missing_ok:
+                    continue
+                raise
+            with fh:
+                for line in fh:
+                    if line.strip():
+                        yield v, json.loads(line)
 
-        When a parquet CHECKPOINT at version ≤ target exists (see
-        :meth:`checkpoint`), replay starts from its state and only the
-        JSON commits AFTER it are read — snapshot resolution stays O(
-        commits-since-checkpoint) instead of O(all commits); a 10k-
-        commit table would otherwise open 10k files per read. Time
-        travel to a version BELOW every checkpoint still replays the
-        JSONs from 0 (log JSONs are never deleted) — but a version
-        below the VACUUM horizon (its data files are physically gone)
-        raises a clear error instead of a missing-file scan failure."""
-        versions = self._committed_versions()
-        if not versions:
-            raise FileNotFoundError(f"no Delta log under {self.root}")
-        if version is not None:
-            if version not in versions:
-                raise FileNotFoundError(
-                    f"version {version} not committed under {self.root}"
-                )
+    def _snapshot(
+        self,
+        version: int | None = None,
+        *,
+        must_exist: bool = True,
+        log: _Listing | None = None,
+    ) -> _Snapshot:
+        """Resolve the snapshot at ``version`` (default: the newest) from
+        one listing of ``_delta_log`` (``log``, or a fresh one). Replay
+        starts from the newest parquet checkpoint at or below the
+        target and applies only the JSON commits after it, so
+        resolution stays O(commits-since-checkpoint); a remove wins
+        over any earlier add of the same path (the protocol's
+        file-level last-action-wins reconciliation), the latest
+        metaData and protocol win, and tombstones accumulate (paths are
+        UUID-unique, never re-added) for checkpoint retention and
+        :meth:`vacuum`. Time travel below every checkpoint replays the
+        JSONs from 0 (they are never deleted); a version below the
+        VACUUM horizon (its data files are physically gone) raises a
+        clear error instead of a missing-file scan failure.
+
+        With no commit yet, raises ``FileNotFoundError`` unless
+        ``must_exist`` is False, which returns an empty snapshot."""
+        log = log or self._list_log()
+        if not log.versions:
+            if must_exist:
+                raise FileNotFoundError(f"no Delta log under {self.root}")
+            return _Snapshot(
+                None, {}, {}, None, list(self._init_partition_cols),
+                dict(_PROTOCOL), {}, log,
+            )
+        if version is None:
+            version = log.versions[-1]
+        elif version not in log.versions:
+            raise FileNotFoundError(
+                f"version {version} not committed under {self.root}"
+            )
+        else:
             horizon = self._vacuum_horizon()
             if version < horizon:
                 raise ValueError(
@@ -237,28 +308,59 @@ class DeltaLogTable:
                     f"deleted by vacuum() and the snapshot is no longer "
                     f"reconstructible"
                 )
-            versions = [v for v in versions if v <= version]
         active: dict[str, dict] = {}
         meta: dict = {}
         tombstones: dict[str, dict] = {}
-        cp = self._latest_checkpoint(versions[-1])
-        if cp is not None:
-            cp_version, active, meta, tombstones, _proto = cp
-            versions = [v for v in versions if v > cp_version]
-        for v in versions:
-            with open(self._log_path(v), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action:
-                        active[action["add"]["path"]] = action["add"]
-                    elif "remove" in action:
-                        active.pop(action["remove"]["path"], None)
-                        tombstones[action["remove"]["path"]] = action["remove"]
-                    elif "metaData" in action:
-                        meta = action["metaData"]
-        return active, meta, tombstones
+        protocol = dict(_PROTOCOL)
+        cp = max((c for c in log.checkpoints if c <= version), default=-1)
+        if cp >= 0:
+            active, meta, tombstones, cp_protocol = self._checkpoint_state(cp)
+            protocol = cp_protocol or protocol
+        tail = [v for v in log.versions if cp < v <= version]
+        for _v, action in self._commits(tail):
+            if "add" in action:
+                active[action["add"]["path"]] = action["add"]
+            elif "remove" in action:
+                active.pop(action["remove"]["path"], None)
+                tombstones[action["remove"]["path"]] = action["remove"]
+            elif "metaData" in action:
+                meta = action["metaData"]
+            elif "protocol" in action:
+                protocol = action["protocol"]
+        return _Snapshot(
+            version,
+            active,
+            meta,
+            T.StructType.fromJson(json.loads(meta["schemaString"])),
+            meta.get("partitionColumns") or [],
+            protocol,
+            tombstones,
+            log,
+        )
+
+    def _partition_spec(self, snap: _Snapshot) -> list[str]:
+        """``snap``'s partition columns for a write: an existing
+        table's metaData wins, and a conflicting constructor spec
+        raises (the directory contract is fixed at creation)."""
+        cols = list(snap.partition_columns)
+        if (
+            snap.version is not None
+            and self._init_partition_cols
+            and self._init_partition_cols != cols
+        ):
+            raise ValueError(
+                f"table at {self.root} is partitioned by {cols}, "
+                f"not {self._init_partition_cols}; the partition "
+                f"spec is fixed at table creation"
+            )
+        return cols
+
+    def partition_columns(self) -> list[str]:
+        """The table's partition spec: metaData wins for an existing
+        table (and a conflicting constructor spec raises — the
+        directory contract is fixed at creation); the constructor's
+        spec applies to a table this handle is about to create."""
+        return self._partition_spec(self._snapshot(must_exist=False))
 
     # -- checkpoints ---------------------------------------------------------
     def _checkpoint_path(self, version: int) -> str:
@@ -281,12 +383,9 @@ class DeltaLogTable:
         except (OSError, ValueError, KeyError):
             return 0
 
-    def _latest_checkpoint(self, max_version: int):
-        """(version, active, meta, tombstones, protocol) of the newest
-        checkpoint at or below ``max_version``, or None.
-        ``_last_checkpoint`` is the spec's fast pointer; fall back to a
-        directory listing so a missing or torn pointer only costs the
-        listing, never correctness.
+    def _checkpoint_state(self, version: int) -> tuple[dict, dict, dict, dict]:
+        """(active, meta, tombstones, protocol) of the checkpoint at
+        ``version``.
 
         The handle parses a checkpoint file once: a log replay runs
         dozens of times per governed batch, and re-reading the same
@@ -296,32 +395,13 @@ class DeltaLogTable:
         rewritten at the same version (by this handle or any other), is
         parsed again. Every call returns fresh dicts, so a caller that
         mutates a replayed action cannot change the next replay."""
-        candidates = []
-        ptr = os.path.join(self.root, _LOG_DIR, "_last_checkpoint")
-        try:
-            with open(ptr, encoding="utf-8") as fh:
-                v = int(json.load(fh)["version"])
-            if v <= max_version and os.path.exists(self._checkpoint_path(v)):
-                candidates.append(v)
-        except (OSError, ValueError, KeyError):
-            pass
-        if not candidates:
-            for name in os.listdir(os.path.join(self.root, _LOG_DIR)):
-                if name.endswith(".checkpoint.parquet"):
-                    v = int(name.split(".", 1)[0])
-                    if v <= max_version:
-                        candidates.append(v)
-        if not candidates:
-            return None
-        v = max(candidates)
-        path = self._checkpoint_path(v)
+        path = self._checkpoint_path(version)
         st = os.stat(path)
-        key = (v, st.st_mtime_ns, st.st_size, st.st_ino)
+        key = (version, st.st_mtime_ns, st.st_size, st.st_ino)
         if self._parsed_checkpoint is None or self._parsed_checkpoint[0] != key:
             self._parsed_checkpoint = (key, _parse_checkpoint(path))
         active, meta, tombstones, protocol = self._parsed_checkpoint[1]
         return (
-            v,
             {p: _fresh(a) for p, a in active.items()},
             _fresh(meta),
             {p: _fresh(r) for p, r in tombstones.items()},
@@ -337,14 +417,14 @@ class DeltaLogTable:
         start here instead of replaying every JSON commit; tombstones
         are retained so checkpoint-seeded readers (incl. VACUUM) still
         know about removed-but-present files, as the spec requires.
+        ``_last_checkpoint`` is written for external readers only; this
+        reader finds checkpoints in its one listing of the log.
         Returns the checkpointed version."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        v = self.version
-        if v is None:
-            raise FileNotFoundError(f"no Delta log under {self.root}")
-        active, meta, tombstones = self._replay(v)
+        snap = self._snapshot()
+        v, meta = snap.version, snap.meta
         add_struct = pa.struct(
             [
                 ("path", pa.string()),
@@ -391,7 +471,7 @@ class DeltaLogTable:
             return list((d.get(key) or {}).items())
 
         rows = [
-            {"protocol": self._protocol(),
+            {"protocol": snap.protocol,
              "metaData": None, "add": None, "remove": None},
             {"protocol": None,
              "metaData": {
@@ -407,8 +487,8 @@ class DeltaLogTable:
              },
              "add": None, "remove": None},
         ]
-        for path in sorted(active):
-            a = active[path]
+        for path in sorted(snap.active):
+            a = snap.active[path]
             rows.append(
                 {"protocol": None, "metaData": None, "remove": None,
                  "add": {
@@ -424,8 +504,8 @@ class DeltaLogTable:
         # tombstones — dropping them would make a checkpoint-seeded
         # VACUUM blind to removed-but-present files
         cutoff = _now_ms() - _TOMBSTONE_RETENTION_MS
-        for path in sorted(tombstones):
-            r = tombstones[path]
+        for path in sorted(snap.tombstones):
+            r = snap.tombstones[path]
             if (r.get("deletionTimestamp") or 0) < cutoff:
                 continue  # expired: eligible for vacuum, not replay
             rows.append(
@@ -469,70 +549,38 @@ class DeltaLogTable:
             self.checkpoint()
         return version
 
-    def _meta_action(self, schema: T.StructType) -> dict:
+    def _commit_rebasing(
+        self, snap: _Snapshot, actions: list[dict], max_retries: int, **conflict
+    ) -> int:
+        """Commit ``actions`` on top of ``snap`` (at its version + 1).
+        With ``max_retries`` > 0 a lost put-if-absent race rebases onto
+        the new head when :meth:`_reconcile_winners` (given
+        ``conflict``) finds that every winning commit commutes with
+        this one; otherwise the racer surfaces."""
+        v = snap.version + 1
+        for attempt in range(max_retries + 1):
+            try:
+                return self._commit(v, actions)
+            except FileExistsError:
+                if attempt == max_retries:
+                    raise
+                v = self._reconcile_winners(snap, **conflict)
+
+    def _meta_action(self, snap: _Snapshot, schema: T.StructType) -> dict:
         # an overwrite keeps the table's identity and configuration
         # (spec: metaData.id is stable for the table's lifetime, and
         # dropping configuration would silently shed CHECK constraints)
-        mid, cfg, created = str(uuid.uuid4()), {}, _now_ms()
-        if self.exists():
-            _, meta, _ = self._replay()
-            mid = meta.get("id") or mid
-            cfg = dict(meta.get("configuration") or {})
-            created = meta.get("createdTime") or created
+        meta = snap.meta
         return {
             "metaData": {
-                "id": mid,
+                "id": meta.get("id") or str(uuid.uuid4()),
                 "format": {"provider": "parquet", "options": {}},
                 "schemaString": schema.json(),
-                "partitionColumns": self.partition_columns(),
-                "configuration": cfg,
-                "createdTime": created,
+                "partitionColumns": self._partition_spec(snap),
+                "configuration": dict(meta.get("configuration") or {}),
+                "createdTime": meta.get("createdTime") or _now_ms(),
             }
         }
-
-    def _protocol(self) -> dict:
-        """The table's current protocol action (latest in the log wins
-        — versions are monotonic per spec). Reverse-scans the commit
-        JSONs, stopping at the newest checkpoint (whose protocol row
-        seeds the default), so resolution stays
-        O(commits-since-checkpoint)."""
-        default = {"minReaderVersion": 1, "minWriterVersion": 2}
-        versions = self._committed_versions()
-        if not versions:
-            return default
-        cp = self._latest_checkpoint(versions[-1])
-        floor = -1
-        if cp is not None:
-            floor = cp[0]
-            if cp[4]:
-                default = cp[4]
-        for v in reversed(versions):
-            if v <= floor:
-                break
-            with open(self._log_path(v), encoding="utf-8") as fh:
-                for line in fh:
-                    if line.strip():
-                        action = json.loads(line)
-                        if "protocol" in action:
-                            return action["protocol"]
-        return default
-
-    def partition_columns(self) -> list[str]:
-        """The table's partition spec: metaData wins for an existing
-        table (and a conflicting constructor spec raises — the
-        directory contract is fixed at creation); the constructor's
-        spec applies to a table this handle is about to create."""
-        if self.exists():
-            _, meta, _ = self._replay()
-            cols = meta.get("partitionColumns") or []
-            if self._init_partition_cols and self._init_partition_cols != cols:
-                raise ValueError(
-                    f"table at {self.root} is partitioned by {cols}, "
-                    f"not {self._init_partition_cols}; the partition "
-                    f"spec is fixed at table creation"
-                )
-            return cols
-        return list(self._init_partition_cols)
 
     def _rel_from_uri(self, uri: str) -> str:
         """Table-root-relative path from an ``input_file_name()`` URI
@@ -556,11 +604,15 @@ class DeltaLogTable:
         )
 
     # -- data files ----------------------------------------------------------
-    def _stage_files(self, df: DataFrame | pa.Table, data_change: bool) -> list[dict]:
+    def _stage_files(
+        self, snap: _Snapshot, df: DataFrame | pa.Table, data_change: bool
+    ) -> list[dict]:
         """Write ``df`` as parquet part files under the table root
         (unique names; partitioned tables keep Spark's hive
-        ``col=value/`` layout) and return their ``add`` actions with
-        footer-derived stats and spec ``partitionValues``.
+        ``col=value/`` layout, per ``snap``'s partition spec) and
+        return their ``add`` actions with footer-derived stats and spec
+        ``partitionValues``. A data-changing write enforces ``snap``'s
+        CHECK constraints.
 
         A ``pyarrow.Table`` is written by the driver as one file with
         ``pq.write_table`` — no Spark job. On a partitioned table, or one
@@ -569,18 +621,17 @@ class DeltaLogTable:
         after the bytes are on disk is the same for both inputs."""
         import pyarrow.parquet as pq
 
-        pcols = self.partition_columns()
+        pcols = self._partition_spec(snap)
+        cons = _constraints(snap.meta) if data_change else {}
         schema = _schema_of(df)
         stage = os.path.join(self.root, f"_stage_{uuid.uuid4().hex}")
-        if not isinstance(df, DataFrame) and (
-            pcols or (data_change and self.constraints())
-        ):
+        if not isinstance(df, DataFrame) and (pcols or cons):
             df = self.spark.createDataFrame(df)
         if not isinstance(df, DataFrame):
             os.makedirs(stage)
             pq.write_table(df, os.path.join(stage, "part-0.parquet"))
         else:
-            self._spark_write(df, stage, pcols, data_change)
+            self._spark_write(self._with_constraint_guards(df, cons), stage, pcols)
         stats_fields = [
             f.name
             for f in schema.fields
@@ -627,15 +678,12 @@ class DeltaLogTable:
         shutil.rmtree(stage)
         return adds
 
-    def _spark_write(
-        self, df: DataFrame, stage: str, pcols: list[str], data_change: bool
-    ) -> None:
-        """Write ``df`` into ``stage`` with Spark's parquet writer."""
-        if data_change:
-            # CHECK constraints are enforced IN the write job (guard
-            # expression, no extra pass over df) — a violation aborts
-            # before any commit JSON exists
-            df = self._with_constraint_guards(df)
+    @staticmethod
+    def _spark_write(df: DataFrame, stage: str, pcols: list[str]) -> None:
+        """Write ``df`` into ``stage`` with Spark's parquet writer. CHECK
+        constraints are enforced IN the write job (the guard expression,
+        no extra pass over df), so a violation aborts before any commit
+        JSON exists; it surfaces as :class:`ConstraintViolationError`."""
         try:
             if pcols:
                 df.write.partitionBy(*pcols).parquet(stage)
@@ -655,10 +703,11 @@ class DeltaLogTable:
                 or line
             ) from None
 
-    def _remove_actions(self, paths: list[str]) -> list[dict]:
+    @staticmethod
+    def _remove_actions(paths: Iterable[str], data_change: bool = True) -> list[dict]:
         ts = _now_ms()
         return [
-            {"remove": {"path": p, "deletionTimestamp": ts, "dataChange": True}}
+            {"remove": {"path": p, "deletionTimestamp": ts, "dataChange": data_change}}
             for p in paths
         ]
 
@@ -668,11 +717,12 @@ class DeltaLogTable:
         replay the log to ``version``, read exactly the active files
         under the log's schema (schema enforcement — parquet footers do
         not get a vote)."""
-        active, meta, _ = self._replay(version)
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        if not active:
-            return self.spark.createDataFrame([], schema)
-        return self._read_files(sorted(active), schema)
+        return self._read_snapshot(self._snapshot(version))
+
+    def _read_snapshot(self, snap: _Snapshot) -> DataFrame:
+        if not snap.active:
+            return self.spark.createDataFrame([], snap.schema)
+        return self._read_files(sorted(snap.active), snap.schema)
 
     def _read_arrow(self) -> pa.Table:
         """The latest snapshot of a small unpartitioned table (the run
@@ -682,11 +732,11 @@ class DeltaLogTable:
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        active, meta, _ = self._replay()
-        schema = to_arrow_schema(
-            T.StructType.fromJson(json.loads(meta["schemaString"]))
-        )
-        paths = [os.path.join(self.root, _log_decode_path(p)) for p in sorted(active)]
+        snap = self._snapshot()
+        schema = to_arrow_schema(snap.schema)
+        paths = [
+            os.path.join(self.root, _log_decode_path(p)) for p in sorted(snap.active)
+        ]
         return pa.concat_tables(
             [schema.empty_table()] + [pq.read_table(p, schema=schema) for p in paths]
         )
@@ -697,16 +747,15 @@ class DeltaLogTable:
         semantics; it falls back to file mtimes — our writer always
         stamps commitInfo, which survives copies/rsync where mtimes
         don't). Raises if the timestamp predates the table."""
+        versions = self._list_log().versions
+        stamps = {
+            v: action["commitInfo"].get("timestamp")
+            for v, action in self._commits(versions)
+            if "commitInfo" in action
+        }
         best = None
-        for v in self._committed_versions():
-            ts = None
-            with open(self._log_path(v), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "commitInfo" in action:
-                        ts = action["commitInfo"].get("timestamp")
+        for v in versions:
+            ts = stamps.get(v)
             if ts is None:
                 ts = int(os.path.getmtime(self._log_path(v)) * 1000)
             if ts <= timestamp_ms:
@@ -725,8 +774,8 @@ class DeltaLogTable:
     def active_files(self, version: int | None = None) -> list[dict]:
         """The snapshot's add-actions (path, size, stats) — the
         data-skipping surface a planner prunes on."""
-        active, _, _ = self._replay(version)
-        return [active[p] for p in sorted(active)]
+        snap = self._snapshot(version)
+        return [snap.active[p] for p in sorted(snap.active)]
 
     def files_where(
         self, col: str, lo=None, hi=None, version: int | None = None
@@ -737,11 +786,13 @@ class DeltaLogTable:
         otherwise; either bound may be None = open). Exposed so tests
         and capacity planning can measure skipping without reading
         data; :meth:`read_where` scans exactly these files."""
-        active, meta, _ = self._replay(version)
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        pcols = meta.get("partitionColumns") or []
+        return self._files_where(self._snapshot(version), col, lo, hi)
+
+    @staticmethod
+    def _files_where(snap: _Snapshot, col: str, lo, hi) -> list[str]:
+        active, pcols = snap.active, snap.partition_columns
         dtype = next(
-            (f.dataType for f in schema.fields if f.name == col), None
+            (f.dataType for f in snap.schema.fields if f.name == col), None
         )
         c_lo, c_hi = _stat_cmp(lo), _stat_cmp(hi)
         keep = []
@@ -779,40 +830,38 @@ class DeltaLogTable:
         optimization, never a correctness decision. At 100 TB the
         driver prunes on a few bytes of log metadata instead of
         launching tasks per file."""
-        _, meta, _ = self._replay(version)
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        keep = self.files_where(col, lo, hi, version=version)
+        snap = self._snapshot(version)
+        keep = self._files_where(snap, col, lo, hi)
         cond = F.lit(True)
         if lo is not None:
             cond = cond & (F.col(col) >= F.lit(lo))
         if hi is not None:
             cond = cond & (F.col(col) <= F.lit(hi))
         if not keep:
-            return self.spark.createDataFrame([], schema)
-        return self._read_files(keep, schema).filter(cond)
+            return self.spark.createDataFrame([], snap.schema)
+        return self._read_files(keep, snap.schema).filter(cond)
 
     # -- commits ---------------------------------------------------------------
     def write(self, df: DataFrame | pa.Table) -> int:
         """Full overwrite: remove every active file, add the new ones —
         one atomic commit, old snapshots stay time-travelable. ``df``
         may be a ``pyarrow.Table`` (see :meth:`_stage_files`)."""
-        v = 0 if self.version is None else self.version + 1
-        old = list(self._replay()[0]) if self.exists() else []
-        # partition_columns() validates the constructor spec against an
-        # existing table's metaData before any file is staged
-        self.partition_columns()
-        actions = [self._meta_action(_schema_of(df))]
-        if v == 0:
-            actions.insert(
-                0, {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-            )
-        actions += self._stage_files(df, data_change=True)
-        actions += self._remove_actions(old)
+        return self._overwrite(self._snapshot(must_exist=False), df)
+
+    def _overwrite(self, snap: _Snapshot, df: DataFrame | pa.Table) -> int:
+        # _meta_action validates the constructor partition spec against
+        # an existing table's metaData before any file is staged
+        actions = [self._meta_action(snap, _schema_of(df))]
+        if snap.version is None:
+            actions.insert(0, {"protocol": dict(_PROTOCOL)})
+        actions += self._stage_files(snap, df, data_change=True)
+        actions += self._remove_actions(snap.active)
         actions.append(_commit_info("WRITE"))
-        return self._commit(v, actions)
+        return self._commit(0 if snap.version is None else snap.version + 1, actions)
 
     def _check_schema(
-        self, df: DataFrame | pa.Table, merge_schema: bool
+        self,
+        snap: _Snapshot, df: DataFrame | pa.Table, merge_schema: bool
     ) -> dict | None:
         """SCHEMA ENFORCEMENT (the Delta writer contract): an append
         whose schema differs from the log's is rejected — without this
@@ -825,8 +874,7 @@ class DeltaLogTable:
         stay rejected. Returns the new metaData action when the schema
         evolved, else None. Nullability/metadata differences are not a
         mismatch (createDataFrame defaults differ from parquet's)."""
-        _, meta, _ = self._replay()
-        current = T.StructType.fromJson(json.loads(meta["schemaString"]))
+        current = snap.schema
         schema = _schema_of(df)
         cur = {f.name: f.dataType for f in current.fields}
         new = {f.name: f.dataType for f in schema.fields}
@@ -848,7 +896,7 @@ class DeltaLogTable:
             list(current.fields)
             + [f for f in schema.fields if f.name not in cur]
         )
-        new_meta = dict(meta)
+        new_meta = dict(snap.meta)
         new_meta["schemaString"] = merged.json()
         return {"metaData": new_meta}
 
@@ -875,43 +923,32 @@ class DeltaLogTable:
         a racer, not absorb it. (A schema-evolving append is NOT
         blind — it read the schema — so retries require
         ``merge_schema=False``.)"""
-        if not self.exists():
-            return self.write(df)
-        meta_action = self._check_schema(df, merge_schema)
+        snap = self._snapshot(must_exist=False)
+        if snap.version is None:
+            return self._overwrite(snap, df)
+        meta_action = self._check_schema(snap, df, merge_schema)
         if meta_action is not None and max_retries:
             raise ValueError(
                 "merge_schema appends read table state and cannot be "
                 "blindly rebased; use max_retries=0"
             )
-        read_v = self.version
-        v = read_v + 1  # captured BEFORE staging: a racer that
-        # publishes this version first makes our commit fail, never
-        # silently land on top of a snapshot we didn't read
-        actions = self._stage_files(df, data_change=True)
+        actions = self._stage_files(snap, df, data_change=True)
         if meta_action is not None:
             actions.insert(0, meta_action)
         actions.append(_commit_info("WRITE"))
-        for _attempt in range(max_retries + 1):
-            try:
-                return self._commit(v, actions)
-            except FileExistsError:
-                if _attempt == max_retries:
-                    raise
-                # rebase: a blind append commutes with DATA landed by
-                # the racer — but NOT with a metaData/protocol change
-                # (a concurrent schema evolution would make our staged
-                # files silently stale — extra columns read as null /
-                # our intent lost). A blind append has an EMPTY read
-                # set, so reconciliation degenerates to exactly the
-                # metadata check (WriteSerializable's rule for
-                # appends).
-                v = self._reconcile_winners(read_v, removed=[])
+        # rebase: a blind append commutes with DATA landed by the racer
+        # — but NOT with a metaData/protocol change (a concurrent schema
+        # evolution would make our staged files silently stale — extra
+        # columns read as null / our intent lost). A blind append has an
+        # EMPTY read set, so reconciliation degenerates to exactly the
+        # metadata check (WriteSerializable's rule for appends).
+        return self._commit_rebasing(snap, actions, max_retries)
 
     def _reconcile_winners(
         self,
-        read_v: int,
+        snap: _Snapshot,
         *,
-        removed: list[str],
+        removed: Iterable[str] = (),
         on_cols: list[str] | None = None,
         bounds=None,
         any_add_conflicts: bool = False,
@@ -919,9 +956,10 @@ class DeltaLogTable:
         """Delta WriteSerializable LOGICAL-CONFLICT reconciliation
         after losing the put-if-absent commit race (PROTOCOL.md
         'Concurrency Control' / delta-spark's ConflictChecker):
-        inspect every commit in (read_v, head] and raise unless THIS
-        transaction commutes with all of them — in which case return
-        head+1, the rebased target version. Mirrors delta-spark's
+        inspect every commit after the transaction's snapshot ``snap``
+        up to the new head and raise unless THIS transaction commutes
+        with all of them — in which case return head+1, the rebased
+        target version. Mirrors delta-spark's
         exception taxonomy:
 
         - metaData/protocol in a winner → concurrent METADATA change
@@ -940,66 +978,50 @@ class DeltaLogTable:
         dataChange=false shuffling (OPTIMIZE) commutes unless it
         tombstoned a file this txn removes (double-remove would
         resurrect the compacted copy of rewritten rows)."""
-        head = self.version
-        active_read, meta, _ = self._replay(read_v)
-        pcols = meta.get("partitionColumns") or []
-        dtypes = {
-            f.name: f.dataType
-            for f in T.StructType.fromJson(
-                json.loads(meta["schemaString"])
-            ).fields
-        }
+        head = self._list_log().versions[-1]
+        dtypes = {f.name: f.dataType for f in snap.schema.fields}
         my_removed = set(removed)
 
         def keyed_match(add: dict) -> bool:
             return bool(on_cols) and _add_may_match(
-                add, on_cols, bounds, pcols, dtypes
+                add, on_cols, bounds, snap.partition_columns, dtypes
             )
 
-        for won in range(read_v + 1, head + 1):
-            try:
-                with open(self._log_path(won), encoding="utf-8") as fh:
-                    lines = fh.readlines()
-            except FileNotFoundError:
-                continue  # gap: racer between listdir and open
-            for line in lines:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "metaData" in action or "protocol" in action:
+        # missing_ok: a racer between the listing and the open
+        winners = range(snap.version + 1, head + 1)
+        for won, action in self._commits(winners, missing_ok=True):
+            if "metaData" in action or "protocol" in action:
+                raise ValueError(
+                    f"concurrent metadata change at version {won} of "
+                    f"{self.root}: a racing commit altered the table "
+                    f"schema/protocol; re-read the table and retry"
+                )
+            if "remove" in action:
+                p = action["remove"]["path"]
+                if p in my_removed:
                     raise ValueError(
-                        f"concurrent metadata change at version {won} of "
-                        f"{self.root}: a racing commit altered the table "
-                        f"schema/protocol; re-read the table and retry"
+                        f"concurrent delete at version {won} of "
+                        f"{self.root}: the racing commit removed "
+                        f"file(s) this transaction read and rewrote; "
+                        f"re-read the table and retry"
                     )
-                if "remove" in action:
-                    p = action["remove"]["path"]
-                    if p in my_removed:
+                if action["remove"].get("dataChange", True):
+                    prior = snap.active.get(p)
+                    if prior is not None and keyed_match(prior):
                         raise ValueError(
                             f"concurrent delete at version {won} of "
                             f"{self.root}: the racing commit removed "
-                            f"file(s) this transaction read and rewrote; "
+                            f"rows in this transaction's key range; "
                             f"re-read the table and retry"
                         )
-                    if action["remove"].get("dataChange", True):
-                        prior = active_read.get(p)
-                        if prior is not None and keyed_match(prior):
-                            raise ValueError(
-                                f"concurrent delete at version {won} of "
-                                f"{self.root}: the racing commit removed "
-                                f"rows in this transaction's key range; "
-                                f"re-read the table and retry"
-                            )
-                elif "add" in action and action["add"].get(
-                    "dataChange", True
-                ):
-                    if any_add_conflicts or keyed_match(action["add"]):
-                        raise ValueError(
-                            f"concurrent append at version {won} of "
-                            f"{self.root}: the racing commit added rows "
-                            f"this transaction should have read; re-read "
-                            f"the table and retry"
-                        )
+            elif "add" in action and action["add"].get("dataChange", True):
+                if any_add_conflicts or keyed_match(action["add"]):
+                    raise ValueError(
+                        f"concurrent append at version {won} of "
+                        f"{self.root}: the racing commit added rows "
+                        f"this transaction should have read; re-read "
+                        f"the table and retry"
+                    )
         return head + 1
 
     def insert_if_absent(
@@ -1019,34 +1041,33 @@ class DeltaLogTable:
         every winning commit is key-disjoint (no adds OR removes whose
         stats/partitions intersect this batch's key bounds — either
         could change the anti-join's answer), else raises a clear
-        concurrent-append/delete error. Result ≡ serial execution."""
-        if not self.exists():
-            return self.write(new.dropDuplicates(keys))
-        self._check_schema(new, merge_schema=False)
-        read_v = self.version
-        v = read_v + 1
+        concurrent-append/delete error. Result ≡ serial execution. The
+        key bounds it checks against are one small agg over the
+        materialized batch, taken before the first commit attempt."""
+        snap = self._snapshot(must_exist=False)
+        if snap.version is None:
+            return self._overwrite(snap, new.dropDuplicates(keys))
+        self._check_schema(snap, new, merge_schema=False)
         new = new.dropDuplicates(keys).localCheckpoint(eager=True)
         # null-safe, like dropDuplicates and upsert: a NULL key already
         # in the table is present, so a re-delivered batch adds nothing
-        present = self.read().select(*[F.col(k).alias(f"_t_{k}") for k in keys])
+        present = self._read_snapshot(snap).select(
+            *[F.col(k).alias(f"_t_{k}") for k in keys]
+        )
         missing = new.join(present, _null_safe_match(keys, "_t_"), "left_anti")
-        actions = self._stage_files(missing, data_change=True)
+        actions = self._stage_files(snap, missing, data_change=True)
         actions.append(_commit_info("MERGE"))
-        bounds = None
-        for _attempt in range(max_retries + 1):
-            try:
-                return self._commit(v, actions)
-            except FileExistsError:
-                if _attempt == max_retries:
-                    raise
-                if bounds is None:
-                    bounds = self._key_bounds(new, keys)
-                v = self._reconcile_winners(
-                    read_v, removed=[], on_cols=keys, bounds=bounds
-                )
+        bounds = self._key_bounds(new, keys) if max_retries else None
+        return self._commit_rebasing(
+            snap, actions, max_retries, on_cols=keys, bounds=bounds
+        )
 
     def _candidate_files(
-        self, match: DataFrame, on_cols: list[str], bounds=None
+        self,
+        match: DataFrame,
+        on_cols: list[str],
+        bounds=None,
+        snap: _Snapshot | None = None,
     ) -> list[str]:
         """STATS PRUNING for merge-candidate detection: a file can only
         contain a matching key if, for every key column with published
@@ -1058,17 +1079,18 @@ class DeltaLogTable:
         real Delta MERGE's file pruning. :meth:`upsert` passes the
         bounds it observed while materializing its update side; without
         them one tiny agg (:meth:`_key_bounds`) computes them.
-        Conservative: missing stats keep the file."""
-        active, meta, _ = self._replay()
-        pcols = meta.get("partitionColumns") or []
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        dtypes = {f.name: f.dataType for f in schema.fields}
+        Conservative: missing stats keep the file. ``snap`` defaults to
+        the latest snapshot."""
+        snap = snap or self._snapshot()
+        dtypes = {f.name: f.dataType for f in snap.schema.fields}
         if bounds is None:
             bounds = self._key_bounds(match, on_cols)
         return [
             path
-            for path in sorted(active)
-            if _add_may_match(active[path], on_cols, bounds, pcols, dtypes)
+            for path in sorted(snap.active)
+            if _add_may_match(
+                snap.active[path], on_cols, bounds, snap.partition_columns, dtypes
+            )
         ]
 
     @staticmethod
@@ -1086,14 +1108,14 @@ class DeltaLogTable:
 
     def _key_bounds(self, match: DataFrame, on_cols: list[str]):
         """The batch's key bounds as one agg job, for callers that do
-        not otherwise pass over ``match`` (:meth:`insert_if_absent`'s
-        retry, direct :meth:`_candidate_files` calls). :meth:`upsert`
+        not otherwise pass over ``match`` (:meth:`insert_if_absent` with
+        retries, direct :meth:`_candidate_files` calls). :meth:`upsert`
         observes the same aggregates on its materializing pass
         instead."""
         return match.agg(*self._key_bound_aggs(on_cols)).first()
 
     def _touched_files(
-        self, match: DataFrame, on_cols: list[str], bounds
+        self, snap: _Snapshot, match: DataFrame, on_cols: list[str], bounds
     ) -> list[str]:
         """Active files that contain at least one row matching
         ``match`` on ``on_cols``: stats-pruned candidates (on the
@@ -1106,12 +1128,10 @@ class DeltaLogTable:
         shuffle. The table holds each key at most once, so the semi-join
         returns at most one file name per match row; the driver
         deduplicates them instead of a ``distinct`` stage."""
-        candidates = self._candidate_files(match, on_cols, bounds)
+        candidates = self._candidate_files(match, on_cols, bounds, snap)
         if not candidates:
             return []
-        _, meta, _ = self._replay()
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        tagged = self._read_files(candidates, schema).withColumn(
+        tagged = self._read_files(candidates, snap.schema).withColumn(
             "_file", F.input_file_name()
         )
         probe = match.select(*[F.col(k).alias(f"_m_{k}") for k in on_cols])
@@ -1149,33 +1169,24 @@ class DeltaLogTable:
         overlapping ones surface the racer. Result ≡ serial
         execution (pinned in tests/test_delta_log.py)."""
         updates = dedup_on_keys(updates, keys, [F.desc(version_col)])
-        if not self.exists():
-            return self.write(updates)
-        self._check_schema(updates, merge_schema=False)
-        read_v = self.version
-        v = read_v + 1
+        snap = self._snapshot(must_exist=False)
+        if snap.version is None:
+            return self._overwrite(snap, updates)
+        self._check_schema(snap, updates, merge_schema=False)
         observed = updates.observe(_BOUNDS_METRIC, *self._key_bound_aggs(keys))
         updates = observed.localCheckpoint(eager=True)
         bounds = _observed_metrics(observed, _BOUNDS_METRIC)
-        touched = self._touched_files(updates, keys, bounds)
+        touched = self._touched_files(snap, updates, keys, bounds)
         merged = updates
         if touched:
-            _, meta, _ = self._replay()
-            schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-            touched_df = self._read_files(touched, schema)
+            touched_df = self._read_files(touched, snap.schema)
             merged = upsert_latest_wins(touched_df, updates, keys, version_col)
-        actions = self._stage_files(merged, data_change=True)
+        actions = self._stage_files(snap, merged, data_change=True)
         actions += self._remove_actions(touched)
         actions.append(_commit_info("MERGE"))
-        for _attempt in range(max_retries + 1):
-            try:
-                return self._commit(v, actions)
-            except FileExistsError:
-                if _attempt == max_retries:
-                    raise
-                v = self._reconcile_winners(
-                    read_v, removed=touched, on_cols=keys, bounds=bounds
-                )
+        return self._commit_rebasing(
+            snap, actions, max_retries, removed=touched, on_cols=keys, bounds=bounds
+        )
 
     def delete_where(self, predicate: Column, max_retries: int = 0) -> int:
         """DELETE ... WHERE p, keeping the complement (``filter(~p)`` —
@@ -1191,11 +1202,8 @@ class DeltaLogTable:
         via stats, so ANY concurrent data-changing add conflicts —
         delta-spark's rule for predicate txns without partition
         pruning). Else raises the clear concurrent-change error."""
-        if not self.exists():
-            raise FileNotFoundError(f"no Delta log under {self.root}")
-        read_v = self.version
-        v = read_v + 1
-        current = self.read().withColumn("_file", F.input_file_name())
+        snap = self._snapshot()
+        current = self._read_snapshot(snap).withColumn("_file", F.input_file_name())
         touched_rows = (
             current.filter(predicate.isNull() | predicate)
             .select("_file")
@@ -1203,35 +1211,23 @@ class DeltaLogTable:
             .collect()
         )
         touched = [self._rel_from_uri(r["_file"]) for r in touched_rows]
-        if not touched:
-            actions = [_commit_info("DELETE")]
-        else:
-            _, meta, _ = self._replay()
-            schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-            survivors = self._read_files(touched, schema).filter(~predicate)
-            actions = self._stage_files(survivors, data_change=True)
+        actions = []
+        if touched:
+            survivors = self._read_files(touched, snap.schema).filter(~predicate)
+            actions = self._stage_files(snap, survivors, data_change=True)
             actions += self._remove_actions(touched)
-            actions.append(_commit_info("DELETE"))
-        for _attempt in range(max_retries + 1):
-            try:
-                return self._commit(v, actions)
-            except FileExistsError:
-                if _attempt == max_retries:
-                    raise
-                v = self._reconcile_winners(
-                    read_v, removed=touched, any_add_conflicts=True
-                )
+        actions.append(_commit_info("DELETE"))
+        return self._commit_rebasing(
+            snap, actions, max_retries, removed=touched, any_add_conflicts=True
+        )
 
     def truncate(self) -> int:
         """DELETE FROM t: remove every active file (metadata-only —
         nothing is read or rewritten)."""
-        if not self.exists():
-            raise FileNotFoundError(f"no Delta log under {self.root}")
-        v = self.version + 1
-        old = list(self._replay()[0])
-        actions = self._remove_actions(old)
+        snap = self._snapshot()
+        actions = self._remove_actions(snap.active)
         actions.append(_commit_info("DELETE"))
-        return self._commit(v, actions)
+        return self._commit(snap.version + 1, actions)
 
     def changes(
         self,
@@ -1259,10 +1255,9 @@ class DeltaLogTable:
         committed pair)."""
         from .upsert import snapshot_changes
 
-        to_v = self.version if to_version is None else to_version
         # Vacuum guard for the WHOLE window, fast path included: the
         # add-only path reads the window's added files directly, and a
-        # file added in the window may have been tombstoned AFTER to_v
+        # file added in the window may have been tombstoned AFTER its end
         # and physically vacuumed. The horizon is the max removal
         # version of any vacuumed file, so from_version >= horizon
         # implies every add after from_version still exists (its
@@ -1276,55 +1271,37 @@ class DeltaLogTable:
                 f"have been physically deleted by vacuum() and the feed "
                 f"is no longer reconstructible"
             )
+        snap = self._snapshot(to_version)
         window_adds: list[str] = []
         add_only = True
-        for v in self._committed_versions():
-            if v <= from_version or v > to_v:
-                continue
-            with open(self._log_path(v), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action:
-                        window_adds.append(action["add"]["path"])
-                    elif "commitInfo" in action:
-                        pass
-                    else:  # remove / metaData / protocol
-                        add_only = False
-            if not add_only:
+        window = range(from_version + 1, snap.version + 1)
+        for _v, action in self._commits(window):
+            if "add" in action:
+                window_adds.append(action["add"]["path"])
+            elif "commitInfo" not in action:  # remove / metaData / protocol
+                add_only = False
                 break
-        if add_only:
-            _, meta, _ = self._replay(to_v)
-            schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-            if not window_adds:
-                empty = self.spark.createDataFrame([], schema)
-                return empty.select(
-                    *keys,
-                    *[c for c in empty.columns if c not in keys],
-                    F.lit("insert").alias("_change_type"),
-                )
-            added = self._read_files(window_adds, schema)
-            return added.select(
-                *keys,
-                *[c for c in added.columns if c not in keys],
-                F.lit("insert").alias("_change_type"),
+        if not add_only:
+            old = self._snapshot(from_version, log=snap.log)
+            return snapshot_changes(
+                self._read_snapshot(snap), self._read_snapshot(old), keys
             )
-        return snapshot_changes(self.read(to_version), self.read(from_version), keys)
+        if window_adds:
+            added = self._read_files(window_adds, snap.schema)
+        else:
+            added = self.spark.createDataFrame([], snap.schema)
+        return added.select(
+            *keys,
+            *[c for c in added.columns if c not in keys],
+            F.lit("insert").alias("_change_type"),
+        )
 
     # -- CHECK constraints ---------------------------------------------------
     def constraints(self) -> dict[str, str]:
         """Active CHECK constraints as name → SQL expression (stored
         under the spec's ``delta.constraints.<name>`` configuration
         keys)."""
-        if not self.exists():
-            return {}
-        _, meta, _ = self._replay()
-        return {
-            k[len(_CONSTRAINT_PREFIX):]: v
-            for k, v in (meta.get("configuration") or {}).items()
-            if k.startswith(_CONSTRAINT_PREFIX)
-        }
+        return _constraints(self._snapshot(must_exist=False).meta)
 
     def add_constraint(self, name: str, expr: str) -> int:
         """ALTER TABLE ADD CONSTRAINT ``name`` CHECK (``expr``):
@@ -1337,29 +1314,27 @@ class DeltaLogTable:
         job itself — zero extra passes — and a violating row aborts
         the whole commit with :class:`ConstraintViolationError` before
         any log entry exists."""
-        if not self.exists():
-            raise FileNotFoundError(f"no Delta log under {self.root}")
+        snap = self._snapshot()
         if not name or any(ch.isspace() for ch in name) or "." in name:
             raise ValueError(f"invalid constraint name: {name!r}")
-        _, meta, _ = self._replay()
-        cfg = dict(meta.get("configuration") or {})
+        cfg = dict(snap.meta.get("configuration") or {})
         key = _CONSTRAINT_PREFIX + name
         if key in cfg:
             raise ValueError(
                 f"constraint {name} already exists: {cfg[key]}"
             )
         ok = F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
-        bad = self.read().filter(~ok).limit(1).collect()
+        bad = self._read_snapshot(snap).filter(~ok).limit(1).collect()
         if bad:
             raise ConstraintViolationError(
                 f"cannot add CHECK constraint {name} ({expr}): an "
                 f"existing row violates it: {bad[0].asDict()}"
             )
         cfg[key] = expr
-        new_meta = dict(meta)
+        new_meta = dict(snap.meta)
         new_meta["configuration"] = cfg
         actions: list[dict] = []
-        proto = self._protocol()
+        proto = snap.protocol
         if proto.get("minWriterVersion", 2) < 3:
             actions.append(
                 {"protocol": {
@@ -1372,36 +1347,32 @@ class DeltaLogTable:
             "name": name, "expr": expr
         }
         actions += [{"metaData": new_meta}, info]
-        return self._commit(self.version + 1, actions)
+        return self._commit(snap.version + 1, actions)
 
     def drop_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT: removes the configuration
         entry (the protocol stays at writer 3 — spec versions never
         downgrade)."""
-        if not self.exists():
-            raise FileNotFoundError(f"no Delta log under {self.root}")
-        _, meta, _ = self._replay()
-        cfg = dict(meta.get("configuration") or {})
+        snap = self._snapshot()
+        cfg = dict(snap.meta.get("configuration") or {})
         key = _CONSTRAINT_PREFIX + name
         if key not in cfg:
             raise ValueError(f"no such constraint: {name}")
         del cfg[key]
-        new_meta = dict(meta)
+        new_meta = dict(snap.meta)
         new_meta["configuration"] = cfg
         info = _commit_info("DROP CONSTRAINT")
         info["commitInfo"]["operationParameters"] = {"name": name}
-        return self._commit(
-            self.version + 1, [{"metaData": new_meta}, info]
-        )
+        return self._commit(snap.version + 1, [{"metaData": new_meta}, info])
 
-    def _with_constraint_guards(self, df: DataFrame) -> DataFrame:
-        """Wrap ``df`` so every active CHECK constraint is asserted on
+    @staticmethod
+    def _with_constraint_guards(df: DataFrame, cons: dict[str, str]) -> DataFrame:
+        """Wrap ``df`` so every CHECK constraint in ``cons`` is asserted on
         each row inside whatever job writes it: the first column is
         rewrapped in assert-guard CASE layers whose value is unchanged
         when all constraints hold and whose evaluation raises (with
         the violating row's JSON) when one is strictly FALSE. NULL
         evaluations pass, per SQL CHECK."""
-        cons = self.constraints()
         if not cons:
             return df
         c0 = df.columns[0]
@@ -1441,30 +1412,26 @@ class DeltaLogTable:
         the current version is returned (Delta's OPTIMIZE likewise
         never rewrites a one-file bin)."""
         _check_target_bytes(target_file_bytes)
-        if not self.exists():
-            raise FileNotFoundError(f"no Delta log under {self.root}")
-        head = self.version
-        active, meta, _ = self._replay()
-        total = sum(a["size"] for a in active.values())
+        snap = self._snapshot()
+        total = sum(a["size"] for a in snap.active.values())
         n_out = max(1, round(total / target_file_bytes))
-        if not sort_cols and len(active) <= n_out:
-            return head
-        v = head + 1
-        df = self.read()
+        if not sort_cols and len(snap.active) <= n_out:
+            return snap.version
+        df = self._read_snapshot(snap)
         if sort_cols:
             df = df.repartitionByRange(n_out, *sort_cols)
         else:
             df = df.coalesce(n_out)
-        actions = self._stage_files(df, data_change=False)
-        for a in actions:
-            a["add"]["dataChange"] = False
-        ts = _now_ms()
-        actions += [
-            {"remove": {"path": p, "deletionTimestamp": ts, "dataChange": False}}
-            for p in active
-        ]
-        actions.append(_commit_info("OPTIMIZE"))
-        return self._commit(v, actions)
+        return self._rewrite_all(snap, df, _commit_info("OPTIMIZE"))
+
+    def _rewrite_all(self, snap: _Snapshot, df: DataFrame, info: dict) -> int:
+        """OPTIMIZE's commit: ``df`` (the snapshot's rows, re-laid-out)
+        replaces every active file, ``dataChange: false`` on both
+        sides."""
+        actions = self._stage_files(snap, df, data_change=False)
+        actions += self._remove_actions(snap.active, data_change=False)
+        actions.append(info)
+        return self._commit(snap.version + 1, actions)
 
     def zorder_by(
         self,
@@ -1512,14 +1479,11 @@ class DeltaLogTable:
         any orderable type, so skewed or string facets cluster just as
         tightly. Returns the committed version."""
         _check_target_bytes(target_file_bytes)
-        if not self.exists():
-            raise FileNotFoundError(f"no Delta log under {self.root}")
+        snap = self._snapshot()
         if not cols:
             raise ValueError("zorder_by needs at least one column")
-        active, meta, _ = self._replay()
-        schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        pcols = meta.get("partitionColumns") or []
-        by_name = {f.name: f.dataType for f in schema.fields}
+        pcols = snap.partition_columns
+        by_name = {f.name: f.dataType for f in snap.schema.fields}
         for c in cols:
             if c not in by_name:
                 raise ValueError(f"unknown z-order column: {c}")
@@ -1528,14 +1492,13 @@ class DeltaLogTable:
                     f"{c} is a partition column — already pruned by the "
                     "hive layout; z-order the non-partition columns"
                 )
-        v = self.version + 1
-        total = sum(a["size"] for a in active.values())
+        total = sum(a["size"] for a in snap.active.values())
         n_rows = sum(
             json.loads(a.get("stats") or "{}").get("numRecords") or 0
-            for a in active.values()
+            for a in snap.active.values()
         )
         n_out = max(1, round(total / target_file_bytes))
-        df = self.read()
+        df = self._read_snapshot(snap)
         ranks = [
             _range_rank(
                 df, c, by_name[c], 1 << bits, n_rows, sample_cap
@@ -1556,20 +1519,11 @@ class DeltaLogTable:
             .sortWithinPartitions(*pcols, zcol)
             .drop(zcol)
         )
-        actions = self._stage_files(clustered, data_change=False)
-        for a in actions:
-            a["add"]["dataChange"] = False
-        ts = _now_ms()
-        actions += [
-            {"remove": {"path": p, "deletionTimestamp": ts, "dataChange": False}}
-            for p in active
-        ]
         info = _commit_info("OPTIMIZE")
         info["commitInfo"]["operationParameters"] = {
             "zOrderBy": json.dumps(cols)
         }
-        actions.append(info)
-        return self._commit(v, actions)
+        return self._rewrite_all(snap, clustered, info)
 
     def vacuum(self, retention_ms: int = _TOMBSTONE_RETENTION_MS) -> list[str]:
         """VACUUM: physically delete tombstoned data files whose
@@ -1586,8 +1540,7 @@ class DeltaLogTable:
         missing-file scan failure. Bounds disk growth: without vacuum a
         high-churn table retains every rewritten file forever. Returns
         the relative paths it deleted."""
-        if not self.exists():
-            raise FileNotFoundError(f"no Delta log under {self.root}")
+        snap = self._snapshot()
         cutoff = _now_ms() - retention_ms
         # full JSON scan (maintenance op): tombstones AND the version
         # each remove landed in — needed for the exact horizon; the
@@ -1595,21 +1548,14 @@ class DeltaLogTable:
         active_paths: set[str] = set()
         removed_at: dict[str, int] = {}
         removed_ts: dict[str, int] = {}
-        for v in self._committed_versions():
-            with open(self._log_path(v), encoding="utf-8") as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action:
-                        active_paths.add(action["add"]["path"])
-                    elif "remove" in action:
-                        p = action["remove"]["path"]
-                        active_paths.discard(p)
-                        removed_at[p] = v
-                        removed_ts[p] = action["remove"].get(
-                            "deletionTimestamp"
-                        ) or 0
+        for v, action in self._commits(snap.log.versions):
+            if "add" in action:
+                active_paths.add(action["add"]["path"])
+            elif "remove" in action:
+                p = action["remove"]["path"]
+                active_paths.discard(p)
+                removed_at[p] = v
+                removed_ts[p] = action["remove"].get("deletionTimestamp") or 0
         doomed = []
         for p in sorted(removed_ts):
             if p in active_paths or removed_ts[p] >= cutoff:
@@ -1632,14 +1578,16 @@ class DeltaLogTable:
         with open(tmp, "w", encoding="utf-8") as fh:
             json.dump({"minVersion": horizon}, fh)
         os.rename(tmp, sidecar)
-        # audit commit (commitInfo-only, like delta-spark's VACUUM END)
+        # audit commit (commitInfo-only, like delta-spark's VACUUM END):
+        # it reads no table state and the deletes are done, so it lands
+        # on the newest head rather than failing on a racer
         info = _commit_info("VACUUM END")
         info["commitInfo"]["operationParameters"] = {
             "retentionMs": retention_ms,
             "numDeletedFiles": len(doomed),
             "minTimeTravelVersion": horizon,
         }
-        self._commit(self.version + 1, [info])
+        self._commit(self._list_log().versions[-1] + 1, [info])
         return doomed
 
 
@@ -1849,6 +1797,15 @@ def _null_safe_match(keys: list[str], prefix: str) -> Column:
     for k in keys[1:]:
         cond = cond & F.col(k).eqNullSafe(F.col(f"{prefix}{k}"))
     return cond
+
+
+def _constraints(meta: dict) -> dict[str, str]:
+    """CHECK constraints in ``meta``'s configuration, name → SQL."""
+    return {
+        k[len(_CONSTRAINT_PREFIX):]: v
+        for k, v in (meta.get("configuration") or {}).items()
+        if k.startswith(_CONSTRAINT_PREFIX)
+    }
 
 
 def _check_target_bytes(target_file_bytes: int) -> None:

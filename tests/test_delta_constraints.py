@@ -78,7 +78,7 @@ def test_add_rejects_violating_existing_rows(spark, tmp_path):
 
 def test_protocol_upgrade_and_checkpoint_roundtrip(spark, tmp_path):
     t = _mk(spark, tmp_path)
-    assert t._protocol()["minWriterVersion"] == 2
+    assert t._snapshot().protocol["minWriterVersion"] == 2
     v = t.add_constraint("tier_enum", "tier in ('a','b','c','d','e')")
 
     log = tmp_path / "t" / "_delta_log" / f"{v:020d}.json"
@@ -95,7 +95,7 @@ def test_protocol_upgrade_and_checkpoint_roundtrip(spark, tmp_path):
     assert fresh.constraints() == {
         "tier_enum": "tier in ('a','b','c','d','e')"
     }
-    assert fresh._protocol()["minWriterVersion"] == 3
+    assert fresh._snapshot().protocol["minWriterVersion"] == 3
     # the checkpoint itself carries the upgraded protocol row (what an
     # external checkpoint-seeded reader sees)
     import pyarrow.parquet as pq
@@ -141,7 +141,7 @@ def test_merge_paths_enforce_too(spark, tmp_path):
 def test_drop_constraint_and_overwrite_keep_identity(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.add_constraint("qty_pos", "qty > 0")
-    _, meta_before, _ = t._replay()
+    meta_before = t._snapshot().meta
 
     # overwrite keeps configuration AND table id (spec: stable id)
     t.write(
@@ -149,7 +149,7 @@ def test_drop_constraint_and_overwrite_keep_identity(spark, tmp_path):
             [(1, 5, "a")], "id long, qty int, tier string"
         )
     )
-    _, meta_after, _ = t._replay()
+    meta_after = t._snapshot().meta
     assert meta_after["id"] == meta_before["id"]
     assert t.constraints() == {"qty_pos": "qty > 0"}
     with pytest.raises(ConstraintViolationError):
@@ -167,7 +167,7 @@ def test_drop_constraint_and_overwrite_keep_identity(spark, tmp_path):
         )
     )  # now lands
     # protocol never downgrades
-    assert t._protocol()["minWriterVersion"] == 3
+    assert t._snapshot().protocol["minWriterVersion"] == 3
     with pytest.raises(ValueError, match="no such constraint"):
         t.drop_constraint("qty_pos")
 

@@ -261,9 +261,9 @@ def test_commit_is_put_if_absent(spark, tmp_path):
 
     real_stage = t1._stage_files
 
-    def stage_and_lose_race(df, data_change):
+    def stage_and_lose_race(snap, df, data_change):
         t2.append(spark.createDataFrame([(99,)], "id long"))  # racer wins v1
-        return real_stage(df, data_change)
+        return real_stage(snap, df, data_change)
 
     t1._stage_files = stage_and_lose_race
     with pytest.raises(FileExistsError):
@@ -271,6 +271,96 @@ def test_commit_is_put_if_absent(spark, tmp_path):
     # the winner's commit is intact and readable; the loser's rows never
     # became visible
     assert {r["id"] for r in t2.read().collect()} == {1, 99}
+
+
+def race_after_snapshot(table, racer):
+    """Run ``racer`` (a commit through another handle) right after
+    ``table``'s next operation resolves its snapshot."""
+    resolve = table._snapshot
+    fired = []
+
+    def resolve_then_race(*args, **kwargs):
+        snap = resolve(*args, **kwargs)
+        if not fired:
+            fired.append(1)
+            racer()
+        return snap
+
+    table._snapshot = resolve_then_race
+
+
+@pytest.mark.parametrize(
+    "max_retries, error, match",
+    [(0, FileExistsError, None), (1, ValueError, "concurrent metadata change")],
+)
+def test_append_loses_to_a_schema_change_after_its_snapshot(
+    spark, tmp_path, max_retries, error, match
+):
+    """An overwrite with another schema that lands after an append read
+    its snapshot takes the version the append targets: the append
+    fails instead of committing its (id long, s string) files on top
+    of the racer's (id string, d double) table, which every later read
+    would then fail on."""
+    root = str(tmp_path / "t")
+    t = DeltaLogTable(spark, root)
+    t.write(spark.createDataFrame([(1, "a")], "id long, s string"))
+    racer = DeltaLogTable(spark, root)
+    race_after_snapshot(
+        t, lambda: racer.write(spark.createDataFrame([("x", 0.5)], "id string, d double"))
+    )
+    with pytest.raises(error, match=match):
+        t.append(
+            spark.createDataFrame([(2, "b")], "id long, s string"),
+            max_retries=max_retries,
+        )
+    assert t.version == 1
+    assert t.read().columns == ["id", "d"]
+    assert _rows(t.read()) == [("x", 0.5)]
+
+
+def test_each_operation_lists_the_log_once(spark, tmp_path, monkeypatch):
+    """Every operation resolves one snapshot from one listing of
+    ``_delta_log``: validation, reads, staging and the commit target
+    all come from it."""
+    root = str(tmp_path / "t")
+    log_dir = os.path.join(root, "_delta_log")
+    listings = []
+    listdir = os.listdir
+
+    def counting_listdir(path="."):
+        if os.path.abspath(os.fspath(path)) == log_dir:
+            listings.append(path)
+        return listdir(path)
+
+    monkeypatch.setattr(os, "listdir", counting_listdir)
+    t = DeltaLogTable(spark, root, checkpoint_interval=None)
+
+    def rows(ids, ver, val):
+        return spark.createDataFrame([(i, ver, val) for i in ids], _SCHEMA).coalesce(1)
+
+    def listed(op):
+        listings.clear()
+        op()
+        return len(listings)
+
+    counts = {
+        "write (new table)": listed(lambda: t.write(rows([0, 1], 1, "a"))),
+        "write": listed(lambda: t.write(rows([0, 1, 2], 1, "a"))),
+        "append": listed(lambda: t.append(rows([3], 1, "b"))),
+        "insert_if_absent": listed(
+            lambda: t.insert_if_absent(rows([3, 4], 1, "c"), ["id"])
+        ),
+        "upsert": listed(lambda: t.upsert(rows([1, 5], 2, "d"), ["id"], "ver")),
+        "delete_where": listed(lambda: t.delete_where(F.col("id") == 0)),
+        "compact": listed(lambda: t.compact()),
+        "checkpoint": listed(t.checkpoint),
+        "changes (add-only window)": listed(
+            lambda: t.changes(["id"], from_version=1, to_version=3)
+        ),
+        "changes": listed(lambda: t.changes(["id"], from_version=0)),
+    }
+    assert counts == {op: 1 for op in counts}
+    assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 3, 4, 5]
 
 
 def test_stats_carry_footer_minmax(spark, tmp_path):
@@ -469,11 +559,17 @@ def test_checkpoint_bounds_replay_and_preserves_state(spark, tmp_path):
     for v in (0, 5, 10, 17, 20, 24):
         assert _rows(t.read(version=v)) == _rows(plain.read(version=v)), v
     # checkpoint-seeded replay of THIS table matches forcing the same
-    # table through pure-JSON replay, action for action
-    cp_state, cp_meta, cp_tomb = t._replay()
-    t_json_only = DeltaLogTable(spark, str(tmp_path / "t"))
-    t_json_only._latest_checkpoint = lambda mv: None
-    js_state, js_meta, js_tomb = t_json_only._replay()
+    # table through pure-JSON replay (a handle over a copy of its log
+    # without the checkpoint files), action for action
+    cp = t._snapshot()
+    cp_state, cp_meta, cp_tomb = cp.active, cp.meta, cp.tombstones
+    json_log = tmp_path / "json_only" / "_delta_log"
+    json_log.mkdir(parents=True)
+    for name in os.listdir(log_dir):
+        if name.endswith(".json"):
+            (json_log / name).write_bytes((log_dir / name).read_bytes())
+    js = DeltaLogTable(spark, str(tmp_path / "json_only"))._snapshot()
+    js_state, js_meta, js_tomb = js.active, js.meta, js.tombstones
     assert {p: a["size"] for p, a in cp_state.items()} == {
         p: a["size"] for p, a in js_state.items()
     }
@@ -585,7 +681,7 @@ def test_checkpoint_retains_remove_tombstones(spark, tmp_path):
     # the tombstoned file is still on disk (not yet vacuumed)
     assert os.path.exists(tmp_path / "t" / removes[0]["path"])
     # checkpoint-seeded replay carries the tombstone
-    _, _, tombs = t._replay()
+    tombs = t._snapshot().tombstones
     assert set(tombs) == {removes[0]["path"]}
     # and vacuum driven off that state deletes exactly that file
     deleted = t.vacuum(retention_ms=0)
@@ -623,7 +719,7 @@ def test_partitioned_table_matches_unpartitioned(spark, tmp_path):
         stats = json.loads(add["stats"])
         assert "val" not in stats["minValues"] and "id" in stats["minValues"]
     # metaData records the spec
-    meta = t2._replay()[1]
+    meta = t2._snapshot().meta
     assert meta["partitionColumns"] == ["val"]
     # conflicting re-open spec raises before writing anything
     with pytest.raises(ValueError, match="partitioned by"):
@@ -737,18 +833,18 @@ def test_blind_append_retry_rebases_onto_racer(spark, tmp_path):
 
     real_stage = t1._stage_files
 
-    def stage_and_lose_race(df, data_change):
+    def stage_and_lose_race(snap, df, data_change):
         t2.append(spark.createDataFrame([(99,)], "id long"))  # racer wins
-        return real_stage(df, data_change)
+        return real_stage(snap, df, data_change)
 
     t1._stage_files = stage_and_lose_race
     v = t1.append(spark.createDataFrame([(2,)], "id long"), max_retries=1)
     assert v == 2  # rebased past the racer's v1
     assert {r["id"] for r in t1.read().collect()} == {1, 2, 99}
     # retries exhausted -> the racer still surfaces
-    def stage_and_lose_twice(df, data_change):
+    def stage_and_lose_twice(snap, df, data_change):
         t2.append(spark.createDataFrame([(100,)], "id long"))
-        return real_stage(df, data_change)
+        return real_stage(snap, df, data_change)
 
     t1._stage_files = stage_and_lose_twice
     t1._commit_orig = t1._commit
@@ -756,7 +852,7 @@ def test_blind_append_retry_rebases_onto_racer(spark, tmp_path):
     def steal_then_commit(version, actions):
         # racer claims every version t1 targets, forever
         t2._commit(version, t2._stage_files(
-            spark.createDataFrame([(200 + version,)], "id long"), True
+            t2._snapshot(), spark.createDataFrame([(200 + version,)], "id long"), True
         ) + [{"commitInfo": {"timestamp": 0, "operation": "WRITE",
                              "operationParameters": {}, "engineInfo": "racer"}}])
         return t1._commit_orig(version, actions)
@@ -872,7 +968,7 @@ def test_append_retry_rejects_concurrent_metadata_change(spark, tmp_path):
 
     real_stage = t1._stage_files
 
-    def stage_and_lose_to_schema_change(df, data_change):
+    def stage_and_lose_to_schema_change(snap, df, data_change):
         # racer commits a merge_schema append (metaData action) first
         t2.append(
             spark.createDataFrame(
@@ -880,7 +976,7 @@ def test_append_retry_rejects_concurrent_metadata_change(spark, tmp_path):
             ),
             merge_schema=True,
         )
-        return real_stage(df, data_change)
+        return real_stage(snap, df, data_change)
 
     t1._stage_files = stage_and_lose_to_schema_change
     with pytest.raises(ValueError, match="concurrent metadata change"):
@@ -970,11 +1066,11 @@ def _race(loser_table, winner_fn):
     real_stage = loser_table._stage_files
     fired = []
 
-    def stage_and_lose(df, data_change):
+    def stage_and_lose(snap, df, data_change):
         if not fired:
             fired.append(1)
             winner_fn()
-        return real_stage(df, data_change)
+        return real_stage(snap, df, data_change)
 
     loser_table._stage_files = stage_and_lose
     return real_stage
@@ -1190,7 +1286,7 @@ def test_cached_checkpoint_sees_another_handles_later_checkpoint(spark, tmp_path
     b.append(_arrow_rows([2], ["b"]))
     b.write(_arrow_rows([3], ["c"]))
     assert b.checkpoint() == 2
-    assert a._replay() == b._replay()
+    assert a._snapshot() == b._snapshot()
     assert _rows(a.read()) == [(3, "c")]
 
 
@@ -1222,14 +1318,15 @@ def test_mutating_a_replayed_snapshot_leaves_the_next_replay_alone(spark, tmp_pa
     t.append(_arrow_rows([3], ["c"]))
     t.write(_arrow_rows([4], ["d"]))  # leaves tombstones
     t.checkpoint()
-    before = t._replay()
+    before = t._snapshot()
     files_before = t.active_files()
-    assert before[2] and files_before[0]["partitionValues"] == {"val": "d"}
+    assert before.tombstones and files_before[0]["partitionValues"] == {"val": "d"}
 
     for add in t.active_files():
         add["stats"] = "{}"
         add["partitionValues"]["val"] = "zz"
-    active, meta, tombstones = t._replay()
+    snap = t._snapshot()
+    active, meta, tombstones = snap.active, snap.meta, snap.tombstones
     for add in active.values():
         add["size"] = -1
     active.clear()
@@ -1240,5 +1337,5 @@ def test_mutating_a_replayed_snapshot_leaves_the_next_replay_alone(spark, tmp_pa
         remove["path"] = "gone"
     tombstones.clear()
 
-    assert t._replay() == before
+    assert t._snapshot() == before
     assert t.active_files() == files_before

@@ -52,6 +52,28 @@ def _sixteen_file_target(t):
     return max(1, total // 16)
 
 
+def test_zorder_loses_to_an_append_after_its_snapshot(spark, tmp_path):
+    """An append that lands after zorder_by read its snapshot takes the
+    version the OPTIMIZE targets: zorder_by raises instead of
+    committing a dataChange=false rewrite that copies the racer's rows
+    while the racer's own file stays active (rows doubled)."""
+    from tests.test_delta_log import race_after_snapshot
+
+    schema = "row_id long, x int, y int"
+    base = [(i, i % 5, i // 5) for i in range(20)]
+    raced = [(100, 0, 0), (101, 4, 3)]
+    root = str(tmp_path / "t")
+    t = DeltaLogTable(spark, root)
+    t.write(spark.createDataFrame(base, schema))
+    racer = DeltaLogTable(spark, root)
+    race_after_snapshot(t, lambda: racer.append(spark.createDataFrame(raced, schema)))
+    with pytest.raises(FileExistsError):
+        t.zorder_by(["x", "y"])
+    got = t.read()
+    assert got.select("row_id").distinct().count() == got.count() == 22
+    assert _rows(got) == sorted(base + raced)
+
+
 def test_zorder_preserves_rows_marks_no_data_change(spark, tmp_path):
     t = DeltaLogTable(spark, str(tmp_path / "t"))
     df = _grid_df(spark, side=16)

@@ -33,9 +33,9 @@ ROOT_SCRIPTS = [
     *sorted(p.relative_to(REPO).as_posix() for p in (REPO / "perfbench").glob("*.py")),
 ]
 
-# Both are reached only by their own tests and are the next deletions
-# of ROADMAP item 4. Delete a module, then drop it from this set.
-UNREACHED = {"operators.rasters", "sources.skipping"}
+# Reached only by its own tests: the next deletion of ROADMAP item 4.
+# Delete a module, then drop it from this set.
+UNREACHED = {"operators.rasters"}
 
 
 def _package_modules() -> dict[str, Path]:
