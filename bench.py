@@ -13,7 +13,11 @@ trees by one-off Catalyst analysis + whole-stage-codegen compilation.
 (default 5, $SPARK_GRAFT_BENCH_WARM_ITERS) with per-query min/max in
 ``queries_warm_spread`` — two rounds of verdicts had to dismiss 1.5-2x
 single-shot warm swings as VM noise by reading git logs; medians make a
-per-query regression falsifiable from one artifact. The steady-state
+per-query regression falsifiable from one artifact. A warm iteration
+of a row the registry plan cache holds (42 of 50) replays the row's
+analyzed plan, so ``queries_warm`` times optimization and execution,
+not plan building; warm medians from before the cache are not
+comparable for those rows. The steady-state
 median is what a long-running job on a 100 TB corpus actually
 experiences. ``loadavg`` records the 1-minute load average before and
 after the run so a contended box self-identifies in the artifact, and

@@ -129,6 +129,50 @@ class _Snapshot:
     tombstones: dict[str, dict]
     log: _Listing
 
+    def advanced(self, version: int, actions: Iterable[dict]) -> "_Snapshot":
+        """This snapshot with ``actions`` committed on top as ``version``
+        (new dicts; the action dicts themselves are shared)."""
+        log = _Listing(self.log.versions + (version,), self.log.checkpoints)
+        return _replayed(
+            version, dict(self.active), self.meta, dict(self.tombstones),
+            self.protocol, log, actions,
+        )
+
+
+def _replayed(
+    version: int,
+    active: dict[str, dict],
+    meta: dict,
+    tombstones: dict[str, dict],
+    protocol: dict,
+    log: _Listing,
+    actions: Iterable[dict],
+) -> _Snapshot:
+    """The snapshot at ``version``: ``actions`` replayed in log order
+    onto the given state (``active`` and ``tombstones`` in place). A
+    remove wins over any earlier add of the same path, and the latest
+    metaData and protocol win."""
+    for action in actions:
+        if "add" in action:
+            active[action["add"]["path"]] = action["add"]
+        elif "remove" in action:
+            active.pop(action["remove"]["path"], None)
+            tombstones[action["remove"]["path"]] = action["remove"]
+        elif "metaData" in action:
+            meta = action["metaData"]
+        elif "protocol" in action:
+            protocol = action["protocol"]
+    return _Snapshot(
+        version,
+        active,
+        meta,
+        T.StructType.fromJson(json.loads(meta["schemaString"])),
+        meta.get("partitionColumns") or [],
+        protocol,
+        tombstones,
+        log,
+    )
+
 
 class ConstraintViolationError(ValueError):
     """A CHECK constraint rejected a write — the commit never happened
@@ -317,25 +361,9 @@ class DeltaLogTable:
             active, meta, tombstones, cp_protocol = self._checkpoint_state(cp)
             protocol = cp_protocol or protocol
         tail = [v for v in log.versions if cp < v <= version]
-        for _v, action in self._commits(tail):
-            if "add" in action:
-                active[action["add"]["path"]] = action["add"]
-            elif "remove" in action:
-                active.pop(action["remove"]["path"], None)
-                tombstones[action["remove"]["path"]] = action["remove"]
-            elif "metaData" in action:
-                meta = action["metaData"]
-            elif "protocol" in action:
-                protocol = action["protocol"]
-        return _Snapshot(
-            version,
-            active,
-            meta,
-            T.StructType.fromJson(json.loads(meta["schemaString"])),
-            meta.get("partitionColumns") or [],
-            protocol,
-            tombstones,
-            log,
+        return _replayed(
+            version, active, meta, tombstones, protocol, log,
+            (a for _v, a in self._commits(tail)),
         )
 
     def _partition_spec(self, snap: _Snapshot) -> list[str]:
@@ -420,10 +448,12 @@ class DeltaLogTable:
         ``_last_checkpoint`` is written for external readers only; this
         reader finds checkpoints in its one listing of the log.
         Returns the checkpointed version."""
+        return self._write_checkpoint(self._snapshot())
+
+    def _write_checkpoint(self, snap: _Snapshot) -> int:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        snap = self._snapshot()
         v, meta = snap.version, snap.meta
         add_struct = pa.struct(
             [
@@ -527,12 +557,21 @@ class DeltaLogTable:
         os.rename(ptr_tmp, os.path.join(self.root, _LOG_DIR, "_last_checkpoint"))
         return v
 
-    def _commit(self, version: int, actions: list[dict]) -> int:
+    def _commit(
+        self, version: int, actions: list[dict], base: _Snapshot | None = None
+    ) -> int:
         """Atomic put-if-absent of ``<version>.json``: write a temp
         file, hard-link it to the final name (fails with
         FileExistsError if a concurrent writer won), unlink the temp.
         A torn temp file is invisible to readers — only the link
-        publishes."""
+        publishes.
+
+        On every ``checkpoint_interval``-th version the checkpoint is
+        written from ``base`` (the snapshot the operation read) plus
+        ``actions`` when ``base`` is the version just below, with no
+        second listing or replay of the log; otherwise (a rebased
+        commit, or no snapshot at hand) :meth:`checkpoint` resolves
+        the newest snapshot itself."""
         tmp = self._log_path(version) + f".{uuid.uuid4().hex}.tmp"
         with open(tmp, "w", encoding="utf-8") as fh:
             for action in actions:
@@ -546,7 +585,10 @@ class DeltaLogTable:
             and version > 0
             and version % self.checkpoint_interval == 0
         ):
-            self.checkpoint()
+            if base is not None and base.version == version - 1:
+                self._write_checkpoint(base.advanced(version, actions))
+            else:
+                self.checkpoint()
         return version
 
     def _commit_rebasing(
@@ -560,7 +602,7 @@ class DeltaLogTable:
         v = snap.version + 1
         for attempt in range(max_retries + 1):
             try:
-                return self._commit(v, actions)
+                return self._commit(v, actions, snap)
             except FileExistsError:
                 if attempt == max_retries:
                     raise
@@ -857,7 +899,9 @@ class DeltaLogTable:
         actions += self._stage_files(snap, df, data_change=True)
         actions += self._remove_actions(snap.active)
         actions.append(_commit_info("WRITE"))
-        return self._commit(0 if snap.version is None else snap.version + 1, actions)
+        return self._commit(
+            0 if snap.version is None else snap.version + 1, actions, snap
+        )
 
     def _check_schema(
         self,
@@ -1227,7 +1271,7 @@ class DeltaLogTable:
         snap = self._snapshot()
         actions = self._remove_actions(snap.active)
         actions.append(_commit_info("DELETE"))
-        return self._commit(snap.version + 1, actions)
+        return self._commit(snap.version + 1, actions, snap)
 
     def changes(
         self,
@@ -1347,7 +1391,7 @@ class DeltaLogTable:
             "name": name, "expr": expr
         }
         actions += [{"metaData": new_meta}, info]
-        return self._commit(snap.version + 1, actions)
+        return self._commit(snap.version + 1, actions, snap)
 
     def drop_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT: removes the configuration
@@ -1363,7 +1407,7 @@ class DeltaLogTable:
         new_meta["configuration"] = cfg
         info = _commit_info("DROP CONSTRAINT")
         info["commitInfo"]["operationParameters"] = {"name": name}
-        return self._commit(snap.version + 1, [{"metaData": new_meta}, info])
+        return self._commit(snap.version + 1, [{"metaData": new_meta}, info], snap)
 
     @staticmethod
     def _with_constraint_guards(df: DataFrame, cons: dict[str, str]) -> DataFrame:
@@ -1431,7 +1475,7 @@ class DeltaLogTable:
         actions = self._stage_files(snap, df, data_change=False)
         actions += self._remove_actions(snap.active, data_change=False)
         actions.append(info)
-        return self._commit(snap.version + 1, actions)
+        return self._commit(snap.version + 1, actions, snap)
 
     def zorder_by(
         self,
@@ -1830,7 +1874,7 @@ def _observed_metrics(df: DataFrame, name: str) -> dict:
     which every task closure that captures the SparkSession — a Spark ML
     model keeps one in its training summary — fails to serialize.)"""
     jrow = df._jdf.queryExecution().observedMetrics().apply(name)
-    sql_utils = df.sparkSession._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+    sql_utils = getattr(df.sparkSession._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
     return CPickleSerializer().loads(sql_utils.toPyRow(jrow)).asDict()
 
 

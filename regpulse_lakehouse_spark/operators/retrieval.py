@@ -174,8 +174,8 @@ def _fs(spark, path: str):
     layouts behave identically (the round-4 layout lesson)."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p.getFileSystem(conf), jvm.org.apache.hadoop.fs.Path
+    path_cls = getattr(jvm, "org.apache.hadoop.fs.Path")
+    return jvm, path_cls(path).getFileSystem(conf), path_cls
 
 
 def _all_committed(spark, path: str) -> dict[int, tuple[str, str]]:

@@ -12,14 +12,51 @@ Conventions that keep the differential check stable:
   so parallel-sum reassociation can't flip a hash;
 - timestamps in outputs are formatted to ISO strings;
 - ordered outputs carry unique-key tie-breakers.
+
+Plan cache. ``Query.fn`` is the row's function behind a per-session
+cache of its analyzed logical plan, keyed by (session, row name,
+``abspath(sf_dir)``). The first call builds the row as written and
+remembers ``queryExecution().analyzed()``. A later call with the same
+key returns a new DataFrame over that plan (``Dataset.ofRows`` on the
+session the first build's DataFrame belongs to) and does not call the
+row's function. That is a fresh QueryExecution: optimization, physical
+planning, AQE and every Spark job still run against the parquet, and no
+result or shuffle is reused; only the Python-side plan assembly and
+Catalyst analysis are skipped.
+
+- A plan is cached only when every leaf, in the main tree and in every
+  subquery, is a ``LocalRelation`` or a ``LogicalRelation`` over local
+  files under ``sf_dir``. A row that reads a ``LogicalRDD`` (a
+  checkpoint) or staged files elsewhere is called on every request, as
+  before; that verdict is remembered, so the plan walk runs once.
+- A hit must match what the first build ran under:
+  ``session.stat_fingerprint(sf_dir)`` (taken before the build, so a
+  file rewritten in place or added misses) and the content hash of the
+  SQL conf of the calling and the replaying session (taken after it,
+  so a conf the row sets itself does not miss forever). Any difference
+  rebuilds the row and replaces the entry.
+- The row's function is not called on a hit, so a row's plan may
+  depend only on ``sf_dir``'s files, the session conf and constants.
+  The whole of ``sf_dir`` is fingerprinted, so a driver-side read of
+  any file there during the build is covered too.
+- ``tmpstate.cleanup()`` empties the cache; ``PLAN_CACHE_STATS``
+  counts hits and misses for profiling.
 """
 
 from __future__ import annotations
 
+import collections
+import functools
+import os
+import threading
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .. import tmpstate
+from ..session import stat_fingerprint
 
 
 @dataclass(frozen=True)
@@ -32,14 +69,133 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
+_LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_LOCAL_RELATION = "org.apache.spark.sql.catalyst.plans.logical.LocalRelation"
+_FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+
+
+@dataclass(frozen=True)
+class _Plan:
+    """One cached row plan and what it was built under."""
+
+    plan: object  # JVM analyzed LogicalPlan
+    session: SparkSession  # the session the first build's DataFrame belongs to
+    frame: type  # the first build's DataFrame class
+    of_rows: object  # Dataset.ofRows, resolved once
+    inputs: tuple | None  # stat_fingerprint(sf_dir) before the build
+    confs: tuple  # (JVM SQLConf, content hash) per session involved
+
+    def fresh(self, sf_dir: str) -> bool:
+        return stat_fingerprint(sf_dir) == self.inputs and all(
+            c.getAllConfs().hashCode() == h for c, h in self.confs
+        )
+
+    def replay(self) -> DataFrame:
+        return self.frame(self.of_rows(self.session._jsparkSession, self.plan), self.session)
+
+
+#: (session → {(row name, abspath(sf_dir)): _Plan, or None for a row
+#: whose plan is not cacheable}); weak-keyed like the frame memo in
+#: ``sources.tpch``
+_PLANS: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+#: "hit" / "miss" counts of cacheable lookups since the last cleanup()
+PLAN_CACHE_STATS: collections.Counter = collections.Counter()
+_COUNT_LOCK = threading.Lock()
+_UNSEEN = object()
+
+tmpstate.on_cleanup(_PLANS.clear)
+tmpstate.on_cleanup(PLAN_CACHE_STATS.clear)
+
+
+def _under(path: str, root: str) -> bool:
+    return os.path.commonpath([os.path.abspath(path), root]) == root
+
+
+def _leaves_under(plan, root: str) -> bool:
+    """Whether every leaf of ``plan`` and of its subqueries is a
+    LocalRelation or a file relation whose root paths are local and
+    under ``root``."""
+    subs = plan.subqueriesAll()
+    for tree in [plan, *(subs.apply(i) for i in range(subs.size()))]:
+        leaves = tree.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getName()
+            if kind == _LOCAL_RELATION:
+                continue
+            if kind != _LOGICAL_RELATION:
+                return False
+            rel = leaf.relation()
+            if rel.getClass().getName() != _FS_RELATION:
+                return False
+            paths = rel.location().rootPaths()
+            for j in range(paths.size()):
+                uri = paths.apply(j).toUri()
+                if uri.getScheme() not in (None, "file") or not _under(uri.getPath(), root):
+                    return False
+    return True
+
+
+def _conf(session: SparkSession):
+    return session._jsparkSession.sessionState().conf()
+
+
+def _plan_of(df: DataFrame, spark: SparkSession, root: str, inputs: tuple | None) -> _Plan | None:
+    plan = df._jdf.queryExecution().analyzed()
+    if inputs is None or not _leaves_under(plan, root):
+        return None
+    session = df.sparkSession
+    confs = [_conf(spark)] + ([_conf(session)] if session is not spark else [])
+    return _Plan(
+        plan,
+        session,
+        type(df),
+        getattr(spark._jvm, "org.apache.spark.sql.classic.Dataset").ofRows,
+        inputs,
+        tuple((c, c.getAllConfs().hashCode()) for c in confs),
+    )
+
+
+def _count(outcome: str) -> None:
+    with _COUNT_LOCK:
+        PLAN_CACHE_STATS[outcome] += 1
+
+
+def _cached(name: str, fn: Callable[[SparkSession, str], DataFrame]):
+    """``fn`` behind the plan cache (module docstring). Concurrent
+    misses of one key each build the row; the last entry stored wins."""
+
+    @functools.wraps(fn)
+    def row(spark: SparkSession, sf_dir: str) -> DataFrame:
+        key = (name, os.path.abspath(sf_dir))
+        per = _PLANS.setdefault(spark, {})
+        entry = per.get(key, _UNSEEN)
+        if entry is None:
+            return fn(spark, sf_dir)
+        if entry is not _UNSEEN and entry.fresh(sf_dir):
+            _count("hit")
+            return entry.replay()
+        inputs = stat_fingerprint(sf_dir)
+        df = fn(spark, sf_dir)
+        entry = per[key] = _plan_of(df, spark, key[1], inputs)
+        if entry is not None:
+            _count("miss")
+        return df
+
+    return row
+
 
 def register(name: str, oracle: str | None = None, doc: str = ""):
-    """Decorator: add a (spark_fn, oracle) pair to the registry."""
+    """Decorator: add a (spark_fn, oracle) pair to the registry, with
+    ``spark_fn`` behind the plan cache; the decorated function itself
+    is returned unchanged."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        REGISTRY[name] = Query(
+            name=name, fn=_cached(name, fn), oracle=oracle, doc=doc or (fn.__doc__ or "")
+        )
         return fn
 
     return wrap

@@ -102,7 +102,8 @@ def write_training_shards(
     sc = df.sparkSession.sparkContext
     jvm = sc._jvm
     conf = sc._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
+    path_cls = getattr(jvm, "org.apache.hadoop.fs.Path")
+    root = path_cls(path)
     fs = root.getFileSystem(conf)
     part_paths = sorted(
         (
@@ -116,8 +117,8 @@ def write_training_shards(
     shard_rows = []
     for p in part_paths:
         # parquet footer only — metadata read, no second data pass
-        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+        reader = getattr(jvm, "org.apache.parquet.hadoop.ParquetFileReader").open(
+            getattr(jvm, "org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(p, conf)
         )
         try:
             n_rows = reader.getRecordCount()
@@ -131,7 +132,7 @@ def write_training_shards(
         "total_rows": sum(s["rows"] for s in shard_rows),
         "shards": shard_rows,
     }
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(root, "_manifest.json"), True)
+    out = fs.create(path_cls(root, "_manifest.json"), True)
     try:
         out.write(bytearray(json.dumps(manifest, indent=2).encode()))
     finally:

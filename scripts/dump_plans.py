@@ -23,7 +23,7 @@ def main() -> None:
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan_dump")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    mode = getattr(spark._jvm, "org.apache.spark.sql.execution.ExplainMode").fromString("formatted")
     for name, q in load_all().items():
         if only and name not in only:
             continue

@@ -2,7 +2,11 @@
 tooling): runs the row cold + N warm iterations with the Spark UI's
 REST API enabled, then prints per-stage executorRunTime / shuffle
 bytes / task counts for the jobs the warm iteration launched, plus the
-wall split between plan build (fn call) and execution (count()).
+wall split between plan build (fn call) and execution (count()). Each
+warm line says whether the build was a registry plan-cache hit (the
+row's analyzed plan replayed, its function not called), a miss (the
+row rebuilt and cached) or uncached (a row the cache never holds), so
+a near-zero build reads as a hit rather than as a cheap row.
 
 Usage:
     python scripts/profile_row.py <query_name> [sf_dir] [warm_iters]
@@ -31,7 +35,7 @@ def main() -> None:
     # enable the UI for this process only (the REST API is the point)
     S._DEFAULTS["spark.ui.enabled"] = "true"
     spark = S.get_spark(f"profile_{name}")
-    from regpulse_lakehouse_spark.queries import load_all
+    from regpulse_lakehouse_spark.queries import PLAN_CACHE_STATS, load_all
 
     q = load_all()[name]
 
@@ -42,14 +46,18 @@ def main() -> None:
 
     # warm iterations, separately timing plan build vs execution
     for i in range(warm_iters):
+        before = dict(PLAN_CACHE_STATS)
         t0 = time.perf_counter()
         df = q.fn(spark, sf_dir)
         t1 = time.perf_counter()
         df.count()
         t2 = time.perf_counter()
+        cache = next(
+            (k for k in ("hit", "miss") if PLAN_CACHE_STATS[k] > before.get(k, 0)), "uncached"
+        )
         print(
             f"warm[{i}]: build {t1 - t0:.3f}s exec {t2 - t1:.3f}s "
-            f"total {t2 - t0:.3f}s",
+            f"total {t2 - t0:.3f}s plan cache {cache}",
             file=sys.stderr,
         )
 

@@ -321,14 +321,18 @@ def test_append_loses_to_a_schema_change_after_its_snapshot(
 def test_each_operation_lists_the_log_once(spark, tmp_path, monkeypatch):
     """Every operation resolves one snapshot from one listing of
     ``_delta_log``: validation, reads, staging and the commit target
-    all come from it."""
+    all come from it. A commit that writes the interval checkpoint
+    lists once too: the checkpoint is that snapshot plus the commit."""
+    import pyarrow as pa
+
     root = str(tmp_path / "t")
-    log_dir = os.path.join(root, "_delta_log")
+    root10 = str(tmp_path / "t10")
+    log_dirs = {os.path.join(r, "_delta_log") for r in (root, root10)}
     listings = []
     listdir = os.listdir
 
     def counting_listdir(path="."):
-        if os.path.abspath(os.fspath(path)) == log_dir:
+        if os.path.abspath(os.fspath(path)) in log_dirs:
             listings.append(path)
         return listdir(path)
 
@@ -359,8 +363,19 @@ def test_each_operation_lists_the_log_once(spark, tmp_path, monkeypatch):
         ),
         "changes": listed(lambda: t.changes(["id"], from_version=0)),
     }
+    t10 = DeltaLogTable(spark, root10, checkpoint_interval=10)
+    for i in range(10):
+        t10.append(pa.table({"id": pa.array([i], pa.int64())}))
+    counts["append (writes checkpoint 10)"] = listed(
+        lambda: t10.append(pa.table({"id": pa.array([10], pa.int64())}))
+    )
     assert counts == {op: 1 for op in counts}
     assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 3, 4, 5]
+    assert os.path.exists(os.path.join(root10, "_delta_log", f"{10:020d}.checkpoint.parquet"))
+    seeded = t10._snapshot()
+    replayed = t10._snapshot(log=t10._list_log()._replace(checkpoints=()))
+    assert sorted(seeded.active) == sorted(replayed.active)
+    assert (seeded.meta, seeded.protocol) == (replayed.meta, replayed.protocol)
 
 
 def test_stats_carry_footer_minmax(spark, tmp_path):
@@ -849,13 +864,13 @@ def test_blind_append_retry_rebases_onto_racer(spark, tmp_path):
     t1._stage_files = stage_and_lose_twice
     t1._commit_orig = t1._commit
 
-    def steal_then_commit(version, actions):
+    def steal_then_commit(version, actions, *base):
         # racer claims every version t1 targets, forever
         t2._commit(version, t2._stage_files(
             t2._snapshot(), spark.createDataFrame([(200 + version,)], "id long"), True
         ) + [{"commitInfo": {"timestamp": 0, "operation": "WRITE",
                              "operationParameters": {}, "engineInfo": "racer"}}])
-        return t1._commit_orig(version, actions)
+        return t1._commit_orig(version, actions, *base)
 
     t1._commit = steal_then_commit
     with pytest.raises(FileExistsError):

@@ -220,3 +220,25 @@ def test_session_pins_no_initial_heap(spark):
     opts = spark.sparkContext.getConf().get("spark.driver.extraJavaOptions", "")
     assert "-Xms" not in opts
     assert "AlwaysPreTouch" not in opts
+
+
+def test_session_skips_python_call_site_capture(spark, monkeypatch):
+    """``spark.python.sql.dataFrameDebugging.enabled=false``: building a
+    Column makes no call-site round trips (active-session lookup, conf
+    read, PySparkCurrentOrigin set/clear), so one ``F.col`` costs at
+    most 3 py4j round trips (13 with call-site capture)."""
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    F.col("warm")
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        sent.append(args[0] if args else None)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    F.col("x")
+    assert len(sent) <= 3
