@@ -48,13 +48,6 @@ def distinct_token_ratio(text: Column) -> Column:
     )
 
 
-def stopword_ratio(text: Column, stopwords: tuple[str, ...] = LANG_MARKERS["en"]) -> Column:
-    """Fraction of tokens that are stopwords (quality-score component)."""
-    toks = tokens(F.lower(text))
-    hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def quality_score(text: Column) -> Column:
     """Heuristic document quality in [0,1]: blend of length band,
     lexical diversity and alpha-character ratio (the reference's

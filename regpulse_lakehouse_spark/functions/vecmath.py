@@ -160,27 +160,6 @@ def argmax_cell_udf(centroids: np.ndarray):
     return f
 
 
-def centroid_sim_udf(centroids: np.ndarray):
-    """Build a Pandas UDF: (embedding, cell) → cosine similarity of the
-    embedding to ITS assigned centroid. One gather + row-wise dot per
-    Arrow batch; the centroid matrix broadcasts with the closure."""
-    norms = np.linalg.norm(centroids, axis=1)
-    norms[norms == 0] = 1.0
-    normed = centroids / norms[:, None]
-
-    @F.pandas_udf(T.DoubleType())
-    def f(v: pd.Series, cell: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype="float64")
-        m = _stack(v)
-        mn = np.linalg.norm(m, axis=1)
-        mn[mn == 0] = 1.0
-        own = normed[cell.to_numpy(dtype=np.int64)]
-        return pd.Series(np.einsum("ij,ij->i", m / mn[:, None], own))
-
-    return f
-
-
 def train_centroids_l2(sample: np.ndarray, k: int, n_iter: int = 8) -> np.ndarray:
     """Deterministic EUCLIDEAN k-means (stride init over sample rows,
     fixed Lloyd iterations, empty cells keep their previous centroid) —

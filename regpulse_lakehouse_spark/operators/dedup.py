@@ -590,8 +590,8 @@ def windowed_band_edges(
     next ``neighbor_window`` successors via one ``lead`` window pass —
     O(n·window) edges per bucket where a self-join is O(n²). Returns
     (a, b, payload_a, payload_b) with a < b; callers rescore and
-    threshold with their family's exact measure. Shared by the MinHash,
-    SimHash, and embedding cluster-edge operators.
+    threshold with their family's exact measure (minhash_cluster_edges
+    is the one caller today).
 
     Residual skew shape: each bucket is ONE window partition, so a
     10^7-member bucket sorts ~10^7 narrow rows in a single task —
@@ -640,50 +640,6 @@ def windowed_band_edges(
             "payload_a",
             F.col("nb.npl").alias("payload_b"),
         )
-    )
-
-
-def simhash_cluster_edges(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 2,
-    n_bits: int = 60,
-    n_bands: int = 6,
-    max_hamming: int = 5,
-    base: str = "md5",
-    neighbor_window: int = 8,
-) -> DataFrame:
-    """SimHash counterpart of ``minhash_cluster_edges``: linear
-    neighbor-window edges over the Hamming-LSH banded table, exact
-    bit_count rescore. Same duplicate-cluster bound and the same recall
-    trade (see minhash_cluster_edges); the pigeonhole full-recall
-    guarantee of the pairwise operator does NOT carry over — members
-    separated by more than ``neighbor_window`` interlopers in every
-    shared band lose their direct edge."""
-    band_bits = n_bits // n_bands
-    fp = simhash_fingerprints(df, text_col, id_col, shingle_k, n_bits, base)
-    mask = F.lit((1 << band_bits) - 1).cast("long")
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright("simhash", b * band_bits).bitwiseAND(mask).alias("bits"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    banded = fp.select(F.col(id_col), "simhash", F.explode(bands).alias("bb")).select(
-        F.col(id_col), "simhash", F.col("bb.band").alias("band"), F.col("bb.bits").alias("bits")
-    )
-    cand = windowed_band_edges(banded, id_col, "simhash", ["band", "bits"], neighbor_window)
-    return (
-        cand.withColumn(
-            "hamming", hamming64(F.col("payload_a"), F.col("payload_b"))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-        .dropDuplicates(["a", "b"])
     )
 
 
@@ -1063,56 +1019,4 @@ def line_dedup(
         df.select(id_col)
         .join(reassembled, id_col, "left")
         .withColumn(text_col, F.coalesce(F.col(text_col), F.lit("")))
-    )
-
-
-def hash64_near_dup_pairs(
-    fp: DataFrame,
-    id_col: str,
-    hash_col: str,
-    n_bands: int = 8,
-    max_hamming: int = 6,
-    n_bits: int = 64,
-) -> DataFrame:
-    """Banded Hamming-LSH pairs over a PRECOMPUTED 64-bit fingerprint
-    column — the simhash_near_dup_pairs join generalized to any
-    fingerprint family (perceptual image hashes, audio hashes):
-    pigeonhole full recall for max_hamming <= n_bands - 1, equi-join
-    candidates, row-local cross-band dedup, exact bit-count rescore.
-    Returns (a, b, hamming)."""
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"banding guarantees recall only for max_hamming <= n_bands-1 "
-            f"({n_bands - 1}); got {max_hamming}"
-        )
-    band_bits = n_bits // n_bands
-    mask = F.lit((1 << band_bits) - 1).cast("long")
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(hash_col, b * band_bits).bitwiseAND(mask).alias("bits"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    tagged = fp.select(F.col(id_col), F.col(hash_col), F.explode(bands).alias("bb")).select(
-        F.col(id_col), F.col(hash_col),
-        F.col("bb.band").alias("band"), F.col("bb.bits").alias("bits"),
-    )
-    a = tagged.select(F.col(id_col).alias("a"), F.col(hash_col).alias("fp_a"), "band", "bits")
-    b = tagged.select(F.col(id_col).alias("b"), F.col(hash_col).alias("fp_b"), "band", "bits")
-    xor = F.col("fp_a").bitwiseXOR(F.col("fp_b"))
-    band_match = F.array(
-        *[
-            F.shiftright(xor, j * band_bits).bitwiseAND(mask) == 0
-            for j in range(n_bands)
-        ]
-    )
-    joined = a.join(b, ["band", "bits"]).filter(F.col("a") < F.col("b"))
-    return (
-        keep_first_matching_band(joined, band_match)
-        .withColumn("hamming", hamming64(F.col("fp_a"), F.col("fp_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
     )

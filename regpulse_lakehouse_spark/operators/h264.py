@@ -624,18 +624,6 @@ _CT_LUT_NC4 = _vlc_lut(_CT_NC4)
 _CT_LUT_FLC = _vlc_lut(_CT_FLC)
 
 
-def _read_vlc(r: BitReader, table: dict[str, object], what: str):
-    lut, max_len = _vlc_lut(table)
-    ent = lut[r.peek_bits(max_len)]
-    # the peek zero-pads past the stream end, so a match must also FIT
-    # in the remaining bits (prefix-freeness makes any in-bounds match
-    # identical to the old incremental walk)
-    if ent is None or r.pos + ent[1] > r.nbits:
-        raise ValueError(f"invalid {what} codeword")
-    r.pos += ent[1]
-    return ent[0]
-
-
 # ---------------------------------------------------------------------
 # CAVLC residual block codec (§9.2.1-9.2.4)
 # ---------------------------------------------------------------------

@@ -1,6 +1,7 @@
 """Scalar (int8) embedding quantization — the storage/IO lever for
 vector columns at corpus scale (beyond-reference training-data
-operator; pairs with operators/vector.py's ANN family).
+operator; the product quantizer below is the code half of the IVF-PQ
+index, operators/vector.py holds its coarse quantizer).
 
 A float32-stored embedding column is usually the widest thing in the
 table; per-vector affine int8 quantization (the FAISS
@@ -22,7 +23,7 @@ bounded by half a step: (hi - lo) / 508 per component.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _LEVELS = 254  # int8 span [-127, 127]; avoids -128 so negation is safe
@@ -217,58 +218,6 @@ def pq_adc_topk(
     )
 
 
-def pq_shortlist_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebooks,
-    k: int = 10,
-    shortlist: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codes_col: str = "pq_codes",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qe",
-    codes_df: DataFrame | None = None,
-) -> DataFrame:
-    """The full PQ search recipe: ADC over codes → top-``shortlist``
-    candidates per query → exact cosine rescore of ONLY those → final
-    top-k. The wide float column is touched for shortlist×queries rows
-    instead of the whole corpus, codes carry the bulk scan.
-
-    On the fixture embeddings (near-random 64-dim — maximally
-    incompressible, the PQ worst case) raw ADC@5 recall is 0.32-0.44,
-    but the shortlist recipe measures 0.88-1.00 at sf0.1 with
-    m=16, k∈{32,64}, shortlist=50-100 (tests/test_quantize.py pins a
-    floor) — distortion relocates true neighbors within the shortlist,
-    not out of it. Pass a pre-encoded ``codes_df`` to amortize encoding
-    across query batches (else codes are derived here)."""
-    from ..functions.vecmath import cosine_pd_once
-    from pyspark.sql import Window as W
-
-    if codes_df is None:
-        codes_df = pq_encode(corpus.select(id_col, vec_col), codebooks, vec_col, codes_col)
-    short = pq_adc_topk(
-        codes_df, queries, codebooks, shortlist, id_col, codes_col,
-        query_id_col, query_vec_col,
-    ).select(query_id_col, id_col)
-    vecs = corpus.select(id_col, vec_col)
-    w = W.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        short.join(vecs, id_col)
-        .join(F.broadcast(queries), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine_pd_once(F.col(vec_col), F.col(query_vec_col)), 4).alias(
-                "cosine_sim"
-            ),
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
 def ivf_pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -292,9 +241,10 @@ def ivf_pq_topk(
     (~32×); the wide float column is read for shortlist×queries rows
     only.
 
-    Plan: cell assignment + probe join exactly as operators/vector.
-    ivf_topk (replica assignment, row-local candidate dedup), with the
-    per-candidate Arrow cosine replaced by ADC table lookups, a window
+    This is the ad-hoc (no persisted index) reference that the tests
+    compare ``ivf_pq_build`` + ``ivf_pq_search`` against. Plan: replica
+    cell assignment (operators/vector.ivf_assign), a probe equi-join on
+    cell with row-local candidate dedup, ADC table lookups, a window
     shortlist, then the exact rescore join."""
     from pyspark.sql import Window as W
 
@@ -411,16 +361,6 @@ def ivf_pq_build(
     # after this commit lands in the append path, sees the ref, no-ops
     _commit(corpus.sparkSession, path, 1,
             batch_ref if batch_ref is not None else "build-1", kind="post")
-
-
-def _ivf_pq_committed(spark, path: str) -> list[int]:
-    """Committed CODE batches (kind 'post'). Markers share the BM25
-    index's kind-tagged format (retrieval._all_committed) so tombstone
-    commits can never retroactively commit torn code batches; legacy
-    kindless markers from pre-lifecycle builds read as 'post'."""
-    from .retrieval import committed_batches
-
-    return sorted(committed_batches(spark, path, "post"))
 
 
 def _ivf_id_col(coded: DataFrame) -> str:
@@ -686,12 +626,17 @@ def ivf_pq_search(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Search a persisted IVF-PQ layout: probed cells prune at the
-    DIRECTORY level (same mechanics as vector.ivf_search), candidates
+    DIRECTORY level (the distinct probed cells — at most n_centroids
+    ints, never the query set — become a ``cell IN (...)`` filter,
+    which on this hive layout is a partition filter; see
+    tests/test_quantize.py), candidates
     rank by ADC over codes, and — when ``rescore_corpus`` (a
     full-precision (id, vector) table, e.g. the cold copy) is given —
     the per-query shortlist is exactly rescored in float. Without it
     the ADC ranking is returned directly (column ``adc_score``), which
-    is the memory-resident serving mode. Tombstoned vectors
+    is the memory-resident serving mode; ADC approximates the inner
+    product, so it ranks like the cosine only on unit-norm vectors (the
+    ``embeddings`` table's are). Tombstoned vectors
     (ivf_pq_delete) are masked out batch-scoped before ranking —
     Lucene deleted-docs semantics, purged physically by
     ivf_pq_compact."""

@@ -853,25 +853,16 @@ class _CcittBits:
     def byte_align(self) -> None:
         self.pos = (self.pos + 7) & ~7
 
-    def eat_eol(self, required: bool) -> bool:
-        """Consume fill zeros + one EOL (T.4 §4.1.2); returns True if
-        an EOL was found. With required=False, restores position when
-        the lookahead is not an EOL."""
-        start = self.pos
+    def eat_eol(self) -> None:
+        """Consume fill zeros + one EOL (T.4 §4.1.2)."""
         zeros = 0
         while self.pos < self.nbits:
             if self.bit():
                 if zeros >= 11:
-                    return True
-                if required:
-                    raise ValueError("CCITT: expected EOL")
-                self.pos = start
-                return False
+                    return
+                raise ValueError("CCITT: expected EOL")
             zeros += 1
-        if required:
-            raise ValueError("CCITT: stream ended before EOL")
-        self.pos = start
-        return False
+        raise ValueError("CCITT: stream ended before EOL")
 
 
 def _ccitt_read_run(r: _CcittBits, white: bool) -> int:
@@ -988,42 +979,6 @@ def decode_ccitt_g4(
     return black
 
 
-def decode_ccitt_g3(
-    data: bytes,
-    width: int,
-    height: int,
-    two_d: bool = False,
-    byte_align: bool = False,
-) -> np.ndarray:
-    """Raw ITU-T T.4 (G3) stream → (h, w) bool array, True = black —
-    PDF's /CCITTFaxDecode with /K >= 0 (r11). ``two_d`` (/K > 0) needs
-    EOL-delimited rows (the tag bit after each EOL says 1-D or 2-D);
-    pure 1-D (/K 0) rows may or may not carry EOLs — autodetected per
-    row, since the EOL's 11+ leading zeros cannot prefix any run
-    code."""
-    r = _CcittBits(data)
-    ref = [width, width]
-    black = np.zeros((height, width), dtype=bool)
-    for y in range(height):
-        if byte_align:
-            r.byte_align()
-        has_eol = r.eat_eol(required=False)
-        if two_d:
-            if not has_eol:
-                raise ValueError(
-                    "CCITT K>0 stream without EOL row delimiters unsupported"
-                )
-            if r.bit():
-                trans = _ccitt_decode_1d_row(r, width)
-            else:
-                trans = _ccitt_decode_2d_row(r, width, ref)
-        else:
-            trans = _ccitt_decode_1d_row(r, width)
-        black[y] = _transitions_to_row(trans, width)
-        ref = trans + [width, width]
-    return black
-
-
 def _decode_tiff_ccitt(payload: bytes, t: dict, comp: int) -> np.ndarray:
     w, h = t["width"][0], t["height"][0]
     photo = t.get("photometric", [0])[0]
@@ -1051,13 +1006,13 @@ def _decode_tiff_ccitt(payload: bytes, t: dict, comp: int) -> np.ndarray:
                 # T.4 2-D-optional (r11): EOL + one tag bit per row —
                 # 1 = the row is 1-D coded, 0 = 2-D against the
                 # previous row (T.4 §4.2.1)
-                r.eat_eol(required=True)
+                r.eat_eol()
                 if r.bit():
                     trans = _ccitt_decode_1d_row(r, w)
                 else:
                     trans = _ccitt_decode_2d_row(r, w, ref)
             else:  # comp == 3, pure 1-D
-                r.eat_eol(required=True)
+                r.eat_eol()
                 trans = _ccitt_decode_1d_row(r, w)
             black[y] = _transitions_to_row(trans, w)
             ref = trans + [w, w]

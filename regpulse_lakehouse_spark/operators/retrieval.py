@@ -91,8 +91,8 @@ def corpus_stats(docs: DataFrame, text_col: str = "text") -> tuple[int, float]:
 def _term_score(n_docs: int, avgdl: float, k1: float, b: float):
     """The per-(doc, term) BM25 contribution as a Column expression
     over ``tf``/``df``/``dl`` — the ONE place the formula lives (the
-    single-query and batch paths both score with it, which is what
-    keeps their tested equivalence honest)."""
+    one-shot and persisted-index paths both score with it through
+    _score, which is what keeps their tested equivalence honest)."""
     idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
     denom = F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(max(avgdl, 1e-9)))
     return idf * F.col("tf") * (k1 + 1.0) / denom
@@ -686,321 +686,3 @@ def bm25_search(
     )
     return _score(post, df_tbl, n_total, avgdl_total, id_col, k, k1, b,
                   max_df_ratio=max_df_ratio, min_match=min_match)
-
-
-def bm25_topk_batch(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    query_id_col: str = "query_id",
-    query_text_col: str = "query",
-    k1: float = _K1_DEFAULT,
-    b: float = _B_DEFAULT,
-) -> DataFrame:
-    """Many queries in ONE plan — no driver loop: (query_id, id, bm25,
-    n_terms_matched), per-query top-k, best first. The query table is
-    tiny (a serving batch), so its distinct term set broadcasts twice:
-    once to pre-filter the exploded corpus stream (postings only ever
-    carry the batch's terms) and once to fan matching postings out to
-    the queries that want them. Per-term df is one aggregate over the
-    same filtered-postings subplan — global df, shared across queries
-    (AQE exchange reuse shares the underlying shuffle). Top-k is a
-    per-query rank window over scored docs (bounded by matches, ranked
-    with Spark's rank-limit pushdown)."""
-    from pyspark.sql.window import Window as W
-
-    qterms = queries.select(
-        F.col(query_id_col),
-        F.explode(F.array_distinct(tokens(F.lower(F.col(query_text_col))))).alias("term"),
-    )
-    term_set = qterms.select("term").distinct()
-    n_docs, avgdl = corpus_stats(docs, text_col)
-    toks = tokens(F.lower(F.col(text_col)))
-    post = (
-        docs.select(F.col(id_col), F.size(toks).alias("dl"), F.explode(toks).alias("term"))
-        .join(F.broadcast(term_set), "term", "left_semi")
-        .groupBy(id_col, "dl", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    df_tbl = post.groupBy("term").agg(F.count_distinct(id_col).alias("df"))
-    scored = (
-        post.join(F.broadcast(df_tbl), "term")
-        .join(F.broadcast(qterms), "term")
-        .groupBy(query_id_col, id_col)
-        .agg(
-            F.round(F.sum(_term_score(n_docs, avgdl, k1, b)), 6).alias("bm25"),
-            F.count("*").alias("n_terms_matched"),
-        )
-    )
-    w = W.partitionBy(query_id_col).orderBy(F.desc("bm25"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy(query_id_col, F.desc("bm25"), F.asc(id_col))
-    )
-
-
-def hybrid_search_indexed(
-    spark: SparkSession,
-    bm25_path: str,
-    ivf_pq_path: str,
-    query_text: str,
-    query_vec: list[float],
-    k: int = 10,
-    fetch_k: int = 50,
-    id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    n_probe: int = 4,
-    rescore_corpus: DataFrame | None = None,
-    c: int = 60,
-    max_df_ratio: float | None = None,
-) -> DataFrame:
-    """Index-serving hybrid retrieval: the persisted BM25 index
-    (bucket-pruned lexical leg) fused by RRF with the persisted IVF-PQ
-    index (cell-pruned ADC leg, operators/quantize.ivf_pq_search) —
-    both legs read a handful of partition directories, so a query
-    against a 100 TB corpus touches megabytes. The exact-cosine swap
-    in ``hybrid_search`` is the corpus-scan counterpart; this is what
-    actually serves."""
-    from .quantize import ivf_pq_search
-
-    lex = bm25_search(
-        spark, bm25_path, query_text, k=fetch_k, id_col=id_col,
-        max_df_ratio=max_df_ratio,
-    )
-    qdf = spark.createDataFrame([("q0", query_vec)], "query_id string, qe array<double>")
-    sem_score = "cosine_sim" if rescore_corpus is not None else "adc_score"
-    sem = (
-        ivf_pq_search(
-            spark, ivf_pq_path, qdf, n_probe=n_probe, k=fetch_k,
-            id_col=vec_id_col, rescore_corpus=rescore_corpus,
-        )
-        .withColumnRenamed(vec_id_col, id_col)
-        .select(id_col, sem_score)
-    )
-    return rrf_fuse([(lex, "bm25"), (sem, sem_score)], id_col=id_col, k=k, c=c)
-
-
-def retrieval_metrics(
-    results: DataFrame,
-    qrels: DataFrame,
-    k: int = 10,
-    query_id_col: str = "query_id",
-    id_col: str = "doc_id",
-    score_col: str = "bm25",
-    rel_col: str = "relevance",
-) -> DataFrame:
-    """Per-query IR quality metrics of a ranked candidate table against
-    graded judgments: (query_id, n_relevant, recall_at_k, mrr,
-    ndcg_at_k). ``results`` is any scored candidate list (BM25, ANN,
-    fused); ``qrels`` is (query_id, id, relevance) with relevance > 0
-    meaning relevant (graded values feed the DCG).
-
-    Standard definitions: recall@k over binary relevance; MRR from the
-    first relevant rank (0 when none retrieved); nDCG@k with
-    rel/log2(rank+1) gains, ideal ranking taken from the query's own
-    qrels. Queries with no relevant judgments are omitted (metrics are
-    undefined there).
-
-    Plan shape: ranks are per-query windows over candidate lists
-    (bounded by fetch-k) and per-query qrel windows (bounded by
-    judgments) — both partitioned by query id, no global sort; one
-    equi-join on (query, doc). Runs over a million-query eval table as
-    happily as ten."""
-    from pyspark.sql.window import Window as W
-
-    wq = W.partitionBy(query_id_col)
-    ranked = (
-        results.withColumn(
-            "_rank",
-            F.row_number().over(wq.orderBy(F.desc(score_col), F.asc(id_col))),
-        )
-        .filter(F.col("_rank") <= k)
-        .select(query_id_col, id_col, "_rank")
-    )
-    judged = qrels.filter(F.col(rel_col) > 0).select(
-        query_id_col, id_col, F.col(rel_col).cast("double").alias("_rel")
-    )
-    # ideal DCG: each query's own judgments, best-first, top-k
-    ideal = (
-        judged.withColumn(
-            "_irank",
-            F.row_number().over(wq.orderBy(F.desc("_rel"), F.asc(id_col))),
-        )
-        .filter(F.col("_irank") <= k)
-        .groupBy(query_id_col)
-        .agg(F.sum(F.col("_rel") / F.log2(F.col("_irank") + 1)).alias("_idcg"))
-    )
-    n_rel = judged.groupBy(query_id_col).agg(F.count("*").alias("n_relevant"))
-    hits = ranked.join(judged, [query_id_col, id_col])
-    per_query = hits.groupBy(query_id_col).agg(
-        F.count("*").alias("_n_hits"),
-        F.min("_rank").alias("_first_rank"),
-        F.sum(F.col("_rel") / F.log2(F.col("_rank") + 1)).alias("_dcg"),
-    )
-    return (
-        n_rel.join(ideal, query_id_col)
-        .join(per_query, query_id_col, "left")
-        .select(
-            query_id_col,
-            "n_relevant",
-            F.round(F.coalesce(F.col("_n_hits"), F.lit(0)) / F.col("n_relevant"), 6).alias(
-                "recall_at_k"
-            ),
-            F.round(
-                F.coalesce(F.lit(1.0) / F.col("_first_rank"), F.lit(0.0)), 6
-            ).alias("mrr"),
-            F.round(
-                F.coalesce(F.col("_dcg"), F.lit(0.0)) / F.col("_idcg"), 6
-            ).alias("ndcg_at_k"),
-        )
-    )
-
-
-def rrf_fuse(
-    rankings: list[tuple[DataFrame, str]],
-    id_col: str = "doc_id",
-    k: int = 10,
-    c: int = 60,
-) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack et al. 2009) of N candidate
-    lists: each input is (frame, score_col); a candidate's fused score
-    is sum over lists of 1/(c + rank). Returns (id, rrf_score,
-    n_lists), best first, id-ascending tie-break.
-
-    Each input must already be a BOUNDED top-k candidate list (the
-    retrievers' fetch-k output) — ranks come from one unpartitioned
-    row_number window, which is safe precisely because the inputs are
-    a few dozen rows, never a corpus. Ranks are 1-based, ordered by
-    score desc then id asc (deterministic under score ties)."""
-    from pyspark.sql.window import Window as W
-
-    scored = []
-    for frame, score_col in rankings:
-        w = W.orderBy(F.desc(score_col), F.asc(id_col))
-        scored.append(
-            frame.select(
-                F.col(id_col),
-                (F.lit(1.0) / (F.lit(float(c)) + F.row_number().over(w))).alias("_rrf"),
-            )
-        )
-    unioned = scored[0]
-    for s in scored[1:]:
-        unioned = unioned.unionByName(s)
-    return (
-        unioned.groupBy(id_col)
-        .agg(F.round(F.sum("_rrf"), 9).alias("rrf_score"), F.count("*").alias("n_lists"))
-        .orderBy(F.desc("rrf_score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def hybrid_search(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    query_text: str,
-    query_vec: list[float],
-    k: int = 10,
-    fetch_k: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    c: int = 60,
-) -> DataFrame:
-    """Lexical + semantic retrieval fused by RRF — the standard hybrid
-    serving shape: BM25 top-``fetch_k`` over ``docs`` and exact cosine
-    top-``fetch_k`` over ``embeddings`` (broadcast single-row query,
-    zero shuffles), fused into one ranked list keyed by ``id_col``.
-    Swap the exact cosine leg for operators/quantize.ivf_pq_search at
-    index-serving scale — any (id, score) candidate list fuses."""
-    from .vector import topk_neighbors
-
-    spark = docs.sparkSession
-    lex = bm25_topk(docs, query_text, k=fetch_k, text_col=text_col, id_col=id_col)
-    qdf = spark.createDataFrame([(query_vec,)], "qe array<double>")
-    sem = topk_neighbors(
-        embeddings, qdf, k=fetch_k, id_col=vec_id_col, vec_col=vec_col
-    ).withColumnRenamed(vec_id_col, id_col)
-    return rrf_fuse([(lex, "bm25"), (sem, "cosine_sim")], id_col=id_col, k=k, c=c)
-
-
-def rerank_topk(
-    candidates: DataFrame,
-    query_text: str,
-    scorer=None,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Cross-encoder reranking seam — the third stage of the modern
-    retrieval stack (retrieve cheap & wide → fuse → rerank the few
-    dozen survivors with an expensive pairwise model). ``candidates``
-    is a BOUNDED fused list carrying document text; ``scorer`` is the
-    model seam: a callable (query: str, texts: pandas.Series) →
-    iterable of floats, run executor-side over Arrow batches (the
-    same deterministic-stub-with-real-plumbing pattern as the X1
-    extraction stage — swap in a real cross-encoder behind the same
-    signature; the default stub scores lexical overlap with position
-    weighting, deterministic and order-sensitive). Returns
-    (id, rerank_score) best-first with id-ascending tie-break; the
-    window is unpartitioned but runs over ≤ fetch-k rows by contract,
-    never a corpus."""
-    import pandas as pd
-
-    from pyspark.sql.window import Window as W
-
-    if scorer is None:
-        scorer = default_overlap_scorer
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "rerank_score": [
-                        round(float(s), 6)
-                        for s in scorer(query_text, pdf[text_col])
-                    ],
-                }
-            )
-
-    id_type = candidates.schema[id_col].dataType.simpleString()
-    scored = candidates.select(id_col, text_col).mapInPandas(
-        gen, schema=f"`{id_col}` {id_type}, rerank_score double"
-    )
-    w = W.orderBy(F.desc("rerank_score"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy(F.desc("rerank_score"), F.asc(id_col))
-    )
-
-
-def default_overlap_scorer(query: str, texts) -> list[float]:
-    """Deterministic stand-in cross-encoder: position-weighted query-
-    term coverage with an adjacency bonus — order-sensitive (a doc
-    containing the query terms ADJACENT outranks one with them
-    scattered), so reranking visibly reorders a bag-of-words
-    candidate list in tests. Pure function of (query, text)."""
-    qt = query_terms(query)
-    out = []
-    for t in texts:
-        toks = [w for w in str(t or "").lower().split() if w]
-        pos: dict[str, int] = {}
-        for i, w in enumerate(toks):
-            pos.setdefault(w, i)
-        cov = sum(1.0 / (1.0 + pos[q] / 10.0) for q in qt if q in pos)
-        adj = sum(
-            1.0
-            for a, b in zip(qt, qt[1:])
-            if a in pos and b in pos and pos[b] - pos[a] == 1
-        )
-        out.append(cov + 0.5 * adj)
-    return out

@@ -6,20 +6,19 @@ itself (merge.ts:22-39 delegates retrieval to OpenAI file_search; the
 client stub returns [] — vector-store.ts:21-26). The rebuild implements
 real search:
 
-- ``cosine`` / ``topk_neighbors``: exact brute-force — the correctness
-  semantics. Dot products run as JVM higher-order functions
+- ``cosine``: exact cosine — the correctness semantics of the
+  ``e4_batch_similarity`` row (broadcast query set, per-query window
+  top-k). Dot products run as JVM higher-order functions
   (``zip_with`` + ``aggregate``), no Python in the loop.
-- ``with_lsh_bucket`` / ``ann_topk_lsh``: random-hyperplane LSH for the
-  100 TB path — candidates come from one bucket-equi-join shuffle
-  instead of a full cross product; exactness traded for recall, tested
-  by recall not by hash.
+- ``ivf_assign`` / ``bounded_sample_matrix`` / ``_train_quantizer`` /
+  ``_with_probe_cells``: the coarse-quantizer half of the persisted
+  IVF-PQ index (operators/quantize.ivf_pq_build / ivf_pq_search, the
+  ``e4_ivf_topk`` row) — the one approximate search path.
+- ``cosine_near_dup_pairs``: banded random-hyperplane LSH pairs for
+  embedding near-dup detection, exactly rescored.
 - ``deterministic_embedding``: the E1 test-path embedder
   (vectorize.ts:6-33 behind an interface) — md5-derived pseudo-vectors,
   reproducible on any engine.
-
-At cluster scale brute-force top-k against one query is a map-side
-scan + TakeOrdered (no shuffle); batched multi-query search should use
-``ann_topk_lsh`` so the candidate join shuffles on bucket id.
 """
 
 from __future__ import annotations
@@ -58,25 +57,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom)
 
 
-def topk_neighbors(
-    corpus: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qe",
-) -> DataFrame:
-    """E4 exact top-k: broadcast the (single-row) query, score every
-    corpus vector, TakeOrdered(k). One scan, zero shuffles."""
-    joined = corpus.crossJoin(F.broadcast(query))
-    sim = cosine(F.col(vec_col), F.col(query_vec_col))
-    return (
-        joined.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def deterministic_embedding(text: Column, dim: int = 8) -> Column:
     """E1 deterministic pseudo-embedding: component i is
     (md5_long(i:text) mod 2000)/1000 - 1 ∈ [-1, 1). Portable to any
@@ -99,20 +79,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
         nrm = math.sqrt(sum(x * x for x in row)) or 1.0
         planes.append([x / nrm for x in row])
     return planes
-
-
-def with_lsh_bucket(
-    df: DataFrame, vec_col: str = "embedding", dim: int = 64, n_planes: int = 12
-) -> DataFrame:
-    """Random-hyperplane LSH: bucket = bit-packed signs of plane dots.
-    Same-bucket vectors are cosine-close with high probability."""
-    planes = _hyperplanes(dim, n_planes)
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        plane_col = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(dot(F.col(vec_col), plane_col) >= 0, 1).otherwise(0).cast("long")
-        bucket = bucket + (bit * F.lit(2**i).cast("long"))
-    return df.withColumn("lsh_bucket", bucket)
 
 
 def get_or_create_default_store(
@@ -276,145 +242,6 @@ def _with_probe_cells(
     )
 
 
-def _probe_join_topk(
-    assigned: DataFrame,
-    probes_df: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-) -> DataFrame:
-    """Candidate equi-join on cell id + exact Arrow-batched rescore +
-    window top-k.
-
-    With replica assignment and multi-probe a (query, vector) pair can
-    meet in up to ``assign_top`` cells; the canonical-cell filter (keep
-    the row whose join cell is the smallest cell both sides share — both
-    arrays are ≤8 ints, row-local) deduplicates without a distinct()
-    exchange, so the top-k window never ranks the same pair twice."""
-    from pyspark.sql import Window as W
-
-    from ..functions.vecmath import cosine_pd_once
-
-    cand = assigned.join(probes_df, "cell").filter(
-        F.array_min(F.array_intersect("_cells", "_probe_cells")) == F.col("cell")
-    )
-    w_k = W.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        cand.select(
-            F.col(query_id_col),
-            F.col(id_col),
-            cosine_pd_once(F.col(vec_col), F.col(query_vec_col)).alias("cosine_sim"),
-        )
-        .withColumn("_rn", F.row_number().over(w_k))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def ivf_build(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assign_top: int = 2,
-) -> None:
-    """Materialize the IVF index as a cell-partitioned parquet layout:
-    train the quantizer, assign every vector to its ``assign_top``
-    nearest-centroid cells (replica assignment — ``assign_top``× storage
-    for the boundary-recall win, see ivf_assign), write hive-partitioned
-    by cell, persist the centroid matrix + assignment config next to the
-    data. This is the 100 TB shape: a search that probes n_probe of
-    n_centroids cells reads n_probe/n_centroids of the files
-    (directory-level partition pruning), not the whole corpus."""
-    import json
-    import os
-
-    centroid_mat = _train_quantizer(corpus, id_col, vec_col, n_centroids)
-    assigned = ivf_assign(corpus.select(id_col, vec_col), centroid_mat, vec_col, assign_top)
-    # small-files guard: one shuffle by cell so each cell dir gets ~one
-    # file instead of one per upstream task (see signature store append)
-    assigned.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(path)
-    with open(os.path.join(path, "_centroids.json"), "w") as fh:
-        json.dump({"centroids": centroid_mat.tolist(), "assign_top": assign_top}, fh)
-
-
-def ivf_search(
-    spark,
-    path: str,
-    queries: DataFrame,
-    n_probe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qe",
-) -> DataFrame:
-    """Search a built IVF layout: load centroids, pick each query's
-    n_probe cells driver-side, scan ONLY those cell partitions
-    (``cell IN (...)`` prunes directories — asserted in
-    tests/test_ann_recall.py), rescore exactly, window top-k."""
-    import json
-    import os
-
-    import numpy as np
-
-    with open(os.path.join(path, "_centroids.json")) as fh:
-        meta = json.load(fh)
-    # pre-round-5 layouts stored a bare centroid list (no assign_top key)
-    centroid_mat = np.asarray(
-        meta["centroids"] if isinstance(meta, dict) else meta, dtype=np.float64
-    )
-    probes_df = _with_probe_cells(queries, centroid_mat, query_vec_col, n_probe)
-    # Directory pruning needs the probed-cell set as literals; collect the
-    # DISTINCT cells (≤ n_centroids ints — never the query set itself).
-    needed = sorted(r[0] for r in probes_df.select("cell").distinct().collect())
-    assigned = spark.read.parquet(path).filter(F.col("cell").isin(needed))
-    if "_cells" not in assigned.columns:  # pre-round-5 single-assign layout
-        assigned = assigned.withColumn("_cells", F.array(F.col("cell")))
-    return _probe_join_topk(
-        assigned, probes_df, k, id_col, vec_col, query_id_col, query_vec_col
-    )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qe",
-    assign_top: int = 2,
-) -> DataFrame:
-    """IVF-style approximate batched top-k: coarse quantizer trained by
-    deterministic spherical k-means on a bounded driver-side sample
-    (stride init, fixed iteration count — no RNG), corpus replicated into
-    its ``assign_top`` nearest-centroid cells, queries probe their
-    ``n_probe`` nearest cells, exact rescoring within probed cells with
-    row-local candidate dedup, window top-k. The candidate join is an
-    equi-join on cell id — shuffle linear in corpus + probe size, never
-    quadratic. Vector math runs as Arrow-batched numpy
-    (functions/vecmath.py) — interpreted HOF lambdas are the wrong tool
-    per-pair. Only the training sample (≤``train_cap`` rows) and the
-    (n_centroids × dim) matrix touch the driver — the FAISS recipe: the
-    quantizer trains on a sample regardless of corpus size.
-
-    This is the ad-hoc (no prebuilt index) form; ``ivf_build`` +
-    ``ivf_search`` persist the cell-partitioned layout so repeated
-    searches read only the probed cells' files."""
-    centroid_mat = _train_quantizer(corpus, id_col, vec_col, n_centroids)
-    assigned = ivf_assign(corpus.select(id_col, vec_col), centroid_mat, vec_col, assign_top)
-    probes_df = _with_probe_cells(queries, centroid_mat, query_vec_col, n_probe)
-    return _probe_join_topk(
-        assigned, probes_df, k, id_col, vec_col, query_id_col, query_vec_col
-    )
-
-
 def cosine_near_dup_pairs(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -486,169 +313,3 @@ def cosine_near_dup_pairs(
         .filter(F.col("cosine_sim") >= threshold)
         .select("a", "b", "cosine_sim")
     )
-
-
-def embedding_cluster_edges(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.35,
-    dim: int = 64,
-    n_planes: int = 12,
-    n_bands: int = 4,
-    neighbor_window: int = 8,
-) -> DataFrame:
-    """Embedding counterpart of dedup.minhash_cluster_edges: linear
-    neighbor-window edges over the banded sign-LSH table + exact
-    Arrow-batched cosine rescore — the clustering-path guard against
-    duplicate clusters that make ``cosine_near_dup_pairs`` (all
-    qualifying pairs) quadratic. Same recall trade as the other
-    windowed generators."""
-    import numpy as np
-
-    from ..functions.vecmath import band_buckets_udf, cosine_pd_once
-    from .dedup import windowed_band_edges
-
-    planes = np.asarray(_hyperplanes(dim, n_planes), dtype=np.float64)
-    banded = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.posexplode(band_buckets_udf(planes, n_bands)(F.col(vec_col))).alias(
-            "band", "bucket"
-        ),
-    )
-    cand = windowed_band_edges(banded, id_col, vec_col, ["band", "bucket"], neighbor_window)
-    return (
-        cand.withColumn(
-            "cosine_sim", F.round(cosine_pd_once(F.col("payload_a"), F.col("payload_b")), 4)
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("a", "b", "cosine_sim")
-        .dropDuplicates(["a", "b"])
-    )
-
-
-def ann_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qe",
-    dim: int = 64,
-    n_planes: int = 12,
-) -> DataFrame:
-    """Approximate batched top-k: bucket both sides, equi-join on bucket
-    (shuffle on bucket id — linear, not quadratic), exact rescoring
-    within candidates, window top-k per query."""
-    from pyspark.sql import Window as W
-
-    import numpy as np
-
-    from ..functions.vecmath import band_buckets_udf, cosine_pd_once
-
-    planes = np.asarray(_hyperplanes(dim, n_planes), dtype=np.float64)
-    bucket = band_buckets_udf(planes, 1)
-    c = corpus.withColumn("lsh_bucket", F.element_at(bucket(F.col(vec_col)), 1))
-    q = queries.withColumnRenamed(query_vec_col, "_qv").withColumn(
-        "lsh_bucket", F.element_at(bucket(F.col("_qv")), 1)
-    )
-    cand = c.join(q, "lsh_bucket")
-    w = W.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        cand.select(
-            F.col(query_id_col),
-            F.col(id_col),
-            cosine_pd_once(F.col(vec_col), F.col("_qv")).alias("cosine_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 64,
-    threshold: float = 0.95,
-    keep: str = "farthest",
-    train_cap: int = 4096,
-    max_iterations: int = 50,
-    checkpoint_dir: str | None = None,
-    on_nonconvergence: str = "raise",
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
-    at web-scale through semantic deduplication"): cluster the
-    embedding space with k-means, call two documents semantic
-    duplicates when their cosine similarity within a cluster exceeds
-    ``threshold``, and keep ONE representative per duplicate group —
-    the paper keeps the member with the LOWEST similarity to its
-    cluster centroid (``keep='farthest'``: the least prototypical item
-    carries the most extra information); ``keep='min_id'`` is the
-    deterministic id-based alternative matching the text-dedup
-    operators.
-
-    Spark shape: deterministic sample-trained quantizer (no RNG), one
-    Arrow matmul pass to assign cells, within-cell candidate self-join
-    (an equi-join on cell — the paper's complexity bound: pair
-    generation is quadratic only in CLUSTER size, so pick
-    ``n_clusters ≈ N / target_cluster_size``), exact Arrow-batched
-    cosine rescore, transitive closure via min-label propagation, and
-    one window to pick each component's representative. Returns the
-    surviving corpus rows (documents with no semantic duplicate pass
-    through untouched).
-
-    Reference parity: none — beyond-parity surface for the
-    training-data-pipeline north star (the reference has no embedding
-    operators at all; SURVEY.md §2.10)."""
-    from pyspark.sql import Window as W
-
-    from ..functions.vecmath import centroid_sim_udf, cosine_pd_once
-    from .components import connected_components
-
-    if keep not in ("farthest", "min_id"):
-        raise ValueError(f"keep must be 'farthest' or 'min_id', got {keep!r}")
-    centroid_mat = _train_quantizer(corpus, id_col, vec_col, n_clusters, train_cap)
-    assigned = ivf_assign(corpus.select(id_col, vec_col), centroid_mat, vec_col, 1)
-    a = assigned.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_ea"), "cell")
-    b = assigned.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_eb"), "cell")
-    pairs = (
-        a.join(b, "cell")
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("_cs", cosine_pd_once(F.col("_ea"), F.col("_eb")))
-        .filter(F.col("_cs") >= threshold)
-        .select("a", "b")
-    )
-    comp = connected_components(
-        pairs,
-        src_col="a",
-        dst_col="b",
-        id_col=id_col,
-        max_iterations=max_iterations,
-        checkpoint_dir=checkpoint_dir,
-        on_nonconvergence=on_nonconvergence,
-    )
-    if keep == "min_id":
-        losers = comp.filter(F.col(id_col) != F.col("component")).select(id_col)
-        return corpus.join(losers, id_col, "left_anti")
-    # farthest-from-centroid representative: rank each component's
-    # members by similarity to their own centroid (ascending — least
-    # prototypical wins), id as the deterministic tie-break. The
-    # centroid-sim UDF runs ONLY over component members (join first):
-    # Catalyst cannot push a join below a Python-UDF projection, and
-    # duplicates are typically a few percent of the corpus — scoring
-    # everyone first would waste a full-corpus Arrow pass.
-    members = comp.join(assigned.select(id_col, vec_col, "cell"), id_col)
-    sims = members.withColumn(
-        "_centroid_sim", centroid_sim_udf(centroid_mat)(F.col(vec_col), F.col("cell"))
-    ).select(id_col, "component", "_centroid_sim")
-    w = W.partitionBy("component").orderBy(F.asc("_centroid_sim"), F.asc(id_col))
-    losers = (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > 1)
-        .select(id_col)
-    )
-    return corpus.join(losers, id_col, "left_anti")

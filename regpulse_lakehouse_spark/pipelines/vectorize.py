@@ -1,8 +1,8 @@
 """Vectorize pipeline — the reference's embed-and-store service
 (services/api/src/services/vectorize.ts:14-49: truncate, single chunk,
 embed, upsert into the default store) rebuilt with the corpus-scale
-path: overlapping chunking instead of the 1-chunk cut, int8-quantized
-storage, and an optional persisted IVF index for search.
+path: overlapping chunking instead of the 1-chunk cut and int8-quantized
+storage.
 
 Stage composition (all engine operators, sequenced here only):
 
@@ -14,13 +14,12 @@ Stage composition (all engine operators, sequenced here only):
    pluggable-model seam: swap in a real encoder behind the same
    signature);
 4. ``quantize_embeddings`` for the stored form (4× smaller scan for
-   every downstream consumer; floats rebuilt on demand);
-5. optional ``ivf_build`` over the float vectors → cell-partitioned
-   index directory whose searches read only probed cells.
+   every downstream consumer; floats rebuilt on demand).
 
-Lazy end-to-end except the IVF build (trains the quantizer). One
-DataFrame out: chunk rows with quantized vectors — write it with
-sources/layout.write_partitioned or feed ivf_build.
+Lazy end to end. One DataFrame out: chunk rows with quantized vectors —
+write it with sources/layout.write_partitioned. Search indexes are
+built from float vectors, not from this output (operators/quantize.
+ivf_pq_build).
 """
 
 from __future__ import annotations

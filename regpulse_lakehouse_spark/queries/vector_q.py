@@ -1,8 +1,9 @@
 """Vector queries — SURVEY.md §2.10 E1/E3/E4.
 
 Exact cosine top-k is the oracle-checked correctness semantics
-(pgvector parity per SURVEY §7); the LSH ANN variant is recall-tested
-in pytest (tests/test_vector.py), not hash-compared.
+(pgvector parity per SURVEY §7, ``e4_batch_similarity``); the one ANN
+path, the persisted IVF-PQ index, is graded by its recall against that
+exact answer (``e4_ivf_topk``), not hash-compared.
 """
 
 from __future__ import annotations
@@ -162,10 +163,9 @@ def e4_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB deployment actually searches (operators/quantize.py:
     cell-partitioned code files + frozen model tensors; probed cells
     prune at the directory level, candidates rank by ADC over 8-byte
-    codes, the shortlist is exactly rescored in float). Round 6
-    promoted this from pytest-only to the graded row (the ad-hoc
-    in-memory ``V.ivf_topk`` remains the build-from-scratch variant,
-    still recall-tested in tests/test_ann_recall.py).
+    codes, the shortlist is exactly rescored in float). The ad-hoc
+    ``Q.ivf_pq_topk`` is the unpersisted reference the index is
+    compared against in tests/test_quantize.py.
 
     The index builds ONCE per (process, sf_dir) into a pid-scoped tmp
     dir (deterministic end to end: stride-init k-means, no RNG) and
@@ -279,12 +279,11 @@ def e4_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e4_batch_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E4 batched multi-query exact top-k: broadcast the query set, score,
-    per-query window top-k. Subsumes the single-query form (X5/E4 exact
-    cosine, merge.ts:22-39 — a batch of one, still available as
-    operators/vector.py topk_neighbors with TakeOrdered, zero shuffles).
-    The ANN/LSH path (ann_topk_lsh) replaces the cross product at scale;
-    this exact form is the oracle."""
+    """E4 batched multi-query exact top-k: broadcast the query set, score
+    with ``V.cosine``, per-query window top-k. Subsumes the single-query
+    form (X5/E4 exact cosine, merge.ts:22-39 — a batch of one). At scale
+    the persisted IVF-PQ index (``e4_ivf_topk``) replaces the cross
+    product; this exact form is the oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")

@@ -261,19 +261,3 @@ def requirements(spark: SparkSession, n: int = 15, seed: int = 23) -> DataFrame:
             )
         )
     return spark.createDataFrame(rows, schemas.REQUIREMENTS)
-
-
-def full_catalog(spark: SparkSession) -> dict[str, DataFrame]:
-    from ..ontology import ontology_terms_df
-
-    return {
-        "ontology_terms": ontology_terms_df(spark),
-        "source_documents": documents(spark),
-        "regulation_items": regulation_items(spark),
-        "requirements": requirements(spark),
-        "review_queue": review_queue(spark),
-        "links": links(spark),
-        "runs": runs(spark),
-        "run_logs": run_logs(spark),
-        "vector_stores": vector_stores(spark),
-    }

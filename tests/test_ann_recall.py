@@ -45,74 +45,23 @@ def test_cosine_near_dup_recall_and_precision(spark, sf_dir):
     assert recall >= 0.5, f"recall {recall:.3f} below floor"
 
 
-def test_ivf_topk_recall(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    approx = V.ivf_topk(corpus, queries, n_centroids=16, n_probe=7, k=5, assign_top=2)
-    # exact top-5 per query via brute force
-    from pyspark.sql import Window as W
-
-    sim = V.cosine(F.col("embedding"), F.col("qe"))
-    w = W.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("vec_id"))
-    brute = (
-        corpus.crossJoin(F.broadcast(queries))
-        .select("query_id", "vec_id", sim.alias("_sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-    )
-    got = {(r.query_id, r.vec_id) for r in approx.collect()}
-    want = {(r.query_id, r.vec_id) for r in brute.collect()}
-    # 25 on both sides also proves replica assignment never ranks the
-    # same (query, vector) pair twice (row-local canonical-cell dedup)
-    assert len(got) == len(want) == 25  # k results per query, both sides
-    recall = len(got & want) / len(want)
-    # round-5 ratchet: n_probe=7 + assign_top=2 measures 0.92/0.96/0.88
-    # at sf0.001/0.01/0.1 (deterministic pipeline, fixed per config)
-    assert recall >= 0.8, f"IVF recall {recall:.3f} below floor"
-
-
-def test_ivf_build_search_prunes_partitions(spark, sf_dir, tmp_path):
-    """The persisted IVF layout: search results must equal the ad-hoc
-    ivf_topk (same quantizer recipe, same probes) AND the scan must
-    prune to the probed cell directories."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    root = str(tmp_path / "ivf")
-    V.ivf_build(corpus, root, n_centroids=16)
-    found = V.ivf_search(spark, root, queries, n_probe=4, k=5)
-    adhoc = V.ivf_topk(corpus, queries, n_centroids=16, n_probe=4, k=5)
-    got = {(r.query_id, r.vec_id) for r in found.collect()}
-    want = {(r.query_id, r.vec_id) for r in adhoc.collect()}
-    assert got == want and len(got) == 25
-
-    # partition pruning: the probed-cells IN-filter must be a partition
-    # filter on the scan, not a post-scan data filter
-    pruned = spark.read.parquet(root).filter(F.col("cell").isin([0, 1]))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters")[1][:100]
-
-
-def test_ivf_empty_corpus_rejected(spark, sf_dir):
+def test_ivf_empty_corpus_rejected(spark, sf_dir, tmp_path):
     import pytest
+
+    from regpulse_lakehouse_spark.operators import quantize as Q
 
     emb = load_table(spark, sf_dir, "embeddings")
     empty = emb.filter(F.col("vec_id") < 0)
-    queries = emb.limit(1).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
     with pytest.raises(ValueError, match="empty corpus"):
-        V.ivf_topk(empty, queries, n_centroids=4, n_probe=2, k=3)
+        Q.ivf_pq_build(empty, str(tmp_path / "ivfpq"), n_centroids=4, m=8, k_codes=16)
 
 
-def test_ivf_string_ids_supported(spark, sf_dir):
+def test_ivf_string_ids_supported(spark, sf_dir, tmp_path):
     """Quantizer sampling must not assume numeric ids (the old stride
-    filter did id % stride)."""
+    filter did id % stride): the ad-hoc IVF-PQ search and the persisted
+    index both serve string ids."""
+    from regpulse_lakehouse_spark.operators import quantize as Q
+
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     corpus = emb.select(
         F.concat(F.lit("doc-"), F.col("vec_id").cast("string")).alias("vec_id"),
@@ -121,23 +70,16 @@ def test_ivf_string_ids_supported(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    out = V.ivf_topk(corpus, queries, n_centroids=4, n_probe=2, k=3)
+    cb = Q.train_pq(corpus, m=8, k=16)
+    out = Q.ivf_pq_topk(corpus, queries, cb, n_centroids=4, n_probe=2, k=3)
     assert out.count() == 6
-
-
-def test_ann_topk_lsh_hits_exact_top1(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
-    queries = (
-        emb.filter(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
-    )
-    res = V.ann_topk_lsh(
-        emb, queries, k=5, dim=64, n_planes=12
-    )
-    got = {(r.query_id, r.vec_id) for r in res.collect()}
-    # self-similarity = 1.0 → every query must at minimum retrieve itself
-    for q in range(5):
-        assert (q, q) in got
+    root = str(tmp_path / "ivfpq")
+    Q.ivf_pq_build(corpus, root, n_centroids=4, m=8, k_codes=16)
+    found = Q.ivf_pq_search(
+        spark, root, queries, n_probe=2, k=3, rescore_corpus=corpus
+    ).collect()
+    assert len(found) == 6
+    assert all(r.vec_id.startswith("doc-") for r in found)
 
 
 def test_graded_ivf_row_recall_gate_trips_on_broken_index(spark, sf_dir, monkeypatch):

@@ -165,44 +165,6 @@ def test_cluster_edges_agree_with_pairwise_on_plain_corpus(spark, sf_dir):
     assert comps(pairs) == comps(edges)
 
 
-def test_simhash_and_embedding_cluster_edges_linear_and_connected(spark):
-    """The windowed-edge family is symmetric: SimHash and embedding
-    variants must obey the same linear bound and keep a planted
-    duplicate cluster connected."""
-    base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    n = 120
-    rows = [(i, base + (" extra" if i % 3 == 0 else "")) for i in range(n)]
-    rows += [(1000 + i, f"different text about engine number {i} and part {i*3}") for i in range(10)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    window = 6
-
-    sh_edges = DD.simhash_cluster_edges(df, neighbor_window=window, max_hamming=5)
-    n_sh = sh_edges.count()
-    assert 0 < n_sh <= (n + 10) * window * 6     # 6 bands
-    from regpulse_lakehouse_spark.operators.components import connected_components
-    lab = connected_components(sh_edges.select("a", "b"))
-    comp_of = {r["id"]: r["component"] for r in lab.collect()}
-    # the fixture has TWO true text variants ("extra" every 3rd doc),
-    # far enough apart in Hamming space to be separate clusters — each
-    # variant's members must all chain into ONE component
-    plain = {comp_of[i] for i in range(n) if i % 3 != 0 and i in comp_of}
-    extra = {comp_of[i] for i in range(n) if i % 3 == 0 and i in comp_of}
-    assert len(plain) == 1 and len(extra) == 1
-
-    import numpy as np
-    from regpulse_lakehouse_spark.operators.vector import embedding_cluster_edges
-    vec = [float(x) for x in np.arange(64) % 7]
-    erows = [(i, [v + (0.001 * (i % 2)) for v in vec]) for i in range(60)]
-    erows += [(500 + i, [float((j * (i + 3)) % 11) - 5.0 for j in range(64)]) for i in range(8)]
-    emb = spark.createDataFrame(erows, "vec_id long, embedding array<float>")
-    e_edges = embedding_cluster_edges(emb, threshold=0.9, neighbor_window=window)
-    n_e = e_edges.count()
-    assert 0 < n_e <= 68 * window * 4
-    lab2 = connected_components(e_edges.select("a", "b"))
-    comp2 = {r["id"]: r["component"] for r in lab2.collect()}
-    assert len({comp2[i] for i in range(60) if i in comp2}) == 1
-
-
 def test_salted_windowed_edges_shrink_tasks_but_stay_connected(spark):
     """bucket_salt splits each bucket's window partition S-fold; for a
     true duplicate cluster the cross-band salt mixing must keep the

@@ -173,16 +173,22 @@ def test_one_cdc_feed_maintains_both_retrieval_legs(spark, tmp_path):
     """The lifecycle cohesion claim: a single document change feed
     (text + re-embedded vector) routes into BOTH persisted indexes —
     apply_changes_to_bm25_index and apply_changes_to_ivf_pq_index —
-    and hybrid_search_indexed serves the post-change state: the
-    deleted doc vanishes from the fusion, the updated doc is found
-    under its NEW text."""
+    and each leg serves the post-change state: the deleted doc
+    vanishes from bm25_search and ivf_pq_search, and the updated doc
+    is found under its NEW text and its NEW vector. The vector leg
+    ranks by ADC over the stored codes (no rescore table), so only the
+    index's delete mask and appended codes can change its answer."""
     import numpy as np
 
     from regpulse_lakehouse_spark.operators import retrieval as R
 
     rng = np.random.default_rng(42)
+    # unit vectors: ADC scores the inner product, which ranks like the
+    # cosine only when every norm is 1
+    units = rng.normal(size=(30, 8))
+    units /= np.linalg.norm(units, axis=1, keepdims=True)
     docs = [
-        (i, f"doc{i} generic corpus filler text", [float(x) for x in rng.normal(size=8)])
+        (i, f"doc{i} generic corpus filler text", [float(x) for x in units[i]])
         for i in range(30)
     ]
     docs[5] = (5, "doc5 about solvent margins", docs[5][2])
@@ -197,10 +203,18 @@ def test_one_cdc_feed_maintains_both_retrieval_legs(spark, tmp_path):
                    ivf, n_centroids=4, m=4)
 
     qvec = docs[5][2]
-    before = R.hybrid_search_indexed(
-        spark, bm25, ivf, "solvent margins", qvec, k=5, n_probe=4
-    ).collect()
-    assert before and before[0]["doc_id"] == 5
+    qdf = spark.createDataFrame([("q0", qvec)], "query_id string, qe array<double>")
+
+    def legs():
+        lex = [r["doc_id"] for r in R.bm25_search(spark, bm25, "solvent margins", k=5).collect()]
+        sem = Q.ivf_pq_search(spark, ivf, qdf, n_probe=4, k=5).orderBy(
+            F.desc("adc_score"), "vec_id"
+        ).collect()
+        return lex, [r["vec_id"] for r in sem]
+
+    lex, sem = legs()
+    assert lex == [5]
+    assert sem and sem[0] == 5
 
     # one feed: delete doc 5, update doc 7's text AND embedding to
     # become the new solvent-margins doc
@@ -217,12 +231,10 @@ def test_one_cdc_feed_maintains_both_retrieval_legs(spark, tmp_path):
         changes.select(F.col("doc_id").alias("vec_id"), "embedding", "_change_type"),
         ivf, batch_ref="feed-9",
     )
-    after = R.hybrid_search_indexed(
-        spark, bm25, ivf, "solvent margins", qvec, k=5, n_probe=4
-    ).collect()
-    ids = [r["doc_id"] for r in after]
-    assert 5 not in ids
-    assert ids and ids[0] == 7
+    lex, sem = legs()
+    assert lex == [7]
+    assert 5 not in sem
+    assert sem and sem[0] == 7
 
 
 def test_health_reports_layout_balance_and_drift(spark, tmp_path):

@@ -132,39 +132,6 @@ def test_pq_reconstruction_improves_with_k(spark, sf_dir):
     assert m32 < m4 * 0.7, f"k=32 MSE {m32} not clearly below k=4 MSE {m4}"
 
 
-def test_pq_shortlist_rescore_recall(spark, sf_dir):
-    """The full PQ recipe (ADC shortlist -> exact rescore) must recover
-    the exact top-5 with high recall even on the incompressible
-    fixture embeddings. Measured: 0.96-1.00 at m=16,k=32,C=100 across
-    sf0.001-0.1 (deterministic)."""
-    from regpulse_lakehouse_spark.operators import quantize as Q
-    from regpulse_lakehouse_spark.operators import vector as V
-    from regpulse_lakehouse_spark.sources.tpch import load_table
-    from pyspark.sql import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    cb = Q.train_pq(corpus, m=16, k=32)
-    got_df = Q.pq_shortlist_topk(corpus, queries, cb, k=5, shortlist=100)
-    got = {(r["query_id"], r["vec_id"]) for r in got_df.collect()}
-
-    sim = V.cosine(F.col("embedding"), F.col("qe"))
-    w = W.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("vec_id"))
-    exact = (
-        corpus.crossJoin(F.broadcast(queries))
-        .select("query_id", "vec_id", sim.alias("_sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-    )
-    want = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
-    assert len(got) == len(want) == 25
-    recall = len(got & want) / len(want)
-    assert recall >= 0.8, f"PQ shortlist recall {recall:.3f} below floor"
-
-
 def test_train_pq_validates(spark, sf_dir):
     import pytest
 

@@ -128,59 +128,6 @@ def test_bm25_on_documents_table(spark, sf_dir):
     assert all(r["bm25"] > 0 for r in rows)
 
 
-def brute_rrf(lists: list[list[str]], c: int = 60) -> dict[str, float]:
-    out: dict[str, float] = {}
-    for lst in lists:
-        for r, d in enumerate(lst, start=1):
-            out[d] = out.get(d, 0.0) + 1.0 / (c + r)
-    return out
-
-
-def test_rrf_fuse_matches_brute_force(docs_df, spark):
-    a = spark.createDataFrame(
-        [("d1", 0.9), ("d2", 0.8), ("d3", 0.7)], "doc_id string, s double"
-    )
-    b = spark.createDataFrame(
-        [("d3", 5.0), ("d4", 4.0), ("d1", 3.0)], "doc_id string, s double"
-    )
-    got = {r["doc_id"]: r["rrf_score"] for r in R.rrf_fuse([(a, "s"), (b, "s")], k=10).collect()}
-    want = brute_rrf([["d1", "d2", "d3"], ["d3", "d4", "d1"]])
-    assert set(got) == set(want)
-    for d in want:
-        assert got[d] == pytest.approx(want[d], abs=1e-8)
-    rows = R.rrf_fuse([(a, "s"), (b, "s")], k=10).collect()
-    assert rows[0]["doc_id"] in ("d1", "d3")  # both in 2 lists
-    assert all(
-        r["n_lists"] == (2 if r["doc_id"] in ("d1", "d3") else 1) for r in rows
-    )
-
-
-def test_rrf_tiebreak_is_id_ascending(spark):
-    a = spark.createDataFrame([("x", 1.0), ("y", 1.0)], "doc_id string, s double")
-    rows = R.rrf_fuse([(a, "s")], k=2).collect()
-    # equal scores: rank by id asc → x gets rank 1
-    assert [r["doc_id"] for r in rows] == ["x", "y"]
-
-
-def test_hybrid_search_combines_both_legs(spark, docs_df):
-    from regpulse_lakehouse_spark.operators.vector import deterministic_embedding
-    import pyspark.sql.functions as F
-
-    emb = docs_df.select(
-        F.col("doc_id").alias("vec_id"),
-        deterministic_embedding(F.col("text"), dim=8).alias("embedding"),
-    )
-    # query vector = embedding of d03's own text → d03 tops the semantic leg
-    qvec = [float(x) for x in emb.filter("vec_id = 'd03'").first()["embedding"]]
-    rows = R.hybrid_search(
-        docs_df, emb, "regulatory disclosure review", qvec, k=5, fetch_k=8
-    ).collect()
-    assert rows, "hybrid returned nothing"
-    ids = [r["doc_id"] for r in rows]
-    assert "d03" in ids[:2]  # strong on BOTH legs → near the top
-    assert all(rows[i]["rrf_score"] >= rows[i + 1]["rrf_score"] for i in range(len(rows) - 1))
-
-
 def test_index_append_equals_fresh_build(spark, tmp_path):
     """Incremental contract: build(batch1) + append(batch2) serves
     byte-equal results to a fresh build over the union — df rows sum,
@@ -199,20 +146,6 @@ def test_index_append_equals_fresh_build(spark, tmp_path):
         f = sorted((r["doc_id"], r["bm25"]) for r in R.bm25_search(spark, fresh, query, k=10).collect())
         o = sorted((r["doc_id"], r["bm25"]) for r in R.bm25_topk(full, query, k=10).collect())
         assert a == f == o, query
-
-
-def test_batch_topk_matches_per_query_oneshot(docs_df, spark):
-    queries = spark.createDataFrame(
-        [("q1", "quick brown fox"), ("q2", "regulatory disclosure review"), ("q3", "lazy dog")],
-        "query_id string, query string",
-    )
-    batch = R.bm25_topk_batch(docs_df, queries, k=5).collect()
-    for qid, qtext in [(r["query_id"], r["query"]) for r in queries.collect()]:
-        one = [(r["doc_id"], r["bm25"]) for r in R.bm25_topk(docs_df, qtext, k=5).collect()]
-        got = [
-            (r["doc_id"], r["bm25"]) for r in batch if r["query_id"] == qid
-        ]
-        assert got == one, qid
 
 
 def test_blank_query_keeps_corpus_id_schema(spark, tmp_path):
@@ -235,8 +168,8 @@ def test_blank_query_keeps_corpus_id_schema(spark, tmp_path):
 def test_query_tokenization_matches_corpus_tokenizer(spark):
     """Review fix: query_terms mirrors Java \\s (ASCII-only): an NBSP
     inside a query stays inside the term, exactly as the corpus
-    tokenizer keeps it inside the token — all three entry points
-    agree."""
+    tokenizer keeps it inside the token — the query side and the
+    one-shot search agree."""
     token = "terms\xa0conditions"
     docs = spark.createDataFrame(
         [("d1", f"the {token} apply here"), ("d2", "unrelated body text")],
@@ -245,59 +178,6 @@ def test_query_tokenization_matches_corpus_tokenizer(spark):
     assert R.query_terms(token) == [token]
     one = R.bm25_topk(docs, token, k=5).collect()
     assert [r["doc_id"] for r in one] == ["d1"]
-    queries = spark.createDataFrame([("q1", token)], "query_id string, query string")
-    batch = R.bm25_topk_batch(docs, queries, k=5).collect()
-    assert [(r["doc_id"], r["bm25"]) for r in batch] == [(one[0]["doc_id"], one[0]["bm25"])]
-
-
-def test_retrieval_metrics_hand_computed(spark):
-    import math
-
-    results = spark.createDataFrame(
-        [("q1", "d3", 9.0), ("q1", "d1", 8.0), ("q1", "d4", 7.0), ("q1", "d2", 6.0),
-         ("q3", "d3", 5.0), ("q3", "d4", 4.0)],
-        "query_id string, doc_id string, bm25 double",
-    )
-    qrels = spark.createDataFrame(
-        [("q1", "d1", 3), ("q1", "d2", 1), ("q1", "d5", 2),
-         ("q2", "d7", 0),           # only a zero judgment -> omitted
-         ("q3", "d9", 1)],
-        "query_id string, doc_id string, relevance int",
-    )
-    out = {r["query_id"]: r for r in R.retrieval_metrics(results, qrels, k=3).collect()}
-    assert set(out) == {"q1", "q3"}
-    q1 = out["q1"]
-    assert q1["n_relevant"] == 3
-    assert q1["recall_at_k"] == pytest.approx(1 / 3, abs=1e-6)
-    assert q1["mrr"] == pytest.approx(0.5, abs=1e-6)
-    dcg = 3 / math.log2(3)
-    idcg = 3 / math.log2(2) + 2 / math.log2(3) + 1 / math.log2(4)
-    assert q1["ndcg_at_k"] == pytest.approx(dcg / idcg, abs=1e-5)
-    q3 = out["q3"]                      # nothing relevant retrieved
-    assert (q3["recall_at_k"], q3["mrr"], q3["ndcg_at_k"]) == (0.0, 0.0, 0.0)
-
-
-def test_retrieval_metrics_perfect_ranking(spark, docs_df):
-    # rank with BM25 itself and judge the top-1 as the only relevant
-    # doc: every metric must be exactly 1
-    queries = spark.createDataFrame(
-        [("qa", "regulatory disclosure"), ("qb", "lazy dog")],
-        "query_id string, query string",
-    )
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
-    res = R.bm25_topk_batch(docs_df, queries, k=5)
-    w = W.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
-    top1 = (
-        res.withColumn("_r", F.row_number().over(w))
-        .filter("_r = 1")
-        .select("query_id", "doc_id", F.lit(1).alias("relevance"))
-    )
-    out = R.retrieval_metrics(res, top1, k=5).collect()
-    assert len(out) == 2
-    for r in out:
-        assert (r["recall_at_k"], r["mrr"], r["ndcg_at_k"]) == (1.0, 1.0, 1.0)
 
 
 def test_torn_append_is_invisible_and_replay_heals(spark, tmp_path):
@@ -385,86 +265,6 @@ def test_min_match_requires_conjunction(docs_df):
     # only d01 and d02 contain all three terms
     assert got == {"d01", "d02"}
     assert all(r["n_terms_matched"] == 3 for r in rows)
-
-
-def test_hybrid_search_indexed_serves_from_both_indexes(spark, tmp_path):
-    import numpy as np
-    from regpulse_lakehouse_spark.operators import quantize as Q
-
-    rng = np.random.RandomState(7)
-    n, dim = 80, 16
-    vecs = rng.randn(n, dim)
-    docs = [(f"d{i:03d}", ("regulatory review " if i < 10 else "other content ") + f"body{i}")
-            for i in range(n)]
-    docs_df2 = spark.createDataFrame(docs, "doc_id string, text string")
-    emb = spark.createDataFrame(
-        [(f"d{i:03d}", [float(x) for x in vecs[i]]) for i in range(n)],
-        "vec_id string, embedding array<double>",
-    )
-    bm25_path = str(tmp_path / "bm")
-    ivf_path = str(tmp_path / "ivf")
-    R.write_bm25_index(docs_df2, bm25_path, n_buckets=8)
-    Q.ivf_pq_build(emb, ivf_path, n_centroids=4, m=4, k_codes=16)
-    qvec = [float(x) for x in vecs[3]]  # d003's own vector
-    rows = R.hybrid_search_indexed(
-        spark, bm25_path, ivf_path, "regulatory review", qvec,
-        k=8, fetch_k=20, n_probe=4, rescore_corpus=emb,
-    ).collect()
-    assert rows
-    ids = [r["doc_id"] for r in rows]
-    # d003 is in the lexical top (regulatory review) AND is its own
-    # nearest vector -> two-list membership puts it first
-    assert ids[0] == "d003"
-    assert all(rows[i]["rrf_score"] >= rows[i + 1]["rrf_score"] for i in range(len(rows) - 1))
-
-
-def test_retrieval_metrics_measure_ivf_pq_recall(spark, tmp_path):
-    """Cross-family integration: recall@k of the persisted IVF-PQ index
-    measured through retrieval_metrics against exact-cosine qrels
-    equals the fraction of exact top-k the index recovers."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from regpulse_lakehouse_spark.operators import quantize as Q
-    from regpulse_lakehouse_spark.operators.vector import topk_neighbors
-
-    rng = np.random.RandomState(11)
-    n, dim, k = 120, 12, 5
-    vecs = rng.randn(n, dim)
-    emb = spark.createDataFrame(
-        [(f"v{i:03d}", [float(x) for x in vecs[i]]) for i in range(n)],
-        "vec_id string, embedding array<double>",
-    )
-    path = str(tmp_path / "ivfm")
-    Q.ivf_pq_build(emb, path, n_centroids=4, m=4, k_codes=16)
-
-    queries = spark.createDataFrame(
-        [(f"q{j}", [float(x) for x in vecs[j * 7]]) for j in range(5)],
-        "query_id string, qe array<double>",
-    )
-    approx = Q.ivf_pq_search(
-        spark, path, queries, n_probe=3, k=k, rescore_corpus=emb
-    ).select("query_id", F.col("vec_id").alias("doc_id"), "cosine_sim")
-
-    # exact qrels: brute-force top-k per query, relevance 1
-    qrels_parts = []
-    for j in range(5):
-        q = queries.filter(F.col("query_id") == f"q{j}").select("qe")
-        exact = topk_neighbors(emb, q, k=k).select(
-            F.lit(f"q{j}").alias("query_id"),
-            F.col("vec_id").alias("doc_id"),
-            F.lit(1).alias("relevance"),
-        )
-        qrels_parts.append(exact)
-    qrels = qrels_parts[0]
-    for p in qrels_parts[1:]:
-        qrels = qrels.unionByName(p)
-
-    m = R.retrieval_metrics(approx, qrels, k=k, score_col="cosine_sim").collect()
-    assert len(m) == 5
-    mean_recall = sum(r["recall_at_k"] for r in m) / len(m)
-    assert mean_recall >= 0.6  # probing 3/4 cells with exact rescore
-    for r in m:
-        assert 0.0 <= r["ndcg_at_k"] <= 1.0
 
 
 def test_compaction_preserves_append_idempotency(spark, tmp_path):
@@ -734,139 +534,3 @@ def test_mixed_tombstone_schema_directs_to_compaction(spark, tmp_path):
     R.bm25_index_compact(spark, path)
     R.bm25_index_delete(spark, path, [0], batch_ref="rm-typed")
     assert 0 not in {r["doc_id"] for r in R.bm25_search(spark, path, "the", k=20).collect()}
-
-
-def test_hybrid_fusion_beats_each_single_leg(spark, tmp_path):
-    """End-to-end quality claim of the hybrid stack: on a corpus where
-    lexical and semantic evidence are COMPLEMENTARY (half the relevant
-    docs match only the query text, half only the query vector), RRF
-    fusion must recover BOTH halves — recall@10 of the fused list is
-    pinned at 1.0 vs 0.5 for each single leg, and fused nDCG strictly
-    exceeds both legs'."""
-    import numpy as np
-    from regpulse_lakehouse_spark.operators import quantize as Q
-
-    rng = np.random.RandomState(42)
-    n, dim = 60, 16
-    u = np.zeros(dim); u[0] = 1.0  # the query direction
-    texts, vecs = [], []
-    for i in range(n):
-        v = rng.randn(dim)
-        if i < 3:  # lexical relevants: full query phrase, vector pointing AWAY
-            v[0] = -2.0
-            t = f"tax compliance filing annual report body{i}"
-        elif i < 6:  # semantic relevants: silent text, query-aligned vector
-            t = f"unrelated corporate newsletter body{i}"
-            v = u * 10.0 + rng.randn(dim) * 0.05
-        elif i < 10:  # lexical distractors: one query term only
-            t = f"tax unrelated miscellany body{i}"
-        else:
-            t = f"generic filler content body{i}"
-        texts.append((f"d{i:03d}", t))
-        vecs.append(v)
-    docs = spark.createDataFrame(texts, "doc_id string, text string")
-    emb = spark.createDataFrame(
-        [(f"d{i:03d}", [float(x) for x in vecs[i]]) for i in range(n)],
-        "vec_id string, embedding array<double>",
-    )
-    bm25_path, ivf_path = str(tmp_path / "bm"), str(tmp_path / "ivf")
-    R.write_bm25_index(docs, bm25_path, n_buckets=8)
-    Q.ivf_pq_build(emb, ivf_path, n_centroids=4, m=4, k_codes=16)
-
-    k = 10
-    qtext, qvec = "tax compliance filing", [float(x) for x in u]
-    qrels = spark.createDataFrame(
-        [("q0", f"d{i:03d}", 1) for i in range(6)],
-        "query_id string, doc_id string, relevance int",
-    )
-
-    def metrics(results, score_col):
-        m = R.retrieval_metrics(
-            results.select(F.lit("q0").alias("query_id"), "doc_id", score_col),
-            qrels, k=k, score_col=score_col,
-        ).collect()
-        assert len(m) == 1
-        return m[0]
-
-    lex = metrics(R.bm25_search(spark, bm25_path, qtext, k=k), "bm25")
-    sem_raw = Q.ivf_pq_search(
-        spark, ivf_path,
-        spark.createDataFrame([("q0", qvec)], "query_id string, qe array<double>"),
-        n_probe=4, k=k, rescore_corpus=emb,
-    ).select(F.col("vec_id").alias("doc_id"), "cosine_sim")
-    sem = metrics(sem_raw, "cosine_sim")
-    fused = metrics(
-        R.hybrid_search_indexed(
-            spark, bm25_path, ivf_path, qtext, qvec,
-            k=k, fetch_k=20, n_probe=4, rescore_corpus=emb,
-        ),
-        "rrf_score",
-    )
-    # pinned: each leg sees exactly its half of the relevants
-    assert lex["recall_at_k"] == 0.5
-    assert sem["recall_at_k"] == 0.5
-    assert fused["recall_at_k"] == 1.0
-    # the measurable claim a retrieval stack owes: fusion >= both legs
-    assert fused["ndcg_at_k"] > max(lex["ndcg_at_k"], sem["ndcg_at_k"])
-    assert fused["mrr"] == 1.0  # a relevant doc tops the fused list
-
-
-def test_rerank_topk_reorders_by_adjacency_and_position(spark):
-    """The rerank stage must visibly beat bag-of-words ordering: a doc
-    with the query terms ADJACENT and early outranks one with the same
-    terms scattered late — something BM25 with these tiny docs ties
-    on. Custom scorers slot into the same seam."""
-    from regpulse_lakehouse_spark.operators.retrieval import (
-        default_overlap_scorer,
-        rerank_topk,
-    )
-
-    cands = spark.createDataFrame(
-        [
-            (1, "filler words then solvent margins discussed at the end"),
-            (2, "solvent margins lead this document about capital rules"),
-            (3, "solvent appears here but margins much later on its own"),
-            (4, "entirely unrelated document about fishing licences"),
-        ],
-        "doc_id long, text string",
-    )
-    out = rerank_topk(cands, "solvent margins", k=3).collect()
-    assert [r["doc_id"] for r in out] == [2, 1, 3]
-    assert out[0]["rerank_score"] > out[1]["rerank_score"] > out[2]["rerank_score"]
-
-    # custom scorer seam: rank by text length, descending
-    out2 = rerank_topk(
-        cands, "ignored", scorer=lambda q, ts: [len(str(t)) for t in ts], k=2
-    ).collect()
-    want = sorted(
-        [(r["doc_id"], len(r["text"])) for r in cands.collect()],
-        key=lambda p: (-p[1], p[0]),
-    )[:2]
-    assert [r["doc_id"] for r in out2] == [d for d, _ in want]
-
-
-def test_rerank_composes_with_hybrid_candidates(spark, tmp_path):
-    """End-to-end stack: persisted-BM25 candidates carry their text
-    through a join, rerank picks the adjacency-best doc — the
-    retrieve→fuse→rerank pipeline in one test."""
-    from regpulse_lakehouse_spark.operators.retrieval import (
-        bm25_search,
-        rerank_topk,
-        write_bm25_index,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "capital buffers and then much later solvent margins"),
-            (2, "solvent margins framework for insurers"),
-            (3, "unrelated filing about fishing quotas"),
-        ]
-        + [(10 + i, f"noise document {i} about nothing") for i in range(10)],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "bm")
-    write_bm25_index(docs, idx, n_buckets=4)
-    cands = bm25_search(spark, idx, "solvent margins", k=5)
-    with_text = cands.join(docs, "doc_id").select("doc_id", "text")
-    top = rerank_topk(with_text, "solvent margins", k=1).collect()
-    assert top[0]["doc_id"] == 2
